@@ -403,6 +403,109 @@ def test_search_index_on_empty_collection(spark, tmp_path_factory):
     assert eng.indexed_lexical_search("empty", "anything").count() == 0
 
 
+def test_build_embeds_once_and_derives_families_from_one_corpus(
+    spark, tmp_path_factory, monkeypatch
+):
+    """The build materializes the served corpus once: the embed seam sees
+    each row exactly once, the IVF-PQ codes are the frozen-codebook
+    encoding of the persisted vectors under the manifest centroids, and the
+    manifest counts match driver-side recounts."""
+    import json
+
+    from vector_mcp_spark.functions import embedder
+    from vector_mcp_spark.functions.text import tokenize_py
+    from vector_mcp_spark.operators.pq import pq_encode_with
+    from vector_mcp_spark.operators.similarity import assign_clusters
+
+    embedded = spark.sparkContext.accumulator(0)
+    real_embed = embedder.embed_documents
+
+    def counting_model(texts):
+        embedded.add(len(texts))
+        return [embedder.hash_embed(t, 64) for t in texts]
+
+    def counted_embed(df, **kw):
+        return real_embed(df, model=counting_model, **kw)
+
+    monkeypatch.setattr(embedder, "embed_documents", counted_embed)
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("build_once")))
+    eng.create_collection("once")
+    docs = [f"pin doc {i} topic {i % 5} word{i % 3}" for i in range(24)]
+    eng.add_documents("once", docs)
+    info = eng.build_search_index("once")
+    assert embedded.value == 24
+
+    root = eng._index_root(eng._require("once"))
+    manifest = json.loads((root / "manifest.json").read_text())
+    vectors = spark.read.parquet(str(root / "vectors"))
+    expected = pq_encode_with(
+        assign_clusters(vectors, manifest["ivfpq"]["centroids"]),
+        manifest["ivfpq"]["codebooks"],
+    )
+    codes = spark.read.parquet(str(root / "ivfpq"))
+    as_rows = lambda df: sorted(  # noqa: E731
+        (r.id, r.cluster, list(r.codes)) for r in df.select("id", "cluster", "codes").collect()
+    )
+    assert as_rows(codes) == as_rows(expected)
+
+    contents = [r.content for r in eng.read("once").select("content").collect()]
+    vocab = {t for c in contents for t in tokenize_py(c)}
+    assert manifest["n_vectors"] == info["n_vectors"] == len(contents) == 24
+    assert manifest["n_terms"] == info["n_terms"] == len(vocab)
+    assert manifest["dimension"] == len(vectors.first().embedding) == 64
+
+
+def test_spread_repartitions_checkpointed_single_partition_input(spark):
+    """A checkpoint leaf reports Catalyst's no-statistics placeholder size;
+    spread must read it as unknown and repartition, not as already big."""
+    from vector_mcp_spark.operators.partition import _plan_size_bytes, spread
+
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+    rows = spark.sparkContext.parallelize([(i, f"t{i}") for i in range(24)], 1)
+    pinned = spark.createDataFrame(rows, "id long, s string").localCheckpoint(eager=True)
+    assert pinned.rdd.getNumPartitions() == 1
+    no_stats = int(spark.conf.get("spark.sql.defaultSizeInBytes").rstrip("b"))
+    assert _plan_size_bytes(pinned) >= no_stats
+    spread_df = spread(pinned)
+    assert spread_df.rdd.getNumPartitions() == target
+    assert sorted(r.id for r in spread_df.collect()) == list(range(24))
+
+
+def test_indexed_graph_search_rejects_non_finite_and_empty_queries(spark, tmp_path_factory):
+    """NaN/Inf elements and empty vectors have no SQL literal form: the
+    engine and the prepared descent builders refuse them with a stable code
+    before any SQL is rendered."""
+    from vector_mcp_spark.operators.graph_ann import (
+        ann_hnsw_multi_prepared_sql,
+        ann_hnsw_prepared_sql,
+    )
+
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("graph_nonfinite")))
+    eng.create_collection("kb", dimension=4)
+    eng.add_documents(
+        "kb",
+        ["alpha", "beta", "gamma"],
+        embeddings=[[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]],
+    )
+    eng.build_search_index("kb")
+    nan, inf = float("nan"), float("inf")
+    for bad in ([nan, 0.0, 0.0, 0.0], [0.0, inf, 0.0, 0.0], [0.0, 0.0, -inf, 0.0], []):
+        with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
+            eng.indexed_graph_search("kb", bad, k=2)
+        if bad:
+            with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
+                ann_hnsw_prepared_sql("n", "e", "x", bad, k=2)
+            with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
+                ann_hnsw_multi_prepared_sql("n", "e", "x", [("q", bad)], k=2)
+    with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
+        ann_hnsw_prepared_sql("n", "e", "x", [], k=2)
+    with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
+        ann_hnsw_multi_prepared_sql("n", "e", "x", [], k=2)
+    got = eng.indexed_graph_search("kb", [1.0, 0.0, 0.0, 0.0], k=2).collect()
+    assert len(got) == 2 and all(r.score is not None for r in got)
+
+
 def test_catalog_dataframe_contract(spark, tmp_path_factory):
     """ADVICE r12 (medium): CATALOG_SCHEMA must match the 6-column arrow
     catalog _write_catalog persists, so _read_catalog builds cleanly and

@@ -472,3 +472,14 @@ def test_ivf_dot_recall_vs_exact(embs):
     ).collect()
     scores = [r.score for r in sorted(got, key=lambda r: r.rank)]
     assert scores == sorted(scores, reverse=True)
+
+
+def test_hnsw_suite_serve_set_resolves_from_sibling_session(spark, sf_dir):
+    """The suite's graph serve set is cached per application, so its views
+    must resolve from a sibling SparkSession that hits the cache after the
+    parent session built it."""
+    from vector_mcp_spark.suite_pipeline import q_ann_hnsw_topk
+
+    parent = sorted(tuple(r) for r in q_ann_hnsw_topk(spark, sf_dir).collect())
+    sibling = sorted(tuple(r) for r in q_ann_hnsw_topk(spark.newSession(), sf_dir).collect())
+    assert parent and sibling == parent

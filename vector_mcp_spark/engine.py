@@ -46,6 +46,7 @@ from vector_mcp_spark.validation import (
     validate_delete_confirm,
     validate_ingest_bounds,
     validate_metric,
+    validate_query_vector,
 )
 
 
@@ -899,6 +900,19 @@ class CollectionEngine:
 
         return hashlib.sha256("\n".join(stamps).encode()).hexdigest()
 
+    def _checkpointed_served_corpus(self, name: str) -> DataFrame:
+        """The collection in its SERVED representation, materialized once:
+        rows stored content-only get their vectors from the same embed seam
+        the search path uses, and the eager checkpoint lets every index
+        family the caller derives read one in-memory corpus instead of
+        rescanning the table and re-running the embedder per pass."""
+        df = self.read(name)
+        if self.needs_embed(name):
+            from vector_mcp_spark.functions.embedder import embed_documents
+
+            df = embed_documents(df, text_col="content", out_col="embedding")
+        return df.localCheckpoint(eager=True)
+
     def build_search_index(self, name: str, quantization: str = "sign") -> dict:
         """Materialize the search index families for a collection:
         lexical postings, the quantized vector-shortlist table, the
@@ -934,13 +948,7 @@ class CollectionEngine:
         # cluster by Euclidean distance; dot shares the cosine clustering
         # (the standard MIPS compromise — the exact re-rank restores order)
         coarse_metric = "l2" if distance == "l2" else "cosine"
-        df = self.read(name)
-        if self.needs_embed(name):
-            # index the SERVED representation: rows stored content-only get
-            # their vectors from the same embed seam the search path uses
-            from vector_mcp_spark.functions.embedder import embed_documents
-
-            df = embed_documents(df, text_col="content", out_col="embedding")
+        df = self._checkpointed_served_corpus(name)
         root = self._index_root(scoped)
         postings = build_postings(df.select("id", "content"), "id", "content").withColumn(
             "term_bucket", term_bucket("term")
@@ -1006,19 +1014,16 @@ class CollectionEngine:
         # (VERDICT r12 item 2); the catalog lock is authoritative when set,
         # measured from the data otherwise (content-only collections)
         dim_indexed: int | None = self._locked_dimension(scoped)
-        if dim_indexed is None and n_vectors == 1:
-            one = (
-                df.where(F.col("embedding").isNotNull())
-                .select(F.size("embedding").alias("d"))
-                .first()
-            )
-            dim_indexed = int(one.d) if one is not None else None
+        if n_vectors:
+            d = int(vec_rows.select(F.size("embedding").alias("d")).first().d)
+            if dim_indexed is None or n_vectors >= 2:
+                dim_indexed = d
         if n_vectors >= 2:
             from vector_mcp_spark.operators.graph_ann import hnsw_build
-            from vector_mcp_spark.operators.pq import pq_build
+            from vector_mcp_spark.operators.pq import pq_build, pq_encode_with
             from vector_mcp_spark.operators.similarity import ivf_build
 
-            vecs = df.where(F.col("embedding").isNotNull()).select("id", "embedding")
+            vecs = vec_rows.select("id", "embedding")
             assigned, cents = ivf_build(
                 vecs, n_centroids=min(16, n_vectors), id_col="id", max_iter=2,
                 metric=coarse_metric,
@@ -1031,17 +1036,12 @@ class CollectionEngine:
             # partitions, and repair appends codes against the FROZEN
             # centroids/codebooks (the streaming twin of this maintenance
             # path lives at streaming/ingest.py ivfpq maintenance).
-            dim_row = vecs.select(F.size("embedding").alias("d")).first()
-            d = int(dim_row.d)
-            dim_indexed = d
+            # Codes come from one projection over the assigned frame — the
+            # same frozen-codebook encoding repair appends with.
             m = next(mm for mm in (4, 2, 1) if d % mm == 0)
             n_codes = min(16, n_vectors)
-            encoded, codebooks = pq_build(
-                vecs, m=m, n_codes=n_codes, id_col="id", iters=1
-            )
-            codes = encoded.select("id", "codes").join(
-                assigned.select("id", "cluster"), "id"
-            )
+            _, codebooks = pq_build(vecs, m=m, n_codes=n_codes, id_col="id", iters=1)
+            codes = pq_encode_with(assigned, codebooks)
             codes.select("id", "cluster", "codes").write.mode("overwrite").partitionBy(
                 "cluster"
             ).parquet(str(root / "ivfpq"))
@@ -1176,12 +1176,7 @@ class CollectionEngine:
                 "index_repair_requires_rebuild",
                 detail="collection had <2 vectors at build; rebuild",
             )
-        df = self.read(name)
-        if self.needs_embed(name):
-            from vector_mcp_spark.functions.embedder import embed_documents
-
-            df = embed_documents(df, text_col="content", out_col="embedding")
-        df = df.localCheckpoint(eager=True)  # feeds membership + both phases
+        df = self._checkpointed_served_corpus(name)  # membership + both phases
         indexed = self.spark.read.parquet(str(root / "ids"))
         removed = indexed.join(df.select("id"), "id", "left_anti").count()
         if removed:
@@ -1810,7 +1805,7 @@ class CollectionEngine:
         from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
 
         scoped = self._require(name)
-        question_vec = [float(x) for x in question_vec]
+        question_vec = validate_query_vector(question_vec)
         dim = self._locked_dimension(scoped)
         if dim is not None and len(question_vec) != dim:
             # zip_with against a shorter/longer query pads with NULL, making

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from vector_mcp_spark.functions.vector import dot
 from vector_mcp_spark.operators.similarity import SCORE_DECIMALS
+from vector_mcp_spark.validation import EngineError, validate_query_vector
 
 #: beam hops per layer, top layer first — FIXED so the SQL oracle can unroll
 HNSW_HOPS: tuple[tuple[int, int], ...] = ((2, 1), (1, 2), (0, 4))
@@ -502,6 +503,7 @@ def ann_hnsw_prepared_sql(
     ``ann_hnsw_topk(..., exclude_self=False)`` exactly."""
     if metric not in GRAPH_METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
+    question_vec = validate_query_vector(question_vec)
     # the query vector/norm are LITERAL expressions, not a relation: the
     # per-hop "join q" of the DataFrame path (which exists because there
     # the queries are a DataFrame) disappears entirely — one join per hop
@@ -509,7 +511,7 @@ def ann_hnsw_prepared_sql(
     # norm is the same expression over the same literal array, so qn (and
     # every score derived from it) is bit-equal to the DataFrame path's.
     qv = "CAST(array({}) AS ARRAY<FLOAT>)".format(
-        ", ".join(f"{float(x)!r}D" for x in question_vec)
+        ", ".join(f"{x!r}D" for x in question_vec)
     )
     qn = _norm_sql(qv, metric)
     qid, ent = _sql_str_lit(query_id), _sql_str_lit(entry)
@@ -616,6 +618,10 @@ def ann_hnsw_multi_prepared_sql(
     the full oracle replay of every converted suite entry."""
     if metric not in GRAPH_METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
+    if not queries:
+        # VALUES with no rows is not SQL
+        raise EngineError("collection_vector_schema_mismatch", detail="empty query batch")
+    queries = [(qid, validate_query_vector(v)) for qid, v in queries]
 
     def id_lit(v: object) -> str:
         s = _sql_str_lit(v)
@@ -623,7 +629,7 @@ def ann_hnsw_multi_prepared_sql(
 
     def vec_lit(vec: Sequence[float]) -> str:
         return "CAST(array({}) AS ARRAY<FLOAT>)".format(
-            ", ".join(f"{float(x)!r}D" for x in vec)
+            ", ".join(f"{x!r}D" for x in vec)
         )
 
     values = ",\n    ".join(f"({id_lit(qid)}, {vec_lit(v)})" for qid, v in queries)

@@ -39,16 +39,24 @@ def spread(df: DataFrame) -> DataFrame:
     RDD-conversion py4j round-trip on EVERY call even at real scale where
     the answer is always "no-op" (r14; the driver-latency class r13 §1
     eliminated from the vector builders). Unknown size repartitions (the
-    conservative local default: only tiny inline frames lack stats).
+    conservative local default). An estimate at or above
+    ``spark.sql.defaultSizeInBytes`` is Catalyst's placeholder for "no
+    statistics" — what checkpointed, cached and RDD-backed leaves report
+    however small they are — so it counts as unknown, not as big.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes").rstrip("b"))
-    except (TypeError, ValueError):
-        max_split = 128 * 1024 * 1024
+
+    def conf_bytes(key: str, default: int) -> int:
+        try:
+            return int(spark.conf.get(key).rstrip("b"))
+        except (TypeError, ValueError):
+            return default
+
+    max_split = conf_bytes("spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
+    no_stats = conf_bytes("spark.sql.defaultSizeInBytes", 2**63 - 1)
     size = _plan_size_bytes(df)
-    if size is not None and size >= target * max_split:
+    if size is not None and target * max_split <= size < no_stats:
         return df
     return df.repartition(target)
 

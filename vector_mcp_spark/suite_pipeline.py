@@ -2741,15 +2741,19 @@ def _hnsw_serve(spark: SparkSession, sf_dir: str, metric: str = "cosine"):
     meta = dict(meta)
     meta.setdefault("n_total", ss[0].count())
     # prepared-descent serve state (r14): temp views the one-SQL-text beam
-    # descent references, and the measured broadcast gate for its per-hop
-    # edge-union side (two id columns; counted once per build — at a scale
-    # where the union outgrows the session threshold the gate never fires
-    # and the ef-bounded beam stays the join's build side)
+    # descent references — GLOBAL ones, because the cache is
+    # application-scoped and a session-scoped view would not resolve from a
+    # sibling SparkSession that hits it — and the measured broadcast gate
+    # for its per-hop edge-union side (two id columns; counted once per
+    # build — at a scale where the union outgrows the session threshold the
+    # gate never fires and the ef-bounded beam stays the join's build side)
     sf_tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    nodes_view = f"_hnsw_suite_nodes_{sf_tag}_{metric}"
-    edges_view = f"_hnsw_suite_edges_{sf_tag}_{metric}"
-    ss[0].createOrReplaceTempView(nodes_view)
-    ss[1].createOrReplaceTempView(edges_view)
+    nodes_name = f"_hnsw_suite_nodes_{sf_tag}_{metric}"
+    edges_name = f"_hnsw_suite_edges_{sf_tag}_{metric}"
+    ss[0].createOrReplaceGlobalTempView(nodes_name)
+    ss[1].createOrReplaceGlobalTempView(edges_name)
+    global_db = spark.conf.get("spark.sql.globalTempDatabase")
+    nodes_view, edges_view = f"{global_db}.{nodes_name}", f"{global_db}.{edges_name}"
     try:
         limit = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
     except (TypeError, ValueError):

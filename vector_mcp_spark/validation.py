@@ -96,6 +96,19 @@ def validate_weights(weights: Sequence[object]) -> list[float]:
     return out
 
 
+def validate_query_vector(vec: Sequence[object]) -> list[float]:
+    """A query vector that renders as SQL float literals: non-empty, every
+    element finite (NaN/Inf have no literal form — they would surface as a
+    raw parse error instead of a stable code)."""
+    out = [float(x) for x in vec]
+    if not out or not all(math.isfinite(x) for x in out):
+        raise EngineError(
+            "collection_vector_schema_mismatch",
+            detail="query vector must be non-empty with finite elements",
+        )
+    return out
+
+
 def validate_delete_confirm(confirm: object) -> None:
     if confirm is not True:
         raise EngineError("delete_not_confirmed")
