@@ -506,6 +506,63 @@ def test_indexed_graph_search_rejects_non_finite_and_empty_queries(spark, tmp_pa
     assert len(got) == 2 and all(r.score is not None for r in got)
 
 
+def test_driver_serve_set_lifecycle(spark, tmp_path_factory):
+    """A warm graph query whose serve set fits the session broadcast bound
+    is answered in-process: no Spark job, and the same rows (ids, content,
+    scores, order) as the SQL descent a fresh engine serves with the bound
+    at -1 — on the built index and again after a repair. A table change
+    still refuses first, and describe_collection reports the regime."""
+    from vector_mcp_spark.functions.embedder import hash_embed
+
+    bound = "spark.sql.autoBroadcastJoinThreshold"
+    sc = spark.sparkContext._jsc.sc()
+
+    def next_job_id() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        return int(sc.dagScheduler().nextJobId())
+
+    root = str(tmp_path_factory.mktemp("driver_serve"))
+    eng = CollectionEngine(spark, root)
+    eng.create_collection("drv")
+    eng.add_documents("drv", [f"driver serve doc {i} topic {i % 4}" for i in range(24)])
+    eng.build_search_index("drv")
+    assert eng.describe_collection("drv")["graph_serve"] == "cold"
+    qs = [hash_embed(f"topic {i} doc", 64) for i in range(3)]
+
+    def answers(engine) -> list:
+        return [engine.indexed_graph_search("drv", q, k=30, ef=48).collect() for q in qs]
+
+    def sql_answers() -> list:
+        prev = spark.conf.get(bound)
+        spark.conf.set(bound, "-1")
+        try:
+            sql_engine = CollectionEngine(spark, root)
+            got = answers(sql_engine)
+            assert sql_engine.describe_collection("drv")["graph_serve"] == "sql"
+        finally:
+            spark.conf.set(bound, prev)
+        return got
+
+    cold = answers(eng)  # the miss builds and collects the serve set
+    before = next_job_id()
+    warm = answers(eng)
+    state = eng._graph_serve_state(eng._require("drv"), "fresh")
+    assert next_job_id() == before
+    assert state["graph_serve"] == "driver" and state["graph_serve_bytes"] > 24 * 64 * 8
+    assert eng.describe_collection("drv")["graph_serve"] == "driver"
+    assert warm == cold and all(rows for rows in warm)
+    assert warm == sql_answers()
+
+    eng.add_documents("drv", ["a late document about topic 1"])
+    with pytest.raises(EngineError, match="index_not_fresh"):
+        eng.indexed_graph_search("drv", qs[0], k=30)
+    assert eng.describe_collection("drv")["graph_serve"] == "cold"
+    eng.repair_search_index("drv")
+    repaired = answers(eng)
+    assert any(r.content == "a late document about topic 1" for rows in repaired for r in rows)
+    assert repaired == sql_answers()
+
+
 def test_catalog_dataframe_contract(spark, tmp_path_factory):
     """ADVICE r12 (medium): CATALOG_SCHEMA must match the 6-column arrow
     catalog _write_catalog persists, so _read_catalog builds cleanly and

@@ -357,3 +357,44 @@ def test_boolean_leaf_residue_rejected(spark):
     assert parse_boolean_query("SPARK & Join") == (
         "and", ("term", "spark"), ("term", "join")
     )
+
+
+def test_materialized_corpus_stats_match_lazy(spark, tmp_path):
+    """materializeStatsMinBytes=0 forces the checkpointed postings/lengths
+    branch of _corpus_stats; RM3 and MLT must answer exactly as on the lazy
+    path (a small parquet scan stays below the default threshold)."""
+    from vector_mcp_spark.operators.lexical import _corpus_stats, more_like_this_topk, rm3_topk
+
+    rows = [
+        (1, "spark shuffle spark shuffle tuning"),
+        (2, "spark shuffle partitions and joins"),
+        (3, "shuffle service internals deep dive"),
+        (4, "gardening tips for spring"),
+        (5, "spark joins data with spark shuffle join"),
+    ]
+    spark.createDataFrame(rows, "doc_id int, text string").write.parquet(str(tmp_path / "d"))
+    df = spark.read.parquet(str(tmp_path / "d"))
+
+    def answers():
+        rm3 = rm3_topk(df, "spark", 10, id_col="doc_id", content_col="text", fb_docs=2, fb_terms=2)
+        mlt = more_like_this_topk(df, 1, 10, id_col="doc_id", content_col="text")
+        return [tuple(r) for r in rm3.collect()], [tuple(r) for r in mlt.collect()]
+
+    def materialized() -> bool:
+        postings = _corpus_stats(df, "doc_id", "text")[0]
+        return postings._jdf.queryExecution().logical().nodeName() == "LogicalRDD"
+
+    key = "spark.vector_mcp_spark.lexical.materializeStatsMinBytes"
+    assert not materialized()
+    lazy = answers()
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "0")
+    try:
+        assert materialized()
+        assert answers() == lazy
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert lazy[0] and lazy[1]

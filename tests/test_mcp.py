@@ -1851,3 +1851,37 @@ def test_veneer_filtered_indexed_search_and_range_index(spark, tmp_path_factory)
         "indexed_search", collection_name="fx", question="x",
         payload_filter={},
     ) == {"error": "payload_filter_invalid"}
+
+
+def test_named_search_refuses_non_finite_vectors_on_both_routes(spark, tmp_path_factory):
+    """NaN/Inf query vectors to named_search come back as the stable
+    schema-mismatch code on the exact-scan route (no index) and on the
+    graph route (fresh index), never a raw AnalysisException; an empty
+    vector is the veneer's input-required error."""
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("mcp_named")))
+    veneer = McpVeneer(eng, VectorSearchApi(eng))
+    eng.create_collection("nv", vectors_config={"t": {"dimension": 4, "distance": "cosine"}})
+    eng.add_documents("nv", ["north", "east", "south"])
+    ids = sorted(r.id for r in eng.read("nv").select("id").collect())
+    axes = ([1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0])
+    eng.put_named_vectors("nv", "t", dict(zip(ids, axes)))
+
+    def search(qv):
+        return veneer.vector_search(
+            "named_search", collection_name="nv", vector_name="t",
+            query_vector=qv, number_results=2,
+        )
+
+    nan, inf = float("nan"), float("inf")
+    served = {}
+    for route, status in (("scan", "absent"), ("graph", "fresh")):
+        if route == "graph":
+            eng.build_named_vector_index("nv", "t")
+        assert eng.named_vector_index_status("nv", "t") == status
+        for bad in ([nan, 0.0, 0.0, 0.0], [0.0, inf, 0.0, 0.0], [0.0, 0.0, -inf, 0.0]):
+            assert search(bad) == {"error": "collection_vector_schema_mismatch"}
+        assert search([]) == {"error": "named_search_input_required"}
+        with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
+            eng.named_vector_search("nv", "t", [], k=2)
+        served[route] = [r["id"] for r in search([1.0, 0.2, 0.0, 0.0])["results"]]
+    assert served["graph"] == served["scan"] == ids[:2]

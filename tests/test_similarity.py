@@ -483,3 +483,124 @@ def test_hnsw_suite_serve_set_resolves_from_sibling_session(spark, sf_dir):
     parent = sorted(tuple(r) for r in q_ann_hnsw_topk(spark, sf_dir).collect())
     sibling = sorted(tuple(r) for r in q_ann_hnsw_topk(spark.newSession(), sf_dir).collect())
     assert parent and sibling == parent
+
+
+def _descent_three_ways(spark, rows, edges, entry, queries, k, ef, metric):
+    """(driver, prepared SQL, DataFrame) (rank, id, score) lists per query
+    over one serve set. The SQL is rendered with the broadcast hint the
+    engine uses whenever its serve set fits the driver bound."""
+    from vector_mcp_spark.operators.graph_ann import (
+        ann_hnsw_driver_topk,
+        ann_hnsw_prepared_sql,
+        ann_hnsw_topk,
+        collect_serve_set,
+        hnsw_serve_set,
+    )
+
+    corpus = spark.createDataFrame(rows, "id string, embedding array<float>")
+    edge_df = spark.createDataFrame(edges, "layer int, src string, dst string")
+    nodes, edges_ck = hnsw_serve_set(corpus, edge_df, metric=metric)
+    nodes.createOrReplaceTempView("t_drv_nodes")
+    edges_ck.createOrReplaceTempView("t_drv_edges")
+    driver = collect_serve_set(nodes, edges_ck)
+    assert driver is not None
+    qdf = spark.createDataFrame(
+        [(f"q{i}", qv) for i, qv in enumerate(queries)], "id string, embedding array<float>"
+    )
+    frame = ann_hnsw_topk(
+        qdf, corpus, None, entry, k=k, ef=ef, exclude_self=False, metric=metric,
+        serve_set=(nodes, edges_ck),
+    ).collect()
+    out = []
+    for i, qv in enumerate(queries):
+        sql = spark.sql(
+            ann_hnsw_prepared_sql(
+                "t_drv_nodes", "t_drv_edges", entry, qv, k=k, ef=ef, metric=metric,
+                broadcast_edges=True,
+            )
+        ).collect()
+        out.append((
+            ann_hnsw_driver_topk(driver, entry, qv, k=k, ef=ef, metric=metric),
+            sorted((r.rank, r.neighbor_id, r.score) for r in sql),
+            sorted((r.rank, r.neighbor_id, r.score) for r in frame if r.query_id == f"q{i}"),
+        ))
+    return out
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+def test_driver_descent_matches_sql_and_dataframe(spark, metric):
+    """The in-process descent the engine serves small graphs with returns
+    exactly the prepared SQL's and ann_hnsw_topk's (rank, id, score) rows:
+    k past the corpus size, ef below it, and a two-node graph. The corpus
+    has a zero-norm row (cosine guard), the queries include a zero vector
+    and exact corpus rows (l2 clamp), and the graph has duplicate edges and
+    edges to a node missing from the node set."""
+    import random
+
+    rng = random.Random(23)
+    dim, n = 8, 24
+    ids = [f"id{i:02d}" for i in range(n)]
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in ids]
+    rows[3] = (ids[3], [0.0] * dim)
+    edges = [(0, s, d) for s in ids for d in rng.sample(ids, 4) if d != s]
+    upper = ids[::4]
+    edges += [(1, s, d) for s in upper for d in rng.sample(upper, 2) if d != s]
+    edges += [(2, ids[0], ids[8]), (2, ids[8], ids[0]), (2, ids[0], ids[8])]
+    edges += [(0, ids[5], "ghost"), (1, ids[0], "ghost")]
+    free = [rng.uniform(-1, 1) for _ in range(dim)]
+    pair = rows[:2]
+    cases = [
+        (rows, edges, 30, 48, [free, [0.0] * dim, list(rows[7][1])]),
+        (rows, edges, 5, 6, [free]),
+        (pair, [(0, ids[0], ids[1]), (0, ids[1], ids[0])], 3, 48, [list(pair[1][1])]),
+    ]
+    for case_rows, case_edges, k, ef, queries in cases:
+        for drv, sql, frame in _descent_three_ways(
+            spark, case_rows, case_edges, ids[0], queries, k, ef, metric
+        ):
+            assert drv == sql == frame, (metric, k, ef)
+            assert 0 < len(drv) <= min(k, len(case_rows))
+
+
+def test_spark_round_score_matches_spark_round(spark):
+    """The driver descent's ROUND twin equals Spark's ROUND(x, 6) (HALF_UP
+    on the JVM's decimal rendering) on half-way values, where Python's
+    round() (half-even on the binary value) differs, and on signed zeros
+    and large magnitudes."""
+    import math
+
+    from vector_mcp_spark.operators.graph_ann import spark_round_score
+
+    ties = [(n + 0.5) / 1e6 for n in (-1234567, -3, 0, 1, 2, 12345, 999999, 123456789)]
+    xs = ties + [math.nextafter(t, d) for t in ties for d in (-math.inf, math.inf)]
+    xs += [0.0, -0.0, -1e-9, 4.9999999e-7, 1e20, -123456.0000005, 0.30000000000000004]
+    assert any(round(x, 6) != spark_round_score(x) for x in xs)
+    got = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    want = {r.i: r.r for r in got.selectExpr("i", "ROUND(x, 6) AS r").collect()}
+    assert [repr(spark_round_score(x)) for x in xs] == [repr(want[i]) for i in range(len(xs))]
+
+
+def test_driver_fold_matches_spark_aggregate(spark):
+    """The driver descent's dot products are the SQL's sequential left fold
+    bit-for-bit, on float32 vectors with a wide dynamic range where a
+    reassociating sum (BLAS, numpy's pairwise sum) gives other doubles."""
+    import random
+
+    import numpy as np
+
+    from vector_mcp_spark.functions.vector import dot
+    from vector_mcp_spark.operators.graph_ann import _fold_rows
+
+    rng = random.Random(5)
+    rows = [
+        [rng.choice((-1, 1)) * rng.uniform(1, 10) * 10.0 ** rng.randint(-8, 8) for _ in range(16)]
+        for _ in range(64)
+    ]
+    df = spark.createDataFrame(
+        [(i, r, rows[0]) for i, r in enumerate(rows)], "i int, a array<float>, b array<float>"
+    )
+    want = {r.i: r.d for r in df.select("i", dot("a", "b").alias("d")).collect()}
+    vecs = np.array(rows, dtype=np.float32).astype(np.float64)
+    got = _fold_rows(vecs * vecs[0])
+    assert [float(x) for x in got] == [want[i] for i in range(len(rows))]
+    assert (vecs @ vecs[0] != got).any()

@@ -34,6 +34,7 @@ import uuid
 from collections.abc import Mapping, Sequence
 from datetime import datetime, timezone
 from pathlib import Path
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,10 +50,25 @@ from vector_mcp_spark.validation import (
     validate_query_vector,
 )
 
+if TYPE_CHECKING:
+    from vector_mcp_spark.operators.graph_ann import DriverServeSet
+
 
 #: unique temp-view names for beam-serve working sets (one pair per
 #: serve-set build; session-scoped, so a plain process-wide counter is safe)
 _SERVE_VIEW_SEQ = itertools.count()
+
+
+class _GraphServe(NamedTuple):
+    """One cached graph serve set (see ``CollectionEngine._graph_serve_set``)."""
+
+    nodes: DataFrame
+    edges: DataFrame
+    nodes_view: str
+    edges_view: str
+    bcast_edges: bool
+    #: the driver-resident copy, or None when the set is over the bound
+    driver: DriverServeSet | None
 
 
 def _physical_name(logical: str) -> str:
@@ -156,23 +172,26 @@ class CollectionEngine:
         # unset keeps the partition-pruned parquet rewrite path
         self._table_format = transactional_format()
         # Beam-serve working sets per graph index build: (index root,
-        # manifest mtime_ns, metric) → materialized (nodes, edges). The
-        # mtime key makes any rebuild a miss, and staleness REFUSAL
-        # (index_not_fresh) runs before this cache is consulted, so a
-        # stale index can never be served from here (r13, guide §1.2).
-        self._graph_serve_sets: dict[tuple, tuple] = {}
+        # manifest mtime_ns, metric) → materialized (nodes, edges) and,
+        # when it fits, their driver-resident copy. The mtime key makes any
+        # rebuild a miss, and staleness REFUSAL (index_not_fresh) runs
+        # before this cache is consulted, so a stale index can never be
+        # served from here (r13, guide §1.2).
+        self._graph_serve_sets: dict[tuple, _GraphServe] = {}
         (self.root / "collections").mkdir(parents=True, exist_ok=True)
 
-    def _graph_serve_set(self, index_root: Path, corpus, metric: str):
-        """Materialized (nodes, edges, nodes_view, edges_view) for one
-        graph index build — the in-RAM working set a vector DB keeps open
-        next to its persisted graph, plus the temp-view names the prepared
-        single-query descent SQL references (r14, guide §1/§4: one
-        spark.sql parse per serve instead of ~60 eagerly-analyzed
-        DataFrame transformations). Built once per (build, metric); evicts
-        prior builds of the same root (and drops their views) so a rebuild
-        does not pin dead checkpoint blocks."""
-        from vector_mcp_spark.operators.graph_ann import hnsw_serve_set
+    def _graph_serve_set(self, index_root: Path, metric: str, corpus) -> _GraphServe:
+        """The warm working set for one graph index build — what a vector
+        DB keeps open next to its persisted graph: the checkpointed
+        (nodes, edges) under the temp-view names the prepared descent SQL
+        references (r14, guide §1/§4), its measured broadcast gate, and,
+        when it fits that same bound, a driver-resident copy the descent
+        runs on in-process with no Spark job. Built once per (build,
+        metric); evicts prior builds of the same root (and drops their
+        views) so a rebuild does not pin dead checkpoint blocks.
+        ``corpus`` is called on a miss only: a zero-argument callable
+        returning the (id, embedding[, content]) frame the build serves."""
+        from vector_mcp_spark.operators.graph_ann import collect_serve_set, hnsw_serve_set
 
         st = (index_root / "manifest.json").stat()
         key = (str(index_root), st.st_mtime_ns, metric)
@@ -180,29 +199,43 @@ class CollectionEngine:
         if hit is not None:
             return hit
         for old in [k for k in self._graph_serve_sets if k[0] == key[0]]:
-            for view in self._graph_serve_sets[old][2:4]:
-                self.spark.catalog.dropTempView(view)
-            del self._graph_serve_sets[old]
+            gone = self._graph_serve_sets.pop(old)
+            self.spark.catalog.dropTempView(gone.nodes_view)
+            self.spark.catalog.dropTempView(gone.edges_view)
+        frame = corpus()
         edges = self.spark.read.parquet(str(index_root / "graph"))
         nodes, edges = hnsw_serve_set(
-            corpus, edges, id_col="id", emb_col="embedding", metric=metric
+            frame, edges, id_col="id", emb_col="embedding", metric=metric
         )
         seq = next(_SERVE_VIEW_SEQ)
         nodes_view, edges_view = f"_hnsw_serve_nodes_{seq}", f"_hnsw_serve_edges_{seq}"
         nodes.createOrReplaceTempView(nodes_view)
         edges.createOrReplaceTempView(edges_view)
-        # measured broadcast gate for the descent's per-hop edge-union
-        # side (two id columns — the vectors never enter that relation):
-        # counted ONCE per build over the cached partitions, so the
-        # decision is scale-adaptive — a serve set that outgrows the
-        # session's own threshold never hints and the planner keeps
-        # building the ef-bounded beam side instead
+        # one measured bound, the session's broadcast threshold, gates both
+        # serve shapes. Counted ONCE per build over the cached partitions,
+        # so the decisions are scale-adaptive: the descent's per-hop
+        # edge-union side (two id columns) is hinted to broadcast only when
+        # it fits, and the whole set is collected to the driver only when
+        # its estimate — nodes × (dim·8 + content bytes + 64) + edges × 64 —
+        # fits too (a broadcast is a driver-side collect of that size
+        # already). Over the bound, or with the bound at −1, the SQL
+        # descent serves.
         try:
             limit = int(self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
         except (TypeError, ValueError):
             limit = 10 * 1024 * 1024
-        bcast_edges = 0 <= (nodes.count() + edges.count()) * 64 <= limit
-        ss = (nodes, edges, nodes_view, edges_view, bcast_edges)
+        n_nodes, n_values = nodes.agg(F.count(F.lit(1)), F.sum(F.size("v"))).first()
+        n_edges = edges.count()
+        bcast_edges = 0 <= (n_nodes + n_edges) * 64 <= limit
+        nbytes = (n_values or 0) * 8 + (n_nodes + n_edges) * 64
+        payload = None
+        if "content" in frame.columns and nbytes <= limit:
+            payload = frame.select("id", "content")
+            nbytes += payload.agg(F.sum(F.octet_length("content"))).first()[0] or 0
+        driver = (
+            collect_serve_set(nodes, edges, payload, nbytes) if 0 <= nbytes <= limit else None
+        )
+        ss = _GraphServe(nodes, edges, nodes_view, edges_view, bcast_edges, driver)
         self._graph_serve_sets[key] = ss
         return ss
 
@@ -1550,12 +1583,13 @@ class CollectionEngine:
         ``indexed=False`` forces the exact scan."""
         import json
 
-        from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
         from vector_mcp_spark.operators.semantic import semantic_topk
 
         scoped = self._require(name)
         cfg = self._named_cfg(scoped, vector_name)
-        question_vec = [float(x) for x in question_vec]
+        # NaN/Inf/empty refuse before routing: neither the scan nor the
+        # graph route has a literal form for them
+        question_vec = validate_query_vector(question_vec)
         dim = cfg.get("dimension")
         if dim is not None and len(question_vec) != dim:
             raise EngineError(
@@ -1591,22 +1625,20 @@ class CollectionEngine:
         meta = json.loads((root / "manifest.json").read_text())
         if (meta.get("graph") or {}).get("entry") is None:
             return empty
-        corpus = vecs.select("id", F.col("vector").alias("embedding"))
-        # prepared single-query descent over the cached serve-set views —
-        # bit-identical to the ann_hnsw_topk(exclude_self=False) path
-        # without the per-serve DataFrame analysis cost (r14, guide §1/§4)
-        _, _, nodes_view, edges_view, bcast_edges = self._graph_serve_set(
-            root, corpus, metric
+        # the warm serve set answers in-process when it fits the driver
+        # bound, else the prepared single-query descent over its views —
+        # both bit-identical to ann_hnsw_topk(exclude_self=False). The
+        # content join stays: this index's freshness covers the named
+        # vectors, not the main table's content.
+        serve = self._graph_serve_set(
+            root, metric, lambda: vecs.select("id", F.col("vector").alias("embedding"))
         )
-        hits = self.spark.sql(
-            ann_hnsw_prepared_sql(
-                nodes_view, edges_view, meta["graph"]["entry"], question_vec,
-                k=k, ef=ef, metric=metric, broadcast_edges=bcast_edges,
-            )
-        ).select(F.col("neighbor_id").alias("id"), "score")
+        args = (serve, meta["graph"]["entry"], question_vec, k, ef, metric)
+        rows = self._driver_graph_hits(*args)
+        hits = self._sql_graph_hits(*args) if rows is None else self._local_hits(rows)
         return (
             self.read(name)
-            .join(F.broadcast(hits), "id")
+            .join(F.broadcast(hits.select("id", "score")), "id")
             .select("id", "content", "score")
             .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
         )
@@ -1799,10 +1831,10 @@ class CollectionEngine:
         from the index's entry point, exact-cosine re-rank the final beam.
         Refuses when the index is absent or stale — same contract as the
         postings and sign-bit families. Collections with < 2 vectors have
-        no graph; the query answers empty (nothing to traverse)."""
+        no graph; the query answers empty (nothing to traverse). A warm
+        serve set within the session broadcast bound answers in-process
+        (no Spark job); a larger one runs the prepared SQL descent."""
         import json
-
-        from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
 
         scoped = self._require(name)
         question_vec = validate_query_vector(question_vec)
@@ -1837,30 +1869,92 @@ class CollectionEngine:
                     detail=f"query dimension {len(question_vec)} != indexed {manifest['dimension']}",
                 )
         meta = manifest.get("graph") or {}
-        df = self._served_embeddings_df(name, scoped)
         if meta.get("entry") is None:
-            return self.spark.createDataFrame([], "id string, content string, score double")
-        corpus = df.where(F.col("embedding").isNotNull()).select("id", "embedding")
+            return self._local_hits([])
         metric = manifest.get("distance") or "cosine"
-        # prepared single-query descent: one spark.sql text over the cached
-        # serve-set views — identical joins/folds/ordering to ann_hnsw_topk
-        # with exclude_self=False (the query is not a corpus row; a document
-        # whose id happens to equal the synthetic query id must still be
-        # returnable), without the ~60 eagerly-analyzed DataFrame steps or
-        # the per-serve query-checkpoint job (r14, guide §1/§4)
-        _, _, nodes_view, edges_view, bcast_edges = self._graph_serve_set(
-            self._index_root(scoped), corpus, metric
-        )
-        hits = self.spark.sql(
-            ann_hnsw_prepared_sql(
-                nodes_view, edges_view, meta["entry"], question_vec, k=k,
-                ef=ef, metric=metric, broadcast_edges=bcast_edges,
-            )
-        ).select(F.col("neighbor_id").alias("id"), "score")
+
+        def corpus() -> DataFrame:
+            df = self._served_embeddings_df(name, scoped)
+            return df.where(F.col("embedding").isNotNull()).select("id", "embedding", "content")
+
+        # a warm serve set inside the driver bound answers in-process from
+        # its collected copy — no table read, no Spark job (the freshness
+        # checks above cover the table the copy's content came from);
+        # otherwise the prepared single-query descent over its views
+        serve = self._graph_serve_set(self._index_root(scoped), metric, corpus)
+        args = (serve, meta["entry"], question_vec, k, ef, metric)
+        rows = self._driver_graph_hits(*args)
+        if rows is not None:
+            return self._local_hits(rows)
         return (
-            df.join(F.broadcast(hits), "id")
+            self._served_embeddings_df(name, scoped)
+            .join(F.broadcast(self._sql_graph_hits(*args)), "id")
             .select("id", "content", "score")
             .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
+        )
+
+    def _driver_graph_hits(
+        self, serve: _GraphServe, entry, question_vec, k: int, ef: int, metric: str
+    ) -> list[tuple] | None:
+        """(id, content, score) rows of the in-process descent over the
+        serve set's driver copy, in :meth:`_metric_order`'s order (rounded
+        score, then id); content is None unless the copy carries it. None
+        when there is no driver copy or the query has no in-process twin."""
+        from vector_mcp_spark.operators.graph_ann import GRAPH_METRICS, ann_hnsw_driver_topk
+
+        if serve.driver is None:
+            return None
+        hits = ann_hnsw_driver_topk(
+            serve.driver, entry, question_vec, k=k, ef=ef, metric=metric
+        )
+        if hits is None:
+            return None
+        payload, pos = serve.driver.payload, serve.driver.rows
+        rows = [
+            (node, None if payload is None else payload[pos[node]], score)
+            for _, node, score in hits
+        ]
+        sign = -1.0 if GRAPH_METRICS[metric] else 1.0
+        rows.sort(key=lambda r: (sign * r[2], r[0]))
+        return rows
+
+    def _sql_graph_hits(
+        self, serve: _GraphServe, entry, question_vec, k: int, ef: int, metric: str
+    ) -> DataFrame:
+        """(id, score) of the prepared single-query descent: one spark.sql
+        text over the serve set's views — identical joins/folds/ordering
+        to ann_hnsw_topk with exclude_self=False (the query is not a corpus
+        row; a document whose id happens to equal the synthetic query id
+        must still be returnable), without the ~60 eagerly-analyzed
+        DataFrame steps or the per-serve query-checkpoint job (r14, guide
+        §1/§4)."""
+        from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
+
+        return self.spark.sql(
+            ann_hnsw_prepared_sql(
+                serve.nodes_view, serve.edges_view, entry, question_vec, k=k,
+                ef=ef, metric=metric, broadcast_edges=serve.bcast_edges,
+            )
+        ).select(F.col("neighbor_id").alias("id"), "score")
+
+    def _local_hits(self, rows: Sequence[tuple]) -> DataFrame:
+        """(id, content, score) rows, in order, as a local relation: an
+        inline VALUES of literals folds to a LocalRelation, which plans and
+        collects with no Spark job (``createDataFrame`` of a list is a
+        Python RDD — a job — and an ``orderBy`` on the result would add
+        three). Strings enter as UTF-8 hex literals: only hex digits reach
+        the SQL text, so no escaping rule or parser setting can alter them,
+        and unlike named parameters they cost no py4j call per value."""
+
+        def text(v) -> str:
+            return "NULL" if v is None else f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
+
+        values = ", ".join(f"({text(i)}, {text(c)}, {float(s)!r}D)" for i, c, s in rows)
+        return self.spark.sql(
+            "SELECT CAST(id AS STRING) AS id, CAST(content AS STRING) AS content,"
+            " CAST(score AS DOUBLE) AS score"
+            f" FROM VALUES {values or '(NULL, NULL, NULL)'} AS t(id, content, score)"
+            + ("" if rows else " WHERE false")
         )
 
     def indexed_ivfpq_search(
@@ -3442,8 +3536,13 @@ class CollectionEngine:
         dimension, embed flag), points_count, the aliases routing here, and
         the persistent-index status. Resolves aliases, so describing "prod"
         reports the live target. One bounded Spark job (the count); the
-        rest is driver-side catalog metadata."""
+        rest is driver-side catalog metadata. ``graph_serve`` says how the
+        next graph query would be served: ``"driver"`` (the warm serve set
+        is collected in-process; ``graph_serve_bytes`` is its estimated
+        size), ``"sql"`` (warm, over the driver bound) or ``"cold"`` (no
+        warm serve set for the current fresh build)."""
         scoped = self._require(name)
+        status = self.index_status(name)
         return {
             "collection_name": name,
             "dimension": self._locked_dimension(scoped),
@@ -3451,5 +3550,24 @@ class CollectionEngine:
             "needs_embed": self.needs_embed(name),
             "points_count": self.count_documents(name),
             "aliases": [a for a, _ in self.list_aliases(name)],
-            "index_status": self.index_status(name),
+            "index_status": status,
+            **self._graph_serve_state(scoped, status),
         }
+
+    def _graph_serve_state(self, scoped: str, status: str) -> dict:
+        """The ``graph_serve`` fields of :meth:`describe_collection`, read
+        from the serve-set cache entry of the current build (no Spark job)."""
+        serve = None
+        if status in ("fresh", "repaired"):
+            # a fresh index was built under the locked distance, the
+            # metric its serve set is keyed by
+            root = self._index_root(scoped)
+            mtime = (root / "manifest.json").stat().st_mtime_ns
+            serve = self._graph_serve_sets.get(
+                (str(root), mtime, self._locked_distance(scoped))
+            )
+        if serve is None:
+            return {"graph_serve": "cold"}
+        if serve.driver is None:
+            return {"graph_serve": "sql"}
+        return {"graph_serve": "driver", "graph_serve_bytes": serve.driver.nbytes}

@@ -37,8 +37,12 @@ controlled by the blocking keys exactly like dedup.py's banded LSH join.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
+from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Context, Decimal
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -707,6 +711,154 @@ def ann_hnsw_multi_prepared_sql(
         f"       ROUND(_sm, {SCORE_DECIMALS}) AS score\n"
         f"FROM final WHERE _rn <= {int(k)}"
     )
+
+
+# ---------------------------------------------------------------------------
+# Driver-resident descent (engine serve path over a small serve set)
+#
+# Spark builds the graph; walking it per query does not need Spark. When a
+# serve set fits the session's broadcast bound (a broadcast is already a
+# driver-side collect of a relation that size), the engine collects it once
+# and answers each warm query in-process: 0 Spark jobs instead of a listing
+# job, a schema-inference job and a ~12-job descent collect. The descent
+# below replays ann_hnsw_prepared_sql operation for operation — float32
+# query widened to double, sequential left-fold dots from 0.0, the same
+# norm guard / l2 clamp, the same candidate sets, (score, node) ranking and
+# Spark's ROUND — so its rows equal the SQL's (pinned in the core tier by
+# tests/test_similarity.py::test_driver_descent_matches_sql_and_dataframe).
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class DriverServeSet:
+    """A serve set collected into driver memory: node id → row position,
+    the vectors as the doubles the SQL folds read, the
+    Spark-computed per-node norms (bit-exact, never recomputed), per-layer
+    adjacency, an optional per-node payload and the estimated bytes."""
+
+    rows: dict
+    vecs: np.ndarray
+    norms: np.ndarray
+    adj: dict
+    payload: list | None
+    nbytes: int
+
+
+def collect_serve_set(
+    nodes: DataFrame, edges: DataFrame, payload: DataFrame | None = None, nbytes: int = 0
+) -> DriverServeSet | None:
+    """Collect a :func:`hnsw_serve_set` working set (plus an optional
+    (id, value) ``payload`` frame) into a :class:`DriverServeSet`. ``None``
+    when a row would make the in-process descent diverge from the SQL —
+    a NULL id, vector, element or norm, ragged widths, non-finite values
+    or duplicate node ids — so such sets keep the SQL descent."""
+    got = nodes.select("node", "v", "n").collect()
+    ids = [r.node for r in got]
+    rows = {node: i for i, node in enumerate(ids)}
+    if len(rows) != len(ids) or None in rows:
+        return None
+    if any(r.v is None or r.n is None or None in r.v for r in got):
+        return None
+    widths = {len(r.v) for r in got}
+    if len(widths) > 1:
+        return None
+    vecs = np.array([r.v for r in got], dtype=np.float64).reshape(len(got), max(widths, default=0))
+    norms = np.array([r.n for r in got], dtype=np.float64)
+    if not (np.isfinite(vecs).all() and np.isfinite(norms).all()):
+        return None
+    adj: dict = {}
+    for e in edges.select("layer", "src", "dst").collect():
+        adj.setdefault(e.layer, {}).setdefault(e.src, []).append(e.dst)
+    values = None
+    if payload is not None:
+        by_id = {r[0]: r[1] for r in payload.collect()}
+        values = [by_id.get(node) for node in ids]
+    return DriverServeSet(rows, vecs, norms, adj, values, int(nbytes))
+
+
+def _fold_rows(prods: np.ndarray) -> np.ndarray:
+    """Per-row sequential left fold from 0.0 — the ``aggregate(..., 0.0D,
+    (acc, x) -> acc + x)`` order exactly (a BLAS dot reassociates)."""
+    acc = np.zeros(prods.shape[0])
+    for col in prods.T:
+        acc += col
+    return acc
+
+
+_ROUND_CONTEXT = Context(prec=400)  # any double's digits + SCORE_DECIMALS
+_SCORE_QUANTUM = Decimal(1).scaleb(-SCORE_DECIMALS)
+
+
+def spark_round_score(x: float) -> float:
+    """Spark's ``ROUND(x, SCORE_DECIMALS)`` on a double: HALF_UP on the
+    JVM's decimal rendering of ``x`` (``BigDecimal.valueOf``), not Python's
+    ``round()`` (half-even on the binary value). ``+ 0.0`` because a
+    BigDecimal has no negative zero."""
+    d = Decimal(repr(x)).quantize(_SCORE_QUANTUM, rounding=ROUND_HALF_UP, context=_ROUND_CONTEXT)
+    return float(d) + 0.0
+
+
+def ann_hnsw_driver_topk(
+    serve: DriverServeSet,
+    entry: object,
+    question_vec: Sequence[float],
+    k: int,
+    ef: int = 48,
+    hops: tuple[tuple[int, int], ...] = HNSW_HOPS,
+    metric: str = "cosine",
+) -> list[tuple[int, object, float]] | None:
+    """The :func:`ann_hnsw_prepared_sql` descent (``exclude_self=False``)
+    run in-process over a :class:`DriverServeSet`: ``(rank, node, score)``
+    rows equal to the SQL's ``(rank, neighbor_id, score)``. ``None`` when
+    the query has no in-process twin — its float32 cast overflows, or its
+    width differs from the vectors' (the SQL pads those with NULLs) — so
+    the caller serves it with the SQL descent."""
+    if metric not in GRAPH_METRICS:
+        raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
+    with np.errstate(over="ignore"):
+        q = np.array(validate_query_vector(question_vec), dtype=np.float32).astype(np.float64)
+    if not np.isfinite(q).all() or (serve.rows and q.size != serve.vecs.shape[1]):
+        return None
+    qn = math.sqrt(_fold_rows((q * q)[None, :])[0])
+    if metric == "cosine" and qn == 0.0:
+        qn = 1.0
+    higher = GRAPH_METRICS[metric]
+
+    def ranked(cand: set) -> list[tuple[float, object]]:
+        # the scoring join drops candidates missing from the node set
+        present = [c for c in cand if c in serve.rows]
+        if not present:
+            return []
+        idx = np.fromiter((serve.rows[c] for c in present), dtype=np.intp, count=len(present))
+        d = _fold_rows(serve.vecs[idx] * q)
+        n = serve.norms[idx]
+        if metric == "cosine":
+            s = d / (qn * n)
+        elif metric == "dot":
+            s = d
+        else:
+            inner = (qn * qn + n * n) - 2.0 * d
+            s = np.sqrt(np.where(inner < 0.0, 0.0, inner))
+        scored = list(zip(s.tolist(), present))
+        scored.sort(key=(lambda p: (-p[0], p[1])) if higher else None)
+        return scored
+
+    keep = max(int(ef), 0)
+    top = serve.adj.get(hops[0][0], {})
+    beam = [node for _, node in ranked(set(top.get(entry, ())) | {entry})[:keep]]
+    first_hop = True
+    for layer, n_hops in hops:
+        adj = serve.adj.get(layer, {})
+        for _ in range(n_hops):
+            if first_hop:
+                first_hop = False
+                continue  # the seed hop above
+            cand = set(beam)
+            for node in beam:
+                cand.update(adj.get(node, ()))
+            beam = [node for _, node in ranked(cand)[:keep]]
+    final = ranked(set(beam))[: max(int(k), 0)]
+    return [(rank, node, spark_round_score(s)) for rank, (s, node) in enumerate(final, 1)]
 
 
 def hnsw_repair(
