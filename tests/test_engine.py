@@ -473,13 +473,11 @@ def test_spread_repartitions_checkpointed_single_partition_input(spark):
 
 
 def test_indexed_graph_search_rejects_non_finite_and_empty_queries(spark, tmp_path_factory):
-    """NaN/Inf elements and empty vectors have no SQL literal form: the
-    engine and the prepared descent builders refuse them with a stable code
-    before any SQL is rendered."""
-    from vector_mcp_spark.operators.graph_ann import (
-        ann_hnsw_multi_prepared_sql,
-        ann_hnsw_prepared_sql,
-    )
+    """NaN/Inf elements and empty vectors have no SQL literal form: every
+    indexed vector search and the descent renderer refuse them with a
+    stable code before any SQL is rendered — a lone query, a bad row in a
+    batch, an empty batch."""
+    from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
 
     eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("graph_nonfinite")))
     eng.create_collection("kb", dimension=4)
@@ -490,20 +488,62 @@ def test_indexed_graph_search_rejects_non_finite_and_empty_queries(spark, tmp_pa
     )
     eng.build_search_index("kb")
     nan, inf = float("nan"), float("inf")
+    good = [1.0, 0.0, 0.0, 0.0]
+    searches = (
+        lambda v: eng.indexed_graph_search("kb", v, k=2),
+        lambda v: eng.indexed_filtered_search("kb", v, {"team": "a"}, k=2),
+        lambda v: eng.indexed_semantic_search("kb", v, k=2),
+        lambda v: eng.indexed_ivfpq_search("kb", v, k=2),
+        lambda v: ann_hnsw_prepared_sql("n", "e", "x", [("q", v)], k=2),
+        lambda v: ann_hnsw_prepared_sql("n", "e", "x", [("p", good), ("q", v)], k=2),
+    )
     for bad in ([nan, 0.0, 0.0, 0.0], [0.0, inf, 0.0, 0.0], [0.0, 0.0, -inf, 0.0], []):
-        with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
-            eng.indexed_graph_search("kb", bad, k=2)
-        if bad:
+        for search in searches:
             with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
-                ann_hnsw_prepared_sql("n", "e", "x", bad, k=2)
-            with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
-                ann_hnsw_multi_prepared_sql("n", "e", "x", [("q", bad)], k=2)
+                search(bad)
     with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
         ann_hnsw_prepared_sql("n", "e", "x", [], k=2)
-    with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
-        ann_hnsw_multi_prepared_sql("n", "e", "x", [], k=2)
-    got = eng.indexed_graph_search("kb", [1.0, 0.0, 0.0, 0.0], k=2).collect()
+    got = eng.indexed_graph_search("kb", good, k=2).collect()
     assert len(got) == 2 and all(r.score is not None for r in got)
+
+
+def test_add_documents_refuses_non_finite_embeddings(spark, tmp_path_factory):
+    """A NaN/Inf embedding element (or one past the float32 range the table
+    stores) is refused with the stable schema-mismatch code and nothing is
+    written: stored, a NaN row would rank first in every scan and keep the
+    collection's graph serve set off the driver."""
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("add_nonfinite")))
+    eng.create_collection("kb", dimension=2)
+    nan, inf = float("nan"), float("inf")
+    for bad in ([nan, 0.0], [0.0, inf], [-inf, 0.0], [1e39, 0.0]):
+        with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
+            eng.add_documents("kb", ["ok", "bad"], embeddings=[[1.0, 0.0], bad])
+    assert eng.count_documents("kb") == 0
+    assert eng.add_documents("kb", ["ok"], embeddings=[[1.0, 0.0]]) == 1
+
+
+def test_conf_bytes_follows_spark_byte_strings(spark):
+    """One reader for byte-size confs: Spark's rendered default ("...b"), a
+    user value with a unit suffix, and -1 (broadcast off) all read as
+    Spark reads them, and the broadcast gate follows."""
+    from vector_mcp_spark.operators.partition import conf_bytes, fits_broadcast
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.unset(key)
+        assert spark.conf.get(key) == "10485760b"
+        assert conf_bytes(spark, key, 0) == 10 * 1024**2
+        for value, want in (("20m", 20 * 1024**2), ("64MB", 64 * 1024**2), ("3g", 3 * 1024**3),
+                            ("4096", 4096), ("-1", -1)):
+            spark.conf.set(key, value)
+            assert conf_bytes(spark, key, 7) == want, value
+        spark.conf.set(key, "20m")
+        assert fits_broadcast(spark, 20 * 1024**2) and not fits_broadcast(spark, 20 * 1024**2 + 1)
+        spark.conf.set(key, "-1")
+        assert not fits_broadcast(spark, 0)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_driver_serve_set_lifecycle(spark, tmp_path_factory):
@@ -2956,74 +2996,3 @@ def test_indexed_filtered_search_equality_and_matchany_use_payload_index(
                 {"any": ["t1"], "gte": 1}, {"any": [str(i) for i in range(257)]}):
         with _pytest.raises(EngineError, match="payload_filter_invalid|payload_range_invalid"):
             eng.indexed_filtered_search("eq", qv, {"team": bad}, k=5)
-
-
-@pytest.mark.slow
-def test_prepared_descent_matches_dataframe_path(spark):
-    """The engine's prepared single-query descent SQL (r14) must be
-    row-for-row, bit-for-bit identical to ann_hnsw_topk's DataFrame path
-    under every metric — same candidates, same HOF fold scores, same
-    tie-breaks (zero-norm vector included to exercise the guard)."""
-    import random
-
-    from vector_mcp_spark.operators.graph_ann import (
-        ann_hnsw_multi_prepared_sql,
-        ann_hnsw_prepared_sql,
-        ann_hnsw_topk,
-        hnsw_build,
-        hnsw_serve_set,
-    )
-    from vector_mcp_spark.operators.similarity import ivf_build
-
-    rng = random.Random(11)
-    dim, n = 8, 24
-    rows = [
-        (f"id{i:04d}", [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(n)
-    ]
-    rows[3] = (rows[3][0], [0.0] * dim)  # zero-norm guard
-    corpus = spark.createDataFrame(rows, "id string, embedding array<float>")
-    for metric in ("cosine", "dot", "l2"):
-        coarse = "l2" if metric == "l2" else "cosine"
-        assigned, _ = ivf_build(
-            corpus, n_centroids=4, id_col="id", emb_col="embedding", metric=coarse
-        )
-        edges, meta = hnsw_build(assigned, id_col="id", emb_col="embedding", metric=metric)
-        nodes_ck, edges_ck = hnsw_serve_set(corpus, edges, metric=metric)
-        nodes_ck.createOrReplaceTempView("t_prep_nodes")
-        edges_ck.createOrReplaceTempView("t_prep_edges")
-        qv = [rng.uniform(-1, 1) for _ in range(dim)]
-        q = spark.createDataFrame([("__q__", qv)], "id string, embedding array<float>")
-        df_rows = ann_hnsw_topk(
-            q, corpus, None, meta["entry"], k=5, ef=48, id_col="id",
-            exclude_self=False, metric=metric, serve_set=(nodes_ck, edges_ck),
-        ).collect()
-        sql_rows = spark.sql(
-            ann_hnsw_prepared_sql(
-                "t_prep_nodes", "t_prep_edges", meta["entry"], qv, k=5, ef=48,
-                metric=metric,
-            )
-        ).collect()
-        a = [(r.query_id, r.rank, r.neighbor_id, r.score) for r in df_rows]
-        b = [(r.query_id, r.rank, r.neighbor_id, r.score) for r in sql_rows]
-        assert a == b, f"prepared descent diverged under {metric}: {a} vs {b}"
-
-        # multi-query VALUES variant (the suite entries' shape): corpus-drawn
-        # queries, exclude_self=True, broadcast hint on — still bit-equal
-        mq = [(rid, list(vec)) for rid, vec in rows[:3]]
-        mdf = spark.createDataFrame(
-            [(rid, vec) for rid, vec in mq], "id string, embedding array<float>"
-        )
-        df_rows = ann_hnsw_topk(
-            mdf, corpus, None, meta["entry"], k=5, ef=48, id_col="id",
-            exclude_self=True, metric=metric, serve_set=(nodes_ck, edges_ck),
-        ).collect()
-        sql_rows = spark.sql(
-            ann_hnsw_multi_prepared_sql(
-                "t_prep_nodes", "t_prep_edges", meta["entry"], mq, k=5, ef=48,
-                metric=metric, exclude_self=True, broadcast_edges=True,
-            )
-        ).collect()
-        srt = lambda rs: sorted(  # noqa: E731
-            [(r.query_id, r.rank, r.neighbor_id, r.score) for r in rs]
-        )
-        assert srt(df_rows) == srt(sql_rows), f"multi prepared diverged under {metric}"

@@ -1885,3 +1885,24 @@ def test_named_search_refuses_non_finite_vectors_on_both_routes(spark, tmp_path_
             eng.named_vector_search("nv", "t", [], k=2)
         served[route] = [r["id"] for r in search([1.0, 0.2, 0.0, 0.0])["results"]]
     assert served["graph"] == served["scan"] == ids[:2]
+
+
+def test_put_named_vectors_refuses_non_finite_elements(spark, tmp_path_factory):
+    """The JSON transports parse NaN and Infinity, so a client can send
+    them as named vector elements: put_named_vectors refuses those (and
+    elements past the float32 range the table stores) with the stable
+    schema-mismatch code and stores nothing."""
+    import json
+
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("mcp_named_nan")))
+    veneer = McpVeneer(eng, VectorSearchApi(eng))
+    eng.create_collection("nv", vectors_config={"t": {"dimension": 4, "distance": "cosine"}})
+    eng.add_documents("nv", ["north", "east"])
+    pid = sorted(r.id for r in eng.read("nv").select("id").collect())[0]
+    for bad in ("[NaN, 0, 0, 0]", "[0, Infinity, 0, 0]", "[0, 0, -Infinity, 0]", "[1e39, 0, 0, 0]"):
+        got = veneer.vector_collection_management(
+            "put_named_vectors", collection_name="nv", vector_name="t",
+            named_vectors={pid: json.loads(bad)},
+        )
+        assert got == {"error": "collection_vector_schema_mismatch"}
+    assert eng.named_vector_search("nv", "t", [1.0, 0.0, 0.0, 0.0], k=2).count() == 0

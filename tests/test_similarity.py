@@ -485,56 +485,79 @@ def test_hnsw_suite_serve_set_resolves_from_sibling_session(spark, sf_dir):
     assert parent and sibling == parent
 
 
-def _descent_three_ways(spark, rows, edges, entry, queries, k, ef, metric):
-    """(driver, prepared SQL, DataFrame) (rank, id, score) lists per query
-    over one serve set. The SQL is rendered with the broadcast hint the
-    engine uses whenever its serve set fits the driver bound."""
+def _descent_every_way(spark, rows, edges, entry, queries, k, ef, metric):
+    """For each form of the one SQL renderer, (got, want) (rank, id, score)
+    lists per query; want comes from the driver descent. The driver returns
+    the whole final beam at k = ef, so exclusion and the allowed filter are
+    applied to that ranked beam before the cut to k. Forms: one literal
+    query, a literal batch with exclude_self, a query view, and a query
+    view with an allowed view."""
     from vector_mcp_spark.operators.graph_ann import (
         ann_hnsw_driver_topk,
         ann_hnsw_prepared_sql,
         ann_hnsw_topk,
         collect_serve_set,
-        hnsw_serve_set,
+        publish_serve_set,
     )
 
     corpus = spark.createDataFrame(rows, "id string, embedding array<float>")
     edge_df = spark.createDataFrame(edges, "layer int, src string, dst string")
-    nodes, edges_ck = hnsw_serve_set(corpus, edge_df, metric=metric)
-    nodes.createOrReplaceTempView("t_drv_nodes")
-    edges_ck.createOrReplaceTempView("t_drv_edges")
-    driver = collect_serve_set(nodes, edges_ck)
+    ss = publish_serve_set(corpus, edge_df, metric=metric)
+    driver = collect_serve_set(ss.nodes, ss.edges)
     assert driver is not None
-    qdf = spark.createDataFrame(
-        [(f"q{i}", qv) for i, qv in enumerate(queries)], "id string, embedding array<float>"
-    )
-    frame = ann_hnsw_topk(
-        qdf, corpus, None, entry, k=k, ef=ef, exclude_self=False, metric=metric,
-        serve_set=(nodes, edges_ck),
-    ).collect()
-    out = []
-    for i, qv in enumerate(queries):
-        sql = spark.sql(
-            ann_hnsw_prepared_sql(
-                "t_drv_nodes", "t_drv_edges", entry, qv, k=k, ef=ef, metric=metric,
-                broadcast_edges=True,
-            )
-        ).collect()
-        out.append((
-            ann_hnsw_driver_topk(driver, entry, qv, k=k, ef=ef, metric=metric),
-            sorted((r.rank, r.neighbor_id, r.score) for r in sql),
-            sorted((r.rank, r.neighbor_id, r.score) for r in frame if r.query_id == f"q{i}"),
+    beams = {qid: ann_hnsw_driver_topk(driver, entry, qv, k=ef, ef=ef, metric=metric)
+             for qid, qv in queries}
+    allowed = {r[0] for r in rows[::2]}
+
+    def want(qid, keep) -> list:
+        kept = [(node, s) for _, node, s in beams[qid] if keep(qid, node)][:k]
+        return [(rank, node, s) for rank, (node, s) in enumerate(kept, 1)]
+
+    def by_query(df) -> dict:
+        got: dict = {qid: [] for qid, _ in queries}
+        for r in df.collect():
+            got[r.query_id].append((r.rank, r.neighbor_id, r.score))
+        return {qid: sorted(v) for qid, v in got.items()}
+
+    def view_form(**kw) -> dict:
+        qdf = spark.createDataFrame(queries, "id string, embedding array<float>")
+        return by_query(ann_hnsw_topk(
+            qdf, None, None, entry, k=k, ef=ef, metric=metric, serve_set=ss, **kw
         ))
+
+    def sql(batch, **kw):
+        return spark.sql(ann_hnsw_prepared_sql(
+            ss.nodes_view, ss.edges_view, entry, batch, k=k, ef=ef, metric=metric,
+            broadcast_edges=ss.bcast_edges, **kw,
+        ))
+
+    out = []
+    for qid, qv in queries:
+        one = by_query(sql([(qid, qv)]))[qid]
+        driver_k = ann_hnsw_driver_topk(driver, entry, qv, k=k, ef=ef, metric=metric)
+        out += [(one, want(qid, lambda q, n: True)), (one, driver_k)]
+    forms = [
+        (by_query(sql(queries, exclude_self=True)), lambda q, n: n != q),
+        (view_form(exclude_self=False), lambda q, n: True),
+        (
+            view_form(allowed=spark.createDataFrame([(a,) for a in allowed], "id string")),
+            lambda q, n: n != q and n in allowed,
+        ),
+    ]
+    out += [(got[qid], want(qid, keep)) for got, keep in forms for qid, _ in queries]
+    ss.drop()
     return out
 
 
 @pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
 def test_driver_descent_matches_sql_and_dataframe(spark, metric):
     """The in-process descent the engine serves small graphs with returns
-    exactly the prepared SQL's and ann_hnsw_topk's (rank, id, score) rows:
-    k past the corpus size, ef below it, and a two-node graph. The corpus
-    has a zero-norm row (cosine guard), the queries include a zero vector
-    and exact corpus rows (l2 clamp), and the graph has duplicate edges and
-    edges to a node missing from the node set."""
+    exactly the SQL renderer's (rank, id, score) rows in every form the
+    renderer takes (see _descent_every_way): k past the corpus size, ef
+    below it, and a two-node graph. The corpus has a zero-norm row (cosine
+    guard), the queries include a zero vector and exact corpus rows (l2
+    clamp; their ids make exclude_self bite), and the graph has duplicate
+    edges and edges to a node missing from the node set."""
     import random
 
     rng = random.Random(23)
@@ -547,19 +570,19 @@ def test_driver_descent_matches_sql_and_dataframe(spark, metric):
     edges += [(1, s, d) for s in upper for d in rng.sample(upper, 2) if d != s]
     edges += [(2, ids[0], ids[8]), (2, ids[8], ids[0]), (2, ids[0], ids[8])]
     edges += [(0, ids[5], "ghost"), (1, ids[0], "ghost")]
-    free = [rng.uniform(-1, 1) for _ in range(dim)]
+    free = ("free", [rng.uniform(-1, 1) for _ in range(dim)])
     pair = rows[:2]
     cases = [
-        (rows, edges, 30, 48, [free, [0.0] * dim, list(rows[7][1])]),
-        (rows, edges, 5, 6, [free]),
-        (pair, [(0, ids[0], ids[1]), (0, ids[1], ids[0])], 3, 48, [list(pair[1][1])]),
+        (rows, edges, 30, 48, [free, ("zero", [0.0] * dim), rows[7]]),
+        (rows, edges, 5, 6, [free, rows[8]]),
+        (pair, [(0, ids[0], ids[1]), (0, ids[1], ids[0])], 3, 48, [pair[1]]),
     ]
     for case_rows, case_edges, k, ef, queries in cases:
-        for drv, sql, frame in _descent_three_ways(
-            spark, case_rows, case_edges, ids[0], queries, k, ef, metric
-        ):
-            assert drv == sql == frame, (metric, k, ef)
-            assert 0 < len(drv) <= min(k, len(case_rows))
+        pairs = _descent_every_way(spark, case_rows, case_edges, ids[0], queries, k, ef, metric)
+        for got, want in pairs:
+            assert got == want, (metric, k, ef)
+            assert len(got) <= min(k, len(case_rows))
+        assert all(got for got, _ in pairs[: 2 * len(queries)])
 
 
 def test_spark_round_score_matches_spark_round(spark):

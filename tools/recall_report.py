@@ -98,11 +98,15 @@ def main() -> int:
         )
         rows.append((f"IVF-L2 16 centroids, nprobe={nprobe} (vs exact L2)", recall(got, exact_l2)))
 
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_topk, hnsw_build
+    from vector_mcp_spark.operators.graph_ann import ann_hnsw_topk, hnsw_build, publish_serve_set
 
     edges, meta = hnsw_build(assigned, m=12, id_col="vec_id")
+    # one published serve set per graph, reused by every descent below
+    serve = publish_serve_set(embs, edges, id_col="vec_id")
     got = pairs(
-        ann_hnsw_topk(queries, embs, edges, meta["entry"], k=K, ef=48, id_col="vec_id")
+        ann_hnsw_topk(
+            queries, None, None, meta["entry"], k=K, ef=48, id_col="vec_id", serve_set=serve
+        )
     )
     rows.append(("HNSW-style graph, M=12, ef=48, 7-hop beam", recall(got, exact)))
 
@@ -113,7 +117,10 @@ def main() -> int:
 
     for ef in (8, 16, 48, 96):
         fn = lambda: pairs(  # noqa: E731
-            ann_hnsw_topk(queries, embs, edges, meta["entry"], k=K, ef=ef, id_col="vec_id")
+            ann_hnsw_topk(
+                queries, None, None, meta["entry"], k=K, ef=ef, id_col="vec_id",
+                serve_set=serve,
+            )
         )
         fn()  # warm plans
         t0 = _time.time()
@@ -150,8 +157,8 @@ def main() -> int:
     edges_dot, meta_dot = hnsw_build(assigned, m=12, id_col="vec_id", metric="dot")
     got = pairs(
         ann_hnsw_topk(
-            queries, embs, edges_dot, meta_dot["entry"], k=K, ef=48,
-            id_col="vec_id", metric="dot",
+            queries, None, None, meta_dot["entry"], k=K, ef=48, id_col="vec_id",
+            metric="dot", serve_set=publish_serve_set(embs, edges_dot, id_col="vec_id", metric="dot"),
         )
     )
     rows.append(("HNSW-dot graph, M=12, ef=48 (vs exact dot)", recall(got, exact_dot)))

@@ -370,11 +370,17 @@ def serve_probe(factor: int) -> int:
     """
     import hashlib
     import json
+    import re
 
     from pyspark.sql import functions as F
 
     from vector_mcp_spark.functions.text import tokens as _tokens
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_topk, hnsw_build
+    from vector_mcp_spark.operators.graph_ann import (
+        ann_hnsw_prepared_sql,
+        ann_hnsw_topk,
+        hnsw_build,
+        publish_serve_set,
+    )
     from vector_mcp_spark.operators.hybrid import rrf_fuse
     from vector_mcp_spark.operators.lexical import build_postings, term_bucket
     from vector_mcp_spark.operators.similarity import ivf_build
@@ -435,6 +441,23 @@ def serve_probe(factor: int) -> int:
             meta = json.load(f)
         return edges_path, meta
 
+    def candidate_rows(q, embs, edges, entry: object, k: int, metric: str = "cosine") -> int:
+        """Beam candidate rows scored across all hops, counted from the
+        rendered descent's cand_* CTEs (one count job per hop)."""
+        ss = publish_serve_set(embs, edges, id_col="vec_id", metric=metric)
+        batch = [(r.vec_id, list(r.embedding)) for r in q.collect()]
+        sql = ann_hnsw_prepared_sql(
+            ss.nodes_view, ss.edges_view, entry, batch, k=k, metric=metric,
+            broadcast_edges=ss.bcast_edges,
+        )
+        ctes = sql.rsplit("\nSELECT ", 1)[0]
+        n = sum(
+            spark.sql(f"{ctes}\nSELECT count(*) FROM {cand}").first()[0]
+            for cand in re.findall(r"^(cand_\d+) AS \(", sql, re.M)
+        )
+        ss.drop()
+        return n
+
     def timed_warm(fn):
         fn()  # warm: plans, JVM, parquet footers, index cache
         t0 = time.time()
@@ -468,16 +491,14 @@ def serve_probe(factor: int) -> int:
         edges = spark.read.parquet(edges_path)
         q = embs.where(F.col("vec_id") == 0)
 
-        def serve(stats=None):
+        def serve():
             return ann_hnsw_topk(
-                q, embs, edges, meta["entry"], k=10, ef=48, id_col="vec_id",
-                metric=metric, stats=stats,
+                q, embs, edges, meta["entry"], k=10, ef=48, id_col="vec_id", metric=metric,
             ).count()
 
         wall = timed_warm(serve)
-        st: dict = {}
-        serve(stats=st)  # measured separately: counting adds jobs
-        return wall, int(st.get("candidate_rows", 0))
+        # measured separately: counting adds jobs
+        return wall, candidate_rows(q, embs, edges, meta["entry"], 10, metric)
 
     def scenario_sparse_dense(tag: str, sf: str) -> tuple[float, int]:
         pdir, ldir = sparse_family(tag, sf)
@@ -500,11 +521,7 @@ def serve_probe(factor: int) -> int:
 
         wall = timed_warm(serve)
         touched = postings.where(F.col("term").isin([t for t, _ in QW])).count()
-        st: dict = {}
-        ann_hnsw_topk(
-            q, embs, edges, meta["entry"], k=20, ef=48, id_col="vec_id", stats=st
-        ).count()
-        return wall, touched + int(st.get("candidate_rows", 0))
+        return wall, touched + candidate_rows(q, embs, edges, meta["entry"], 20)
 
     # named multi-vector family: a second dense space per point — the
     # deterministic transform (reversed vector) stands in for a real second

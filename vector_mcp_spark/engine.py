@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import functools
 import hashlib
-import itertools
 import os
 import shutil
 import threading
@@ -48,25 +47,18 @@ from vector_mcp_spark.validation import (
     validate_ingest_bounds,
     validate_metric,
     validate_query_vector,
+    validate_stored_vector,
 )
 
 if TYPE_CHECKING:
-    from vector_mcp_spark.operators.graph_ann import DriverServeSet
-
-
-#: unique temp-view names for beam-serve working sets (one pair per
-#: serve-set build; session-scoped, so a plain process-wide counter is safe)
-_SERVE_VIEW_SEQ = itertools.count()
+    from vector_mcp_spark.operators.graph_ann import DriverServeSet, ServeSet
 
 
 class _GraphServe(NamedTuple):
     """One cached graph serve set (see ``CollectionEngine._graph_serve_set``)."""
 
-    nodes: DataFrame
-    edges: DataFrame
-    nodes_view: str
-    edges_view: str
-    bcast_edges: bool
+    #: the published set the SQL descent reads
+    sql: ServeSet
     #: the driver-resident copy, or None when the set is over the bound
     driver: DriverServeSet | None
 
@@ -182,16 +174,18 @@ class CollectionEngine:
 
     def _graph_serve_set(self, index_root: Path, metric: str, corpus) -> _GraphServe:
         """The warm working set for one graph index build — what a vector
-        DB keeps open next to its persisted graph: the checkpointed
-        (nodes, edges) under the temp-view names the prepared descent SQL
-        references (r14, guide §1/§4), its measured broadcast gate, and,
-        when it fits that same bound, a driver-resident copy the descent
-        runs on in-process with no Spark job. Built once per (build,
-        metric); evicts prior builds of the same root (and drops their
-        views) so a rebuild does not pin dead checkpoint blocks.
-        ``corpus`` is called on a miss only: a zero-argument callable
-        returning the (id, embedding[, content]) frame the build serves."""
-        from vector_mcp_spark.operators.graph_ann import collect_serve_set, hnsw_serve_set
+        DB keeps open next to its persisted graph: the published serve set
+        the SQL descent reads (views, sizes and broadcast gate, from
+        :func:`~vector_mcp_spark.operators.graph_ann.publish_serve_set`)
+        and, when it fits the same broadcast bound, a driver-resident copy
+        the descent runs on in-process with no Spark job. Built once per
+        (build, metric) and per engine; evicts prior builds of the same
+        root (and drops their views) so a rebuild does not pin dead
+        checkpoint blocks. ``corpus`` is called on a miss only: a
+        zero-argument callable returning the (id, embedding[, content])
+        frame the build serves."""
+        from vector_mcp_spark.operators.graph_ann import collect_serve_set, publish_serve_set
+        from vector_mcp_spark.operators.partition import fits_broadcast
 
         st = (index_root / "manifest.json").stat()
         key = (str(index_root), st.st_mtime_ns, metric)
@@ -199,45 +193,29 @@ class CollectionEngine:
         if hit is not None:
             return hit
         for old in [k for k in self._graph_serve_sets if k[0] == key[0]]:
-            gone = self._graph_serve_sets.pop(old)
-            self.spark.catalog.dropTempView(gone.nodes_view)
-            self.spark.catalog.dropTempView(gone.edges_view)
+            self._graph_serve_sets.pop(old).sql.drop()
         frame = corpus()
-        edges = self.spark.read.parquet(str(index_root / "graph"))
-        nodes, edges = hnsw_serve_set(
-            frame, edges, id_col="id", emb_col="embedding", metric=metric
+        ss = publish_serve_set(
+            frame, self.spark.read.parquet(str(index_root / "graph")),
+            id_col="id", emb_col="embedding", metric=metric,
         )
-        seq = next(_SERVE_VIEW_SEQ)
-        nodes_view, edges_view = f"_hnsw_serve_nodes_{seq}", f"_hnsw_serve_edges_{seq}"
-        nodes.createOrReplaceTempView(nodes_view)
-        edges.createOrReplaceTempView(edges_view)
-        # one measured bound, the session's broadcast threshold, gates both
-        # serve shapes. Counted ONCE per build over the cached partitions,
-        # so the decisions are scale-adaptive: the descent's per-hop
-        # edge-union side (two id columns) is hinted to broadcast only when
-        # it fits, and the whole set is collected to the driver only when
-        # its estimate — nodes × (dim·8 + content bytes + 64) + edges × 64 —
-        # fits too (a broadcast is a driver-side collect of that size
-        # already). Over the bound, or with the bound at −1, the SQL
-        # descent serves.
-        try:
-            limit = int(self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-        except (TypeError, ValueError):
-            limit = 10 * 1024 * 1024
-        n_nodes, n_values = nodes.agg(F.count(F.lit(1)), F.sum(F.size("v"))).first()
-        n_edges = edges.count()
-        bcast_edges = 0 <= (n_nodes + n_edges) * 64 <= limit
-        nbytes = (n_values or 0) * 8 + (n_nodes + n_edges) * 64
+        # the driver copy is collected only when its estimate — nodes ×
+        # (dim·8 + content bytes + 64) + edges × 64, from the counts the
+        # serve set already took — fits the broadcast bound (a broadcast
+        # is a driver-side collect of that size already). Over the bound,
+        # or with the bound at −1, the SQL descent serves.
+        nbytes = ss.n_values * 8 + (ss.n_nodes + ss.n_edges) * 64
         payload = None
-        if "content" in frame.columns and nbytes <= limit:
+        if "content" in frame.columns and fits_broadcast(self.spark, nbytes):
             payload = frame.select("id", "content")
             nbytes += payload.agg(F.sum(F.octet_length("content"))).first()[0] or 0
         driver = (
-            collect_serve_set(nodes, edges, payload, nbytes) if 0 <= nbytes <= limit else None
+            collect_serve_set(ss.nodes, ss.edges, payload, nbytes)
+            if fits_broadcast(self.spark, nbytes)
+            else None
         )
-        ss = _GraphServe(nodes, edges, nodes_view, edges_view, bcast_edges, driver)
-        self._graph_serve_sets[key] = ss
-        return ss
+        self._graph_serve_sets[key] = _GraphServe(ss, driver)
+        return self._graph_serve_sets[key]
 
     # -- catalog ------------------------------------------------------------
     #
@@ -856,7 +834,7 @@ class CollectionEngine:
         for c, m, e in zip(contents, metadatas, embeddings):
             content = sanitize_text_py(c)
             meta = sanitize_metadata_py(dict(m)) if m else None
-            emb = [float(x) for x in e] if e is not None else None
+            emb = validate_stored_vector(e) if e is not None else None
             # T2 in-batch dedup, last-writer-wins (vector_api.py:363-366):
             # dict assignment keeps the final writer's row per content id
             prepped[hashlib.sha256(content.encode("utf-8")).hexdigest()] = (content, meta, emb)
@@ -1464,7 +1442,7 @@ class CollectionEngine:
         rows = []
         for pid, vec in vectors.items():
             pid = str(pid)
-            vec = [float(x) for x in vec]
+            vec = validate_stored_vector(vec)
             if dim is not None and len(vec) != dim:
                 raise EngineError(
                     "collection_vector_schema_mismatch",
@@ -1626,10 +1604,9 @@ class CollectionEngine:
         if (meta.get("graph") or {}).get("entry") is None:
             return empty
         # the warm serve set answers in-process when it fits the driver
-        # bound, else the prepared single-query descent over its views —
-        # both bit-identical to ann_hnsw_topk(exclude_self=False). The
-        # content join stays: this index's freshness covers the named
-        # vectors, not the main table's content.
+        # bound, else the one-query SQL descent over its views — the same
+        # rows either way. The content join stays: this index's freshness
+        # covers the named vectors, not the main table's content.
         serve = self._graph_serve_set(
             root, metric, lambda: vecs.select("id", F.col("vector").alias("embedding"))
         )
@@ -1753,6 +1730,7 @@ class CollectionEngine:
         from vector_mcp_spark.operators.quantize import dequantize_expr, sign_pack_py
 
         scoped = self._require(name)
+        question_vec = validate_query_vector(question_vec)
         if self.index_status(name) not in ("fresh", "repaired"):
             raise EngineError("index_not_fresh")
         manifest = json.loads((self._index_root(scoped) / "manifest.json").read_text())
@@ -1766,7 +1744,7 @@ class CollectionEngine:
                 detail="sign shortlist is cosine-only; rebuild under int8",
             )
         if manifest.get("quantization", "sign") == "sign":
-            qlo, qhi = sign_pack_py(list(question_vec))
+            qlo, qhi = sign_pack_py(question_vec)
             signs = self.spark.read.parquet(str(self._index_root(scoped) / "signs"))
             ham = F.bit_count(F.col("lo").bitwiseXOR(F.lit(qlo))) + F.bit_count(
                 F.col("hi").bitwiseXOR(F.lit(qhi))
@@ -1793,7 +1771,7 @@ class CollectionEngine:
                     "collection_vector_schema_mismatch",
                     detail=f"query dimension {len(question_vec)} != indexed {dim}",
                 )
-            qarr = F.array(*[F.lit(float(x)) for x in question_vec])
+            qarr = F.array(*[F.lit(x) for x in question_vec])
             deq = dequantize_expr("q", "scale")
             if metric == "cosine":
                 approx = cosine_similarity(deq, qarr)
@@ -1809,7 +1787,7 @@ class CollectionEngine:
                 .drop("_approx")
             )
         df = self._served_embeddings_df(name, scoped)
-        qv = F.array(*[F.lit(float(x)) for x in question_vec])
+        qv = F.array(*[F.lit(x) for x in question_vec])
         if metric == "cosine":
             sim = dot(F.col("embedding"), qv) / (l2_norm(F.col("embedding")) * l2_norm(qv))
         elif metric == "dot":
@@ -1872,16 +1850,11 @@ class CollectionEngine:
         if meta.get("entry") is None:
             return self._local_hits([])
         metric = manifest.get("distance") or "cosine"
-
-        def corpus() -> DataFrame:
-            df = self._served_embeddings_df(name, scoped)
-            return df.where(F.col("embedding").isNotNull()).select("id", "embedding", "content")
-
         # a warm serve set inside the driver bound answers in-process from
         # its collected copy — no table read, no Spark job (the freshness
         # checks above cover the table the copy's content came from);
-        # otherwise the prepared single-query descent over its views
-        serve = self._graph_serve_set(self._index_root(scoped), metric, corpus)
+        # otherwise the one-query SQL descent over its views
+        serve = self._collection_graph_serve(name, scoped, metric)
         args = (serve, meta["entry"], question_vec, k, ef, metric)
         rows = self._driver_graph_hits(*args)
         if rows is not None:
@@ -1892,6 +1865,16 @@ class CollectionEngine:
             .select("id", "content", "score")
             .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
         )
+
+    def _collection_graph_serve(self, name: str, scoped: str, metric: str) -> _GraphServe:
+        """The collection's cached serve set: its graph over the served
+        (id, embedding, content) rows that have a vector."""
+
+        def corpus() -> DataFrame:
+            df = self._served_embeddings_df(name, scoped)
+            return df.where(F.col("embedding").isNotNull()).select("id", "embedding", "content")
+
+        return self._graph_serve_set(self._index_root(scoped), metric, corpus)
 
     def _driver_graph_hits(
         self, serve: _GraphServe, entry, question_vec, k: int, ef: int, metric: str
@@ -1921,19 +1904,17 @@ class CollectionEngine:
     def _sql_graph_hits(
         self, serve: _GraphServe, entry, question_vec, k: int, ef: int, metric: str
     ) -> DataFrame:
-        """(id, score) of the prepared single-query descent: one spark.sql
-        text over the serve set's views — identical joins/folds/ordering
-        to ann_hnsw_topk with exclude_self=False (the query is not a corpus
-        row; a document whose id happens to equal the synthetic query id
-        must still be returnable), without the ~60 eagerly-analyzed
-        DataFrame steps or the per-serve query-checkpoint job (r14, guide
-        §1/§4)."""
+        """(id, score) of the one-query SQL descent over the serve set's
+        views, without ``exclude_self`` (the query is not a corpus row; a
+        document whose id happens to equal the synthetic query id must
+        still be returnable) — no query-checkpoint job (r14, guide §1/§4)."""
         from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
 
+        ss = serve.sql
         return self.spark.sql(
             ann_hnsw_prepared_sql(
-                serve.nodes_view, serve.edges_view, entry, question_vec, k=k,
-                ef=ef, metric=metric, broadcast_edges=serve.bcast_edges,
+                ss.nodes_view, ss.edges_view, entry, [("__q__", question_vec)], k=k,
+                ef=ef, metric=metric, broadcast_edges=ss.bcast_edges,
             )
         ).select(F.col("neighbor_id").alias("id"), "score")
 
@@ -1975,7 +1956,7 @@ class CollectionEngine:
         from vector_mcp_spark.operators.pq import ann_ivf_adc_rerank_topk
 
         scoped = self._require(name)
-        question_vec = [float(x) for x in question_vec]
+        question_vec = validate_query_vector(question_vec)
         dim = self._locked_dimension(scoped)
         if dim is not None and len(question_vec) != dim:
             # same refusal as indexed_graph_search: a mis-sized query would
@@ -2102,7 +2083,7 @@ class CollectionEngine:
                         f"got {sorted(value)}",
                     )
         scoped = self._require(name)
-        question_vec = [float(x) for x in question_vec]
+        question_vec = validate_query_vector(question_vec)
         dim = self._locked_dimension(scoped)
         if dim is not None and len(question_vec) != dim:
             raise EngineError(
@@ -2170,14 +2151,13 @@ class CollectionEngine:
                 indexed_ids if allowed is None
                 else allowed.join(indexed_ids, "id", "left_semi")
             )
-        edges = self.spark.read.parquet(str(self._index_root(scoped) / "graph"))
         corpus = df.where(F.col("embedding").isNotNull()).select("id", "embedding")
         query = self.spark.createDataFrame(
             [("__q__", question_vec)], "id string, embedding array<float>"
         )
         metric = manifest.get("distance") or "cosine"
         hits, _regime = ann_filtered_topk_routed(
-            query, corpus, edges, meta["entry"], allowed, k, ef=ef, id_col="id",
+            query, corpus, None, meta["entry"], allowed, k, ef=ef, id_col="id",
             exclude_self=False,  # the query is synthetic, not a corpus row
             selectivity_threshold=selectivity_threshold,
             # the manifest recorded the corpus cardinality at build time
@@ -2185,6 +2165,9 @@ class CollectionEngine:
             # corpus-wide count for the selectivity estimate
             n_total=int(manifest["n_vectors"]),
             metric=metric,
+            # the graph regime descends the cached serve set (built on a
+            # miss), never a per-query graph re-read and re-checkpoint
+            serve_set=lambda: self._collection_graph_serve(name, scoped, metric).sql,
         )
         return (
             df.join(F.broadcast(hits.select(F.col("neighbor_id").alias("id"), "score")), "id")

@@ -22,9 +22,11 @@ re-expression is the batch construction the distributed ANN literature uses
 * **Search** is greedy beam search replayed as a FIXED unrolled stage list
   (1 hop at layer 2, 2 at layer 1, 4 at layer 0): each hop expands the beam
   through the layer's edge list (equi-join bounded by ef·M per query),
-  re-scores, and keeps the top-``ef`` per query. Fixed unrolling is what
-  makes the whole search expressible as bounded CTEs for the DuckDB oracle
-  (the k-means/BPE replay pattern).
+  re-scores, and keeps the top-``ef`` per query — expressible as bounded
+  CTEs for the DuckDB oracle. Two implementations: the Spark descent
+  :func:`ann_hnsw_prepared_sql` (one SQL text; :func:`ann_hnsw_topk`
+  adapts DataFrames to it) and :func:`ann_hnsw_driver_topk`, the same
+  descent in numpy over a small serve set collected to the driver.
 
 Recall on the suite's hash-random embeddings (the worst case — no cluster
 structure): 1.00 / 1.00 / 0.98 @5 at sf0.001/0.01/0.1 with M=12, ef=48
@@ -37,8 +39,9 @@ controlled by the blocking keys exactly like dedup.py's banded LSH join.
 
 from __future__ import annotations
 
+import itertools
 import math
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Context, Decimal
 
@@ -47,11 +50,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_mcp_spark.functions.vector import dot
+from vector_mcp_spark.operators.partition import fits_broadcast
 from vector_mcp_spark.operators.similarity import SCORE_DECIMALS
 from vector_mcp_spark.validation import EngineError, validate_query_vector
 
 #: beam hops per layer, top layer first — FIXED so the SQL oracle can unroll
 HNSW_HOPS: tuple[tuple[int, int], ...] = ((2, 1), (1, 2), (0, 4))
+#: the same schedule as one layer per hop
+_HOP_LAYERS = tuple(layer for layer, n_hops in HNSW_HOPS for _ in range(n_hops))
 
 # Build-geometry constants shared with the suite's SQL oracle
 # (suite_pipeline._hnsw_oracle derives its literals from these and asserts
@@ -260,13 +266,11 @@ def hnsw_serve_set(
     emb_col: str = "embedding",
     metric: str = "cosine",
 ) -> tuple[DataFrame, DataFrame]:
-    """Materialize the query-INDEPENDENT beam-serve working set once:
-    ``(nodes, edges)`` with nodes = (node, v, n) carrying the metric's
-    per-node norm, both localCheckpointed. A vector DB holds exactly this
-    in RAM next to the graph; callers that serve many queries against one
-    index build it once and pass it as ``serve_set`` so each serve skips
-    two eager checkpoint jobs (guide §1.2). The frames are bound to the
-    building SparkSession — key any cache by applicationId."""
+    """The query-INDEPENDENT beam-serve working set: ``(nodes, edges)``
+    with nodes = (node, v, n) carrying the metric's per-node norm, both
+    localCheckpointed — what a vector DB holds in RAM next to the graph.
+    Callers serving many queries publish it once (:func:`publish_serve_set`)
+    so each serve skips two eager checkpoint jobs (guide §1.2)."""
     nodes = corpus.select(
         F.col(id_col).alias("node"),
         F.col(emb_col).alias("v"),
@@ -275,185 +279,98 @@ def hnsw_serve_set(
     return nodes, edges.localCheckpoint(eager=True)
 
 
-def ann_hnsw_topk(
-    queries: DataFrame,
+#: one naming scheme for every view a descent reads — serve sets, query
+#: frames, allowed sets: GLOBAL temp views, because serve sets are cached
+#: across sessions and a session view registered by the frame's own
+#: (parent) session would not resolve from a sibling that hits the cache
+_VIEW_SEQ = itertools.count()
+
+
+def _global_view(df: DataFrame, kind: str) -> str:
+    """Register ``df`` under a fresh global temp view; its qualified name."""
+    name = f"_hnsw_{kind}_{next(_VIEW_SEQ)}"
+    df.createOrReplaceGlobalTempView(name)
+    return f"{df.sparkSession.conf.get('spark.sql.globalTempDatabase')}.{name}"
+
+
+def _drop_view(spark, qualified: str) -> None:
+    spark.catalog.dropGlobalTempView(qualified.split(".", 1)[1])
+
+
+@dataclass(frozen=True)
+class ServeSet:
+    """A :func:`hnsw_serve_set` working set published for the SQL descent:
+    its frames, their global temp views, the sizes counted once, and the
+    edge-broadcast gate :func:`ann_hnsw_prepared_sql` takes."""
+
+    nodes: DataFrame
+    edges: DataFrame
+    nodes_view: str
+    edges_view: str
+    n_nodes: int
+    n_edges: int
+    #: total vector elements — sizes a driver-resident copy
+    n_values: int
+    bcast_edges: bool
+
+    def drop(self) -> None:
+        for view in (self.nodes_view, self.edges_view):
+            _drop_view(self.nodes.sparkSession, view)
+
+
+def publish_serve_set(
     corpus: DataFrame,
     edges: DataFrame,
-    entry: object,
-    k: int,
-    ef: int = 48,
-    hops: tuple[tuple[int, int], ...] = HNSW_HOPS,
     id_col: str = "id",
     emb_col: str = "embedding",
-    exclude_self: bool = True,
-    allowed: DataFrame | None = None,
     metric: str = "cosine",
-    stats: dict | None = None,
-    serve_set: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """Greedy beam search over the layered graph: start every query's beam
-    at the shared entry node, descend the fixed ``hops`` schedule, keep the
-    top-``ef`` per query each hop, answer with the final beam's top-``k``.
-    Returns (query_id, rank, neighbor_id, score) like every ANN operator.
-
-    ``stats`` (probe-only — serving callers leave it None) accumulates
-    ``candidate_rows``: the total candidate rows scored across all hops,
-    the beam's REAL index-bounded work metric (≤ stages × ef × (2m+1) per
-    query, independent of corpus size). Counting forces one extra action
-    per hop, so it is strictly a measurement hook.
-
-    ``allowed`` (a one-column id DataFrame) post-filters the final beam
-    before the top-k — the qdrant filtered-search composition in its
-    "plain" (unfiltered-traversal) mode: under selective filters fewer
-    than ``k`` rows may return; raise ``ef`` to deepen the pool, or
-    pre-filter + exact re-rank when selectivity is extreme.
-
-    Each hop is one equi-join of the beam (≤ ef rows/query) against the
-    layer's edge partition (≤ 2m rows/node) plus a per-query top-ef window —
-    bounded work per query per hop, no full-corpus scan after the build.
-    """
-    if metric not in GRAPH_METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
-    if serve_set is not None:
-        # query-independent working set prepared ONCE by the caller
-        # (hnsw_serve_set) and reused across serves: skips two eager
-        # checkpoint jobs + their plan analyses per query (measured ~1 s
-        # of pure driver latency per serve at sf0.1 — guide §1.2, don't
-        # recompute what the index already holds)
-        nodes, edges = serve_set
-    else:
-        nodes = corpus.select(
-            F.col(id_col).alias("node"),
-            F.col(emb_col).alias("v"),
-            _node_norm(F.col(emb_col), metric).alias("n"),
-        ).localCheckpoint(eager=True)  # feeds one scoring join per hop
-        edges = edges.localCheckpoint(eager=True)
-
-    # checkpointed too: every hop's rescore joins q, and without a leaf here
-    # each hop would re-scan the query frame's lineage (r13 optimization —
-    # one job now instead of a scan + norm projection per hop)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("qv"),
-        _node_norm(F.col(emb_col), metric).alias("qn"),
-    ).localCheckpoint(eager=True)
-    beam = q.select("query_id").withColumn("node", F.lit(entry))
-    # keep-or-expand as ONE equi-join: a self-loop per node makes
-    # beam ⋈ (edges ∪ self) ≡ beam ∪ neighbors(beam) — the union that
-    # previously referenced the beam twice (forcing an eager localCheckpoint
-    # per hop to appease Catalyst's union constraint rewriting) disappears,
-    # so the whole descent plans as ONE action: broadcast exchanges for q
-    # and nodes are REUSED across hops instead of rebuilt per checkpoint job
-    # (r13: 3.9 s → 2.5 s per beam entry at sf0.1, results bit-identical).
-    self_edges = nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-
-    def rescore_topn(cand: DataFrame, n_keep: int) -> DataFrame:
-        scored = (
-            cand.join(q, "query_id")
-            .join(nodes, "node")
-            .withColumn(
-                "_sm",
-                _pair_score(metric, F.col("qv"), F.col("qn"), F.col("v"), F.col("n")),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            *_score_order(metric, F.col("_sm"), F.col("node"))
-        )
-        return scored.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= n_keep)
-
-    first_hop = True
-    for layer, n_hops in hops:
-        e = edges.where(F.col("layer") == layer).select("src", "dst")
-        e_self = e.union(self_edges)
-        for _ in range(n_hops):
-            if first_hop:
-                # Hop 1 is query-INDEPENDENT: every beam is {entry}, so its
-                # expansion is exactly entry's neighbor list on this layer.
-                # Joining a million concurrent beams against the one edge
-                # partition holding src=entry is the known 100 TB hotspot;
-                # instead compute the shared candidate set ONCE (≤ 2m+1
-                # rows) and broadcast-cross it to the queries. Same
-                # candidates per query → bit-identical results.
-                seed = (
-                    e.where(F.col("src") == F.lit(entry))
-                    .select(F.col("dst").alias("node"))
-                    .union(q.select(F.lit(entry).alias("node")).limit(1))
-                    .distinct()
-                )
-                # distinct matches the replaced path's cand.distinct(): a duplicated
-                # query id must not burn beam slots on duplicate candidate rows
-                cand = q.select("query_id").distinct().join(F.broadcast(seed))
-                if stats is not None:
-                    stats["candidate_rows"] = stats.get("candidate_rows", 0) + cand.count()
-                beam = rescore_topn(cand, ef).select("query_id", "node")
-                first_hop = False
-                continue
-            # one equi-join against the self-looped edge partition = the old
-            # beam ∪ neighbors(beam): a beam node with no edges on this layer
-            # survives via its self-loop, exactly like the replaced union
-            cand = (
-                beam.join(e_self, beam["node"] == e_self["src"])
-                .select("query_id", F.col("dst").alias("node"))
-                .distinct()
-            )
-            if stats is not None:
-                cand = cand.localCheckpoint(eager=True)  # count once, score same rows
-                stats["candidate_rows"] = stats.get("candidate_rows", 0) + cand.count()
-            beam = rescore_topn(cand, ef).select("query_id", "node")
-
-    # exclude_self drops a query's own corpus row (queries drawn FROM the
-    # corpus); engine callers pass synthetic query ids NOT in the corpus and
-    # set False so an id-equal document can never be silently excluded
-    if exclude_self:
-        beam = beam.where(F.col("query_id") != F.col("node"))
-    if allowed is not None:
-        # no broadcast hint: the allowed set is FILTER-sized (a broad
-        # predicate can cover half the corpus), not batch-sized — a forced
-        # broadcast would hit the driver/broadcast limits at scale; AQE
-        # still picks broadcast when the set is actually small
-        ids = allowed.select(F.col(allowed.columns[0]).alias("node")).distinct()
-        beam = beam.join(ids, "node", "left_semi")
-    final = rescore_topn(beam, k)
-    return final.select(
-        "query_id",
-        F.col("_rn").cast("int").alias("rank"),
-        F.col("node").alias("neighbor_id"),
-        F.round("_sm", SCORE_DECIMALS).alias("score"),
+) -> ServeSet:
+    """:func:`hnsw_serve_set`, registered as global temp views and
+    measured once over the cached partitions: node, edge and vector-value
+    counts, and the broadcast gate for the descent's per-hop edge-union
+    side (two id columns, ~64 B a row) against the session's broadcast
+    threshold. Scale-adaptive: once the union outgrows the threshold the
+    gate never fires and the ef-bounded beam stays the join's build side.
+    The caller owns the lifetime; :meth:`ServeSet.drop` unregisters."""
+    nodes, edges = hnsw_serve_set(corpus, edges, id_col=id_col, emb_col=emb_col, metric=metric)
+    n_nodes, n_values = nodes.agg(F.count(F.lit(1)), F.sum(F.size("v"))).first()
+    n_edges = edges.count()
+    return ServeSet(
+        nodes, edges, _global_view(nodes, "nodes"), _global_view(edges, "edges"),
+        n_nodes, n_edges, n_values or 0,
+        fits_broadcast(nodes.sparkSession, (n_nodes + n_edges) * 64),
     )
 
 
 # ---------------------------------------------------------------------------
-# Prepared single-query descent (engine serve path, optimization guide §1/§4)
+# The Spark descent: one SQL renderer (optimization guide §1/§4)
 #
-# ann_hnsw_topk builds the 7-hop descent through ~60 DataFrame
-# transformations, and PySpark analyzes each intermediate Dataset EAGERLY —
-# the analyzer re-walks a growing tree every step, measured ~1.5 s of pure
-# DRIVER time per engine serve (r13 §15: plan-build 1.9 s before serve-set
-# caching; zero active Spark jobs throughout). For the engine's
-# one-literal-vector serves the identical descent renders as ONE SQL text
-# over the serve set registered as temp views: one parse + one analysis of
-# the final tree. Same joins, same HOF dot folds (sequential left fold over
-# double-widened floats), same window order with the same NULL placement,
-# same ROUND — results are bit-identical (pinned by
-# tests/test_engine.py::test_prepared_descent_matches_dataframe_path across
-# metrics/dims/k/ef). The DataFrame path stays for multi-query/DataFrame-
-# query callers (suite entries), whose plans and hashes are untouched.
+# As ~60 DataFrame steps, each analyzed EAGERLY by PySpark, the descent cost
+# ~1.5 s of driver time per serve (r13 §15); as ONE SQL text it is one parse
+# and one analysis. Its folds are functions.vector.dot's HOF expression
+# (sequential left fold over double-widened floats), so the driver descent
+# below can replay it bit for bit.
 # ---------------------------------------------------------------------------
 
 
-def _sql_str_lit(value: object) -> str:
-    """SQL literal for an entry/query id (string ids get escaped+quoted)."""
+def _id_sql(value: object, typed: bool = True) -> str:
+    """SQL literal for an entry/query id: strings escaped and quoted,
+    numbers ``typed`` like a BIGINT id column."""
     if isinstance(value, bool) or not isinstance(value, (int, float)):
         s = str(value).replace("\\", "\\\\").replace("'", "\\'")
         return f"'{s}'"
-    return repr(value)
+    return f"CAST({value!r} AS BIGINT)" if typed else repr(value)
+
+
+def _vec_sql(vec: Sequence[float]) -> str:
+    return "CAST(array({}) AS ARRAY<FLOAT>)".format(", ".join(f"{x!r}D" for x in vec))
 
 
 def _dot_sql(a: str, b: str) -> str:
     """SQL text of functions.vector.dot: zip_with + aggregate sequential
-    fold over double-widened elements — the exact expression the DataFrame
-    path evaluates, so the fold order (and hence every float result) is
-    identical."""
+    fold over double-widened elements — the exact expression the build's
+    DataFrame scoring evaluates, so the fold order (and hence every float
+    result) is identical."""
     da = f"transform({a}, x -> CAST(x AS DOUBLE))"
     db = f"transform({b}, x -> CAST(x AS DOUBLE))"
     return f"aggregate(zip_with({da}, {db}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
@@ -488,253 +405,201 @@ def ann_hnsw_prepared_sql(
     nodes_view: str,
     edges_view: str,
     entry: object,
-    question_vec: Sequence[float],
+    queries: str | Sequence[tuple[object, Sequence[float]]],
     k: int,
     ef: int = 48,
-    hops: tuple[tuple[int, int], ...] = HNSW_HOPS,
     metric: str = "cosine",
-    query_id: object = "__q__",
     broadcast_edges: bool = False,
     exclude_self: bool = False,
+    allowed_view: str | None = None,
 ) -> str:
-    """Render the full fixed-schedule beam descent for ONE literal query
-    vector as a single SQL text over the registered serve-set views
-    (``nodes_view``: (node, v, n); ``edges_view``: (layer, src, dst), both
-    localCheckpointed by :func:`hnsw_serve_set`). ``spark.sql(text)`` is
-    the whole per-serve driver cost — no per-transform analysis, no q
-    checkpoint job (the query row is a one-row inline relation whose
-    re-evaluation per hop is free). Output schema and values match
-    ``ann_hnsw_topk(..., exclude_self=False)`` exactly."""
+    """The fixed-schedule beam descent as ONE SQL text over the
+    :func:`hnsw_serve_set` views ``nodes_view`` (node, v, n) and
+    ``edges_view`` (layer, src, dst). ``queries`` is a view (query_id, qv)
+    or a literal ``[(id, vector), ...]`` batch (inline ``VALUES``; empty
+    batches and NaN/Inf refuse with ``collection_vector_schema_mismatch``).
+    Returns (query_id, rank, neighbor_id, score), scores rounded.
+
+    Beams start at ``entry``; hop 1 (entry's top-layer neighbors plus
+    entry) is query-independent, computed once and broadcast-crossed to
+    the queries. Each later hop is one equi-join of the beam against the
+    layer's edges plus a self-loop per node (≡ beam ∪ neighbors(beam)),
+    re-scored and cut to the top-``ef`` per query. ``exclude_self`` drops
+    a query's own corpus row, then ``allowed_view`` (one ``node`` column)
+    semi-joins the final beam — qdrant's plain-mode filtered search, so
+    selective filters may return < ``k`` rows. ``broadcast_edges`` (the
+    serve set's measured gate) lets every hop reuse one edge broadcast.
+
+    A batch of one renders its vector and norm as literal expressions:
+    no join against ``q`` per hop and no ``PARTITION BY`` (beam-bounded
+    rows), same values, 17–26% faster per hybrid entry when measured."""
     if metric not in GRAPH_METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
-    question_vec = validate_query_vector(question_vec)
-    # the query vector/norm are LITERAL expressions, not a relation: the
-    # per-hop "join q" of the DataFrame path (which exists because there
-    # the queries are a DataFrame) disappears entirely — one join per hop
-    # (beam x self-looped edges) plus one scoring join against nodes. The
-    # norm is the same expression over the same literal array, so qn (and
-    # every score derived from it) is bit-equal to the DataFrame path's.
-    qv = "CAST(array({}) AS ARRAY<FLOAT>)".format(
-        ", ".join(f"{x!r}D" for x in question_vec)
-    )
-    qn = _norm_sql(qv, metric)
-    qid, ent = _sql_str_lit(query_id), _sql_str_lit(entry)
-    score = _pair_score_sql(metric, qv, qn, "nd.v", "nd.n")
-    order = _order_sql(metric)
+    one = None
+    source = queries
+    if not isinstance(queries, str):
+        if not queries:
+            # VALUES with no rows is not SQL
+            raise EngineError("collection_vector_schema_mismatch", detail="empty query batch")
+        batch = [(qid, _vec_sql(validate_query_vector(v))) for qid, v in queries]
+        one = batch[0] if len(batch) == 1 else None
+        rows = ",\n    ".join(f"({_id_sql(qid)}, {v})" for qid, v in batch)
+        source = f"(VALUES\n    {rows}) AS t(query_id, qv)"
+    order, keep = _order_sql(metric), int(ef)
+    ctes = []
+    if one is not None:
+        qid, ent, qv = _id_sql(one[0], False), _id_sql(entry, False), one[1]
+        score = _pair_score_sql(metric, qv, _norm_sql(qv, metric), "nd.v", "nd.n")
+        cols, head, not_self = "node", f"{qid} AS query_id", f"node != {qid}"
 
-    def rescore(cand: str, out: str) -> str:
-        # single query => the DataFrame path's PARTITION BY query_id window
-        # is one partition; rows are beam-bounded (<= ef * (2m+1)), so the
-        # single-partition sort is tiny at any corpus scale
-        return (
-            f"{out} AS (\n"
-            f"  SELECT node, _sm, row_number() OVER (ORDER BY {order}) AS _rn\n"
-            f"  FROM (SELECT nd.node, {score} AS _sm\n"
-            f"        FROM {cand} c JOIN {nodes_view} nd ON c.node = nd.node)\n"
-            f")"
-        )
-
-    ctes = [
-        # hop 1 is query-independent: entry's neighbor list on the top
-        # schedule layer plus the entry itself (same rows as the DataFrame
-        # path's broadcast seed)
-        (
-            "cand_1 AS (\n"
-            "  SELECT DISTINCT node FROM (\n"
-            f"    SELECT dst AS node FROM {edges_view}"
-            f" WHERE layer = {int(hops[0][0])} AND src = {ent}\n"
-            f"    UNION ALL SELECT {ent} AS node\n"
-            "  )\n"
-            ")"
-        ),
-        rescore("cand_1", "sc_1"),
-        f"beam_1 AS (SELECT node FROM sc_1 WHERE _rn <= {int(ef)})",
-    ]
-    i = 1
-    first_hop = True
-    for layer, n_hops in hops:
-        for _ in range(n_hops):
-            if first_hop:
-                first_hop = False
-                continue  # the seed hop above
-            i += 1
-            # self-looped edge partition: beam ∪ neighbors(beam) as one
-            # equi-join, exactly like the DataFrame path. With unknown
-            # leaf stats the planner builds the beam side — correct at
-            # scale (ef rows vs a huge edge table) but a fresh
-            # non-reusable broadcast stage per hop locally; when the
-            # caller MEASURED the serve set small enough to fit the
-            # session broadcast threshold (the bcast_if_fits gate),
-            # hinting the edge-union side instead lets every hop of a
-            # layer REUSE one broadcast build.
-            hint = "/*+ BROADCAST(e) */ " if broadcast_edges else ""
-            ctes.append(
-                f"cand_{i} AS (\n"
-                f"  SELECT {hint}DISTINCT e.dst AS node\n"
-                f"  FROM beam_{i - 1} b JOIN (\n"
-                f"    SELECT src, dst FROM {edges_view} WHERE layer = {int(layer)}\n"
-                f"    UNION ALL SELECT node AS src, node AS dst FROM {nodes_view}\n"
-                "  ) e ON b.node = e.src\n"
-                ")"
+        def rescore(cand: str, out: str) -> str:
+            return (
+                f"{out} AS (\n"
+                f"  SELECT node, _sm, row_number() OVER (ORDER BY {order}) AS _rn\n"
+                f"  FROM (SELECT nd.node, {score} AS _sm\n"
+                f"        FROM {cand} c JOIN {nodes_view} nd ON c.node = nd.node)\n"
+                f")"
             )
-            ctes.append(rescore(f"cand_{i}", f"sc_{i}"))
-            ctes.append(f"beam_{i} AS (SELECT node FROM sc_{i} WHERE _rn <= {int(ef)})")
-    last = f"beam_{i}"
-    if exclude_self:
-        # queries drawn FROM the corpus: drop the query's own row, exactly
-        # like the DataFrame path's query_id != node filter
-        ctes.append(f"beam_f AS (SELECT node FROM {last} WHERE node != {qid})")
-        last = "beam_f"
-    ctes.append(rescore(last, "final"))
-    body = ",\n".join(ctes)
-    return (
-        f"WITH {body}\n"
-        f"SELECT {qid} AS query_id, CAST(_rn AS INT) AS rank, node AS neighbor_id,\n"
-        f"       ROUND(_sm, {SCORE_DECIMALS}) AS score\n"
-        f"FROM final WHERE _rn <= {int(k)}"
+
+    else:
+        ent = _id_sql(entry)
+        score = _pair_score_sql(metric, "q.qv", "q.qn", "nd.v", "nd.n")
+        cols, head, not_self = "query_id, node", "query_id", "query_id != node"
+        qn = _norm_sql("qv", metric)
+        ctes.append(f"q AS (\n  SELECT query_id, qv, {qn} AS qn\n  FROM {source}\n)")
+
+        def rescore(cand: str, out: str) -> str:
+            return (
+                f"{out} AS (\n"
+                f"  SELECT query_id, node, _sm,\n"
+                f"         row_number() OVER (PARTITION BY query_id ORDER BY {order}) AS _rn\n"
+                f"  FROM (SELECT c.query_id, c.node, {score} AS _sm\n"
+                f"        FROM {cand} c JOIN q ON c.query_id = q.query_id\n"
+                f"        JOIN {nodes_view} nd ON c.node = nd.node)\n"
+                f")"
+            )
+
+    ctes.append(
+        f"{'cand_1' if one else 'seed'} AS (\n"
+        "  SELECT DISTINCT node FROM (\n"
+        f"    SELECT dst AS node FROM {edges_view}"
+        f" WHERE layer = {_HOP_LAYERS[0]} AND src = {ent}\n"
+        f"    UNION ALL SELECT {ent} AS node\n"
+        "  )\n"
+        ")"
     )
-
-
-def ann_hnsw_multi_prepared_sql(
-    nodes_view: str,
-    edges_view: str,
-    entry: object,
-    queries: Sequence[tuple[object, Sequence[float]]],
-    k: int,
-    ef: int = 48,
-    hops: tuple[tuple[int, int], ...] = HNSW_HOPS,
-    metric: str = "cosine",
-    exclude_self: bool = True,
-    broadcast_edges: bool = False,
-    id_sql_type: str = "BIGINT",
-) -> str:
-    """Multi-query form of :func:`ann_hnsw_prepared_sql` for callers whose
-    query set is a known literal batch (the suite's fixed vec_id < NQ
-    slice): the queries become an inline VALUES relation with the norm
-    computed by the same expression the DataFrame path evaluates, and the
-    descent renders as one SQL text — one parse + one analysis instead of
-    ~60 eagerly-analyzed DataFrame steps and a per-call query checkpoint.
-    Windows keep their real ``PARTITION BY query_id``; the seed cross-join
-    broadcasts the ≤ 2m+1-row entry neighborhood exactly like the
-    DataFrame path's ``F.broadcast(seed)``. Output schema and values match
-    ``ann_hnsw_topk`` (``exclude_self`` honored) bit-for-bit — pinned by
-    tests/test_engine.py::test_prepared_descent_matches_dataframe_path and
-    the full oracle replay of every converted suite entry."""
-    if metric not in GRAPH_METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
-    if not queries:
-        # VALUES with no rows is not SQL
-        raise EngineError("collection_vector_schema_mismatch", detail="empty query batch")
-    queries = [(qid, validate_query_vector(v)) for qid, v in queries]
-
-    def id_lit(v: object) -> str:
-        s = _sql_str_lit(v)
-        return s if isinstance(v, str) else f"CAST({s} AS {id_sql_type})"
-
-    def vec_lit(vec: Sequence[float]) -> str:
-        return "CAST(array({}) AS ARRAY<FLOAT>)".format(
-            ", ".join(f"{x!r}D" for x in vec)
-        )
-
-    values = ",\n    ".join(f"({id_lit(qid)}, {vec_lit(v)})" for qid, v in queries)
-    ent = id_lit(entry)
-    score = _pair_score_sql(metric, "q.qv", "q.qn", "nd.v", "nd.n")
-    order = _order_sql(metric)
-    ehint = "/*+ BROADCAST(e) */ " if broadcast_edges else ""
-
-    def rescore(cand: str, out: str) -> str:
-        return (
-            f"{out} AS (\n"
-            f"  SELECT query_id, node, _sm,\n"
-            f"         row_number() OVER (PARTITION BY query_id ORDER BY {order}) AS _rn\n"
-            f"  FROM (SELECT c.query_id, c.node, {score} AS _sm\n"
-            f"        FROM {cand} c JOIN q ON c.query_id = q.query_id\n"
-            f"        JOIN {nodes_view} nd ON c.node = nd.node)\n"
-            f")"
-        )
-
-    ctes = [
-        (
-            "q AS (\n"
-            f"  SELECT query_id, qv, {_norm_sql('qv', metric)} AS qn\n"
-            f"  FROM (VALUES\n    {values}) AS t(query_id, qv)\n"
-            ")"
-        ),
-        (
-            "seed AS (\n"
-            "  SELECT DISTINCT node FROM (\n"
-            f"    SELECT dst AS node FROM {edges_view}"
-            f" WHERE layer = {int(hops[0][0])} AND src = {ent}\n"
-            f"    UNION ALL SELECT {ent} AS node\n"
-            "  )\n"
-            ")"
-        ),
-        (
+    if one is None:
+        ctes.append(
             "cand_1 AS (SELECT /*+ BROADCAST(s) */ b.query_id, s.node\n"
             "           FROM (SELECT DISTINCT query_id FROM q) b CROSS JOIN seed s)"
-        ),
-        rescore("cand_1", "sc_1"),
-        f"beam_1 AS (SELECT query_id, node FROM sc_1 WHERE _rn <= {int(ef)})",
-    ]
-    i = 1
-    first_hop = True
-    for layer, n_hops in hops:
-        for _ in range(n_hops):
-            if first_hop:
-                first_hop = False
-                continue  # the seed hop above
-            i += 1
-            ctes.append(
+        )
+    ctes += [rescore("cand_1", "sc_1"), f"beam_1 AS (SELECT {cols} FROM sc_1 WHERE _rn <= {keep})"]
+    hint = "/*+ BROADCAST(e) */ " if broadcast_edges else ""
+    for i, layer in enumerate(_HOP_LAYERS[1:], 2):
+        ctes += [
+            (
                 f"cand_{i} AS (\n"
-                f"  SELECT {ehint}DISTINCT b.query_id, e.dst AS node\n"
+                f"  SELECT {hint}DISTINCT {'' if one else 'b.query_id, '}e.dst AS node\n"
                 f"  FROM beam_{i - 1} b JOIN (\n"
-                f"    SELECT src, dst FROM {edges_view} WHERE layer = {int(layer)}\n"
+                f"    SELECT src, dst FROM {edges_view} WHERE layer = {layer}\n"
                 f"    UNION ALL SELECT node AS src, node AS dst FROM {nodes_view}\n"
                 "  ) e ON b.node = e.src\n"
                 ")"
-            )
-            ctes.append(rescore(f"cand_{i}", f"sc_{i}"))
-            ctes.append(
-                f"beam_{i} AS (SELECT query_id, node FROM sc_{i} WHERE _rn <= {int(ef)})"
-            )
-    last = f"beam_{i}"
+            ),
+            rescore(f"cand_{i}", f"sc_{i}"),
+            f"beam_{i} AS (SELECT {cols} FROM sc_{i} WHERE _rn <= {keep})",
+        ]
+    last = f"beam_{len(_HOP_LAYERS)}"
     if exclude_self:
-        ctes.append(
-            f"beam_f AS (SELECT query_id, node FROM {last} WHERE query_id != node)"
-        )
+        ctes.append(f"beam_f AS (SELECT {cols} FROM {last} WHERE {not_self})")
         last = "beam_f"
+    if allowed_view is not None:
+        ctes.append(
+            f"beam_a AS (SELECT {cols} FROM {last} b\n"
+            f"           LEFT SEMI JOIN {allowed_view} a ON b.node = a.node)"
+        )
+        last = "beam_a"
     ctes.append(rescore(last, "final"))
     body = ",\n".join(ctes)
     return (
         f"WITH {body}\n"
-        f"SELECT query_id, CAST(_rn AS INT) AS rank, node AS neighbor_id,\n"
+        f"SELECT {head}, CAST(_rn AS INT) AS rank, node AS neighbor_id,\n"
         f"       ROUND(_sm, {SCORE_DECIMALS}) AS score\n"
         f"FROM final WHERE _rn <= {int(k)}"
     )
+
+
+def ann_hnsw_topk(
+    queries: DataFrame,
+    corpus: DataFrame | None,
+    edges: DataFrame | None,
+    entry: object,
+    k: int,
+    ef: int = 48,
+    id_col: str = "id",
+    emb_col: str = "embedding",
+    exclude_self: bool = True,
+    allowed: DataFrame | None = None,
+    metric: str = "cosine",
+    serve_set: ServeSet | None = None,
+) -> DataFrame:
+    """:func:`ann_hnsw_prepared_sql` for a DataFrame of queries (``id_col``,
+    ``emb_col``): (query_id, rank, neighbor_id, score) like every ANN
+    operator. The query frame is checkpointed — every hop rescores against
+    it, and a leaf keeps its lineage from re-running per hop (r13) — and
+    registered with ``allowed`` (a one-column id frame) as views. The
+    serve set is ``serve_set``, published once by the caller and reused
+    across calls, or else materialized per call from ``corpus`` and
+    ``edges``. The per-call views are dropped once the text is analyzed;
+    the returned frame holds their plans."""
+    frames = {
+        "queries": queries.select(
+            F.col(id_col).alias("query_id"), F.col(emb_col).alias("qv")
+        ).localCheckpoint(eager=True)
+    }
+    if serve_set is None:
+        frames["nodes"], frames["edges"] = hnsw_serve_set(
+            corpus, edges, id_col=id_col, emb_col=emb_col, metric=metric
+        )
+    if allowed is not None:
+        frames["allowed"] = allowed.select(F.col(allowed.columns[0]).alias("node"))
+    views = {kind: _global_view(df, kind) for kind, df in frames.items()}
+    spark = queries.sparkSession
+    try:
+        return spark.sql(
+            ann_hnsw_prepared_sql(
+                views.get("nodes") or serve_set.nodes_view,
+                views.get("edges") or serve_set.edges_view,
+                entry, views["queries"], k=k, ef=ef, metric=metric,
+                broadcast_edges=serve_set is not None and serve_set.bcast_edges,
+                exclude_self=exclude_self, allowed_view=views.get("allowed"),
+            )
+        )
+    finally:
+        for view in views.values():
+            _drop_view(spark, view)
 
 
 # ---------------------------------------------------------------------------
-# Driver-resident descent (engine serve path over a small serve set)
+# The driver descent (engine serve path over a small serve set)
 #
 # Spark builds the graph; walking it per query does not need Spark. When a
 # serve set fits the session's broadcast bound (a broadcast is already a
-# driver-side collect of a relation that size), the engine collects it once
-# and answers each warm query in-process: 0 Spark jobs instead of a listing
-# job, a schema-inference job and a ~12-job descent collect. The descent
-# below replays ann_hnsw_prepared_sql operation for operation — float32
-# query widened to double, sequential left-fold dots from 0.0, the same
-# norm guard / l2 clamp, the same candidate sets, (score, node) ranking and
-# Spark's ROUND — so its rows equal the SQL's (pinned in the core tier by
-# tests/test_similarity.py::test_driver_descent_matches_sql_and_dataframe).
+# driver-side collect of that size), the engine collects it once and answers
+# warm queries in-process with 0 Spark jobs. The descent replays the
+# one-query SQL operation for operation — float32 query widened to double,
+# sequential left-fold dots from 0.0, the norm guard / l2 clamp, the
+# candidate sets, (score, node) ranking and Spark's ROUND — so its rows
+# equal the SQL's in every form (pinned by tests/test_similarity.py::
+# test_driver_descent_matches_sql_and_dataframe).
 # ---------------------------------------------------------------------------
 
 
 @dataclass(frozen=True)
 class DriverServeSet:
-    """A serve set collected into driver memory: node id → row position,
-    the vectors as the doubles the SQL folds read, the
-    Spark-computed per-node norms (bit-exact, never recomputed), per-layer
-    adjacency, an optional per-node payload and the estimated bytes."""
+    """A serve set in driver memory: node id → row, the vectors as the
+    doubles the SQL folds read, the Spark-computed norms (bit-exact),
+    per-layer adjacency, an optional per-node payload, estimated bytes."""
 
     rows: dict
     vecs: np.ndarray
@@ -804,15 +669,15 @@ def ann_hnsw_driver_topk(
     question_vec: Sequence[float],
     k: int,
     ef: int = 48,
-    hops: tuple[tuple[int, int], ...] = HNSW_HOPS,
     metric: str = "cosine",
 ) -> list[tuple[int, object, float]] | None:
-    """The :func:`ann_hnsw_prepared_sql` descent (``exclude_self=False``)
-    run in-process over a :class:`DriverServeSet`: ``(rank, node, score)``
-    rows equal to the SQL's ``(rank, neighbor_id, score)``. ``None`` when
-    the query has no in-process twin — its float32 cast overflows, or its
-    width differs from the vectors' (the SQL pads those with NULLs) — so
-    the caller serves it with the SQL descent."""
+    """The one-query :func:`ann_hnsw_prepared_sql` descent (no
+    ``exclude_self``, no ``allowed_view``) run in-process over a
+    :class:`DriverServeSet`: ``(rank, node, score)`` rows equal to the
+    SQL's ``(rank, neighbor_id, score)``. ``None`` when the query has no
+    in-process twin — its float32 cast overflows, or its width differs
+    from the vectors' (the SQL pads those with NULLs) — so the caller
+    serves it with the SQL descent."""
     if metric not in GRAPH_METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
     with np.errstate(over="ignore"):
@@ -844,19 +709,14 @@ def ann_hnsw_driver_topk(
         return scored
 
     keep = max(int(ef), 0)
-    top = serve.adj.get(hops[0][0], {})
+    top = serve.adj.get(_HOP_LAYERS[0], {})
     beam = [node for _, node in ranked(set(top.get(entry, ())) | {entry})[:keep]]
-    first_hop = True
-    for layer, n_hops in hops:
+    for layer in _HOP_LAYERS[1:]:
         adj = serve.adj.get(layer, {})
-        for _ in range(n_hops):
-            if first_hop:
-                first_hop = False
-                continue  # the seed hop above
-            cand = set(beam)
-            for node in beam:
-                cand.update(adj.get(node, ()))
-            beam = [node for _, node in ranked(cand)[:keep]]
+        cand = set(beam)
+        for node in beam:
+            cand.update(adj.get(node, ()))
+        beam = [node for _, node in ranked(cand)[:keep]]
     final = ranked(set(beam))[: max(int(k), 0)]
     return [(rank, node, spark_round_score(s)) for rank, (s, node) in enumerate(final, 1)]
 
@@ -874,27 +734,22 @@ def hnsw_repair(
     metric: str = "cosine",
 ) -> tuple[DataFrame, dict]:
     """Incremental graph repair for an append-only grown corpus — the batch
-    form of the HNSW insert (search phase + connect phase), so a mutated
-    collection can be served again without a full rebuild:
+    form of the HNSW insert, so a mutated collection serves again without
+    a rebuild:
 
     * **Search phase**: every new node beam-descends the FROZEN graph for
-      its ``ef`` nearest old nodes (one :func:`ann_hnsw_topk` job — cost is
-      batch × hops, independent of corpus size).
+      its ``ef`` nearest old nodes (:func:`ann_hnsw_topk`; batch × hops).
     * **Batch-internal candidates**: hash-block pairs among the new nodes
-      (expected block ≈ :data:`HNSW_BLOCK_CAP`, so Σ|block|² stays linear
-      in the batch) — a batch of mutually-near vectors still interconnects.
-    * **Connect phase**: a new node at level ``L`` (the same deterministic
-      sha draw as the build) links at every layer ``l ≤ L`` to its top-``m``
-      candidates living at layer ``≥ l``, then edges are symmetrized — the
-      reverse old→new links are what make the new nodes reachable from the
-      entry point. Old nodes' neighbor lists are NOT re-pruned (degree can
-      exceed ``2m`` by one repair batch's reverse links; recall is
-      unaffected, only hop fan-out — a rebuild restores the invariant).
+      (block ≈ :data:`HNSW_BLOCK_CAP`), so near new vectors interconnect.
+    * **Connect phase**: a new node at level ``L`` (the build's sha draw)
+      links at every layer ``l ≤ L`` to its top-``m`` candidates living at
+      layer ``≥ l``, symmetrized — the reverse old→new links make it
+      reachable. Old neighbor lists are NOT re-pruned (degree can exceed
+      ``2m`` by one batch's reverse links; a rebuild restores it).
 
-    Returns ``(new_edges, meta)``: edges to APPEND to the persisted table
-    (disjoint from it — every edge touches a new node) and the possibly
-    updated ``{"entry", "top_layer"}`` (a new node can draw a level above
-    the current top; levels are capped at 2, matching the build)."""
+    Returns ``(new_edges, meta)``: edges to APPEND (each touches a new
+    node) and the possibly updated ``{"entry", "top_layer"}`` (levels are
+    capped at 2, matching the build)."""
     new_nodes = (
         hnsw_levels(
             new_vecs.select(F.col(id_col).alias("node"), F.col(emb_col).alias("v")),
@@ -976,8 +831,8 @@ def hnsw_repair(
 
 def ann_filtered_topk_routed(
     queries: DataFrame,
-    corpus: DataFrame,
-    edges: DataFrame,
+    corpus: DataFrame | None,
+    edges: DataFrame | None,
     entry: object,
     allowed: DataFrame,
     k: int,
@@ -988,34 +843,25 @@ def ann_filtered_topk_routed(
     selectivity_threshold: float = 0.25,
     n_total: int | None = None,
     metric: str = "cosine",
-    serve_set: tuple[DataFrame, DataFrame] | None = None,
+    serve_set: ServeSet | Callable[[], ServeSet] | None = None,
 ) -> tuple[DataFrame, str]:
     """Selectivity-routed filtered ANN — the composition qdrant's query
-    planner actually performs for filter+vector queries (its cardinality
-    estimator picks between a filtered exact scan and the HNSW traversal;
-    ``vector_mcp/vectordb/qdrant.py`` delegates to that planner): when the
-    payload predicate is SELECTIVE (|allowed| / |corpus| below the
-    threshold), pre-filter and exact-rank — the filter prunes the scan and
-    the true top-k of the allowed set always comes back; when it is BROAD,
-    beam-search the graph and post-filter the final beam — the traversal
-    cost is independent of the (nearly useless) filter.
+    planner performs for filter+vector queries (its cardinality estimator
+    picks a filtered exact scan or the HNSW traversal;
+    ``vector_mcp/vectordb/qdrant.py`` delegates to it): a SELECTIVE
+    predicate (|allowed| / |corpus| below the threshold) pre-filters and
+    exact-ranks, so the true top-k of the allowed set comes back; a BROAD
+    one beam-searches the graph and post-filters the final beam, at a
+    traversal cost independent of the filter.
 
-    Returns ``(result, regime)`` with regime ``"exact"`` or ``"graph"`` so
-    callers and tests can pin the routing decision. Both regimes emit the
-    same shape as :func:`ann_hnsw_topk`: (query_id, rank, neighbor_id,
-    score), scores rounded to ``SCORE_DECIMALS``, self-matches excluded
-    when ``exclude_self``.
-
-    Cost of the estimate: one driver-side count of the ``allowed`` side (a
-    pushed-down metadata predicate — a row-group-pruned count at scale).
-    Callers that already know the corpus cardinality (the engine records
-    it in the index manifest at build time) pass ``n_total`` so a served
-    query never pays a corpus-wide count; without it the estimate falls
-    back to ``corpus.count()``. At 100 TB the exact branch is a broadcast
-    of the bounded query batch against the FILTERED corpus scan (predicate
-    reaches parquet), and the graph branch touches only beam-frontier edge
-    partitions.
-    """
+    Returns ``(result, regime)``, regime ``"exact"`` or ``"graph"``; both
+    emit :func:`ann_hnsw_topk`'s shape. The estimate costs one count of
+    the ``allowed`` side; callers that know the corpus cardinality (the
+    engine's index manifest) pass ``n_total`` instead of paying
+    ``corpus.count()`` per query. A zero-argument ``serve_set`` is called
+    only when the graph regime is chosen. At 100 TB the exact branch
+    broadcasts the bounded query batch against the FILTERED corpus scan,
+    and the graph branch touches only beam-frontier edge partitions."""
     n_total = corpus.count() if n_total is None else int(n_total)
     n_allowed = allowed.count()
     sel = (n_allowed / n_total) if n_total else 0.0
@@ -1024,7 +870,7 @@ def ann_filtered_topk_routed(
             ann_hnsw_topk(
                 queries, corpus, edges, entry, k=k, ef=ef, id_col=id_col,
                 emb_col=emb_col, exclude_self=exclude_self, allowed=allowed,
-                metric=metric, serve_set=serve_set,
+                metric=metric, serve_set=serve_set() if callable(serve_set) else serve_set,
             ),
             "graph",
         )
@@ -1036,8 +882,8 @@ def ann_filtered_topk_routed(
     # branch would project — reuse it so the exact regime also skips the
     # corpus re-projection (identical values by construction)
     base_nodes = (
-        serve_set[0]
-        if serve_set is not None
+        serve_set.nodes
+        if isinstance(serve_set, ServeSet)
         else corpus.select(
             F.col(id_col).alias("node"),
             F.col(emb_col).alias("v"),

@@ -14,8 +14,36 @@ bytes are the (tiny) raw input.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: Spark's byte-string suffixes (``JavaUtils.byteStringAs``): binary
+#: multiples, case-insensitive; no suffix means bytes for every conf read here
+_BYTE_UNITS = {"": 1, "b": 1} | {
+    s: 1024**p for p, u in enumerate("kmgtp", 1) for s in (u, u + "b")
+}
+
+
+def conf_bytes(spark: SparkSession, key: str, default: int) -> int:
+    """A byte-size session conf read by Spark's own rules: an integer with
+    an optional ``b``/``k``/``kb``/``m``/``mb``/... suffix, a leading ``-``
+    negating it (``-1`` disables a broadcast threshold). Spark renders a
+    default as ``"10485760b"`` but keeps a user value as set (``"20m"``);
+    anything it would not parse reads as ``default``."""
+    m = re.fullmatch(r"(-?)([0-9]+)([a-z]*)", str(spark.conf.get(key)).strip().lower())
+    if m is None or m.group(3) not in _BYTE_UNITS:
+        return default
+    n = int(m.group(2)) * _BYTE_UNITS[m.group(3)]
+    return -n if m.group(1) else n
+
+
+def fits_broadcast(spark: SparkSession, n_bytes: int) -> bool:
+    """True iff ``n_bytes`` fits the session's autoBroadcastJoinThreshold
+    (never when the threshold is negative, i.e. broadcasting is off)."""
+    limit = conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024)
+    return 0 <= n_bytes <= limit
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -47,14 +75,8 @@ def spread(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
 
-    def conf_bytes(key: str, default: int) -> int:
-        try:
-            return int(spark.conf.get(key).rstrip("b"))
-        except (TypeError, ValueError):
-            return default
-
-    max_split = conf_bytes("spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
-    no_stats = conf_bytes("spark.sql.defaultSizeInBytes", 2**63 - 1)
+    max_split = conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
+    no_stats = conf_bytes(spark, "spark.sql.defaultSizeInBytes", 2**63 - 1)
     size = _plan_size_bytes(df)
     if size is not None and target * max_split <= size < no_stats:
         return df
@@ -79,8 +101,4 @@ def bcast_if_fits(df: DataFrame, n_rows: int, row_bytes: int = 64) -> DataFrame:
     autoBroadcastJoinThreshold. With a MEASURED row count this is
     scale-adaptive, not a local tune: at 100 TB the same frames outgrow
     the threshold, no hint fires, and sort-merge shuffles are real work."""
-    try:
-        limit = int(df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except (TypeError, ValueError):
-        limit = 10 * 1024 * 1024
-    return F.broadcast(df) if 0 <= n_rows * row_bytes <= limit else df
+    return F.broadcast(df) if fits_broadcast(df.sparkSession, n_rows * row_bytes) else df

@@ -2322,22 +2322,9 @@ def q_corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup over the cached ivf_16 assignment: the only join is the
     cluster equi-join (pairs = sum of cluster sizes squared, bounded by
     k ∝ corpus size per the paper), dup ids broadcast back for the flag."""
-    import json
-    import os
+    from vector_mcp_spark.operators.similarity import semantic_dedup
 
-    from vector_mcp_spark.operators.similarity import ivf_build, semantic_dedup
-
-    embs = load(spark, sf_dir, "embeddings")
-    cache = _index_cache(sf_dir, "ivf_16")
-    cent_path = os.path.join(cache, "centroids.json")
-    assigned_path = os.path.join(cache, "assigned")
-    if not (os.path.exists(cent_path) and os.path.exists(os.path.join(assigned_path, "_SUCCESS"))):
-        assigned, centroids = ivf_build(embs, n_centroids=16, id_col="vec_id", max_iter=2)
-        assigned.write.mode("overwrite").parquet(assigned_path)
-        os.makedirs(cache, exist_ok=True)
-        with open(cent_path, "w") as f:
-            json.dump(centroids, f)
-    assigned = spark.read.parquet(assigned_path)
+    assigned, _ = _ivf_cached(spark, sf_dir)
     return semantic_dedup(
         assigned, tau=_SEMDEDUP_TAU, id_col="vec_id", emb_col="embedding"
     )
@@ -2674,35 +2661,25 @@ SELECT query_id, CAST(rn AS INTEGER) AS rank, neighbor_id, ROUND(sm, 6) AS score
     return "".join(parts)
 
 
-def _hnsw_index(spark: SparkSession, sf_dir: str):
-    """The shared layered-graph index over the shared ivf_16 coarse
-    quantizer, built once per sf_dir and cached like the IVF/PQ indexes.
-    Returns (edges DataFrame, meta dict). Shared by the unfiltered and
-    filtered graph-ANN entries so neither pays a search to warm the other's
-    cache."""
+def _hnsw_index(spark: SparkSession, sf_dir: str, metric: str = "cosine"):
+    """The shared layered-graph index of ``metric``, built once per sf_dir
+    and cached like the IVF/PQ indexes; returns (edges DataFrame, meta
+    dict). The cosine and dot graphs share the cached ivf_16 coarse
+    quantizer (dot is the MIPS compromise the engine's build_search_index
+    makes too); the l2 graph builds over ``_ivf_l2_cached``'s assignment,
+    which the IVF-l2 entry shares, so no k-means is built twice."""
     import json
     import os
 
     from vector_mcp_spark.operators.graph_ann import hnsw_build
-    from vector_mcp_spark.operators.similarity import ivf_build
 
-    embs = load(spark, sf_dir, "embeddings")
-    ivf_cache = _index_cache(sf_dir, "ivf_16")
-    cent_path = os.path.join(ivf_cache, "centroids.json")
-    assigned_path = os.path.join(ivf_cache, "assigned")
-    if not (os.path.exists(cent_path) and os.path.exists(os.path.join(assigned_path, "_SUCCESS"))):
-        assigned, centroids = ivf_build(embs, n_centroids=16, id_col="vec_id", max_iter=2)
-        assigned.write.mode("overwrite").parquet(assigned_path)
-        os.makedirs(ivf_cache, exist_ok=True)
-        with open(cent_path, "w") as f:
-            json.dump(centroids, f)
-    assigned = spark.read.parquet(assigned_path)
-
-    cache = _index_cache(sf_dir, f"hnsw_m{_HNSW_M}")
+    tag = "" if metric == "cosine" else f"_{metric}"
+    cache = _index_cache(sf_dir, f"hnsw{tag}_m{_HNSW_M}")
     edges_path = os.path.join(cache, "edges")
     meta_path = os.path.join(cache, "meta.json")
     if not (os.path.exists(meta_path) and os.path.exists(os.path.join(edges_path, "_SUCCESS"))):
-        edges, meta = hnsw_build(assigned, m=_HNSW_M, id_col="vec_id")
+        assigned, _ = (_ivf_l2_cached if metric == "l2" else _ivf_cached)(spark, sf_dir)
+        edges, meta = hnsw_build(assigned, m=_HNSW_M, id_col="vec_id", metric=metric)
         edges.write.mode("overwrite").parquet(edges_path)
         os.makedirs(cache, exist_ok=True)
         with open(meta_path, "w") as f:
@@ -2712,56 +2689,33 @@ def _hnsw_index(spark: SparkSession, sf_dir: str):
     return spark.read.parquet(edges_path), meta
 
 
-# Process-cached beam-serve working sets: (nodes, edges) localCheckpointed
-# ONCE per (session, sf, metric) — the in-RAM serve state a vector DB keeps
-# next to its persisted graph. This caches INDEX frames (query inputs),
-# never query results; every serve still executes its full descent.
+# Process-cached beam-serve working sets, published ONCE per (application,
+# sf, metric) — the in-RAM serve state a vector DB keeps next to its
+# persisted graph. This caches INDEX frames (query inputs), never query
+# results; every serve still executes its full descent. Application-scoped:
+# the views are global, so sibling SparkSessions that hit the cache resolve
+# them.
 _HNSW_SERVE_SETS: dict = {}
 
 
 def _hnsw_serve(spark: SparkSession, sf_dir: str, metric: str = "cosine"):
-    """(serve_set, meta) for the shared graph index of ``metric``."""
+    """(serve_set, meta) for the shared graph index of ``metric``; meta
+    adds ``n_total``, the corpus cardinality counted once off the
+    published nodes — the number the engine's index manifest records at
+    build time, so routed callers never run corpus.count() per query."""
     key = (spark.sparkContext.applicationId, sf_dir, metric)
     hit = _HNSW_SERVE_SETS.get(key)
     if hit is not None:
         return hit
-    from vector_mcp_spark.operators.graph_ann import hnsw_serve_set
+    from vector_mcp_spark.operators.graph_ann import publish_serve_set
 
-    index_fn = {
-        "cosine": _hnsw_index,
-        "l2": _hnsw_l2_index,
-        "dot": _hnsw_dot_index,
-    }[metric]
-    edges, meta = index_fn(spark, sf_dir)
-    embs = load(spark, sf_dir, "embeddings")
-    ss = hnsw_serve_set(embs, edges, id_col="vec_id", emb_col="embedding", metric=metric)
-    # corpus cardinality, counted once off the materialized nodes frame —
-    # the number the engine's index manifest records at build time; routed
-    # callers read it instead of running corpus.count() per query
-    meta = dict(meta)
-    meta.setdefault("n_total", ss[0].count())
-    # prepared-descent serve state (r14): temp views the one-SQL-text beam
-    # descent references — GLOBAL ones, because the cache is
-    # application-scoped and a session-scoped view would not resolve from a
-    # sibling SparkSession that hits it — and the measured broadcast gate
-    # for its per-hop edge-union side (two id columns; counted once per
-    # build — at a scale where the union outgrows the session threshold the
-    # gate never fires and the ef-bounded beam stays the join's build side)
-    sf_tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    nodes_name = f"_hnsw_suite_nodes_{sf_tag}_{metric}"
-    edges_name = f"_hnsw_suite_edges_{sf_tag}_{metric}"
-    ss[0].createOrReplaceGlobalTempView(nodes_name)
-    ss[1].createOrReplaceGlobalTempView(edges_name)
-    global_db = spark.conf.get("spark.sql.globalTempDatabase")
-    nodes_view, edges_view = f"{global_db}.{nodes_name}", f"{global_db}.{edges_name}"
-    try:
-        limit = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except (TypeError, ValueError):
-        limit = 10 * 1024 * 1024
-    meta["views"] = (nodes_view, edges_view)
-    meta["bcast_edges"] = 0 <= (meta["n_total"] + ss[1].count()) * 64 <= limit
-    _HNSW_SERVE_SETS[key] = (ss, meta)
-    return ss, meta
+    edges, meta = _hnsw_index(spark, sf_dir, metric)
+    ss = publish_serve_set(
+        load(spark, sf_dir, "embeddings"), edges, id_col="vec_id", emb_col="embedding",
+        metric=metric,
+    )
+    _HNSW_SERVE_SETS[key] = (ss, {**meta, "n_total": ss.n_nodes})
+    return _HNSW_SERVE_SETS[key]
 
 
 # The suite's fixed literal query batch (vec_id < _HNSW_NQ), collected once
@@ -2786,25 +2740,32 @@ def _hnsw_query_lits(spark: SparkSession, sf_dir: str, max_id: int):
     return hit
 
 
+def _hnsw_literal_batch(
+    spark: SparkSession, sf_dir: str, metric: str = "cosine", n_queries: int = _HNSW_NQ
+) -> DataFrame:
+    """The suite's fixed queries (vec_id < ``n_queries``, self excluded)
+    descending the shared ``metric`` graph as ONE SQL text with the
+    queries inline as literals: one parse + analysis, no query-checkpoint
+    job."""
+    from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
+
+    ss, meta = _hnsw_serve(spark, sf_dir, metric)
+    return spark.sql(
+        ann_hnsw_prepared_sql(
+            ss.nodes_view, ss.edges_view, meta["entry"],
+            _hnsw_query_lits(spark, sf_dir, n_queries), k=_HNSW_K, ef=_HNSW_EF,
+            metric=metric, broadcast_edges=ss.bcast_edges, exclude_self=True,
+        )
+    )
+
+
 @register("ann_hnsw_topk", _hnsw_oracle(), "similarity", "pipeline")
 def q_ann_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW-style graph ANN over the shared ivf_16 coarse quantizer: the
     layered neighbor graph is built once (cached like the IVF/PQ indexes),
     queries descend it with a fixed beam schedule. Recall@5 vs the exact
     scorer is gated ≥ 0.85 in tools/recall_report.py / test_similarity."""
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_multi_prepared_sql
-
-    _, meta = _hnsw_serve(spark, sf_dir)
-    # prepared descent (r14): identical joins/folds/ordering to
-    # ann_hnsw_topk rendered as ONE SQL text over the serve-set views —
-    # one parse+analysis instead of ~60 eagerly-analyzed DataFrame steps
-    # (bit-equal by the equality test and the full oracle replay)
-    return spark.sql(
-        ann_hnsw_multi_prepared_sql(
-            *meta["views"], meta["entry"], _hnsw_query_lits(spark, sf_dir, _HNSW_NQ),
-            k=_HNSW_K, ef=_HNSW_EF, broadcast_edges=meta["bcast_edges"],
-        )
-    )
+    return _hnsw_literal_batch(spark, sf_dir)
 
 
 # -- hashed-n-gram linear quality/domain classifier ----------------------------
@@ -3393,60 +3354,7 @@ def q_ann_ivf_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- l2-metric layered graph ANN (per-collection distance config, r12) --------
-
-
-def _hnsw_l2_index(spark: SparkSession, sf_dir: str):
-    """The l2-built layered graph over the l2 coarse quantizer — the
-    non-cosine twin of :func:`_hnsw_index`, cached per sf_dir. Shares
-    ``_ivf_l2_cached``'s assignment so the IVF-l2 and graph-l2 entries
-    build ONE l2 k-means between them."""
-    import json
-    import os
-
-    from vector_mcp_spark.operators.graph_ann import hnsw_build
-
-    assigned, _cents = _ivf_l2_cached(spark, sf_dir)
-    cache = _index_cache(sf_dir, f"hnsw_l2_m{_HNSW_M}")
-    edges_path = os.path.join(cache, "edges")
-    meta_path = os.path.join(cache, "meta.json")
-    if not (os.path.exists(meta_path) and os.path.exists(os.path.join(edges_path, "_SUCCESS"))):
-        edges, meta = hnsw_build(assigned, m=_HNSW_M, id_col="vec_id", metric="l2")
-        edges.write.mode("overwrite").parquet(edges_path)
-        os.makedirs(cache, exist_ok=True)
-        with open(meta_path, "w") as f:
-            json.dump(meta, f)
-    with open(meta_path) as f:
-        meta = json.load(f)
-    return spark.read.parquet(edges_path), meta
-
-
-def _hnsw_dot_index(spark: SparkSession, sf_dir: str):
-    """The dot-built layered graph (MIPS) — SHARES the cached cosine
-    ivf_16 assignment (the standard MIPS compromise, exactly what the
-    engine's build_search_index does for dot collections) but ranks its
-    edges by raw inner product; cached per sf_dir like the other twins."""
-    import json
-    import os
-
-    from vector_mcp_spark.operators.graph_ann import hnsw_build
-
-    # reuse (or build) the shared cosine coarse quantizer via _hnsw_index's
-    # cache — dot never builds a second k-means
-    _hnsw_index(spark, sf_dir)
-    assigned = spark.read.parquet(os.path.join(_index_cache(sf_dir, "ivf_16"), "assigned"))
-    cache = _index_cache(sf_dir, f"hnsw_dot_m{_HNSW_M}")
-    edges_path = os.path.join(cache, "edges")
-    meta_path = os.path.join(cache, "meta.json")
-    if not (os.path.exists(meta_path) and os.path.exists(os.path.join(edges_path, "_SUCCESS"))):
-        edges, meta = hnsw_build(assigned, m=_HNSW_M, id_col="vec_id", metric="dot")
-        edges.write.mode("overwrite").parquet(edges_path)
-        os.makedirs(cache, exist_ok=True)
-        with open(meta_path, "w") as f:
-            json.dump(meta, f)
-    with open(meta_path) as f:
-        meta = json.load(f)
-    return spark.read.parquet(edges_path), meta
+# -- dot- and l2-metric layered graph ANN (per-collection distance config) -----
 
 
 @register("ann_hnsw_dot_topk", _hnsw_oracle(metric="dot"), "similarity", "pipeline")
@@ -3457,15 +3365,7 @@ def q_ann_hnsw_dot_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector_ip_ops)`` serving route, completing the qdrant Distance enum
     (reference vector_mcp/vectordb/qdrant.py:122-127) across the persisted
     graph families; fully value-oracled like the cosine and l2 twins."""
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_multi_prepared_sql
-
-    _, meta = _hnsw_serve(spark, sf_dir, metric="dot")
-    return spark.sql(
-        ann_hnsw_multi_prepared_sql(
-            *meta["views"], meta["entry"], _hnsw_query_lits(spark, sf_dir, _HNSW_NQ),
-            k=_HNSW_K, ef=_HNSW_EF, metric="dot", broadcast_edges=meta["bcast_edges"],
-        )
-    )
+    return _hnsw_literal_batch(spark, sf_dir, "dot")
 
 
 @register("ann_hnsw_l2_topk", _hnsw_oracle(metric="l2"), "similarity", "pipeline")
@@ -3476,12 +3376,4 @@ def q_ann_hnsw_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``USING hnsw (embedding vector_l2_ops)`` serving route
     (``postgres.py:182-188``), fully value-oracled like the cosine twin
     (the whole build + search replays as bounded CTEs)."""
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_multi_prepared_sql
-
-    _, meta = _hnsw_serve(spark, sf_dir, metric="l2")
-    return spark.sql(
-        ann_hnsw_multi_prepared_sql(
-            *meta["views"], meta["entry"], _hnsw_query_lits(spark, sf_dir, _HNSW_NQ),
-            k=_HNSW_K, ef=_HNSW_EF, metric="l2", broadcast_edges=meta["bcast_edges"],
-        )
-    )
+    return _hnsw_literal_batch(spark, sf_dir, "l2")

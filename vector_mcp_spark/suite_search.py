@@ -892,26 +892,14 @@ def q_hybrid_indexed_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     query a serving tier answers without any exact corpus scan: beam hops
     prune to frontier edge partitions, postings prune to the query terms'
     buckets, and fusion touches leg-k rows."""
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
     from vector_mcp_spark.operators.hybrid import rrf_fuse
     from vector_mcp_spark.operators.lexical import bm25_topk
-    from vector_mcp_spark.suite_pipeline import (
-        _HNSW_EF,
-        _HNSW_K,
-        _hnsw_query_lits,
-        _hnsw_serve,
-    )
+    from vector_mcp_spark.suite_pipeline import _hnsw_literal_batch
 
-    _, meta = _hnsw_serve(spark, sf_dir)
-    # prepared descent (r14): one SQL text for the one-query dense leg —
-    # bit-equal to the ann_hnsw_topk DataFrame path it replaces
-    ann = spark.sql(
-        ann_hnsw_prepared_sql(
-            *meta["views"], meta["entry"], _hnsw_query_lits(spark, sf_dir, 1)[0][1],
-            k=_HNSW_K, ef=_HNSW_EF, query_id=0, broadcast_edges=meta["bcast_edges"],
-            exclude_self=True,
-        )
-    ).select(F.col("neighbor_id").alias("doc_id"), "score")
+    # doc 0's embedding as a one-query literal batch
+    ann = _hnsw_literal_batch(spark, sf_dir, n_queries=1).select(
+        F.col("neighbor_id").alias("doc_id"), "score"
+    )
     docs = load(spark, sf_dir, "documents")
     lex = bm25_topk(docs, LEX_QUERY, LEX_K, id_col="doc_id", content_col="text")
     return rrf_fuse(

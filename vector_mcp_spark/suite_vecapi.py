@@ -540,26 +540,14 @@ def q_hybrid_sparse_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     (only matching postings shuffle). Both legs are index-served — at
     scale neither touches the full corpus — and fuse in weighted RRF over
     ≤ leg-k rows."""
-    from vector_mcp_spark.operators.graph_ann import ann_hnsw_prepared_sql
     from vector_mcp_spark.operators.hybrid import rrf_fuse
     from vector_mcp_spark.suite import HYBRID_N, HYBRID_W_LEX, HYBRID_W_SEM, RRF_K
-    from vector_mcp_spark.suite_pipeline import (
-        _HNSW_EF,
-        _HNSW_K,
-        _hnsw_query_lits,
-        _hnsw_serve,
-    )
+    from vector_mcp_spark.suite_pipeline import _hnsw_literal_batch
 
-    _, meta = _hnsw_serve(spark, sf_dir)
-    # prepared descent (r14): the dense leg's one-query beam renders as a
-    # single SQL text over the serve-set views (bit-equal to ann_hnsw_topk)
-    dense = spark.sql(
-        ann_hnsw_prepared_sql(
-            *meta["views"], meta["entry"], _hnsw_query_lits(spark, sf_dir, 1)[0][1],
-            k=_HNSW_K, ef=_HNSW_EF, query_id=0, broadcast_edges=meta["bcast_edges"],
-            exclude_self=True,
-        )
-    ).select(F.col("neighbor_id").alias("doc_id"), "score")
+    # doc 0's embedding as a one-query literal batch
+    dense = _hnsw_literal_batch(spark, sf_dir, n_queries=1).select(
+        F.col("neighbor_id").alias("doc_id"), "score"
+    )
     sparse = _sparse_leg(spark, sf_dir)
     return rrf_fuse(
         [(dense, HYBRID_W_SEM), (sparse, HYBRID_W_LEX)],

@@ -170,13 +170,6 @@ class ToolFilter:
         )
 
 
-def tool_tags() -> dict[str, tuple[str, ...]]:
-    """tool name → its toolset tags, from the skill catalog."""
-    from vector_mcp_spark.agent_card import SKILL_CATALOG
-
-    return {s["tool"]: tuple(s.get("tags", ())) for s in SKILL_CATALOG}
-
-
 def joined_headers(message) -> dict[str, str]:
     """HTTP message headers → {name: comma-joined values}. Repeated headers
     are legal and semantically equal to the comma-joined list; ``dict()``

@@ -109,6 +109,23 @@ def validate_query_vector(vec: Sequence[object]) -> list[float]:
     return out
 
 
+#: largest finite float32: vectors are stored as array<float>, where any
+#: larger magnitude becomes ±Inf
+_FLOAT32_MAX = 3.4028234663852886e38
+
+
+def validate_stored_vector(vec: Sequence[object]) -> list[float]:
+    """A vector to store: every element finite, also as the float32 the
+    table keeps. A NaN row would rank first in every scan (Spark sorts NaN
+    above any number under DESC) and keep its graph off the driver."""
+    out = [float(x) for x in vec]
+    if not all(math.isfinite(x) and abs(x) <= _FLOAT32_MAX for x in out):
+        raise EngineError(
+            "collection_vector_schema_mismatch", detail="vector elements must be finite"
+        )
+    return out
+
+
 def validate_delete_confirm(confirm: object) -> None:
     if confirm is not True:
         raise EngineError("delete_not_confirmed")
