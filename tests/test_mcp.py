@@ -1899,7 +1899,8 @@ def test_put_named_vectors_refuses_non_finite_elements(spark, tmp_path_factory):
     eng.create_collection("nv", vectors_config={"t": {"dimension": 4, "distance": "cosine"}})
     eng.add_documents("nv", ["north", "east"])
     pid = sorted(r.id for r in eng.read("nv").select("id").collect())[0]
-    for bad in ("[NaN, 0, 0, 0]", "[0, Infinity, 0, 0]", "[0, 0, -Infinity, 0]", "[1e39, 0, 0, 0]"):
+    for bad in ("[NaN, 0, 0, 0]", "[0, Infinity, 0, 0]", "[0, 0, -Infinity, 0]",
+                "[1e39, 0, 0, 0]"):
         got = veneer.vector_collection_management(
             "put_named_vectors", collection_name="nv", vector_name="t",
             named_vectors={pid: json.loads(bad)},

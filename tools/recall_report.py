@@ -155,10 +155,11 @@ def main() -> int:
              recall(got, exact_dot))
         )
     edges_dot, meta_dot = hnsw_build(assigned, m=12, id_col="vec_id", metric="dot")
+    serve_dot = publish_serve_set(embs, edges_dot, id_col="vec_id", metric="dot")
     got = pairs(
         ann_hnsw_topk(
             queries, None, None, meta_dot["entry"], k=K, ef=48, id_col="vec_id",
-            metric="dot", serve_set=publish_serve_set(embs, edges_dot, id_col="vec_id", metric="dot"),
+            metric="dot", serve_set=serve_dot,
         )
     )
     rows.append(("HNSW-dot graph, M=12, ef=48 (vs exact dot)", recall(got, exact_dot)))

@@ -514,6 +514,8 @@ def ann_hnsw_prepared_sql(
         ctes.append(f"beam_f AS (SELECT {cols} FROM {last} WHERE {not_self})")
         last = "beam_f"
     if allowed_view is not None:
+        # unhinted: the allowed set is filter-sized (up to the corpus), not
+        # batch-sized; AQE broadcasts it when it is actually small
         ctes.append(
             f"beam_a AS (SELECT {cols} FROM {last} b\n"
             f"           LEFT SEMI JOIN {allowed_view} a ON b.node = a.node)"

@@ -2322,9 +2322,22 @@ def q_corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup over the cached ivf_16 assignment: the only join is the
     cluster equi-join (pairs = sum of cluster sizes squared, bounded by
     k ∝ corpus size per the paper), dup ids broadcast back for the flag."""
-    from vector_mcp_spark.operators.similarity import semantic_dedup
+    import json
+    import os
 
-    assigned, _ = _ivf_cached(spark, sf_dir)
+    from vector_mcp_spark.operators.similarity import ivf_build, semantic_dedup
+
+    embs = load(spark, sf_dir, "embeddings")
+    cache = _index_cache(sf_dir, "ivf_16")
+    cent_path = os.path.join(cache, "centroids.json")
+    assigned_path = os.path.join(cache, "assigned")
+    if not (os.path.exists(cent_path) and os.path.exists(os.path.join(assigned_path, "_SUCCESS"))):
+        assigned, centroids = ivf_build(embs, n_centroids=16, id_col="vec_id", max_iter=2)
+        assigned.write.mode("overwrite").parquet(assigned_path)
+        os.makedirs(cache, exist_ok=True)
+        with open(cent_path, "w") as f:
+            json.dump(centroids, f)
+    assigned = spark.read.parquet(assigned_path)
     return semantic_dedup(
         assigned, tau=_SEMDEDUP_TAU, id_col="vec_id", emb_col="embedding"
     )
