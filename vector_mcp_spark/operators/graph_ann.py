@@ -546,14 +546,14 @@ def ann_hnsw_topk(
     serve_set: ServeSet | None = None,
 ) -> DataFrame:
     """:func:`ann_hnsw_prepared_sql` for a DataFrame of queries (``id_col``,
-    ``emb_col``): (query_id, rank, neighbor_id, score) like every ANN
-    operator. The query frame is checkpointed — every hop rescores against
-    it, and a leaf keeps its lineage from re-running per hop (r13) — and
-    registered with ``allowed`` (a one-column id frame) as views. The
-    serve set is ``serve_set``, published once by the caller and reused
-    across calls, or else materialized per call from ``corpus`` and
-    ``edges``. The per-call views are dropped once the text is analyzed;
-    the returned frame holds their plans."""
+    ``emb_col``): (query_id, rank, neighbor_id, score). The query frame is
+    checkpointed (every hop rescores against it; a leaf keeps its lineage
+    from re-running per hop, r13) and registered, with ``allowed`` (a
+    one-column id frame), as views. The serve set is ``serve_set``,
+    published once and reused across calls, or else materialized per call
+    from ``corpus`` and ``edges``. No edge-broadcast hint: fed from a query
+    view, the hinted descent measured ~5% slower (sf0.1 filtered entry).
+    Per-call views are dropped once the text is analyzed."""
     frames = {
         "queries": queries.select(
             F.col(id_col).alias("query_id"), F.col(emb_col).alias("qv")
@@ -573,7 +573,6 @@ def ann_hnsw_topk(
                 views.get("nodes") or serve_set.nodes_view,
                 views.get("edges") or serve_set.edges_view,
                 entry, views["queries"], k=k, ef=ef, metric=metric,
-                broadcast_edges=serve_set is not None and serve_set.bcast_edges,
                 exclude_self=exclude_self, allowed_view=views.get("allowed"),
             )
         )
