@@ -453,7 +453,7 @@ def serve_probe(factor: int) -> int:
         ctes = sql.rsplit("\nSELECT ", 1)[0]
         n = sum(
             spark.sql(f"{ctes}\nSELECT count(*) FROM {cand}").first()[0]
-            for cand in re.findall(r"^(cand_\d+) AS \(", sql, re.M)
+            for cand in re.findall(r"\b(cand_\d+) AS \(", sql)
         )
         ss.drop()
         return n
