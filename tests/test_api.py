@@ -92,21 +92,83 @@ def test_plan_build_launches_no_jobs(api, spark):
     assert sc.statusTracker().getJobIdsForGroup("plan_only_probe") == []
 
 
-def test_needs_embed_flag_tracks_mutations(spark, tmp_path_factory):
+def test_legacy_collection_upgrades_once_on_first_read(spark, tmp_path_factory):
+    """A collection written by an older engine holds rows without vectors
+    and carries the legacy flag. Its first read embeds those rows once
+    through the engine's seam, rewrites them and clears the flag; after
+    that it answers exactly like a twin that stored the same vectors."""
+    import hashlib
+
+    from vector_mcp_spark.engine import _PART_LEN
+    from vector_mcp_spark.functions.embedder import hash_embed
+    from vector_mcp_spark.schema import DOCUMENT_SCHEMA
+
+    embedded = spark.sparkContext.accumulator(0)
+
+    def counting_model(texts):
+        embedded.add(len(texts))
+        return [hash_embed(t, 64) for t in texts]
+
+    eng = CollectionEngine(
+        spark, str(tmp_path_factory.mktemp("legacy_root")), embed_model=counting_model
+    )
+    for name in ("legacy", "twin", "empty"):
+        eng.create_collection(name)
+    rows = [(hashlib.sha256(c.encode()).hexdigest(), c, None, None) for c in CORPUS]
+    legacy = eng._require("legacy")
+    eng._rewrite_partitions(
+        legacy, [i[:_PART_LEN] for i, *_ in rows], spark.createDataFrame(rows, DOCUMENT_SCHEMA)
+    )
+    eng._write_catalog([
+        r[:4] + (True,) + r[5:] if r[0] in (legacy, eng._require("empty")) else r
+        for r in eng._catalog_rows()
+    ])
+    eng.add_documents("twin", CORPUS, embeddings=[hash_embed(c, 64) for c in CORPUS])
+    assert eng.needs_embed("legacy") and embedded.value == 0
+
+    api = VectorSearchApi(eng)
+    got = api.semantic_search("legacy", ["data processing"], number_results=3).collect()
+    assert not eng.needs_embed("legacy")
+    assert embedded.value == len(CORPUS) + 1  # the legacy rows once, plus the query
+    assert eng.read("legacy").where("embedding IS NULL").count() == 0
+    twin = api.semantic_search("twin", ["data processing"], number_results=3).collect()
+    assert [(r.id, r.score) for r in got] == [(r.id, r.score) for r in twin]
+    hybrid = api.search("legacy", "spark data", number_results=3).collect()
+    assert hybrid == api.search("twin", "spark data", number_results=3).collect()
+    assert embedded.value == len(CORPUS) + 4  # queries only from here on
+    # a flagged collection without a table just has its flag cleared
+    assert eng.needs_embed("empty")
+    assert eng.read("empty").count() == 0 and not eng.needs_embed("empty")
+
+
+def test_configured_model_scan_and_indexed_search_agree(spark, tmp_path_factory):
+    """One model embeds the documents at insert and the queries at search,
+    so the scan and every indexed path rank in the same vector space: with
+    a 3-dim model a content-only collection answers identically from
+    semantic_search, the quantized shortlist and the graph."""
     from vector_mcp_spark.functions.embedder import hash_embed
 
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("flag_root")))
-    eng.create_collection("vecs", dimension=64)
-    # fully-embedded ingest → flag stays False → search plan skips the
-    # (Arrow round-trip) embed projection entirely
-    eng.add_documents("vecs", ["a doc", "b doc"], embeddings=[hash_embed("a doc"), hash_embed("b doc")])
-    assert eng.needs_embed("vecs") is False
-    # content-only ingest flips it, exactly once, driver-side
-    eng.add_documents("vecs", ["c doc"])
-    assert eng.needs_embed("vecs") is True
-    # searches still work over the mixed table (lazy embed fills the gap)
-    rows = VectorSearchApi(eng).search("vecs", "doc", number_results=3).collect()
-    assert len(rows) > 0
+    eng = CollectionEngine(
+        spark,
+        str(tmp_path_factory.mktemp("model3_root")),
+        embed_model=lambda texts: [hash_embed(t, 3) for t in texts],
+    )
+    eng.create_collection("m3")
+    docs = [f"model doc {i} topic {i % 4}" for i in range(16)]
+    eng.add_documents("m3", docs)
+    eng.build_search_index("m3")
+    api = VectorSearchApi(eng)
+    question = "model doc 5 topic 1"
+    scan = [
+        (r.id, r.score)
+        for r in api.semantic_search("m3", [question], number_results=5).collect()
+    ]
+    qv = api.embed_query("m3", question)
+    assert len(qv) == 3 and len(scan) == 5
+    short = eng.indexed_semantic_search("m3", qv, k=5, shortlist=len(docs)).collect()
+    graph = eng.indexed_graph_search("m3", qv, k=5).collect()
+    assert [(r.id, r.score) for r in short] == scan
+    assert [(r.id, r.score) for r in graph] == scan
 
 
 def test_federated_search_across_collections(spark, tmp_path_factory):

@@ -4,9 +4,8 @@ import pytest
 
 from vector_mcp_spark.operators.dedup import (
     exact_dedup_groups,
-    lsh_candidate_pairs,
     minhash_lsh_pairs,
-    minhash_signatures,
+    minhash_signature_array,
     ngram_jaccard_pairs,
     normalized_key_dedup,
     simhash,
@@ -69,11 +68,9 @@ def test_bigram_jaccard(docs):
 
 
 def test_minhash_exact_dup_identical_signatures(docs):
-    sigs = minhash_signatures(docs, id_col="doc_id", content_col="text", num_hashes=8)
-    rows = sigs.collect()
-    s1 = sorted((r.p, r.minhash) for r in rows if r.id == 1)
-    s2 = sorted((r.p, r.minhash) for r in rows if r.id == 2)
-    assert s1 == s2 and len(s1) == 8
+    sigs = minhash_signature_array(docs, id_col="doc_id", content_col="text", num_hashes=8)
+    rows = {r.id: r.sigs for r in sigs.collect()}
+    assert rows[1] == rows[2] and len(rows[1]) == 8
 
 
 def test_minhash_lsh_pipeline(docs):
@@ -83,12 +80,7 @@ def test_minhash_lsh_pipeline(docs):
     assert (1, 2) in pairs  # exact dup always collides
     for r in got:
         assert r.jaccard >= 0.5  # verification filter holds
-
-
-def test_lsh_candidates_are_pairs_not_cross_join(docs):
-    sigs = minhash_signatures(docs, id_col="doc_id", content_col="text", num_hashes=8)
-    cands = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2).collect()
-    assert all(r.id_a < r.id_b for r in cands)
+        assert r.id_a < r.id_b  # ordered pairs, never a cross join
 
 
 def test_simhash_similar_docs_close(docs):

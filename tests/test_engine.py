@@ -403,13 +403,11 @@ def test_search_index_on_empty_collection(spark, tmp_path_factory):
     assert eng.indexed_lexical_search("empty", "anything").count() == 0
 
 
-def test_build_embeds_once_and_derives_families_from_one_corpus(
-    spark, tmp_path_factory, monkeypatch
-):
-    """The build materializes the served corpus once: the embed seam sees
-    each row exactly once, the IVF-PQ codes are the frozen-codebook
-    encoding of the persisted vectors under the manifest centroids, and the
-    manifest counts match driver-side recounts."""
+def test_build_embeds_once_and_derives_families_from_one_corpus(spark, tmp_path_factory):
+    """Each row is embedded once, at insert: the build calls no embedder,
+    the IVF-PQ codes are the frozen-codebook encoding of the stored vectors
+    under the manifest centroids, and the manifest counts match
+    driver-side recounts."""
     import json
 
     from vector_mcp_spark.functions import embedder
@@ -418,26 +416,25 @@ def test_build_embeds_once_and_derives_families_from_one_corpus(
     from vector_mcp_spark.operators.similarity import assign_clusters
 
     embedded = spark.sparkContext.accumulator(0)
-    real_embed = embedder.embed_documents
 
     def counting_model(texts):
         embedded.add(len(texts))
         return [embedder.hash_embed(t, 64) for t in texts]
 
-    def counted_embed(df, **kw):
-        return real_embed(df, model=counting_model, **kw)
-
-    monkeypatch.setattr(embedder, "embed_documents", counted_embed)
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("build_once")))
+    eng = CollectionEngine(
+        spark, str(tmp_path_factory.mktemp("build_once")), embed_model=counting_model
+    )
     eng.create_collection("once")
     docs = [f"pin doc {i} topic {i % 5} word{i % 3}" for i in range(24)]
     eng.add_documents("once", docs)
+    assert embedded.value == 24
     info = eng.build_search_index("once")
     assert embedded.value == 24
 
     root = eng._index_root(eng._require("once"))
     manifest = json.loads((root / "manifest.json").read_text())
-    vectors = spark.read.parquet(str(root / "vectors"))
+    assert not (root / "vectors").exists()
+    vectors = eng.read("once").select("id", "embedding")
     expected = pq_encode_with(
         assign_clusters(vectors, manifest["ivfpq"]["centroids"]),
         manifest["ivfpq"]["codebooks"],
@@ -601,6 +598,34 @@ def test_driver_serve_set_lifecycle(spark, tmp_path_factory):
     repaired = answers(eng)
     assert any(r.content == "a late document about topic 1" for rows in repaired for r in rows)
     assert repaired == sql_answers()
+
+
+def test_serve_sets_are_dropped_with_their_engine(spark, tmp_path_factory):
+    """A graph serve set's global views live as long as the engine that
+    published them: engines that served and were collected leave no
+    ``_hnsw_*`` view behind."""
+    import gc
+
+    from vector_mcp_spark.functions.embedder import hash_embed
+
+    def global_views() -> set:
+        return {t.name for t in spark.catalog.listTables("global_temp") if t.isTemporary}
+
+    root = str(tmp_path_factory.mktemp("serve_set_gc"))
+    eng = CollectionEngine(spark, root)
+    eng.create_collection("gc")
+    eng.add_documents("gc", [f"collected doc {i} topic {i % 3}" for i in range(12)])
+    eng.build_search_index("gc")
+    del eng
+    gc.collect()
+    baseline = global_views()
+    for _ in range(3):
+        eng = CollectionEngine(spark, root)
+        assert eng.indexed_graph_search("gc", hash_embed("topic 1", 64), k=3).collect()
+        assert len(global_views() - baseline) == 2
+        del eng
+        gc.collect()
+        assert global_views() == baseline
 
 
 def test_catalog_dataframe_contract(spark, tmp_path_factory):
@@ -2326,70 +2351,104 @@ def test_filtered_search_refuses_when_graph_family_vanishes(spark, tmp_path_fact
         )
 
 
-@pytest.mark.slow
-def test_served_indexed_searches_never_reembed_content_only(spark, tmp_path_factory, monkeypatch):
-    """VERDICT r11 watch item 2: a content-only collection's built index
-    persists the derived vectors, so every indexed serve path reads them
-    back instead of re-deriving embeddings inside the query plan. Pinned by
-    poisoning the embed seam after build — serving must never touch it."""
+def test_embedding_seam_runs_at_insert_only(spark, tmp_path_factory, monkeypatch):
+    """Every row gets its vector when it is written: once the documents
+    are in, poisoning embed_documents and failing the model on any corpus
+    text leaves every scan and indexed search, the build and the repair
+    answering, and the scan plans carry no embed projection. A model whose
+    output is non-finite or of the wrong width is refused at insert and
+    nothing is written."""
+    from pathlib import Path
+
     import pytest as _pytest
 
-    from vector_mcp_spark import engine as engine_mod
+    from vector_mcp_spark.api import VectorSearchApi
     from vector_mcp_spark.engine import CollectionEngine
     from vector_mcp_spark.functions import embedder as embedder_mod
-    from vector_mcp_spark.functions.embedder import embed_documents, hash_embed
+    from vector_mcp_spark.functions.embedder import hash_embed
     from vector_mcp_spark.operators.semantic import semantic_topk
+    from vector_mcp_spark.schema import DOCUMENT_SCHEMA
+    from vector_mcp_spark.validation import EngineError
 
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("noembed_root")))
-    eng.create_collection("ne")
-    eng.add_documents(
-        "ne",
-        [f"no reembed doc {i} topic {i % 5}" for i in range(60)],
-        metadatas=[{"tier": "a" if i % 10 == 0 else "b"} for i in range(60)],
-    )
-    assert eng.needs_embed("ne")
-    eng.build_search_index("ne")
-    scoped = eng._require("ne")
-    assert (eng._index_root(scoped) / "vectors").exists()
+    corpus = {f"no reembed doc {i} topic {i % 5}" for i in range(40)}
+    poisoned = []
 
-    # ground truth BEFORE poisoning the seam
-    qv = hash_embed("no reembed doc 30 topic 0", 64)
-    docs = embed_documents(eng.read("ne"), text_col="content", out_col="embedding")
-    exact = semantic_topk(docs, qv, 5, id_col="id", emb_col="embedding").collect()
+    def model(texts):
+        if poisoned and corpus.intersection(texts):
+            raise AssertionError("the corpus was embedded after insert")
+        return [hash_embed(t, 64) for t in texts]
 
     def _poisoned(*a, **k):
-        raise AssertionError("serve path re-embedded the corpus")
+        raise AssertionError("embed_documents ran after insert")
 
+    eng = CollectionEngine(
+        spark, str(tmp_path_factory.mktemp("noembed_root")), embed_model=model
+    )
+    eng.create_collection("ne")
+    ordered = sorted(corpus)
+    eng.add_documents(
+        "ne", ordered,
+        metadatas=[{"tier": "a" if i % 10 == 0 else "b"} for i in range(len(ordered))],
+    )
+    assert not eng.needs_embed("ne")
+    poisoned.append(True)
     monkeypatch.setattr(embedder_mod, "embed_documents", _poisoned)
 
-    got = eng.indexed_semantic_search("ne", qv, k=5, shortlist=60).collect()
+    api = VectorSearchApi(eng)
+    question = "topic 0 question"
+    qv = api.embed_query("ne", question)
+    for plan in (
+        api.semantic_search("ne", [question], number_results=5),
+        api.search("ne", question, number_results=5),
+    ):
+        assert "MapInPandas" not in plan._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count() == 5
+    exact = semantic_topk(eng.read("ne"), qv, 5, id_col="id", emb_col="embedding").collect()
+
+    eng.build_search_index("ne")
+    got = eng.indexed_semantic_search("ne", qv, k=5, shortlist=len(corpus)).collect()
     assert [r.id for r in got] == [r.id for r in exact]
     assert eng.indexed_graph_search("ne", qv, k=5).count() > 0
-    assert eng.indexed_ivfpq_search("ne", qv, k=5, shortlist=60).count() > 0
+    assert eng.indexed_ivfpq_search("ne", qv, k=5, shortlist=len(corpus)).count() > 0
     assert eng.indexed_filtered_search("ne", qv, {"tier": "a"}, k=3).count() > 0
+    assert eng.indexed_lexical_search("ne", "topic", k=3).count() == 3
 
-    # repair appends the batch's vectors, then serving still never embeds
-    monkeypatch.setattr(embedder_mod, "embed_documents", embed_documents)
+    # a late batch is embedded as it is written; repair and serving after
+    # it still embed nothing of the corpus
     eng.add_documents("ne", ["late arrival vector"], metadatas=[{"tier": "a"}])
-    eng.repair_search_index("ne")
-    monkeypatch.setattr(embedder_mod, "embed_documents", _poisoned)
+    corpus.add("late arrival vector")
+    assert eng.repair_search_index("ne")["repaired"] == 1
     top = eng.indexed_semantic_search(
         "ne", hash_embed("late arrival vector", 64), k=3, shortlist=100
     ).collect()
     assert top and top[0].content == "late arrival vector"
+    assert api.semantic_search("ne", ["late arrival"], number_results=1).count() == 1
 
-    # stored-vector collections keep reading the table (no family written)
-    eng2 = CollectionEngine(spark, str(tmp_path_factory.mktemp("noembed2_root")))
-    eng2.create_collection("sv")
-    eng2.add_documents(
-        "sv",
-        [f"stored vec doc {i}" for i in range(8)],
-        embeddings=[hash_embed(f"stored vec doc {i}", 64) for i in range(8)],
+    # a refused model output writes nothing, through either write path
+    monkeypatch.undo()
+    bad = CollectionEngine(
+        spark,
+        str(tmp_path_factory.mktemp("badmodel_root")),
+        embed_model=lambda texts: [
+            [float("nan")] * 3 if "nan" in t else [1.0] * (2 if "short" in t else 3)
+            for t in texts
+        ],
     )
-    assert not eng2.needs_embed("sv")
-    eng2.build_search_index("sv")
-    assert not (eng2._index_root(eng2._require("sv")) / "vectors").exists()
-    assert eng2.indexed_semantic_search("sv", hash_embed("stored vec doc 3", 64), k=3).count() == 3
+    bad.create_collection("free")
+    bad.create_collection("four", dimension=4)
+    for name, texts in (
+        ("free", ["ok doc", "nan doc"]),
+        ("free", ["ok doc", "short doc"]),
+        ("four", ["ok doc"]),
+    ):
+        with _pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
+            bad.add_documents(name, texts)
+    nan_row = spark.createDataFrame([("x1", "nan doc", None, None)], DOCUMENT_SCHEMA)
+    with _pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
+        bad.update_documents("free", nan_row)
+    for name in ("free", "four"):
+        assert not Path(bad._table_path(bad._require(name))).exists()
+        assert bad.count_documents(name) == 0
 
 
 @pytest.mark.slow
@@ -2674,7 +2733,7 @@ def test_content_only_l2_graph_refuses_mis_sized_query(spark, tmp_path_factory):
         "l2g", [f"l2 guard doc {i}" for i in range(20)],
         metadatas=[{"t": "a"}] * 20,
     )
-    assert eng.needs_embed("l2g") and eng._locked_dimension(eng._require("l2g")) is None
+    assert eng._locked_dimension(eng._require("l2g")) is None
     eng.build_search_index("l2g")
     manifest = _json.loads(
         (eng._index_root(eng._require("l2g")) / "manifest.json").read_text()

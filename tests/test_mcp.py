@@ -183,23 +183,28 @@ def test_remote_client_end_to_end_search(spark, tmp_path_factory):
         assert isinstance(payload["input"], list)
         return {"data": [{"embedding": hash_embed(t, 64)} for t in payload["input"]]}
 
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("e2e_root")))
-    eng.create_collection("wired")
-    eng.add_documents("wired", [
-        "spark processes data in parallel",
-        "vector search over embeddings",
-        "coffee brewing techniques",
-    ])  # content-only → the search path must embed through the client
     client = RemoteEmbeddingClient(
         endpoint="https://fake.test/v1/embeddings", model="fake-model",
         batch_size=2, transport=_recorded_transport,
     )
-    api = VectorSearchApi(eng, embed_model=client)
+    docs = [
+        "spark processes data in parallel",
+        "vector search over embeddings",
+        "coffee brewing techniques",
+    ]
+    # content-only → the engine embeds through the client at insert
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("e2e_root")), embed_model=client)
+    eng.create_collection("wired")
+    eng.add_documents("wired", docs)
+    api = VectorSearchApi(eng)
     rows = api.search("wired", "vector embeddings", number_results=2).collect()
     assert len(rows) == 2
     # identical scores to the offline hash-embedder path: the client replays
     # the same recorded vectors, so the seams are interchangeable
-    offline = VectorSearchApi(eng).search("wired", "vector embeddings", number_results=2).collect()
+    hashed = CollectionEngine(spark, str(tmp_path_factory.mktemp("e2e_hash_root")))
+    hashed.create_collection("wired")
+    hashed.add_documents("wired", docs)
+    offline = VectorSearchApi(hashed).search("wired", "vector embeddings", number_results=2).collect()
     assert [(r.id, round(r.score, 9)) for r in rows] == [
         (r.id, round(r.score, 9)) for r in offline
     ]
@@ -209,14 +214,15 @@ def test_remote_client_end_to_end_search(spark, tmp_path_factory):
 
 
 def test_env_gate_selects_remote_client(monkeypatch, spark, tmp_path_factory):
-    """VECTOR_MCP_SPARK_EMBED_ENDPOINT flips the api from the hash embedder
-    to the remote-client seam; unset env keeps the deterministic default."""
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("gate_root")))
+    """VECTOR_MCP_SPARK_EMBED_ENDPOINT flips the engine from the hash
+    embedder to the remote-client seam; unset env keeps the deterministic
+    default."""
+    root = str(tmp_path_factory.mktemp("gate_root"))
     monkeypatch.delenv("VECTOR_MCP_SPARK_EMBED_ENDPOINT", raising=False)
-    assert VectorSearchApi(eng)._embed_model is None
+    assert CollectionEngine(spark, root)._embed_model is None
     monkeypatch.setenv("VECTOR_MCP_SPARK_EMBED_ENDPOINT", "https://fake.test/v1/embeddings")
     monkeypatch.setenv("VECTOR_MCP_SPARK_EMBED_MODEL", "fake-model")
-    gated = VectorSearchApi(eng)
+    gated = CollectionEngine(spark, root)
     assert isinstance(gated._embed_model, RemoteEmbeddingClient)
     assert gated._embed_model.model == "fake-model"
 
@@ -426,22 +432,25 @@ def embed_server():
 
 def test_live_loopback_search_end_to_end(spark, tmp_path_factory, embed_server):
     url, state = embed_server
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("live_root")))
-    eng.create_collection("live")
-    eng.add_documents("live", [
-        "spark processes data in parallel",
-        "vector search over embeddings",
-        "coffee brewing techniques",
-    ])
     client = RemoteEmbeddingClient(
         endpoint=url, model="fake-model", api_key="sekret",
         batch_size=2, backoff_s=0.01,
     )
-    api = VectorSearchApi(eng, embed_model=client)
-    rows = api.search("live", "vector embeddings", number_results=2).collect()
+    docs = [
+        "spark processes data in parallel",
+        "vector search over embeddings",
+        "coffee brewing techniques",
+    ]
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("live_root")), embed_model=client)
+    eng.create_collection("live")
+    eng.add_documents("live", docs)
+    rows = VectorSearchApi(eng).search("live", "vector embeddings", number_results=2).collect()
     assert len(rows) == 2
     # wire-identical to the offline hash-embedder path
-    offline = VectorSearchApi(eng).search("live", "vector embeddings", number_results=2).collect()
+    hashed = CollectionEngine(spark, str(tmp_path_factory.mktemp("live_hash_root")))
+    hashed.create_collection("live")
+    hashed.add_documents("live", docs)
+    offline = VectorSearchApi(hashed).search("live", "vector embeddings", number_results=2).collect()
     assert [(r.id, round(r.score, 9)) for r in rows] == [
         (r.id, round(r.score, 9)) for r in offline
     ]
@@ -1354,7 +1363,7 @@ def test_describe_collection_action(veneer):
     assert out["collection_name"] == "desc_me"
     assert out["dimension"] == 8
     assert out["points_count"] == 2
-    assert out["needs_embed"] is True  # contents ingested without vectors
+    assert out["needs_embed"] is False  # contents are embedded at insert
     assert out["aliases"] == ["desc_alias"]
     assert out["index_status"] in {"absent", "stale", "fresh", "repaired"}
     # describing through the alias reports the live target's state

@@ -628,7 +628,6 @@ def test_sql_fast_builders_match_loop_trees(spark):
     import re
 
     from vector_mcp_spark.functions.vector import (
-        cosine_similarity_fixed,
         dot_fixed,
         l2_distance_lit,
         l2_norm_fixed,
@@ -659,14 +658,6 @@ def test_sql_fast_builders_match_loop_trees(spark):
         "dot_fixed": (
             _loop_dot_fixed(F.col("embedding"), F.col("qv"), 4),
             dot_fixed("embedding", "qv", 4),
-        ),
-        "cosine_fixed": (
-            F.try_divide(
-                _loop_dot_fixed(F.col("embedding"), F.col("qv"), 4),
-                F.sqrt(_loop_sq(F.col("embedding"), 4))
-                * F.sqrt(_loop_sq(F.col("qv"), 4)),
-            ),
-            cosine_similarity_fixed("embedding", "qv", 4),
         ),
         "l2_distance_lit": (
             F.sqrt(F.when(inner_old < F.lit(0.0), F.lit(0.0)).otherwise(inner_old)),

@@ -11,7 +11,9 @@ lexical) collapses into the same methods.
 
 Where the reference's steps 5-9 are Python loops + network hops, here the
 whole search is ONE lazy DataFrame DAG (two ranked subplans → union →
-groupBy-sum → TakeOrderedAndProject) executed by a single action.
+groupBy-sum → TakeOrderedAndProject) executed by a single action. Every
+document carries the vector the engine embedded at insert, and queries embed
+through the same engine seam, so no search plan embeds anything.
 """
 
 from __future__ import annotations
@@ -22,7 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vector_mcp_spark.engine import CollectionEngine
-from vector_mcp_spark.functions.embedder import hash_embed
 from vector_mcp_spark.operators.hybrid import rrf_fuse
 from vector_mcp_spark.operators.lexical import lexical_tf_topk, lexical_tf_topk_multi
 from vector_mcp_spark.operators.semantic import semantic_topk, semantic_topk_multi
@@ -41,39 +42,24 @@ class VectorSearchApi:
     def __init__(
         self,
         engine: CollectionEngine,
-        embed_query: Callable[[str], Sequence[float]] | None = None,
-        dim: int = 64,
-        embed_model: Callable[[Sequence[str]], Sequence[Sequence[float]]] | None = None,
         rerank_model: Callable[[str, Sequence[str]], Sequence[float]] | None = None,
     ):
-        """``embed_model`` is the batched real-model seam (texts → vectors):
-        it embeds both queries and missing-vector documents, exactly like the
-        reference's one-model-for-both contract (``vectordb/base.py:34-75``).
-        When omitted, the ``VECTOR_MCP_SPARK_EMBED_ENDPOINT`` env gate may
-        supply a ``RemoteEmbeddingClient``; otherwise the deterministic hash
-        embedder keeps everything oracle-checkable offline."""
-        from vector_mcp_spark.functions.embedding_client import RemoteEmbeddingClient
-
+        """Queries embed through the engine's seam
+        (:meth:`CollectionEngine.embed_texts`) — the same model that
+        embedded the documents at insert, so every search reads stored
+        vectors and never embeds the corpus. ``rerank_model`` is the
+        cross-encoder seam; when omitted, the
+        ``VECTOR_MCP_SPARK_RERANK_ENDPOINT`` env gate may supply one."""
         from vector_mcp_spark.functions.rerank_client import RemoteRerankClient
 
         self.engine = engine
-        self.dim = dim
-        self._embed_model = embed_model if embed_model is not None else RemoteEmbeddingClient.from_env()
         self._rerank_model = rerank_model if rerank_model is not None else RemoteRerankClient.from_env()
-        if embed_query is not None:
-            self._embed_query = embed_query
-        elif self._embed_model is not None:
-            model = self._embed_model
-            self._embed_query = lambda q: list(model([q])[0])
-        else:
-            self._embed_query = lambda q: hash_embed(q, dim)
 
-    def embed_query(self, question: str) -> list[float]:
-        """The one query-embedding seam (remote model when configured,
-        deterministic hash embed otherwise) — public so transports that
+    def embed_query(self, collection: str, question: str) -> list[float]:
+        """The query vector for ``collection`` — public so transports that
         need a raw vector (the veneer's indexed_search) share the exact
         representation every text search uses."""
-        return list(self._embed_query(question))
+        return self.engine.embed_texts(collection, [question])[0]
 
     # -- retrieval (base.py:189-231 protocol) -------------------------------
 
@@ -99,8 +85,8 @@ class VectorSearchApi:
         if not questions:
             raise EngineError("question_invalid")  # vector_api.py:548 rejects empty
         cleaned = [sanitize_text_py(validate_question(q)) for q in questions]
-        docs = self._docs(collection)
-        queries = [(i, self._embed_query(q)) for i, q in enumerate(cleaned)]
+        docs = self.engine.read(collection)
+        queries = list(enumerate(self.engine.embed_texts(collection, cleaned)))
         return semantic_topk_multi(
             docs,
             queries,
@@ -123,7 +109,7 @@ class VectorSearchApi:
         if not questions:
             raise EngineError("question_invalid")
         cleaned = [(i, sanitize_text_py(validate_question(q))) for i, q in enumerate(questions)]
-        docs = self._docs(collection)
+        docs = self.engine.read(collection)
         ranked = lexical_tf_topk_multi(
             docs, cleaned, number_results, id_col="id", content_col="content"
         )
@@ -148,14 +134,14 @@ class VectorSearchApi:
         rrf_k = validate_rrf_k(rrf_k)
         w_sem, w_lex = validate_weights([semantic_weight, lexical_weight])
         cleaned = sanitize_text_py(validate_question(question))
-        docs = self._docs(collection)
+        docs = self.engine.read(collection)
         leg_k = max(number_results * 2, 20)
         # the semantic leg ranks under the collection's locked distance
         # (create_collection's contract); RRF is rank-based, so an
         # ascending-better l2 leg just flips its ranking key before fusing
         metric = self.engine.collection_distance(collection)
         sem = semantic_topk(
-            docs, self._embed_query(cleaned), leg_k,
+            docs, self.engine.embed_texts(collection, [cleaned])[0], leg_k,
             id_col="id", emb_col="embedding", metric=metric,
         )
         if metric == "l2":
@@ -190,10 +176,10 @@ class VectorSearchApi:
         if shortlist < number_results:
             raise EngineError("number_results_invalid")
         cleaned = sanitize_text_py(validate_question(question))
-        docs = self._docs(collection)
+        docs = self.engine.read(collection)
         short = (
             semantic_topk(
-                docs, self._embed_query(cleaned), shortlist,
+                docs, self.engine.embed_texts(collection, [cleaned])[0], shortlist,
                 id_col="id", emb_col="embedding",
                 metric=self.engine.collection_distance(collection),
             )
@@ -239,11 +225,13 @@ class VectorSearchApi:
             k_per_collection if k_per_collection is not None else number_results
         )
         cleaned = sanitize_text_py(validate_question(question))
-        qvec = self._embed_query(cleaned)
+        # one query vector scores every collection: the first collection's
+        # seam embeds it (collections sharing a model share its space)
+        qvec = self.engine.embed_texts(collections[0], [cleaned])[0]
         parts = []
         for name in dict.fromkeys(collections):  # dedup, preserve order
             parts.append(
-                self._docs(name).select(
+                self.engine.read(name).select(
                     F.lit(name).alias("collection"), "id", "content", "embedding"
                 )
             )
@@ -265,20 +253,3 @@ class VectorSearchApi:
             .select("collection", "id", "content", "score", "collection_rank", "rank")
             .orderBy("rank")
         )
-
-    def _docs(self, collection: str) -> DataFrame:
-        df = self.engine.read(collection)
-        # Embed rows missing vectors at read time (the reference embeds at
-        # insert; engine.add_documents may store content-only rows). Whether
-        # the embed projection is needed comes from the engine's catalog flag
-        # (maintained at mutation time) — a driver-side lookup, so building
-        # the search plan launches ZERO Spark jobs; the old `WHERE embedding
-        # IS NULL LIMIT 1` probe cost an extra table scan per query.
-        if self.engine.needs_embed(collection):
-            from vector_mcp_spark.functions.embedder import embed_documents
-
-            df = embed_documents(
-                df, text_col="content", out_col="embedding", dim=self.dim,
-                model=self._embed_model,
-            )
-        return df

@@ -26,11 +26,13 @@ from __future__ import annotations
 import functools
 import hashlib
 import os
+import re
 import shutil
 import threading
 import time
 import uuid
-from collections.abc import Mapping, Sequence
+import weakref
+from collections.abc import Callable, Mapping, Sequence
 from datetime import datetime, timezone
 from pathlib import Path
 from typing import TYPE_CHECKING, NamedTuple
@@ -61,6 +63,38 @@ class _GraphServe(NamedTuple):
     sql: ServeSet
     #: the driver-resident copy, or None when the set is over the bound
     driver: DriverServeSet | None
+
+
+def _embed_batch(model, dim: int | None, texts: Sequence[str]) -> list[list[float]]:
+    """The vectors for ``texts`` under one collection's embedding config —
+    the body of :meth:`CollectionEngine.embed_texts`, kept free of the
+    engine so ``update_documents`` can ship it to executors.
+    No model: the deterministic hash embedder at the locked dimension (64
+    when none is locked). A model embeds at its own width; its output is
+    refused with ``collection_vector_schema_mismatch`` when a vector is
+    non-finite, the widths disagree, or they differ from a locked
+    dimension, and with ``embedding_batch_invalid`` when the count does."""
+    from vector_mcp_spark.functions.embedder import hash_embed
+
+    if model is None:
+        return [hash_embed(t, dim or 64) for t in texts]
+    vecs = [validate_stored_vector(v) for v in model(list(texts))]
+    if len(vecs) != len(texts):
+        raise EngineError("embedding_batch_invalid")
+    widths = {len(v) for v in vecs} | ({dim} if dim is not None and vecs else set())
+    if len(widths) > 1 or 0 in widths:
+        raise EngineError(
+            "collection_vector_schema_mismatch", detail=f"model widths {sorted(widths)}"
+        )
+    return vecs
+
+
+def _drop_serve_sets(sets: dict) -> None:
+    """Drop the global views of every cached serve set (an engine's
+    finalizer: the views would otherwise outlive it for the life of the
+    Spark application)."""
+    for serve in sets.values():
+        serve.sql.drop()
 
 
 def _physical_name(logical: str) -> str:
@@ -153,12 +187,29 @@ class CollectionEngine:
                 lock = self._MUTATION_LOCKS[key] = threading.RLock()
             return lock
 
-    def __init__(self, spark: SparkSession, root: str, tenant: str | None = None):
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        tenant: str | None = None,
+        embed_model: Callable[[Sequence[str]], Sequence[Sequence[float]]] | None = None,
+    ):
+        """``embed_model`` is the batched real-model seam (texts → vectors):
+        every row is embedded with it when written, and every text query
+        with it when searched — the reference's one-model-for-both contract
+        (``vectordb/base.py:34-75``). When omitted, the
+        ``VECTOR_MCP_SPARK_EMBED_ENDPOINT`` env gate may supply a
+        ``RemoteEmbeddingClient``; otherwise the deterministic hash embedder
+        keeps everything oracle-checkable offline."""
+        from vector_mcp_spark.functions.embedding_client import RemoteEmbeddingClient
         from vector_mcp_spark.operators.transactional import transactional_format
 
         self.spark = spark
         self.root = Path(root)
         self.tenant = tenant
+        self._embed_model = (
+            embed_model if embed_model is not None else RemoteEmbeddingClient.from_env()
+        )
         # VECTOR_MCP_SPARK_TABLE_FORMAT=delta|iceberg routes T7/T9 mutations
         # through transactional MERGE/DELETE (operators/transactional.py);
         # unset keeps the partition-pruned parquet rewrite path
@@ -170,6 +221,10 @@ class CollectionEngine:
         # before this cache is consulted, so a stale index can never be
         # served from here (r13, guide §1.2).
         self._graph_serve_sets: dict[tuple, _GraphServe] = {}
+        # the sets' global views are application-wide: drop them when the
+        # engine is collected (not at interpreter exit, when the JVM may
+        # already be gone)
+        weakref.finalize(self, _drop_serve_sets, self._graph_serve_sets).atexit = False
         (self.root / "collections").mkdir(parents=True, exist_ok=True)
 
     def _graph_serve_set(self, index_root: Path, metric: str, corpus) -> _GraphServe:
@@ -246,9 +301,8 @@ class CollectionEngine:
                 r["table_name"],
                 r["dimension"],
                 r["created_at"],
-                # legacy catalogs predate the flag: assume embeds may be
-                # needed (conservative — costs one pass-through projection,
-                # never a wrong result)
+                # catalogs that predate the flag may hold rows without
+                # vectors: read() upgrades them once (see needs_embed)
                 bool(r.get("needs_embed", True)),
                 # legacy catalogs predate the per-collection distance
                 # config: every pre-r12 collection was served under cosine
@@ -550,29 +604,44 @@ class CollectionEngine:
             )
 
     def needs_embed(self, name: str) -> bool:
-        """True if the collection may hold rows with NULL embedding. Driver-
-        side catalog lookup — never a Spark job, so the search hot path can
-        consult it per query for free (the alternative, probing the table
-        with a ``WHERE embedding IS NULL LIMIT 1`` count, costs an extra
-        scan per search at scale). Resolves aliases: a search through an
-        alias must see the TARGET's flag, not default to the conservative
-        embed-everything path. Missing collections raise the same stable
+        """True while the collection is LEGACY: written by an engine that
+        stored content-only rows without vectors, so it may still hold
+        NULL embeddings. This engine embeds every row at insert; the first
+        :meth:`read` of a legacy collection upgrades it once and clears the
+        flag. Driver-side catalog lookup, never a Spark job. Resolves
+        aliases, and missing collections raise the same stable
         ``collection_not_found`` as every other name-gated surface (the
         tenant-matrix contract: tenant B probing A's name learns nothing a
-        nonexistent name wouldn't tell it) — still catalog-only, no job."""
+        nonexistent name wouldn't tell it)."""
         scoped = self._resolve_scoped(name)
         for r in self._catalog_rows():
             if r[0] == scoped:
                 return bool(r[4])
         raise EngineError("collection_not_found")
 
-    def _mark_needs_embed(self, scoped: str) -> None:
-        with self._mutation_lock("__catalog__"):  # serialized RMW
-            rows = self._catalog_rows()
-            if any(r[0] == scoped and not r[4] for r in rows):
+    def _upgrade_legacy(self, name: str, scoped: str) -> None:
+        """Embed a legacy collection's NULL-embedding rows through
+        :meth:`embed_texts`' seam and rewrite them (one upsert, under the
+        collection's mutation lock, logged like any other), then clear the
+        flag. A collection without a table just has its flag cleared."""
+        with self._mutation_lock(scoped):
+            if not any(r[0] == scoped and r[4] for r in self._catalog_rows()):
+                return  # another reader upgraded it first
+            if Path(self._table_path(scoped)).exists():
+                legacy = self._read_table(scoped).where(F.col("embedding").isNull())
+                self.update_documents(name, legacy)
+            with self._mutation_lock("__catalog__"):  # serialized RMW
+                rows = self._catalog_rows()
                 self._write_catalog(
-                    [(r[:4] + (True,) + r[5:]) if r[0] == scoped else r for r in rows]
+                    [(r[:4] + (False,) + r[5:]) if r[0] == scoped else r for r in rows]
                 )
+
+    def embed_texts(self, name: str, texts: Sequence[str]) -> list[list[float]]:
+        """The one embedding seam: the vectors the collection stores for
+        (and searches with) ``texts`` — one batched model call, driver-side.
+        See :func:`_embed_batch` for the width and refusal rules."""
+        scoped = self._require(name)
+        return _embed_batch(self._embed_model, self._locked_dimension(scoped), texts)
 
     def _check_dimension(self, scoped: str, df: DataFrame, emb_col: str = "embedding") -> None:
         """Reject wrong-size vectors before they reach the table
@@ -734,7 +803,14 @@ class CollectionEngine:
     # -- documents ----------------------------------------------------------
 
     def read(self, name: str) -> DataFrame:
+        """The collection's rows, every one with its stored vector (a
+        legacy collection is upgraded first, see :meth:`needs_embed`)."""
         scoped = self._require(name)
+        if self.needs_embed(name):
+            self._upgrade_legacy(name, scoped)
+        return self._read_table(scoped)
+
+    def _read_table(self, scoped: str) -> DataFrame:
         if not Path(self._table_path(scoped)).exists():
             # cataloged but never written to — empty collection
             return self.spark.createDataFrame([], DOCUMENT_SCHEMA)
@@ -820,7 +896,6 @@ class CollectionEngine:
         ``base.py:139-172`` (upsert)."""
         validate_ingest_bounds(contents)
         scoped = self._require(name)
-        self._seed_changelog_if_legacy(scoped)
         n = len(contents)
         metadatas = metadatas if metadatas is not None else [None] * n
         embeddings = embeddings if embeddings is not None else [None] * n
@@ -843,6 +918,14 @@ class CollectionEngine:
             # postgres.py:164-172 — pgvector's VECTOR(dim) enforces this
             # in-DDL; parquet has no typed vector width, so explicit gate
             raise EngineError("collection_vector_schema_mismatch")
+        # rows without a vector get one now, in one batched call, before
+        # anything is written — a refused model output writes nothing
+        missing = [i for i, (_, _, e) in prepped.items() if e is None]
+        if missing:
+            vecs = self.embed_texts(name, [prepped[i][0] for i in missing])
+            for i, v in zip(missing, vecs):
+                prepped[i] = prepped[i][:2] + (v,)
+        self._seed_changelog_if_legacy(scoped)
         ids = list(prepped)
         # plain createDataFrame keeps the batch a LocalRelation →
         # LocalTableScan (no parallelize slices, no coalesce barrier)
@@ -871,10 +954,6 @@ class CollectionEngine:
         self._log_mutation_rows(
             scoped, "upsert", [(i, c, m, e) for i, (c, m, e) in prepped.items()]
         )
-        # flag maintenance is driver-side and exact: the caller's embeddings
-        # list says whether this batch introduced NULL-embedding rows
-        if any(e is None for e in embeddings):
-            self._mark_needs_embed(scoped)
         return len(ids)
 
     @staticmethod
@@ -911,19 +990,6 @@ class CollectionEngine:
 
         return hashlib.sha256("\n".join(stamps).encode()).hexdigest()
 
-    def _checkpointed_served_corpus(self, name: str) -> DataFrame:
-        """The collection in its SERVED representation, materialized once:
-        rows stored content-only get their vectors from the same embed seam
-        the search path uses, and the eager checkpoint lets every index
-        family the caller derives read one in-memory corpus instead of
-        rescanning the table and re-running the embedder per pass."""
-        df = self.read(name)
-        if self.needs_embed(name):
-            from vector_mcp_spark.functions.embedder import embed_documents
-
-            df = embed_documents(df, text_col="content", out_col="embedding")
-        return df.localCheckpoint(eager=True)
-
     def build_search_index(self, name: str, quantization: str = "sign") -> dict:
         """Materialize the search index families for a collection:
         lexical postings, the quantized vector-shortlist table, the
@@ -959,7 +1025,9 @@ class CollectionEngine:
         # cluster by Euclidean distance; dot shares the cosine clustering
         # (the standard MIPS compromise — the exact re-rank restores order)
         coarse_metric = "l2" if distance == "l2" else "cosine"
-        df = self._checkpointed_served_corpus(name)
+        # every index family derives from one materialized corpus (the
+        # eager checkpoint), never a rescan of the table per family
+        df = self.read(name).localCheckpoint(eager=True)
         root = self._index_root(scoped)
         postings = build_postings(df.select("id", "content"), "id", "content").withColumn(
             "term_bucket", term_bucket("term")
@@ -977,17 +1045,9 @@ class CollectionEngine:
             "overwrite"
         ).parquet(str(root / "doclen"))
         vec_rows = df.where(F.col("embedding").isNotNull())
-        if self.needs_embed(name):
-            # content-only collections: persist the derived vectors so the
-            # serve paths never re-embed the corpus inside a query plan
-            # (VERDICT r11 watch item 2) — the embed seam runs ONCE, here
-            vec_rows.select("id", "embedding").write.mode("overwrite").parquet(
-                str(root / "vectors")
-            )
-        else:
-            # stored-vector collections read embeddings from the table; a
-            # leftover family from a content-only past would shadow them
-            shutil.rmtree(root / "vectors", ignore_errors=True)
+        # indexes built before vectors were stored at insert kept a derived
+        # `vectors` family; nothing reads it any more
+        shutil.rmtree(root / "vectors", ignore_errors=True)
         if quantization == "sign":
             signs = sign_pack(vec_rows, "embedding", "id")
             signs.select("id", "lo", "hi").write.mode("overwrite").parquet(
@@ -1187,7 +1247,7 @@ class CollectionEngine:
                 "index_repair_requires_rebuild",
                 detail="collection had <2 vectors at build; rebuild",
             )
-        df = self._checkpointed_served_corpus(name)  # membership + both phases
+        df = self.read(name).localCheckpoint(eager=True)  # membership + both phases
         indexed = self.spark.read.parquet(str(root / "ids"))
         removed = indexed.join(df.select("id"), "id", "left_anti").count()
         if removed:
@@ -1241,10 +1301,6 @@ class CollectionEngine:
             quantize_int8(new_emb, vec_col="embedding", id_col="id").select(
                 "id", "scale", "q"
             ).write.mode("append").parquet(str(root / "int8q"))
-        if self.needs_embed(name) and (root / "vectors").exists():
-            new_emb.select("id", "embedding").write.mode("append").parquet(
-                str(root / "vectors")
-            )
         n_new_vecs = new_emb.count()
         if n_new_vecs and manifest.get("ivfpq"):
             # IVF-PQ family: encode the batch against the FROZEN coarse
@@ -1310,26 +1366,6 @@ class CollectionEngine:
             "n_vectors": int(manifest["n_vectors"]),
             "n_terms": n_terms,
         }
-
-    def _served_embeddings_df(self, name: str, scoped: str):
-        """The document frame with its SERVED embedding column — what every
-        indexed search ranks and re-ranks over. Stored-vector collections
-        read straight from the table; content-only collections read the
-        ``vectors`` family the index build persisted (build/repair keep it
-        covering, and every caller already refused on a stale index), so
-        serving never re-embeds the corpus inside a query plan. Indexes
-        built before the family existed fall back to the deterministic
-        embed seam."""
-        df = self.read(name)
-        if not self.needs_embed(name):
-            return df
-        vec_root = self._index_root(scoped) / "vectors"
-        if vec_root.exists():
-            vecs = self.spark.read.parquet(str(vec_root))
-            return df.drop("embedding").join(vecs, "id", "left")
-        from vector_mcp_spark.functions.embedder import embed_documents
-
-        return embed_documents(df, text_col="content", out_col="embedding")
 
     @staticmethod
     def _metric_order(metric: str, score, tie) -> list:
@@ -1786,7 +1822,7 @@ class CollectionEngine:
                 .limit(shortlist)
                 .drop("_approx")
             )
-        df = self._served_embeddings_df(name, scoped)
+        df = self.read(name)
         qv = F.array(*[F.lit(x) for x in question_vec])
         if metric == "cosine":
             sim = dot(F.col("embedding"), qv) / (l2_norm(F.col("embedding")) * l2_norm(qv))
@@ -1860,7 +1896,7 @@ class CollectionEngine:
         if rows is not None:
             return self._local_hits(rows)
         return (
-            self._served_embeddings_df(name, scoped)
+            self.read(name)
             .join(F.broadcast(self._sql_graph_hits(*args)), "id")
             .select("id", "content", "score")
             .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
@@ -1871,7 +1907,7 @@ class CollectionEngine:
         (id, embedding, content) rows that have a vector."""
 
         def corpus() -> DataFrame:
-            df = self._served_embeddings_df(name, scoped)
+            df = self.read(name)
             return df.where(F.col("embedding").isNotNull()).select("id", "embedding", "content")
 
         return self._graph_serve_set(self._index_root(scoped), metric, corpus)
@@ -1977,8 +2013,7 @@ class CollectionEngine:
             return self.spark.createDataFrame([], "id string, content string, score double")
         # the index itself knows its dimension (m subspaces × sub-dim
         # codebook centroids) — refuse mis-sized queries even when the
-        # collection never locked a dimension (content-only ingest embeds
-        # at serve time, so _locked_dimension can be None)
+        # collection never locked a dimension (_locked_dimension is None)
         indexed_dim = pq_meta["m"] * len(pq_meta["codebooks"][0][0])
         if len(question_vec) != indexed_dim:
             raise EngineError(
@@ -1986,7 +2021,7 @@ class CollectionEngine:
                 detail=f"query dimension {len(question_vec)} != indexed {indexed_dim}",
             )
         codes = self.spark.read.parquet(str(self._index_root(scoped) / "ivfpq"))
-        df = self._served_embeddings_df(name, scoped)
+        df = self.read(name)
         corpus = df.where(F.col("embedding").isNotNull()).select("id", "embedding")
         metric = manifest.get("distance") or "cosine"
         hits = ann_ivf_adc_rerank_topk(
@@ -2106,7 +2141,7 @@ class CollectionEngine:
                     detail=f"query dimension {len(question_vec)} != indexed {manifest['dimension']}",
                 )
         meta = manifest.get("graph") or {}
-        df = self._served_embeddings_df(name, scoped)
+        df = self.read(name)
         if meta.get("entry") is None:
             return self.spark.createDataFrame([], "id string, content string, score double")
         cond = None
@@ -2224,8 +2259,23 @@ class CollectionEngine:
         # this same collection (a re-embed pipeline) would otherwise be
         # re-evaluated for the changelog append AFTER the rewrite deleted
         # the parquet files it reads — and even a safe df would recompute
-        # its plan 3-4× (prefixes, merge, changelog, null probe).
-        df = df.select(*DOCUMENT_SCHEMA.fieldNames()).localCheckpoint(eager=True)
+        # its plan 3-4× (prefixes, merge, changelog). Rows without a
+        # vector are embedded through the collection's seam on the way in.
+        from pyspark.errors import PythonException
+
+        from vector_mcp_spark.functions.embedder import embed_documents
+
+        seam = functools.partial(_embed_batch, self._embed_model, self._locked_dimension(scoped))
+        df = embed_documents(df.select(*DOCUMENT_SCHEMA.fieldNames()), model=seam)
+        try:
+            df = df.localCheckpoint(eager=True)
+        except PythonException as e:
+            # the seam's refusal, raised inside the embed closure, keeps
+            # its stable code
+            refused = re.search(r"EngineError: ([a-z][a-z0-9_]{0,63})", str(e))
+            if refused:
+                raise EngineError(refused.group(1)) from None
+            raise
         self._check_dimension(scoped, df)
         self._seed_changelog_if_legacy(scoped)
         if self._table_format is not None:
@@ -2233,8 +2283,6 @@ class CollectionEngine:
 
             merge_upsert(self.spark, self._table_format, self._table_path(scoped), df)
             self._log_mutation_df(scoped, "upsert", df)
-            if df.where(F.col("embedding").isNull()).limit(1).count() > 0:
-                self._mark_needs_embed(scoped)
             return
         prefixes = [
             r.p for r in df.select(_prefix_of(F.col("id")).alias("p")).distinct().collect()
@@ -2243,10 +2291,6 @@ class CollectionEngine:
         merged = touched.join(df.select("id"), "id", "left_anti").unionByName(df)
         self._rewrite_partitions(scoped, prefixes, merged)
         self._log_mutation_df(scoped, "upsert", df)
-        # bounded probe on the (batch-sized) upsert input — mutation path,
-        # not the search hot path; keeps the catalog flag exact
-        if df.where(F.col("embedding").isNull()).limit(1).count() > 0:
-            self._mark_needs_embed(scoped)
 
     @_serialized_mutation
     def delete_documents(self, name: str, ids: Sequence[str]) -> None:

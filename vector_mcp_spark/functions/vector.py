@@ -237,14 +237,3 @@ def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
         acc = term if acc is None else acc + term
     return acc if acc is not None else F.lit(0.0)
 
-
-def cosine_similarity_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Codegen'd cosine for a known dimension; bit-equal to
-    ``cosine_similarity``."""
-    ra, rb = _ref_sql(a), _ref_sql(b)
-    if ra is not None and rb is not None and dim > 0:
-        return F.expr(
-            f"try_divide({_dot_fixed_sql(ra, rb, dim)},"
-            f" (SQRT({_sq_norm_sql(ra, dim)}) * SQRT({_sq_norm_sql(rb, dim)})))"
-        )
-    return F.try_divide(dot_fixed(a, b, dim), l2_norm_fixed(a, dim) * l2_norm_fixed(b, dim))

@@ -455,7 +455,7 @@ class McpVeneer:
                 ):
                     raise EngineError("num_candidates_invalid")
                 cleaned = sanitize_text_py(validate_question(question))
-                qv = self.api.embed_query(cleaned)
+                qv = self.api.embed_query(collection_name, cleaned)
                 ef = num_candidates if num_candidates else max(k * 10, 100)
                 if payload_filter is not None:
                     # the qdrant filter+vector composition: equality /

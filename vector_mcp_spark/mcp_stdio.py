@@ -237,7 +237,6 @@ def main(argv: list[str] | None = None) -> int:
     import os
 
     from vector_mcp_spark.agent_card import AgentCardVeneer
-    from vector_mcp_spark.api import VectorSearchApi
     from vector_mcp_spark.engine import CollectionEngine
     from vector_mcp_spark.mcp import McpVeneer
     from vector_mcp_spark.session import get_spark
@@ -256,7 +255,8 @@ def main(argv: list[str] | None = None) -> int:
     surface = ToolSurface.from_env(env)  # fail loudly on a typo'd mode NOW
     spark = get_spark("vector-mcp-stdio")
     engine = CollectionEngine(spark, args.root, tenant=args.tenant)
-    agent = AgentCardVeneer(McpVeneer(engine, VectorSearchApi(engine)))
+    # the engine owns the embedding model (the endpoint env gate)
+    agent = AgentCardVeneer(McpVeneer(engine))
     if args.transport == "streamable-http":
         from vector_mcp_spark.mcp_http import serve_http
 

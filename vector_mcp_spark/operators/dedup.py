@@ -288,20 +288,6 @@ def minhash_signature_array(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "id",
-    content_col: str = "content",
-    num_hashes: int = 16,
-) -> DataFrame:
-    """Row-per-permutation view of ``minhash_signature_array``:
-    (id, p, minhash). Docs with no tokens yield no rows."""
-    arr = minhash_signature_array(df, id_col, content_col, num_hashes)
-    return arr.select("id", F.posexplode("sigs").alias("p", "minhash")).where(
-        F.col("minhash").isNotNull()
-    )
-
-
 def _band_sigs(sigs_col, bands: int, rows_per_band: int):
     """Per-band signature strings from the signature array (array of
     '|'-joined row slices — identical to string_agg ordered by p)."""
@@ -310,35 +296,6 @@ def _band_sigs(sigs_col, bands: int, rows_per_band: int):
             F.array_join(F.slice(sigs_col, b * rows_per_band + 1, rows_per_band), "|")
             for b in range(bands)
         ]
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int, rows_per_band: int
-) -> DataFrame:
-    """Band the (id, p, minhash) signatures and emit distinct candidate
-    pairs (id_a < id_b) sharing any band signature. Join key space is
-    (band, sig) — small, so this is an ordinary shuffle join, never a
-    cross join."""
-    banded = (
-        signatures.withColumn("band", (F.col("p") / rows_per_band).cast("int"))
-        .groupBy("id", "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("p", "minhash"))), lambda s: s["minhash"]
-                ),
-                "|",
-            ).alias("sig")
-        )
-    )
-    left = banded.select(F.col("id").alias("id_a"), "band", "sig")
-    right = banded.select(F.col("id").alias("id_b"), "band", "sig")
-    return (
-        left.join(right, ["band", "sig"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
     )
 
 

@@ -45,9 +45,10 @@ CATALOG_SCHEMA = T.StructType(
         T.StructField("table_name", T.StringType(), nullable=False),
         T.StructField("dimension", T.IntegerType(), nullable=True),
         T.StructField("created_at", T.TimestampType(), nullable=True),
-        # True while the table may hold rows with NULL embedding — lets the
-        # search path decide whether to attach the embed projection without
-        # probing the table (an extra scan per query at 100 TB otherwise)
+        # Legacy marker: True only for a collection written by an older
+        # engine that stored rows without vectors (current engines embed at
+        # insert). CollectionEngine.read upgrades such a collection once and
+        # clears it; a catalog predating the column reads as True.
         T.StructField("needs_embed", T.BooleanType(), nullable=False),
         # Per-collection scoring convention ("cosine" | "dot" | "l2");
         # NULL = created before the distance column existed → cosine.
