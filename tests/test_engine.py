@@ -543,6 +543,112 @@ def test_conf_bytes_follows_spark_byte_strings(spark):
         spark.conf.set(key, prev)
 
 
+def test_read_reuses_listed_frame_until_table_changes(spark, tmp_path, monkeypatch):
+    """A second read of an unchanged table runs no Spark job (the listing
+    is reused), and every write is seen by the next read: each mutation
+    kind, a write through another engine on the same root, delete and
+    re-create under the same name, and a write that lands while the read
+    is listing. Dropping a collection drops its frames; named-vector
+    scans follow their sidecar the same way."""
+    from pyspark.sql import DataFrameReader
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def next_job_id() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        return int(sc.dagScheduler().nextJobId())
+
+    def rows(engine) -> list:
+        return sorted(
+            (r.id, r.content, sorted((r.metadata or {}).items()), r.embedding)
+            for r in engine.read("fr").collect()
+        )
+
+    root = str(tmp_path)
+    eng, other = CollectionEngine(spark, root), CollectionEngine(spark, root)
+    cfg = {"v": {"dimension": 2}}
+    eng.create_collection("fr", vectors_config=cfg)
+    # enough id prefixes (> parallelPartitionDiscovery.threshold) that the
+    # listing itself is a Spark job
+    eng.add_documents("fr", [f"listed doc {i}" for i in range(48)])
+    before = next_job_id()
+    eng.read("fr")
+    assert next_job_id() > before
+    before = next_job_id()
+    eng.read("fr")
+    assert next_job_id() == before
+
+    def seen_after(change) -> list:
+        """Apply ``change``; the warm engine's next read must equal a cold
+        engine's, and differ from what it read before."""
+        old = rows(eng)
+        change()
+        new = rows(eng)
+        assert new == rows(CollectionEngine(spark, root))
+        assert new != old
+        return new
+
+    some_id = rows(eng)[0][0]
+    got = seen_after(lambda: eng.add_documents("fr", ["a brand new doc"]))
+    assert any(c == "a brand new doc" for _, c, _, _ in got)
+    got = seen_after(lambda: eng.add_documents("fr", ["listed doc 3"], [{"v": "up"}]))
+    assert ("v", "up") in next(m for _, c, m, _ in got if c == "listed doc 3")
+    got = seen_after(lambda: eng.delete_documents("fr", [some_id]))
+    assert some_id not in {i for i, _, _, _ in got}
+    target = got[0][0]
+    seen_after(lambda: eng.set_payload("fr", [target], {"tag": "x"}))
+    seen_after(lambda: eng.update_documents(
+        "fr", eng.read("fr").where(F.col("id") == target)
+        .withColumn("embedding", F.array(F.lit(1.0), F.lit(0.0)).cast("array<float>"))
+    ))
+    seen_after(lambda: other.add_documents("fr", ["written by another engine"]))
+    # compaction keeps the rows but replaces every file: a reused stale
+    # listing would fail on the deleted files
+    pre = rows(eng)
+    eng.compact_collection("fr")
+    assert rows(eng) == pre
+
+    # a write that lands after the read listed: the frame may miss it, the
+    # next read may not
+    listing = DataFrameReader.parquet
+    raced: list[str] = []
+
+    def parquet_then_write(reader, *paths, **kw):
+        df = listing(reader, *paths, **kw)
+        if not raced:
+            raced.append("a doc written mid-read")
+            other.add_documents("fr", raced)
+        return df
+
+    eng.add_documents("fr", ["forces a miss"])
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet_then_write)
+    eng.read("fr")
+    monkeypatch.setattr(DataFrameReader, "parquet", listing)
+    assert raced and any(c == raced[0] for _, c, _, _ in rows(eng))
+
+    # named vectors: the scan sees every put
+    def named_ids() -> set:
+        return {r.id for r in eng.named_vector_search("fr", "v", [1.0, 0.0], k=50, indexed=False).collect()}
+
+    ids = [i for i, _, _, _ in rows(eng)]
+    eng.put_named_vectors("fr", "v", {ids[0]: [1.0, 0.0]})
+    assert named_ids() == {ids[0]}
+    eng.put_named_vectors("fr", "v", {ids[1]: [0.5, 0.5]})
+    assert named_ids() == {ids[0], ids[1]}
+
+    scoped = eng._require("fr")
+    eng.delete_collection("fr", confirm=True)
+    assert not any(key[0] == scoped for key in eng._frames)
+    eng.create_collection("fr")
+    assert rows(eng) == []
+    eng.add_documents("fr", ["only doc after re-create"])
+    assert [c for _, c, _, _ in rows(eng)] == ["only doc after re-create"]
+    eng.create_collection("fr", overwrite=True)
+    assert not any(key[0] == scoped for key in eng._frames)
+    assert rows(eng) == []
+
+
 def test_driver_serve_set_lifecycle(spark, tmp_path_factory):
     """A warm graph query whose serve set fits the session broadcast bound
     is answered in-process: no Spark job, and the same rows (ids, content,

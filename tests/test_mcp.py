@@ -1916,3 +1916,112 @@ def test_put_named_vectors_refuses_non_finite_elements(spark, tmp_path_factory):
         )
         assert got == {"error": "collection_vector_schema_mismatch"}
     assert eng.named_vector_search("nv", "t", [1.0, 0.0, 0.0, 0.0], k=2).count() == 0
+
+
+def _documented_error_codes() -> set[str]:
+    """Every stable code the package raises or returns on purpose: the
+    literal first argument of each ``EngineError(...)`` and each
+    ``{"error": "..."}`` the veneer builds."""
+    import re
+    from pathlib import Path
+
+    import vector_mcp_spark
+
+    codes: set[str] = set()
+    for path in Path(vector_mcp_spark.__file__).parent.rglob("*.py"):
+        text = path.read_text()
+        codes |= set(re.findall(r'EngineError\(\s*"([a-z][a-z0-9_]*)"', text))
+        codes |= set(re.findall(r'"error":\s*"([a-z][a-z0-9_]*)"', text))
+    return codes
+
+
+def test_every_search_action_answers_adversarial_input_with_a_documented_code(
+    spark, tmp_path_factory
+):
+    """Property over every ``SEARCH_ACTIONS`` entry: whatever one argument
+    is replaced with — NaN/Inf/empty/mis-sized vectors, empty and unicode
+    questions, huge and non-integer k, unicode, unknown and alias names,
+    malformed weights and filters — the veneer returns either results or a
+    documented error code, never a raw exception (Py4J, ParseException,
+    TypeError). Each action also answers its well-formed call."""
+    from vector_mcp_spark.functions.embedder import hash_embed
+    from vector_mcp_spark.mcp import SEARCH_ACTIONS
+
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("mcp_adversarial")))
+    ven = McpVeneer(eng, VectorSearchApi(eng))
+    eng.create_collection("adv", vectors_config={"t": {"dimension": 4}})
+    eng.add_documents(
+        "adv",
+        [f"spark vector doc {i} topic {i % 3}" for i in range(10)] + ["データ検索 naïve café"],
+        [{"k": str(i % 2)} for i in range(11)],
+    )
+    ids = sorted(r.id for r in eng.read("adv").select("id").collect())
+    eng.put_named_vectors("adv", "t", {i: hash_embed(i, 4) for i in ids})
+    eng.build_search_index("adv")
+    eng.build_named_vector_index("adv", "t")
+    eng.create_alias("adv_alias", "adv")
+    documented = _documented_error_codes()
+
+    nan, inf = float("nan"), float("inf")
+    names = ["adv_alias", "nope", "データ", "", None, "x" * 41, 5]
+    questions = ["", "   ", None, "データ検索 🚀 naïve", "\x00‮ spark", 7, "x" * (1024 * 1024 + 1)]
+    ks = [0, -1, 10**12, 2.5, True, "5", nan, 1000]
+    valid = {
+        "semantic_search": {"question": "spark topic 1"},
+        "lexical_search": {"question": "spark topic 1"},
+        "search": {"question": "spark topic 1"},
+        "rerank_search": {"question": "spark topic 1"},
+        "federated_search": {"question": "spark topic 1", "collection_names": ["adv", "adv_alias"]},
+        "named_search": {"vector_name": "t", "query_vector": [0.5, 0.1, -0.2, 0.3]},
+        "sparse_search": {"query_weights": {"spark": 1.0, "topic": 0.5}},
+        "indexed_search": {"question": "spark topic 1", "payload_filter": {"k": "1"}},
+    }
+    bad = {
+        "collection_name": names,
+        "question": questions,
+        "number_results": ks,
+        "metric": ["bogus", 3],
+        "semantic_weight": [nan, inf, -1, 2, "a"],
+        "rrf_k": [0, 10**12, 2.5, True],
+        "collection_names": [[], ["nope"], ["データ"], "adv", [None], ["adv", 3]],
+        "vector_name": ["missing", "", "データ", 3],
+        "query_vector": [
+            [nan] * 4, [0.0, inf, 0.0, 0.0], [], [1.0, 2.0], ["a"] * 4, [1e308] * 4, "abcd",
+            [None] * 4,
+        ],
+        "query_weights": [
+            {"spark": nan}, {"spark": inf}, {"": 1.0}, {"spark": "x"}, {"データ": 1.0},
+            {"spark": -1.0}, {5: 1.0}, {"spark": 1.0, 5: 1.0}, {"spark": None}, [("spark", 1.0)],
+        ],
+        "num_candidates": [0, 2.5, nan, 10**12],
+        "payload_filter": [{}, "x", [], {"k": nan}, {"k": {"gt": "a"}}, {"k": {"any": []}},
+                           {"データ": "x"}, {"k": {"gte": inf}}],
+    }
+    relevant = {
+        "semantic_search": ("collection_name", "question", "number_results", "metric"),
+        "lexical_search": ("collection_name", "question", "number_results"),
+        "search": ("collection_name", "question", "number_results", "semantic_weight", "rrf_k"),
+        "rerank_search": ("collection_name", "question", "number_results"),
+        "federated_search": ("collection_names", "question", "number_results"),
+        "named_search": ("collection_name", "vector_name", "query_vector", "number_results"),
+        "sparse_search": ("collection_name", "query_weights", "number_results"),
+        "indexed_search": ("collection_name", "question", "number_results", "num_candidates",
+                           "payload_filter"),
+    }
+    assert set(relevant) == set(valid) == set(SEARCH_ACTIONS)
+    answered: dict[str, int] = {}
+    for action in SEARCH_ACTIONS:
+        base = {"collection_name": "adv", "number_results": 3, **valid[action]}
+        out = ven.vector_search(action, **base)
+        assert out.get("results"), (action, out)
+        for arg in relevant[action]:
+            for value in bad[arg]:
+                out = ven.vector_search(action, **{**base, arg: value})
+                assert isinstance(out, dict), (action, arg, value)
+                if "error" in out:
+                    assert out["error"] in documented, (action, arg, value, out)
+                else:
+                    assert isinstance(out["results"], list), (action, arg, value, out)
+                    answered[action] = answered.get(action, 0) + 1
+    # the alias and the unicode question are answered, not refused
+    assert all(answered.get(a) for a in SEARCH_ACTIONS if a != "federated_search"), answered

@@ -49,6 +49,7 @@ from vector_mcp_spark.validation import (
     validate_ingest_bounds,
     validate_metric,
     validate_query_vector,
+    validate_sparse_weights,
     validate_stored_vector,
 )
 
@@ -115,6 +116,22 @@ _PART_LEN = 2
 
 def _prefix_of(id_col) -> "F.Column":
     return F.substring(id_col, 1, _PART_LEN)
+
+
+#: the (id, vector) rows of one named vector's sidecar, as the engine writes them
+_NAMED_SCHEMA = "id string, vector array<float>"
+
+
+def _files_fingerprint(root: Path) -> str:
+    """A table version: sha256 over the relative path and mtime of every
+    ``*.parquet`` file under ``root`` ("empty" when there is no ``root``).
+    A driver-side walk, no Spark job."""
+    if not root.exists():
+        return "empty"
+    stamps = sorted(
+        f"{p.relative_to(root)}:{p.stat().st_mtime_ns}" for p in root.rglob("*.parquet")
+    )
+    return hashlib.sha256("\n".join(stamps).encode()).hexdigest()
 
 
 def _tenant_prefix(tenant: str) -> str:
@@ -225,6 +242,9 @@ class CollectionEngine:
         # engine is collected (not at interpreter exit, when the JVM may
         # already be gone)
         weakref.finalize(self, _drop_serve_sets, self._graph_serve_sets).atexit = False
+        # Listed frames: (scoped, vector name or None for the document
+        # table) → (fingerprint, frame), see _reused_frame
+        self._frames: dict[tuple[str, str | None], tuple[str, DataFrame]] = {}
         (self.root / "collections").mkdir(parents=True, exist_ok=True)
 
     def _graph_serve_set(self, index_root: Path, metric: str, corpus) -> _GraphServe:
@@ -785,6 +805,9 @@ class CollectionEngine:
             raise EngineError("collection_not_found")
         with self._mutation_lock("__catalog__"):  # serialized RMW
             self._write_catalog([r for r in self._catalog_rows() if r[0] != scoped])
+        # the table's and its named vectors' listed frames die with it
+        for key in [k for k in list(self._frames) if k[0] == scoped]:
+            self._frames.pop(key, None)
         for suffix in ("", "_index", "_changelog", "_named"):  # table + sidecars
             path = Path(self._table_path(scoped) + suffix)
             if path.exists():
@@ -810,13 +833,36 @@ class CollectionEngine:
             self._upgrade_legacy(name, scoped)
         return self._read_table(scoped)
 
+    def _reused_frame(
+        self, key: tuple[str, str | None], fingerprint: str, read: Callable[[], DataFrame]
+    ) -> DataFrame:
+        """The frame ``read()`` returned for ``key`` while its files had
+        ``fingerprint``, else a fresh ``read()`` that replaces it. A frame's
+        analyzed plan holds the file listing Spark made when it was built,
+        so a hit runs no listing job. The caller takes the fingerprint
+        BEFORE the read: a write racing the listing can then only cause a
+        later miss, never a stale hit. Every writer renames in new files
+        under new names, so any write — by any engine or process sharing
+        the root — changes the fingerprint. Threads racing on a miss each
+        store a frame that matches the fingerprint stored with it, so the
+        worst case is one extra listing."""
+        hit = self._frames.get(key)
+        if hit is not None and hit[0] == fingerprint:
+            return hit[1]
+        frame = read()
+        self._frames[key] = (fingerprint, frame)
+        return frame
+
     def _read_table(self, scoped: str) -> DataFrame:
-        if not Path(self._table_path(scoped)).exists():
-            # cataloged but never written to — empty collection
-            return self.spark.createDataFrame([], DOCUMENT_SCHEMA)
-        df = self.spark.read.schema(DOCUMENT_SCHEMA).parquet(self._table_path(scoped))
-        # partition discovery appends _p; project back to the document shape
-        return df.select(*DOCUMENT_SCHEMA.fieldNames())
+        def read() -> DataFrame:
+            if not Path(self._table_path(scoped)).exists():
+                # cataloged but never written to — empty collection
+                return self.spark.createDataFrame([], DOCUMENT_SCHEMA)
+            df = self.spark.read.schema(DOCUMENT_SCHEMA).parquet(self._table_path(scoped))
+            # partition discovery appends _p; project back to the document shape
+            return df.select(*DOCUMENT_SCHEMA.fieldNames())
+
+        return self._reused_frame((scoped, None), self._table_fingerprint(scoped), read)
 
     def _write_partitioned(self, path: str, df: DataFrame) -> None:
         (
@@ -979,16 +1025,7 @@ class CollectionEngine:
         return Path(self._table_path(scoped) + "_index")
 
     def _table_fingerprint(self, scoped: str) -> str:
-        table = Path(self._table_path(scoped))
-        if not table.exists():
-            return "empty"
-        stamps = sorted(
-            f"{p.relative_to(table)}:{p.stat().st_mtime_ns}"
-            for p in table.rglob("*.parquet")
-        )
-        import hashlib
-
-        return hashlib.sha256("\n".join(stamps).encode()).hexdigest()
+        return _files_fingerprint(Path(self._table_path(scoped)))
 
     def build_search_index(self, name: str, quantization: str = "sign") -> dict:
         """Materialize the search index families for a collection:
@@ -1485,7 +1522,7 @@ class CollectionEngine:
                     detail=f"{vector_name!r} locked at {dim}, got {len(vec)}",
                 )
             rows.append((pid, vec))
-        batch = self.spark.createDataFrame(rows, "id string, vector array<float>")
+        batch = self.spark.createDataFrame(rows, _NAMED_SCHEMA)
         missing = batch.join(self.read(name).select("id"), "id", "left_anti").count()
         if missing:
             raise EngineError(
@@ -1494,7 +1531,7 @@ class CollectionEngine:
         data = self._named_root(scoped) / vector_name / "data"
         if (data / "_SUCCESS").exists():
             merged = (
-                self.spark.read.parquet(str(data))
+                self._read_named(data)
                 .join(F.broadcast(batch), "id", "left_anti")
                 .unionByName(batch)
                 .localCheckpoint(eager=True)  # sever self-read before overwrite
@@ -1504,14 +1541,11 @@ class CollectionEngine:
         merged.write.mode("overwrite").parquet(str(data))
         return len(rows)
 
+    def _read_named(self, data: Path) -> DataFrame:
+        return self.spark.read.schema(_NAMED_SCHEMA).parquet(str(data))
+
     def _named_fingerprint(self, scoped: str, vector_name: str) -> str:
-        data = self._named_root(scoped) / vector_name / "data"
-        if not data.exists():
-            return "empty"
-        stamps = sorted(
-            f"{p.relative_to(data)}:{p.stat().st_mtime_ns}" for p in data.rglob("*.parquet")
-        )
-        return hashlib.sha256("\n".join(stamps).encode()).hexdigest()
+        return _files_fingerprint(self._named_root(scoped) / vector_name / "data")
 
     def build_named_vector_index(self, name: str, vector_name: str) -> dict:
         """Materialize the name's graph index family under ITS distance
@@ -1529,16 +1563,10 @@ class CollectionEngine:
         cfg = self._named_cfg(scoped, vector_name)
         root = self._named_root(scoped) / vector_name
         data = root / "data"
-        n = (
-            self.spark.read.parquet(str(data)).count()
-            if (data / "_SUCCESS").exists()
-            else 0
-        )
+        n = self._read_named(data).count() if (data / "_SUCCESS").exists() else 0
         graph_meta: dict = {"entry": None, "top_layer": 0}
         if n >= 2:
-            vecs = self.spark.read.parquet(str(data)).select(
-                "id", F.col("vector").alias("embedding")
-            )
+            vecs = self._read_named(data).select("id", F.col("vector").alias("embedding"))
             assigned, _cents = ivf_build(
                 vecs,
                 n_centroids=min(16, max(1, n // 4)),
@@ -1620,7 +1648,11 @@ class CollectionEngine:
         use_index = status == "fresh" if indexed is None else indexed
         if indexed and status != "fresh":
             raise EngineError("index_not_fresh")
-        vecs = self.spark.read.parquet(str(data))
+        vecs = self._reused_frame(
+            (scoped, vector_name),
+            self._named_fingerprint(scoped, vector_name),
+            lambda: self._read_named(data),
+        )
         if use_index and indexed is None:
             meta_peek = json.loads((root / "manifest.json").read_text())
             if (meta_peek.get("graph") or {}).get("entry") is None:
@@ -1664,6 +1696,7 @@ class CollectionEngine:
 
         from vector_mcp_spark.operators.vecapi import indexed_sparse_dot_topk
 
+        query_weights = validate_sparse_weights(query_weights)
         root = self._index_root(scoped)
         if not (root / "doclen").exists():
             raise EngineError(

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from vector_mcp_spark.api import VectorSearchApi
 from vector_mcp_spark.backend_policy import ensure_backend_available
 from vector_mcp_spark.engine import CollectionEngine
-from vector_mcp_spark.validation import EngineError
+from vector_mcp_spark.validation import EngineError, validate_number_results
 
 # An entitlement resolver maps (namespace, candidate names) -> the subset the
 # calling identity may reach, e.g. ("collection", ["a","b"]) -> ["a"].
@@ -407,7 +407,9 @@ class McpVeneer:
         try:
             if db_type is not None:
                 ensure_backend_available(db_type)
-            k = number_results if number_results is not None else 5
+            # every action gets the [1, MAX_RESULTS] int bound, also those
+            # that go to the engine directly
+            k = validate_number_results(number_results if number_results is not None else 5)
             if resolved == "semantic_search":
                 kwargs: dict[str, Any] = {"number_results": k}
                 if metric is not None:  # pgvector <=>/<#>/<-> selection
@@ -437,17 +439,11 @@ class McpVeneer:
                 # the same knob and defaults numCandidates = max(k*10, 100)
                 # (reference vector_mcp/vectordb/mongodb.py:277)
                 from vector_mcp_spark.sanitize import sanitize_text_py
-                from vector_mcp_spark.validation import (
-                    validate_number_results,
-                    validate_question,
-                )
+                from vector_mcp_spark.validation import validate_question
 
-                # k gets the same [1, MAX_RESULTS] bound every other search
-                # action enforces; num_candidates must be a positive int
-                # (<= 0 silently empties the beam, a huge value drives
-                # unbounded per-hop window work) — both as stable error
-                # dicts, never a traceback (ADVICE r12)
-                k = validate_number_results(k)
+                # num_candidates must be a positive int (<= 0 silently
+                # empties the beam, a huge value drives unbounded per-hop
+                # window work) — a stable error dict, never a traceback
                 if num_candidates is not None and not (
                     isinstance(num_candidates, int)
                     and not isinstance(num_candidates, bool)
@@ -483,7 +479,7 @@ class McpVeneer:
                 if not isinstance(query_weights, dict) or not query_weights:
                     return {"error": "sparse_search_input_required"}
                 df = self.engine.indexed_sparse_search(
-                    collection_name, sorted(query_weights.items()), k=k
+                    collection_name, list(query_weights.items()), k=k
                 )
                 rows = [
                     {"id": r.id, "content": r.content, "score": r.score} for r in df.collect()

@@ -1055,7 +1055,7 @@ def q_embedding_covariance_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _top_pc_oracle() -> str:
     stages = [f"""
-cov AS (
+cov AS MATERIALIZED (
   SELECT t.i AS i, t.j AS j, ROUND(t.sxy / t.n - ma.mu * mb.mu, 6) AS c
   FROM (SELECT a.i AS i, b.i AS j, SUM(e.v[a.i] * e.v[b.i]) AS sxy, COUNT(*) AS n
         FROM e, idx a, idx b GROUP BY a.i, b.i) t
@@ -1064,8 +1064,8 @@ cov AS (
 v0 AS (SELECT i.i AS i, 1.0 / sqrt({_PCA_DIM}.0) AS x FROM idx i)"""]
     for k in range(1, _PCA_ITERS + 1):
         stages.append(f"""
-w{k} AS (SELECT c.i AS i, SUM(c.c * v.x) AS w FROM cov c JOIN v{k - 1} v ON v.i = c.j GROUP BY c.i),
-v{k} AS (SELECT w{k}.i AS i, w{k}.w / n{k}.nrm AS x
+w{k} AS MATERIALIZED (SELECT c.i AS i, SUM(c.c * v.x) AS w FROM cov c JOIN v{k - 1} v ON v.i = c.j GROUP BY c.i),
+v{k} AS MATERIALIZED (SELECT w{k}.i AS i, w{k}.w / n{k}.nrm AS x
          FROM w{k}, (SELECT sqrt(SUM(w * w)) AS nrm FROM w{k}) n{k})""")
     last = f"v{_PCA_ITERS}"
     return f"""

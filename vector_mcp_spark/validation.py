@@ -7,6 +7,7 @@ Replicates the reference API's observable validation behavior:
 - number_results: int (not bool) in [1, 1000] (``vector_api.py:235-243``)
 - hybrid weights: each finite in [0,1], sum > 0 (``vector_api.py:540-545``)
 - rrf_k: int (not bool) in [1, 10000] (``vector_api.py:533,546-547``)
+- vectors and sparse query weights: real, finite numbers
 - delete confirmation: ``confirm is True`` (``vector_api.py:448-449``)
 - ingest bounds: ≤1000 docs, ≤16 MiB/doc, ≤512 MiB total (``vector_api.py:47-49``)
 - stable error codes matching ``^[a-z][a-z0-9_]{0,63}$`` that never leak
@@ -16,8 +17,9 @@ Replicates the reference API's observable validation behavior:
 from __future__ import annotations
 
 import math
+import numbers
 import re
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 COLLECTION_NAME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9_]{0,39}$")
 ERROR_CODE_RE = re.compile(r"^[a-z][a-z0-9_]{0,63}$")
@@ -96,11 +98,25 @@ def validate_weights(weights: Sequence[object]) -> list[float]:
     return out
 
 
+def _real_elements(vec: object) -> list[float] | None:
+    """``vec`` as floats, or None unless it is a sequence of real numbers
+    (a string, a mapping, None or a bool element is not a vector)."""
+    if isinstance(vec, (str, bytes, Mapping)):
+        return None
+    try:
+        items = list(vec)
+    except TypeError:
+        return None
+    if not all(isinstance(x, numbers.Real) and not isinstance(x, bool) for x in items):
+        return None
+    return [float(x) for x in items]
+
+
 def validate_query_vector(vec: Sequence[object]) -> list[float]:
     """A query vector that renders as SQL float literals: non-empty, every
-    element finite (NaN/Inf have no literal form — they would surface as a
-    raw parse error instead of a stable code)."""
-    out = [float(x) for x in vec]
+    element a finite number (NaN/Inf have no literal form — they would
+    surface as a raw parse error instead of a stable code)."""
+    out = _real_elements(vec)
     if not out or not all(math.isfinite(x) for x in out):
         raise EngineError(
             "collection_vector_schema_mismatch",
@@ -118,12 +134,25 @@ def validate_stored_vector(vec: Sequence[object]) -> list[float]:
     """A vector to store: every element finite, also as the float32 the
     table keeps. A NaN row would rank first in every scan (Spark sorts NaN
     above any number under DESC) and keep its graph off the driver."""
-    out = [float(x) for x in vec]
-    if not all(math.isfinite(x) and abs(x) <= _FLOAT32_MAX for x in out):
+    out = _real_elements(vec)
+    if out is None or not all(math.isfinite(x) and abs(x) <= _FLOAT32_MAX for x in out):
         raise EngineError(
             "collection_vector_schema_mismatch", detail="vector elements must be finite"
         )
     return out
+
+
+def validate_sparse_weights(pairs: Sequence[tuple[object, object]]) -> list[tuple[str, float]]:
+    """A sparse query's (term, weight) pairs, sorted: each term a non-empty
+    string, each weight a finite number (a NaN weight would score NaN and
+    rank first)."""
+    out = []
+    for term, weight in pairs:
+        w = _real_elements([weight])
+        if not isinstance(term, str) or not term or not w or not math.isfinite(w[0]):
+            raise EngineError("sparse_weights_invalid")
+        out.append((term, w[0]))
+    return sorted(out)
 
 
 def validate_delete_confirm(confirm: object) -> None:
