@@ -143,9 +143,9 @@ def test_legacy_collection_upgrades_once_on_first_read(spark, tmp_path_factory):
 
 def test_configured_model_scan_and_indexed_search_agree(spark, tmp_path_factory):
     """One model embeds the documents at insert and the queries at search,
-    so the scan and every indexed path rank in the same vector space: with
+    so the scan and the indexed path rank in the same vector space: with
     a 3-dim model a content-only collection answers identically from
-    semantic_search, the quantized shortlist and the graph."""
+    semantic_search and the graph."""
     from vector_mcp_spark.functions.embedder import hash_embed
 
     eng = CollectionEngine(
@@ -165,9 +165,7 @@ def test_configured_model_scan_and_indexed_search_agree(spark, tmp_path_factory)
     ]
     qv = api.embed_query("m3", question)
     assert len(qv) == 3 and len(scan) == 5
-    short = eng.indexed_semantic_search("m3", qv, k=5, shortlist=len(docs)).collect()
     graph = eng.indexed_graph_search("m3", qv, k=5).collect()
-    assert [(r.id, r.score) for r in short] == scan
     assert [(r.id, r.score) for r in graph] == scan
 
 
@@ -249,3 +247,50 @@ def test_semantic_search_defaults_to_collection_distance(spark, tmp_path):
     ).collect()
     cos = sorted(cos, key=lambda r: r.rank)
     assert [r.score for r in cos] == sorted((r.score for r in cos), reverse=True)
+
+
+def test_lexical_search_answers_best_first_without_an_extra_job(spark, tmp_path_factory):
+    """Lexical rows come back per query by (score desc, id asc): equal
+    scores break on id, not on the file listing. The bounded sort plans as
+    a TakeOrderedAndProject, so a warm MCP lexical_search still runs the
+    three Spark jobs it ran unordered — no range-sampling job."""
+    from vector_mcp_spark.mcp import McpVeneer
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def next_job_id() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        return int(sc.dagScheduler().nextJobId())
+
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("lex_order")))
+    eng.create_collection("lex")
+    eng.add_documents(
+        "lex",
+        [f"spark tie doc {i}" for i in range(12)] + ["spark spark best doc", "unrelated words"],
+    )
+    api = VectorSearchApi(eng)
+    ordered = api.lexical_search("lex", ["spark", "tie"], number_results=5)
+    plan = ordered._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+    rows = ordered.collect()
+    assert [r.query_id for r in rows] == [0] * 5 + [1] * 5
+    assert rows[0].content == "spark spark best doc" and rows[0].score == 2.0
+    for q in (0, 1):
+        got = [(-r.score, r.id) for r in rows if r.query_id == q]
+        assert got == sorted(got)
+    tied = [r.id for r in rows if r.query_id == 1]
+    every_tie = sorted(r.id for r in eng.read("lex").collect() if "tie" in r.content)
+    assert tied == every_tie[:5]
+
+    ven = McpVeneer(eng, api)
+
+    def call() -> list:
+        out = ven.vector_search(
+            "lexical_search", collection_name="lex", question="spark", number_results=5
+        )
+        return [r["id"] for r in out["results"]]
+
+    call()  # warm: the listed frame and the plan caches
+    before = next_job_id()
+    assert call() == [r.id for r in rows if r.query_id == 0]
+    assert next_job_id() - before == 3

@@ -11,6 +11,29 @@ def engine(spark, tmp_path):
     return CollectionEngine(spark, str(tmp_path), tenant="acme")
 
 
+def _exact_topk(df, qv, k: int, metric: str) -> list[str]:
+    """Ids of the exact top-k over the stored vectors, scored in numpy and
+    ordered as every served search orders: the score rounded to 6 places
+    (l2 ascending, cosine and dot descending), then id."""
+    import numpy as np
+
+    q = np.asarray(qv, dtype=np.float64)
+
+    def score(v) -> float:
+        v = np.asarray(v, dtype=np.float64)
+        if metric == "cosine":
+            return float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q)))
+        if metric == "dot":
+            return float(v @ q)
+        return float(np.linalg.norm(v - q))
+
+    sign = 1.0 if metric == "l2" else -1.0
+    rows = [(r.id, score(r.embedding)) for r in df.select("id", "embedding").collect()
+            if r.embedding is not None]
+    rows.sort(key=lambda r: (sign * round(r[1], 6), r[0]))
+    return [i for i, _ in rows[:k]]
+
+
 def test_lifecycle(engine):
     engine.create_collection("kb")
     assert engine.get_collections() == ["kb"]
@@ -100,30 +123,6 @@ def test_validation_errors(engine):
         engine.delete_collection("kb")
     with pytest.raises(EngineError, match="ingest_too_many_documents"):
         engine.add_documents("kb", ["x"] * 1001)
-
-
-def test_compact_collection(spark, tmp_path):
-    from pathlib import Path
-
-    from vector_mcp_spark.engine import CollectionEngine, _physical_name
-
-    eng = CollectionEngine(spark, str(tmp_path / "root"))
-    eng.create_collection("compactme")
-    # several small ingest batches → several small files per touched bucket
-    for i in range(4):
-        eng.add_documents("compactme", [f"doc {i} {j}" for j in range(5)])
-    before = eng.read("compactme").count()
-    n_files = eng.compact_collection("compactme")
-    table = Path(tmp_path / "root" / "collections" / _physical_name("compactme"))
-    part_dirs = [d for d in table.iterdir() if d.name.startswith("_p=")]
-    # compaction invariant: exactly one parquet file per partition bucket
-    assert all(len(list(d.glob("*.parquet"))) == 1 for d in part_dirs)
-    assert n_files == len(part_dirs)
-    after = eng.read("compactme")
-    assert after.count() == before == 20
-    # contents unchanged (ids are content hashes, so set-compare is exact)
-    ids = {r.id for r in after.collect()}
-    assert len(ids) == 20
 
 
 def test_upsert_leaves_untouched_partitions_byte_identical(spark, tmp_path):
@@ -239,25 +238,6 @@ def test_empty_collection_and_nonexistent_ids_parity(spark, tmp_path_factory):
     assert eng.get_documents_by_ids("hollow", ids=["nonexistent_id"]).count() == 0
 
 
-def test_profile_collection(spark, tmp_path):
-    from vector_mcp_spark.engine import CollectionEngine
-
-    eng = CollectionEngine(spark, str(tmp_path / "root"))
-    eng.create_collection("profme")
-    eng.add_documents(
-        "profme",
-        ["short", "a rather longer document body"],
-        metadatas=[{"k": "v"}, None],
-    )
-    got = {r.col_name: r for r in eng.profile_collection("profme").collect()}
-    assert set(got) == {"content_len", "embedding_norm", "n_metadata_keys"}
-    cl = got["content_len"]
-    assert cl.n_rows == 2 and cl.n_nulls == 0
-    assert cl.min_val == 5.0 and cl.max_val == len("a rather longer document body")
-    assert got["n_metadata_keys"].max_val == 1.0 and got["n_metadata_keys"].min_val == 0.0
-    assert got["embedding_norm"].n_nulls in (0, 2)  # embedded at ingest or all null
-
-
 # -- transactional MERGE seam (VERDICT r4 optional stretch) -------------------
 
 
@@ -326,13 +306,15 @@ def test_engine_flag_routes_to_merge_and_fails_closed(spark, tmp_path_factory, m
 
 @pytest.mark.slow
 def test_search_index_build_serve_staleness(spark, tmp_path_factory):
-    """Build → fresh; indexed search result-identical to the scan operator
-    with partition pruning on term buckets; any mutation → stale and the
-    serve path refuses rather than returning stale results."""
+    """Build → fresh; the sparse search served from the postings family is
+    result-identical to the scan operator, with partition pruning on term
+    buckets; any mutation → stale and both indexed searches refuse rather
+    than return stale results, until a rebuild."""
     import pytest
 
     from vector_mcp_spark.engine import CollectionEngine
-    from vector_mcp_spark.operators.lexical import lexical_tf_topk
+    from vector_mcp_spark.functions.embedder import hash_embed
+    from vector_mcp_spark.operators.vecapi import sparse_dot_topk
     from vector_mcp_spark.validation import EngineError
 
     eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("idx_root")))
@@ -341,16 +323,18 @@ def test_search_index_build_serve_staleness(spark, tmp_path_factory):
         "spark joins data", "vector spark search", "coffee and tea",
         "spark spark spark", "data pipelines at scale",
     ])
+    qw = [("spark", 1.0), ("data", 1.0)]
+    qv = hash_embed("spark data", 64)
     assert eng.index_status("idx") == "absent"
     with pytest.raises(EngineError, match="index_not_fresh"):
-        eng.indexed_lexical_search("idx", "spark data")
+        eng.indexed_sparse_search("idx", qw)
 
     info = eng.build_search_index("idx")
     assert info["n_vectors"] == 5 and info["n_terms"] > 0
     assert eng.index_status("idx") == "fresh"
 
-    served = eng.indexed_lexical_search("idx", "spark data", k=5)
-    scan = lexical_tf_topk(eng.read("idx"), "spark data", 5)
+    served = eng.indexed_sparse_search("idx", qw, k=5)
+    scan = sparse_dot_topk(eng.read("idx"), qw, 5, id_col="id", content_col="content")
     assert [(r.id, r.score) for r in served.collect()] == [
         (r.id, r.score) for r in scan.collect()
     ]
@@ -361,59 +345,57 @@ def test_search_index_build_serve_staleness(spark, tmp_path_factory):
     # any mutation flips freshness; serving refuses until rebuild
     eng.add_documents("idx", ["fresh new doc about spark"])
     assert eng.index_status("idx") == "stale"
-    with pytest.raises(EngineError, match="index_not_fresh"):
-        eng.indexed_lexical_search("idx", "spark")
+    for call in (
+        lambda: eng.indexed_sparse_search("idx", qw),
+        lambda: eng.indexed_graph_search("idx", qv),
+    ):
+        with pytest.raises(EngineError, match="index_not_fresh"):
+            call()
     eng.build_search_index("idx")
     assert eng.index_status("idx") == "fresh"
-    assert eng.indexed_lexical_search("idx", "fresh").count() == 1
-
-
-@pytest.mark.slow
-def test_indexed_semantic_search_matches_exact(spark, tmp_path_factory):
-    """With shortlist = corpus size the Hamming-served search must equal the
-    exact cosine top-k over the same served representation."""
-    from vector_mcp_spark.engine import CollectionEngine
-    from vector_mcp_spark.functions.embedder import hash_embed
-    from vector_mcp_spark.operators.semantic import semantic_topk
-
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("idxv_root")))
-    eng.create_collection("v")
-    eng.add_documents("v", [f"doc {i} text body {i % 7}" for i in range(40)])
-    eng.build_search_index("v")
-    qv = hash_embed("doc 3 text", 64)
-    served = eng.indexed_semantic_search("v", qv, k=5, shortlist=40).collect()
-    from vector_mcp_spark.functions.embedder import embed_documents
-
-    docs = embed_documents(eng.read("v"), text_col="content", out_col="embedding")
-    exact = semantic_topk(docs, qv, 5, id_col="id", emb_col="embedding").collect()
-    assert [r.id for r in served] == [r.id for r in exact]
+    assert eng.indexed_sparse_search("idx", [("fresh", 1.0)]).count() == 1
+    assert eng.indexed_graph_search("idx", qv, k=6).count() == 6
 
 
 def test_search_index_on_empty_collection(spark, tmp_path_factory):
-    """Building and serving against an empty collection must work (zero
-    terms/vectors, fresh status, empty results) — not crash on parquet
-    schema inference over marker-only directories."""
+    """Building and serving against an empty or one-document collection
+    must work (zero or one vectors, fresh status, empty results) — not
+    crash on parquet schema inference over marker-only directories. Under
+    two vectors there is no graph to descend, so dense search answers
+    empty with the stable (id, content, score) schema."""
     from vector_mcp_spark.engine import CollectionEngine
+    from vector_mcp_spark.functions.embedder import hash_embed
 
     eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("empty_idx")))
     eng.create_collection("empty")
     info = eng.build_search_index("empty")
     assert info["n_terms"] == 0 and info["n_vectors"] == 0
     assert eng.index_status("empty") == "fresh"
-    assert eng.indexed_lexical_search("empty", "anything").count() == 0
+    qv = hash_embed("anything", 64)
+    assert eng.indexed_graph_search("empty", qv, k=3).collect() == []
+
+    eng.create_collection("tiny")
+    eng.add_documents("tiny", ["only one doc"])
+    assert eng.build_search_index("tiny")["n_vectors"] == 1
+    assert eng.index_status("tiny") == "fresh"
+    got = eng.indexed_graph_search("tiny", qv, k=3)
+    assert got.columns == ["id", "content", "score"] and got.collect() == []
+    assert [r.content for r in eng.indexed_sparse_search("tiny", [("doc", 1.0)]).collect()] == [
+        "only one doc"
+    ]
 
 
 def test_build_embeds_once_and_derives_families_from_one_corpus(spark, tmp_path_factory):
     """Each row is embedded once, at insert: the build calls no embedder,
-    the IVF-PQ codes are the frozen-codebook encoding of the stored vectors
-    under the manifest centroids, and the manifest counts match
-    driver-side recounts."""
+    the ``ids`` sidecar fingerprints the stored vectors, the graph links
+    only stored rows, no retired family is written, and the manifest
+    counts match driver-side recounts."""
     import json
+
+    from pyspark.sql import functions as F
 
     from vector_mcp_spark.functions import embedder
     from vector_mcp_spark.functions.text import tokenize_py
-    from vector_mcp_spark.operators.pq import pq_encode_with
-    from vector_mcp_spark.operators.similarity import assign_clusters
 
     embedded = spark.sparkContext.accumulator(0)
 
@@ -433,23 +415,81 @@ def test_build_embeds_once_and_derives_families_from_one_corpus(spark, tmp_path_
 
     root = eng._index_root(eng._require("once"))
     manifest = json.loads((root / "manifest.json").read_text())
-    assert not (root / "vectors").exists()
-    vectors = eng.read("once").select("id", "embedding")
-    expected = pq_encode_with(
-        assign_clusters(vectors, manifest["ivfpq"]["centroids"]),
-        manifest["ivfpq"]["codebooks"],
-    )
-    codes = spark.read.parquet(str(root / "ivfpq"))
-    as_rows = lambda df: sorted(  # noqa: E731
-        (r.id, r.cluster, list(r.codes)) for r in df.select("id", "cluster", "codes").collect()
-    )
-    assert as_rows(codes) == as_rows(expected)
+    assert sorted(p.name for p in root.iterdir() if p.is_dir()) == [
+        "doclen", "graph", "ids", "postings"
+    ]
+    assert "ivfpq" not in manifest and "quantization" not in manifest
+    stored = eng.read("once")
+    expected = stored.select("id", F.xxhash64("id", "content", "embedding").alias("rowhash"))
+    as_rows = lambda df: sorted((r.id, r.rowhash) for r in df.collect())  # noqa: E731
+    assert as_rows(spark.read.parquet(str(root / "ids"))) == as_rows(expected)
+    edges = spark.read.parquet(str(root / "graph"))
+    linked = {r.node for r in edges.select(F.col("src").alias("node")).union(
+        edges.select("dst")).distinct().collect()}
+    ids = {r.id for r in stored.select("id").collect()}
+    assert linked <= ids and manifest["graph"]["entry"] in ids
 
-    contents = [r.content for r in eng.read("once").select("content").collect()]
+    contents = [r.content for r in stored.select("content").collect()]
     vocab = {t for c in contents for t in tokenize_py(c)}
     assert manifest["n_vectors"] == info["n_vectors"] == len(contents) == 24
     assert manifest["n_terms"] == info["n_terms"] == len(vocab)
-    assert manifest["dimension"] == len(vectors.first().embedding) == 64
+    assert manifest["dimension"] == len(stored.first().embedding) == 64
+
+
+def test_index_with_retired_families_reads_fresh_serves_and_repairs(spark, tmp_path_factory):
+    """An index written while the sign/int8 and IVF-PQ families were still
+    built — manifest keys ``ivfpq`` and ``quantization``, ``signs``,
+    ``int8q`` and ``ivfpq`` directories — reads fresh, serves the same
+    graph answers without a rebuild, and repair extends it after an
+    append. The next build removes the retired directories and keys."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from vector_mcp_spark.functions.embedder import hash_embed
+
+    root_dir = str(tmp_path_factory.mktemp("retired_families"))
+    eng = CollectionEngine(spark, root_dir)
+    eng.create_collection("old")
+    eng.add_documents("old", [f"retired family doc {i} topic {i % 4}" for i in range(16)])
+    eng.build_search_index("old")
+    qs = [hash_embed(f"topic {i} doc", 64) for i in range(3)]
+
+    def answers(engine) -> list:
+        return [[tuple(r) for r in engine.indexed_graph_search("old", q, k=5).collect()]
+                for q in qs]
+
+    want = answers(eng)
+    root = eng._index_root(eng._require("old"))
+    mpath = root / "manifest.json"
+    meta = json.loads(mpath.read_text())
+    meta["quantization"] = "sign"
+    meta["ivfpq"] = {
+        "m": 4, "n_codes": 16, "centroids": [[0.0] * 64], "codebooks": [[[0.0] * 16]] * 4,
+    }
+    mpath.write_text(json.dumps(meta))
+    retired = {"signs": {"id": ["x"], "lo": [0], "hi": [0]},
+               "int8q": {"id": ["x"], "scale": [1.0]},
+               "ivfpq": {"id": ["x"], "cluster": [0]}}
+    for family, cols in retired.items():
+        (root / family).mkdir()
+        pq.write_table(pa.table(cols), str(root / family / "part-0.parquet"))
+
+    cold = CollectionEngine(spark, root_dir)
+    assert cold.index_status("old") == "fresh"
+    assert answers(cold) == want
+    cold.add_documents("old", ["a late retired family arrival"])
+    assert cold.index_status("old") == "stale"
+    assert cold.repair_search_index("old")["repaired"] == 1
+    assert cold.index_status("old") == "repaired"
+    late = cold.indexed_graph_search("old", hash_embed("a late retired family arrival", 64), k=1)
+    assert [r.content for r in late.collect()] == ["a late retired family arrival"]
+
+    cold.build_search_index("old")
+    assert cold.index_status("old") == "fresh"
+    assert not any((root / family).exists() for family in retired)
+    assert not {"ivfpq", "quantization"} & set(json.loads(mpath.read_text()))
 
 
 def test_spread_repartitions_checkpointed_single_partition_input(spark):
@@ -489,8 +529,6 @@ def test_indexed_graph_search_rejects_non_finite_and_empty_queries(spark, tmp_pa
     searches = (
         lambda v: eng.indexed_graph_search("kb", v, k=2),
         lambda v: eng.indexed_filtered_search("kb", v, {"team": "a"}, k=2),
-        lambda v: eng.indexed_semantic_search("kb", v, k=2),
-        lambda v: eng.indexed_ivfpq_search("kb", v, k=2),
         lambda v: ann_hnsw_prepared_sql("n", "e", "x", [("q", v)], k=2),
         lambda v: ann_hnsw_prepared_sql("n", "e", "x", [("p", good), ("q", v)], k=2),
     )
@@ -603,10 +641,10 @@ def test_read_reuses_listed_frame_until_table_changes(spark, tmp_path, monkeypat
         .withColumn("embedding", F.array(F.lit(1.0), F.lit(0.0)).cast("array<float>"))
     ))
     seen_after(lambda: other.add_documents("fr", ["written by another engine"]))
-    # compaction keeps the rows but replaces every file: a reused stale
-    # listing would fail on the deleted files
+    # an upsert of every row keeps the rows but replaces every file: a
+    # reused stale listing would fail on the deleted files
     pre = rows(eng)
-    eng.compact_collection("fr")
+    eng.update_documents("fr", eng.read("fr"))
     assert rows(eng) == pre
 
     # a write that lands after the read listed: the frame may miss it, the
@@ -735,21 +773,27 @@ def test_serve_sets_are_dropped_with_their_engine(spark, tmp_path_factory):
 
 
 def test_catalog_dataframe_contract(spark, tmp_path_factory):
-    """ADVICE r12 (medium): CATALOG_SCHEMA must match the 6-column arrow
-    catalog _write_catalog persists, so _read_catalog builds cleanly and
-    exposes the per-collection distance column."""
+    """ADVICE r12 (medium): the catalog rows _catalog_rows reads back carry
+    the six fields _write_catalog persists, including the per-collection
+    distance, in a fresh engine as in the writing one."""
+    import pyarrow.parquet as pq
+
     from vector_mcp_spark.engine import CollectionEngine
 
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("cat_df")))
+    root = str(tmp_path_factory.mktemp("cat_df"))
+    eng = CollectionEngine(spark, root)
     eng.create_collection("cosdefault", dimension=4)
     eng.create_collection("l2coll", dimension=4, distance="l2")
-    df = eng._read_catalog()
-    assert df.columns == [
+    assert pq.read_schema(eng._catalog_path).names == [
         "collection_name", "table_name", "dimension", "created_at",
         "needs_embed", "distance",
     ]
-    got = {r.collection_name: r.distance for r in df.collect()}
-    assert got == {"cosdefault": "cosine", "l2coll": "l2"}
+    for reader in (eng, CollectionEngine(spark, root)):
+        rows = reader._catalog_rows()
+        assert all(len(r) == 6 for r in rows)
+        assert {r[0]: (r[2], r[5]) for r in rows} == {
+            "cosdefault": (4, "cosine"), "l2coll": (4, "l2"),
+        }
 
 
 def test_catalog_legacy_row_padding(spark, tmp_path_factory):
@@ -1876,9 +1920,8 @@ def test_indexed_graph_search(spark, tmp_path_factory):
     got = eng.indexed_graph_search("kb", qvec, k=3).collect()
     assert len(got) == 3
     assert got[0].score >= got[1].score >= got[2].score
-    # beam covers all 40 docs → agrees with the exact sign-bit+rerank path
-    exact = eng.indexed_semantic_search("kb", qvec, k=3, shortlist=40).collect()
-    assert [r.id for r in got] == [r.id for r in exact]
+    # beam covers all 40 docs → agrees with an exact numpy cosine top-3
+    assert [r.id for r in got] == _exact_topk(eng.read("kb"), qvec, 3, "cosine")
 
     # a mutation stales the graph index too
     eng.add_documents("kb", ["fresh doc invalidates the index"])
@@ -1926,8 +1969,8 @@ def test_pre_graph_manifest_reports_stale(spark, tmp_path_factory):
 @pytest.mark.slow
 def test_repair_search_index_grows_and_serves(spark, tmp_path_factory):
     """Incremental index repair (VERDICT r9 #4): after an append-only grow,
-    repair_search_index extends all three families without a rebuild —
-    status becomes 'repaired', every indexed search serves again, a brand
+    repair_search_index extends every family without a rebuild — status
+    becomes 'repaired', the sparse and graph searches serve again, a brand
     new document is reachable through the repaired graph, and batch recall
     on the grown corpus clears the rebuild floor (0.85)."""
     from vector_mcp_spark.engine import CollectionEngine
@@ -1950,16 +1993,12 @@ def test_repair_search_index_grows_and_serves(spark, tmp_path_factory):
     assert info["n_vectors"] == 200
     assert eng.index_status("g") == "repaired"
 
-    # all three families serve in the repaired state
-    assert eng.indexed_lexical_search("g", "zanzibar", k=5).count() == 5
+    # every family serves in the repaired state
+    assert eng.indexed_sparse_search("g", [("zanzibar", 1.0)], k=5).count() == 5
     qv = hash_embed("grown doc 3 zanzibar subject 3", 64)
     top = eng.indexed_graph_search("g", qv, k=3).collect()
     assert top and top[0].content == "grown doc 3 zanzibar subject 3"
     assert top[0].score == 1.0
-    sem = eng.indexed_semantic_search("g", qv, k=3, shortlist=50).collect()
-    assert sem and sem[0].content == "grown doc 3 zanzibar subject 3"
-    pq = eng.indexed_ivfpq_search("g", qv, k=3, nprobe=16, shortlist=250).collect()
-    assert pq and pq[0].content == "grown doc 3 zanzibar subject 3"
 
     # batch recall over the grown corpus >= the rebuild floor
     scoped = eng._require("g")
@@ -1989,7 +2028,7 @@ def test_repair_search_index_grows_and_serves(spark, tmp_path_factory):
     assert eng.index_status("g") == "stale"
     assert eng.repair_search_index("g")["repaired"] == 1
     assert eng.index_status("g") == "repaired"
-    assert eng.indexed_lexical_search("g", "quetzal", k=2).count() == 1
+    assert eng.indexed_sparse_search("g", [("quetzal", 1.0)], k=2).count() == 1
 
     # a full rebuild restores 'fresh'
     eng.build_search_index("g")
@@ -2115,151 +2154,6 @@ def test_payload_field_index_accelerates_and_never_lies(spark, tmp_path_factory)
 
 
 @pytest.mark.slow
-def test_ivfpq_index_lifecycle(spark, tmp_path_factory):
-    """IVF-PQ as a first-class engine index family (VERDICT r10 #5):
-    build persists cluster-partitioned codes + frozen centroids/codebooks
-    in the manifest; serving goes probe → ADC shortlist → exact re-rank
-    and refuses when stale; repair appends codes against the FROZEN
-    codebooks; a pre-ivfpq manifest reports stale and refuses."""
-    import json
-
-    import pytest
-
-    from vector_mcp_spark.engine import CollectionEngine
-    from vector_mcp_spark.functions.embedder import embed_documents, hash_embed
-    from vector_mcp_spark.operators.semantic import semantic_topk
-    from vector_mcp_spark.validation import EngineError
-
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("ivfpq_root")))
-    eng.create_collection("pq")
-    eng.add_documents("pq", [f"pq doc {i} flavor {i % 9}" for i in range(80)])
-    qv = hash_embed("pq doc 7 flavor 7", 64)
-
-    with pytest.raises(EngineError, match="index_not_fresh"):
-        eng.indexed_ivfpq_search("pq", qv, k=5)
-
-    eng.build_search_index("pq")
-    assert eng.index_status("pq") == "fresh"
-
-    # full probe + shortlist >= corpus -> the exact re-rank sees every row,
-    # so the served result must EQUAL the exact cosine top-k
-    served = eng.indexed_ivfpq_search("pq", qv, k=5, nprobe=16, shortlist=100).collect()
-    docs = embed_documents(eng.read("pq"), text_col="content", out_col="embedding")
-    exact = semantic_topk(docs, qv, 5, id_col="id", emb_col="embedding").collect()
-    assert [r.id for r in served] == [r.id for r in exact]
-    assert [r.score for r in served] == [r.score for r in exact]
-
-    # the codes table is partitioned by cluster (probe -> partition pruning)
-    scoped = eng._require("pq")
-    root = eng._index_root(scoped)
-    parts = [p.name for p in (root / "ivfpq").iterdir() if p.name.startswith("cluster=")]
-    assert parts, "ivfpq codes must be cluster-partitioned"
-    manifest = json.loads((root / "manifest.json").read_text())
-    assert manifest["ivfpq"]["m"] == 4 and manifest["ivfpq"]["n_codes"] == 16
-
-    # mutation -> stale -> refuse
-    eng.add_documents("pq", ["brand new xylophone entry"])
-    assert eng.index_status("pq") == "stale"
-    with pytest.raises(EngineError, match="index_not_fresh"):
-        eng.indexed_ivfpq_search("pq", qv, k=5)
-
-    # repair appends codes against the frozen codebooks; the new doc is
-    # reachable through the repaired IVF-PQ serving path
-    eng.repair_search_index("pq")
-    assert eng.index_status("pq") == "repaired"
-    manifest2 = json.loads((root / "manifest.json").read_text())
-    assert manifest2["ivfpq"]["codebooks"] == manifest["ivfpq"]["codebooks"]
-    qv2 = hash_embed("brand new xylophone entry", 64)
-    top = eng.indexed_ivfpq_search("pq", qv2, k=3, nprobe=16, shortlist=100).collect()
-    assert top and top[0].content == "brand new xylophone entry"
-    assert top[0].score == 1.0
-
-    # dimension guard: mis-sized query refuses, not mis-probes
-    with pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
-        eng.indexed_ivfpq_search("pq", [1.0, 2.0], k=3)
-
-    # a manifest predating the ivfpq family reports stale + refuses serving
-    del manifest2["ivfpq"]
-    (root / "manifest.json").write_text(json.dumps(manifest2))
-    assert eng.index_status("pq") == "stale"
-    with pytest.raises(EngineError, match="index_not_fresh"):
-        eng.indexed_ivfpq_search("pq", qv, k=5)
-    # ...and repair refuses too (rebuild is the only path forward)
-    with pytest.raises(EngineError, match="index_repair_requires_rebuild"):
-        eng.repair_search_index("pq")
-    eng.build_search_index("pq")
-    assert eng.index_status("pq") == "fresh"
-
-
-def test_ivfpq_empty_and_tiny_collections(spark, tmp_path_factory):
-    """<2 vectors at build -> no codes; serving answers empty instead of
-    erroring (same contract as the graph family)."""
-    from vector_mcp_spark.engine import CollectionEngine
-
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("ivfpq_tiny")))
-    eng.create_collection("tiny")
-    eng.add_documents("tiny", ["only one doc"])
-    eng.build_search_index("tiny")
-    assert eng.index_status("tiny") == "fresh"
-    from vector_mcp_spark.functions.embedder import hash_embed
-
-    assert eng.indexed_ivfpq_search("tiny", hash_embed("x", 64), k=3).collect() == []
-
-
-@pytest.mark.slow
-def test_int8_quantization_config_lifecycle(spark, tmp_path_factory):
-    """Per-collection quantization config (qdrant quantization_config
-    analogue): int8 selected at build is recorded in the manifest, serves
-    the approximate-cosine shortlist path, and repair appends int8 codes —
-    never sign bits. With shortlist >= corpus the served result equals the
-    exact cosine top-k, same contract as the sign path."""
-    import json
-
-    import pytest
-
-    from vector_mcp_spark.engine import CollectionEngine
-    from vector_mcp_spark.functions.embedder import embed_documents, hash_embed
-    from vector_mcp_spark.operators.semantic import semantic_topk
-    from vector_mcp_spark.validation import EngineError
-
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("int8_root")))
-    eng.create_collection("q8")
-    eng.add_documents("q8", [f"int8 doc {i} theme {i % 6}" for i in range(40)])
-
-    with pytest.raises(EngineError, match="quantization_invalid"):
-        eng.build_search_index("q8", quantization="float16")
-
-    eng.build_search_index("q8", quantization="int8")
-    assert eng.index_status("q8") == "fresh"
-    scoped = eng._require("q8")
-    root = eng._index_root(scoped)
-    manifest = json.loads((root / "manifest.json").read_text())
-    assert manifest["quantization"] == "int8"
-    assert (root / "int8q").exists() and not (root / "signs").exists()
-
-    qv = hash_embed("int8 doc 5 theme 5", 64)
-    served = eng.indexed_semantic_search("q8", qv, k=5, shortlist=40).collect()
-    docs = embed_documents(eng.read("q8"), text_col="content", out_col="embedding")
-    exact = semantic_topk(docs, qv, 5, id_col="id", emb_col="embedding").collect()
-    assert [r.id for r in served] == [r.id for r in exact]
-
-    # switching back to sign on a rebuild removes the stale int8 family
-    eng.build_search_index("q8", quantization="sign")
-    assert (root / "signs").exists() and not (root / "int8q").exists()
-    eng.build_search_index("q8", quantization="int8")
-    assert (root / "int8q").exists() and not (root / "signs").exists()
-
-    # repair appends to the int8 family and the new doc serves
-    eng.add_documents("q8", ["fresh quantized arrival"])
-    eng.repair_search_index("q8")
-    assert eng.index_status("q8") == "repaired"
-    assert not (root / "signs").exists()  # config honored on repair
-    qv2 = hash_embed("fresh quantized arrival", 64)
-    top = eng.indexed_semantic_search("q8", qv2, k=3, shortlist=50).collect()
-    assert top and top[0].content == "fresh quantized arrival"
-
-
-@pytest.mark.slow
 def test_indexed_filtered_search_both_regimes(spark, tmp_path_factory):
     """Engine-level filter+vector search (the qdrant planner composition
     over the persisted graph): a SELECTIVE payload filter routes to
@@ -2320,8 +2214,8 @@ def test_restored_snapshot_index_contract(spark, tmp_path_factory):
     """Snapshots carry table + changelog but NOT the index sidecar (the
     index is derived state — rebuild-on-restore is the honest contract):
     the restored collection reports index_status 'absent', every indexed
-    search refuses with index_not_fresh, and one build serves all four
-    families again."""
+    search refuses with index_not_fresh, and one build serves every
+    family again."""
     import pytest
 
     from vector_mcp_spark.engine import CollectionEngine
@@ -2343,84 +2237,18 @@ def test_restored_snapshot_index_contract(spark, tmp_path_factory):
     assert eng.index_status("back") == "absent"
     qv = hash_embed("snapshot doc 7 topic 2", 64)
     for call in (
-        lambda: eng.indexed_lexical_search("back", "snapshot"),
-        lambda: eng.indexed_semantic_search("back", qv),
+        lambda: eng.indexed_sparse_search("back", [("snapshot", 1.0)]),
         lambda: eng.indexed_graph_search("back", qv),
-        lambda: eng.indexed_ivfpq_search("back", qv),
         lambda: eng.indexed_filtered_search("back", qv, {"topic": "2"}),
     ):
         with pytest.raises(EngineError, match="index_not_fresh"):
             call()
     eng.build_search_index("back")
     assert eng.index_status("back") == "fresh"
-    assert eng.indexed_lexical_search("back", "snapshot", k=5).count() == 5
+    assert eng.indexed_sparse_search("back", [("snapshot", 1.0)], k=5).count() == 5
     assert eng.indexed_graph_search("back", qv, k=3).count() == 3
-    assert eng.indexed_ivfpq_search("back", qv, k=3, nprobe=16, shortlist=50).count() == 3
     got = eng.indexed_filtered_search("back", qv, {"topic": "2"}, k=3).collect()
     assert got and all(r.id for r in got)
-
-
-@pytest.mark.slow
-def test_int8_search_refuses_mis_sized_query(spark, tmp_path_factory):
-    """ADVICE r11: under quantization='int8' a mis-sized query must raise
-    collection_vector_schema_mismatch (like the graph / IVF-PQ families),
-    not silently answer empty after every approximate cosine goes NULL."""
-    import pytest as _pytest
-
-    from vector_mcp_spark.engine import CollectionEngine
-    from vector_mcp_spark.functions.embedder import hash_embed
-    from vector_mcp_spark.validation import EngineError
-
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("int8dim_root")))
-    eng.create_collection("q8d")
-    eng.add_documents("q8d", [f"int8 dim doc {i}" for i in range(8)])
-    eng.build_search_index("q8d", quantization="int8")
-    bad = hash_embed("short query", 32)  # corpus embeds at 64
-    with _pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
-        eng.indexed_semantic_search("q8d", bad, k=3)
-    # right-sized queries still serve
-    ok = eng.indexed_semantic_search("q8d", hash_embed("int8 dim doc 3", 64), k=3)
-    assert ok.count() == 3
-
-
-@pytest.mark.slow
-def test_int8_serve_reads_dimension_from_manifest(spark, tmp_path_factory, monkeypatch):
-    """VERDICT r12 item 2: build stamps the vector width into manifest.json,
-    so the int8 serve path (content-only collection, no catalog dimension
-    lock) launches NO extra job — zero DataFrame.first() calls — before the
-    shortlist scan, and the mis-sized-query refusal still fires."""
-    import json as _json
-
-    import pytest as _pytest
-
-    # patch the CONCRETE class: pyspark 4's pyspark.sql.DataFrame is the ABC
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from vector_mcp_spark.engine import CollectionEngine
-    from vector_mcp_spark.functions.embedder import hash_embed
-    from vector_mcp_spark.validation import EngineError
-
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("int8mani_root")))
-    eng.create_collection("q8m")  # content-only: _locked_dimension is None
-    eng.add_documents("q8m", [f"manifest dim doc {i}" for i in range(12)])
-    eng.build_search_index("q8m", quantization="int8")
-    root = eng._index_root(eng._scoped("q8m"))
-    assert _json.loads((root / "manifest.json").read_text())["dimension"] == 64
-
-    firsts = []
-    orig_first = DataFrame.first
-
-    def spy(df):
-        firsts.append(df)
-        return orig_first(df)
-
-    monkeypatch.setattr(DataFrame, "first", spy)
-    ok = eng.indexed_semantic_search("q8m", hash_embed("manifest dim doc 3", 64), k=3)
-    assert ok.count() == 3
-    assert firsts == []  # dimension came from the manifest, not a probe job
-    with _pytest.raises(EngineError, match="collection_vector_schema_mismatch"):
-        eng.indexed_semantic_search("q8m", hash_embed("short", 32), k=3)
-    assert firsts == []
 
 
 @pytest.mark.slow
@@ -2512,21 +2340,17 @@ def test_embedding_seam_runs_at_insert_only(spark, tmp_path_factory, monkeypatch
     exact = semantic_topk(eng.read("ne"), qv, 5, id_col="id", emb_col="embedding").collect()
 
     eng.build_search_index("ne")
-    got = eng.indexed_semantic_search("ne", qv, k=5, shortlist=len(corpus)).collect()
+    got = eng.indexed_graph_search("ne", qv, k=5).collect()
     assert [r.id for r in got] == [r.id for r in exact]
-    assert eng.indexed_graph_search("ne", qv, k=5).count() > 0
-    assert eng.indexed_ivfpq_search("ne", qv, k=5, shortlist=len(corpus)).count() > 0
     assert eng.indexed_filtered_search("ne", qv, {"tier": "a"}, k=3).count() > 0
-    assert eng.indexed_lexical_search("ne", "topic", k=3).count() == 3
+    assert eng.indexed_sparse_search("ne", [("topic", 1.0)], k=3).count() == 3
 
     # a late batch is embedded as it is written; repair and serving after
     # it still embed nothing of the corpus
     eng.add_documents("ne", ["late arrival vector"], metadatas=[{"tier": "a"}])
     corpus.add("late arrival vector")
     assert eng.repair_search_index("ne")["repaired"] == 1
-    top = eng.indexed_semantic_search(
-        "ne", hash_embed("late arrival vector", 64), k=3, shortlist=100
-    ).collect()
+    top = eng.indexed_graph_search("ne", hash_embed("late arrival vector", 64), k=3).collect()
     assert top and top[0].content == "late arrival vector"
     assert api.semantic_search("ne", ["late arrival"], number_results=1).count() == 1
 
@@ -2600,18 +2424,16 @@ def test_filtered_search_counts_only_the_filtered_side(spark, tmp_path_factory, 
 @pytest.mark.slow
 def test_collection_distance_config_lifecycle(spark, tmp_path_factory):
     """Per-collection distance config (qdrant locks Distance at create,
-    qdrant.py:122-127): l2 locked at create builds every index family under
-    l2 (int8 shortlist — sign bits are cosine-only), every indexed serve
-    path ranks ascending-by-distance, and a metric switch stales the index
-    (repair refuses; rebuild re-derives families and cleans the ones the
-    new config obsoletes, like the quantization switch)."""
+    qdrant.py:122-127): l2 locked at create builds the index under l2,
+    every indexed serve path ranks ascending-by-distance and finds the
+    exact nearest document, and a metric switch stales the index (repair
+    refuses; a rebuild re-derives it under the new metric)."""
     import json as _json
 
     import pytest as _pytest
 
     from vector_mcp_spark.engine import CollectionEngine
-    from vector_mcp_spark.functions.embedder import embed_documents, hash_embed
-    from vector_mcp_spark.operators.semantic import semantic_topk
+    from vector_mcp_spark.functions.embedder import hash_embed
     from vector_mcp_spark.validation import EngineError
 
     eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("dist_root")))
@@ -2631,31 +2453,18 @@ def test_collection_distance_config_lifecycle(spark, tmp_path_factory):
         [f"euclid doc {i} theme {i % 7}" for i in range(50)],
         metadatas=[{"tier": "a" if i % 10 == 0 else "b"} for i in range(50)],
     )
-    eng.build_search_index("l2c")  # default 'sign' auto-upgrades to int8
+    eng.build_search_index("l2c")
     scoped = eng._require("l2c")
     root = eng._index_root(scoped)
     manifest = _json.loads((root / "manifest.json").read_text())
     assert manifest["distance"] == "l2"
-    assert manifest["quantization"] == "int8"
-    assert (root / "int8q").exists() and not (root / "signs").exists()
 
-    # quantized-shortlist serving with shortlist >= corpus == exact l2 top-k
+    # graph + filtered serve ascending under l2; the graph's beam covers
+    # all 50 docs, so it equals the exact l2 top-k
     qv = hash_embed("euclid doc 21 theme 0", 64)
-    served = eng.indexed_semantic_search("l2c", qv, k=5, shortlist=50).collect()
-    docs = embed_documents(eng.read("l2c"), text_col="content", out_col="embedding")
-    exact = semantic_topk(docs, qv, 5, id_col="id", metric="l2").collect()
-    assert [r.id for r in served] == [r.id for r in exact]
-    scores = [r.score for r in served]
-    assert scores == sorted(scores), "l2 serving must rank ascending"
-
-    # graph + ivfpq + filtered serve ascending under l2 and include the
-    # nearest document
-    best = exact[0].id
     g = eng.indexed_graph_search("l2c", qv, k=5, ef=50).collect()
-    assert g and g[0].id == best
+    assert [r.id for r in g] == _exact_topk(eng.read("l2c"), qv, 5, "l2")
     assert [r.score for r in g] == sorted(r.score for r in g)
-    p = eng.indexed_ivfpq_search("l2c", qv, k=5, nprobe=16, shortlist=50).collect()
-    assert p and p[0].id == best
     f = eng.indexed_filtered_search("l2c", qv, {"tier": "b"}, k=3).collect()
     assert f and [r.score for r in f] == sorted(r.score for r in f)
 
@@ -2663,17 +2472,16 @@ def test_collection_distance_config_lifecycle(spark, tmp_path_factory):
     eng.set_collection_distance("l2c", "cosine")
     assert eng.index_status("l2c") == "stale"
     with _pytest.raises(EngineError, match="index_not_fresh"):
-        eng.indexed_semantic_search("l2c", qv, k=5)
+        eng.indexed_graph_search("l2c", qv, k=5)
     with _pytest.raises(EngineError, match="index_repair_requires_rebuild"):
         eng.repair_search_index("l2c")
 
-    # rebuild under the new config: sign family returns, int8 cleaned
+    # rebuild under the new config serves cosine, descending
     eng.build_search_index("l2c")
     manifest = _json.loads((root / "manifest.json").read_text())
     assert manifest["distance"] == "cosine"
-    assert manifest["quantization"] == "sign"
-    assert (root / "signs").exists() and not (root / "int8q").exists()
-    cos = eng.indexed_semantic_search("l2c", qv, k=5, shortlist=50).collect()
+    cos = eng.indexed_graph_search("l2c", qv, k=5, ef=50).collect()
+    assert [r.id for r in cos] == _exact_topk(eng.read("l2c"), qv, 5, "cosine")
     assert [r.score for r in cos] == sorted((r.score for r in cos), reverse=True)
 
 
@@ -2681,13 +2489,11 @@ def test_collection_distance_config_lifecycle(spark, tmp_path_factory):
 def test_indexed_sparse_family_lifecycle(spark, tmp_path_factory):
     """Named-sparse index family (r12): build persists (term,id,tf)
     postings + (id,dlen) L1 norms; indexed_sparse_search serves the SPLADE
-    dot from them (scores equal the on-the-fly operator); the hybrid
-    method fuses the graph leg and the sparse leg end-to-end from the
-    engine index; staleness refuses; repair appends doclen rows."""
+    dot from them (scores equal the on-the-fly operator); staleness
+    refuses; repair appends doclen rows."""
     import pytest as _pytest
 
     from vector_mcp_spark.engine import CollectionEngine
-    from vector_mcp_spark.functions.embedder import hash_embed
     from vector_mcp_spark.operators.vecapi import sparse_dot_topk
     from vector_mcp_spark.validation import EngineError
 
@@ -2711,12 +2517,6 @@ def test_indexed_sparse_family_lifecycle(spark, tmp_path_factory):
     got = eng.indexed_sparse_search("sp", qw, k=5).collect()
     exact = sparse_dot_topk(eng.read("sp"), qw, 5, id_col="id", content_col="content").collect()
     assert {(r.id, r.score) for r in got} == {(r.id, r.score) for r in exact}
-
-    hybrid = eng.indexed_sparse_dense_search(
-        "sp", hash_embed("spark vector stream doc 3", 64), qw, k=5, leg_k=10
-    ).collect()
-    assert len(hybrid) == 5
-    assert [r.score for r in hybrid] == sorted((r.score for r in hybrid), reverse=True)
 
     # staleness after a mutation, then repair appends the batch's doclen
     eng.add_documents("sp", ["fresh spark vector stream arrival"])
@@ -2906,44 +2706,42 @@ def test_named_auto_route_entryless_index_falls_back_to_exact(spark, tmp_path_fa
 
 @pytest.mark.slow
 def test_collection_distance_dot_serves_descending(spark, tmp_path_factory):
-    """Dot (inner-product) distance config: build auto-selects int8 (sign
-    bits drop magnitudes), every indexed serve path ranks descending by raw
-    dot, and the quantized shortlist path equals the exact dot top-k when
-    the shortlist covers the corpus."""
+    """Dot (inner-product) distance config: the build records it, and the
+    graph and filtered searches rank descending by raw dot; with a beam
+    that covers the collection the graph equals the exact dot top-k."""
     import json as _json
 
     from vector_mcp_spark.engine import CollectionEngine
-    from vector_mcp_spark.functions.embedder import embed_documents, hash_embed
-    from vector_mcp_spark.operators.semantic import semantic_topk
+    from vector_mcp_spark.functions.embedder import hash_embed
 
     eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("dot_root")))
     eng.create_collection("dotc", distance="dot")
-    eng.add_documents("dotc", [f"inner product doc {i} theme {i % 5}" for i in range(30)])
+    eng.add_documents(
+        "dotc", [f"inner product doc {i} theme {i % 5}" for i in range(30)],
+        metadatas=[{"t": "x"}] * 30,
+    )
     eng.build_search_index("dotc")
     manifest = _json.loads(
         (eng._index_root(eng._require("dotc")) / "manifest.json").read_text()
     )
-    assert manifest["distance"] == "dot" and manifest["quantization"] == "int8"
+    assert manifest["distance"] == "dot"
 
     qv = hash_embed("inner product doc 11 theme 1", 64)
-    served = eng.indexed_semantic_search("dotc", qv, k=5, shortlist=30).collect()
-    docs = embed_documents(eng.read("dotc"), text_col="content", out_col="embedding")
-    exact = semantic_topk(docs, qv, 5, id_col="id", metric="dot").collect()
-    assert [r.id for r in served] == [r.id for r in exact]
-    assert [r.score for r in served] == sorted((r.score for r in served), reverse=True)
     g = eng.indexed_graph_search("dotc", qv, k=5).collect()
-    assert g and [r.score for r in g] == sorted((r.score for r in g), reverse=True)
-    p = eng.indexed_ivfpq_search("dotc", qv, k=5, nprobe=16, shortlist=30).collect()
-    assert p and [r.score for r in p] == sorted((r.score for r in p), reverse=True)
+    assert [r.id for r in g] == _exact_topk(eng.read("dotc"), qv, 5, "dot")
+    assert [r.score for r in g] == sorted((r.score for r in g), reverse=True)
+    f = eng.indexed_filtered_search("dotc", qv, {"t": "x"}, k=5).collect()
+    assert f and [r.score for r in f] == sorted((r.score for r in f), reverse=True)
 
 
 def test_payload_range_index_lifecycle(spark, tmp_path_factory):
     """Range payload index (qdrant Range filter accelerator, VERDICT r12
-    item 3): a fresh index serves [gte, lte] counts from its overlapping
-    band partitions; a mutation makes it stale and the count transparently
-    falls back to the table scan — never wrong, at worst unaccelerated.
-    Non-numeric values are excluded (a range can never match them), open
-    bounds work, and malformed bounds/keys refuse with stable codes."""
+    item 3): a fresh index serves the ids in [gte, lte] from its overlapping
+    band partitions; a mutation makes it stale and it serves nothing, so
+    the filtered search scans instead — never wrong, at worst
+    unaccelerated. Non-numeric values are excluded (a range can never match
+    them), open bounds work, and malformed bounds/keys refuse with stable
+    codes."""
     import json as _json
 
     import pytest as _pytest
@@ -2963,6 +2761,14 @@ def test_payload_range_index_lifecycle(spark, tmp_path_factory):
     assert info["n_rows"] == 30  # numeric values only
     assert (info["vmin"], info["vmax"]) == (0.0, 72.5)
     assert eng.payload_range_index_status("pr", "price") == "fresh"
+    scoped = eng._scoped("pr")
+
+    def served_count(key, lo=None, hi=None, **strict):
+        """Ids the range index serves for the bounds; None when it is
+        absent or stale."""
+        bounds = eng._validate_range_bounds(gte=lo, lte=hi, **strict)
+        allowed = eng._range_allowed_ids(scoped, key, bounds)
+        return None if allowed is None else allowed.count()
 
     def scan_count(lo, hi):
         return sum(
@@ -2975,47 +2781,46 @@ def test_payload_range_index_lifecycle(spark, tmp_path_factory):
 
     for lo, hi in [(10.0, 30.0), (None, 5.0), (50.0, None), (0.0, 72.5),
                    (72.5, 72.5), (100.0, 200.0), (-10.0, -1.0)]:
-        assert eng.count_by_payload_range("pr", "price", lo, hi) == scan_count(lo, hi), (lo, hi)
+        assert served_count("price", lo, hi) == scan_count(lo, hi), (lo, hi)
 
     # strict bounds: the full qdrant Range grammar — endpoints excluded
-    assert eng.count_by_payload_range("pr", "price", gt=10.0, lt=30.0) == sum(
+    assert served_count("price", gt=10.0, lt=30.0) == sum(
         1 for i in range(30) if 10.0 < i * 2.5 < 30.0
     )
-    assert eng.count_by_payload_range("pr", "price", gt=72.5) == 0
+    assert served_count("price", gt=72.5) == 0
     assert (
-        eng.count_by_payload_range("pr", "price", gte=10.0, lt=12.5)
+        served_count("price", 10.0, lt=12.5)
         == 1  # exactly 10.0; 12.5 excluded by the strict upper bound
     )
 
     # the served probe is PARTITION-pruned: the narrow range's plan keeps a
     # band partition filter, so only overlapping band dirs are opened
-    allowed = eng._range_allowed_ids(
-        eng._scoped("pr"), "price", {"gte": 10.0, "lte": 30.0}
-    )
+    allowed = eng._range_allowed_ids(scoped, "price", {"gte": 10.0, "lte": 30.0})
     plan = allowed._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "band" in plan
 
-    # mutation -> stale -> fallback scan stays CORRECT
+    # mutation -> stale -> the index serves nothing; a rebuild covers the
+    # new row
     eng.add_documents("pr", ["late doc"], metadatas=[{"price": "20"}])
     assert eng.payload_range_index_status("pr", "price") == "stale"
-    assert eng.count_by_payload_range("pr", "price", 10.0, 30.0) == scan_count(10.0, 30.0) + 1
+    assert served_count("price", 10.0, 30.0) is None
     eng.create_payload_range_index("pr", "price", n_bands=8)
-    assert eng.count_by_payload_range("pr", "price", 10.0, 30.0) == scan_count(10.0, 30.0) + 1
+    assert served_count("price", 10.0, 30.0) == scan_count(10.0, 30.0) + 1
 
     # a key with no numeric values: empty-but-servable, count 0
     eng.create_payload_range_index("pr", "other")  # "1" IS numeric -> 1 row
-    assert eng.count_by_payload_range("pr", "other", 0.0, 2.0) == 1
+    assert served_count("other", 0.0, 2.0) == 1
     eng.create_payload_range_index("pr", "ghost")
     assert eng.payload_range_index_status("pr", "ghost") == "fresh"
-    assert eng.count_by_payload_range("pr", "ghost", 0.0, 1.0) == 0
+    assert served_count("ghost", 0.0, 1.0) == 0
 
     # refusals: bounds and keys
     with _pytest.raises(EngineError, match="payload_range_invalid"):
-        eng.count_by_payload_range("pr", "price")  # both bounds absent
+        served_count("price")  # both bounds absent
     with _pytest.raises(EngineError, match="payload_range_invalid"):
-        eng.count_by_payload_range("pr", "price", 30.0, 10.0)  # inverted
+        served_count("price", 30.0, 10.0)  # inverted
     with _pytest.raises(EngineError, match="payload_range_invalid"):
-        eng.count_by_payload_range("pr", "price", gte="cheap")
+        served_count("price", "cheap")
     with _pytest.raises(EngineError, match="payload_key_invalid"):
         eng.create_payload_range_index("pr", "a/../b")
     with _pytest.raises(EngineError, match="payload_bands_invalid"):

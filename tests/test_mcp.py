@@ -314,26 +314,6 @@ def test_tool_schema_fingerprint_detects_drift(monkeypatch):
     assert after != before
 
 
-def test_collection_inventory_preset(spark, tmp_path_factory):
-    """The vector-collections preset exports listing records as metadata
-    documents (id/title/text = collection name, doc_type pinned) and rides
-    the entitlement-scoped listing path."""
-    from vector_mcp_spark.connectors import SOURCE_PRESETS, collection_inventory
-
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("inv_root")))
-    for name in ("alpha", "beta"):
-        eng.create_collection(name)
-    docs = collection_inventory(McpVeneer(eng))
-    assert docs == [
-        {"id": "alpha", "title": "alpha", "text": "alpha", "doc_type": "vector_collection"},
-        {"id": "beta", "title": "beta", "text": "beta", "doc_type": "vector_collection"},
-    ]
-    # entitlement scoping narrows the inventory the connector sees
-    scoped = McpVeneer(eng, entitlements=lambda ns, names: ["beta"])
-    assert [d["id"] for d in collection_inventory(scoped)] == ["beta"]
-    assert SOURCE_PRESETS["vector-collections"]["records_path"] == "collections"
-
-
 # -- fail-closed backend policy (reference backend_policy.py) -----------------
 
 
@@ -1935,20 +1915,19 @@ def _documented_error_codes() -> set[str]:
     return codes
 
 
-def test_every_search_action_answers_adversarial_input_with_a_documented_code(
-    spark, tmp_path_factory
-):
-    """Property over every ``SEARCH_ACTIONS`` entry: whatever one argument
-    is replaced with — NaN/Inf/empty/mis-sized vectors, empty and unicode
-    questions, huge and non-integer k, unicode, unknown and alias names,
-    malformed weights and filters — the veneer returns either results or a
-    documented error code, never a raw exception (Py4J, ParseException,
-    TypeError). Each action also answers its well-formed call."""
+_NAN, _INF = float("nan"), float("inf")
+_ADVERSARIAL_NAMES = ["adv_alias", "nope", "データ", "", None, "x" * 41, 5]
+_ADVERSARIAL_KS = [0, -1, 10**12, 2.5, True, "5", _NAN, 1000]
+
+
+@pytest.fixture(scope="module")
+def adversarial(spark, tmp_path_factory) -> CollectionEngine:
+    """A collection with every served family built: the graph, postings
+    and document lengths, a named vector ``t`` with its index, payload
+    ``k`` on every row, and the alias ``adv_alias``."""
     from vector_mcp_spark.functions.embedder import hash_embed
-    from vector_mcp_spark.mcp import SEARCH_ACTIONS
 
     eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("mcp_adversarial")))
-    ven = McpVeneer(eng, VectorSearchApi(eng))
     eng.create_collection("adv", vectors_config={"t": {"dimension": 4}})
     eng.add_documents(
         "adv",
@@ -1960,12 +1939,26 @@ def test_every_search_action_answers_adversarial_input_with_a_documented_code(
     eng.build_search_index("adv")
     eng.build_named_vector_index("adv", "t")
     eng.create_alias("adv_alias", "adv")
+    return eng
+
+
+def test_every_search_action_answers_adversarial_input_with_a_documented_code(adversarial):
+    """Property over every ``SEARCH_ACTIONS`` entry: whatever one argument
+    is replaced with — NaN/Inf/empty/mis-sized vectors, empty and unicode
+    questions, huge and non-integer k, unicode, unknown and alias names,
+    malformed weights and filters — the veneer returns either results or a
+    documented error code, never a raw exception (Py4J, ParseException,
+    TypeError). Each action also answers its well-formed call."""
+    from vector_mcp_spark.mcp import SEARCH_ACTIONS
+
+    eng = adversarial
+    ven = McpVeneer(eng, VectorSearchApi(eng))
     documented = _documented_error_codes()
 
-    nan, inf = float("nan"), float("inf")
-    names = ["adv_alias", "nope", "データ", "", None, "x" * 41, 5]
+    nan, inf = _NAN, _INF
+    names = _ADVERSARIAL_NAMES
     questions = ["", "   ", None, "データ検索 🚀 naïve", "\x00‮ spark", 7, "x" * (1024 * 1024 + 1)]
-    ks = [0, -1, 10**12, 2.5, True, "5", nan, 1000]
+    ks = _ADVERSARIAL_KS
     valid = {
         "semantic_search": {"question": "spark topic 1"},
         "lexical_search": {"question": "spark topic 1"},
@@ -2025,3 +2018,57 @@ def test_every_search_action_answers_adversarial_input_with_a_documented_code(
                     answered[action] = answered.get(action, 0) + 1
     # the alias and the unicode question are answered, not refused
     assert all(answered.get(a) for a in SEARCH_ACTIONS if a != "federated_search"), answered
+
+
+_GRAPH_VEC = [0.5, 0.1, -0.2, 0.3] * 16  # the default 64-dim embedding width
+#: each engine search with its well-formed query vector
+ENGINE_SEARCHES = {
+    "named_vector_search": (
+        lambda e, name, k, vec: e.named_vector_search(name, "t", vec, k=k),
+        [0.5, 0.1, -0.2, 0.3],
+    ),
+    "indexed_sparse_search": (
+        lambda e, name, k, vec: e.indexed_sparse_search(name, [("spark", 1.0), ("topic", 0.5)], k=k),
+        None,
+    ),
+    "indexed_graph_search": (
+        lambda e, name, k, vec: e.indexed_graph_search(name, vec, k=k),
+        _GRAPH_VEC,
+    ),
+    "indexed_filtered_search": (
+        lambda e, name, k, vec: e.indexed_filtered_search(name, vec, {"k": "1"}, k=k),
+        _GRAPH_VEC,
+    ),
+}
+
+
+@pytest.mark.parametrize("method", sorted(ENGINE_SEARCHES))
+def test_engine_search_answers_adversarial_input_with_a_documented_code(adversarial, method):
+    """The engine's own searches validate what a Python caller passes,
+    without the veneer in front: a bad ``k`` (zero, negative, huge,
+    fractional, boolean, string, NaN), name or query vector raises an
+    ``EngineError`` with a documented code, never a raw Py4J error or a
+    silently truncated answer; well-formed calls answer at most ``k`` rows."""
+    search, good = ENGINE_SEARCHES[method]
+    documented = _documented_error_codes()
+
+    def outcome(name, k, vec=good):
+        try:
+            return search(adversarial, name, k, vec).collect()
+        except EngineError as e:
+            assert e.code in documented, (method, name, k, vec, e.code)
+            return e.code
+
+    for k in (1, 3, 1000):
+        rows = outcome("adv", k)
+        assert isinstance(rows, list) and 0 < len(rows) <= k, (method, k, rows)
+    assert isinstance(outcome("adv_alias", 3), list)
+    for k in _ADVERSARIAL_KS:
+        if k != 1000:
+            assert outcome("adv", k) == "number_results_invalid", (method, k)
+    for name in _ADVERSARIAL_NAMES:
+        outcome(name, 3)
+    if good is not None:
+        for vec in ([_NAN] * len(good), [_INF] + good[1:], [], [1.0, 2.0], ["a"] * len(good),
+                    [None] * len(good)):
+            assert isinstance(outcome("adv", 3, vec), str), (method, vec)

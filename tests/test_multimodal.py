@@ -5,7 +5,6 @@ import pytest
 from vector_mcp_spark.multimodal.binary_ops import (
     MEDIA_SCHEMA,
     extract_features,
-    resize_images,
     sample_frames,
 )
 
@@ -33,14 +32,6 @@ def test_feature_extraction_shape_and_determinism(media):
 def test_real_decoder_seam_raises(media):
     with pytest.raises(Exception, match="PIL|ffmpeg|librosa"):
         extract_features(media, deterministic_fake=False).collect()
-
-
-def test_resize_rewrites_meta_only_for_images(media):
-    got = resize_images(media, 224, 224).collect()
-    assert {r.media_id for r in got} == {"img1", "img2"}
-    for r in got:
-        assert (r.meta.width, r.meta.height) == (224, 224)
-        assert r.data is not None  # bytes pass through the fake
 
 
 def test_frame_sampling(media):

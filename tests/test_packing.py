@@ -62,19 +62,6 @@ def test_pack_sequences_rejects_bad_params(spark):
         pack_sequences(df, budget=10, n_writers=0)
 
 
-def test_packing_stats_shape(spark):
-    from vector_mcp_spark.operators.packing import pack_sequences, packing_stats
-
-    df = spark.createDataFrame(
-        [(i, 30) for i in range(40)], "doc_id int, n_tokens int"
-    )
-    stats = packing_stats(pack_sequences(df, budget=100, n_writers=2))
-    rows = {r.writer: r for r in stats.collect()}
-    assert sum(r.n_docs for r in rows.values()) == 40
-    for r in rows.values():
-        assert r.n_seqs >= 1 and 0 < r.n_boundary_starts <= r.n_docs
-
-
 # -- int8 quantization --------------------------------------------------------
 
 

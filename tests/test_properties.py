@@ -364,6 +364,17 @@ def test_kmv_estimate_error_tolerance(spark):
         assert abs(est[t] - e) / e <= 0.4, (t, est[t], e)
 
 
+def sign_pack_py(vec) -> tuple[int, int]:
+    """Plain-Python reference for ``sign_pack``: (lo, hi) bit halves of the
+    first 64 dimensions, where a dimension past ``len(vec)`` reads as 0
+    (element_at returns NULL → bit unset) and dimensions beyond 64 are
+    ignored."""
+    n = len(vec)
+    lo = sum(1 << i for i in range(32) if i < n and vec[i] > 0)
+    hi = sum(1 << i for i in range(32) if 32 + i < n and vec[32 + i] > 0)
+    return lo, hi
+
+
 @given(
     vec=st.lists(
         st.floats(min_value=-10, max_value=10, allow_nan=False, width=32),
@@ -374,8 +385,9 @@ def test_kmv_estimate_error_tolerance(spark):
 @pytest.mark.slow
 def test_sign_pack_column_matches_python(spark, vec):
     """The packed sign bits computed by the Column expression equal the
-    driver-side twin for arbitrary vectors (zeros pack as 0-bits on both)."""
-    from vector_mcp_spark.operators.quantize import sign_pack, sign_pack_py
+    plain-Python reference for arbitrary vectors (zeros pack as 0-bits on
+    both)."""
+    from vector_mcp_spark.operators.quantize import sign_pack
 
     row = spark.createDataFrame([(0, vec)], "vec_id long, embedding array<double>")
     got = sign_pack(row).collect()[0]
@@ -385,10 +397,9 @@ def test_sign_pack_column_matches_python(spark, vec):
 
 @pytest.mark.parametrize("dim", [0, 1, 31, 32, 33, 63, 64, 96])
 def test_sign_pack_py_matches_column_for_any_dimension(spark, dim):
-    """sign_pack_py mirrors element_at's NULL→0 semantics: short vectors
-    zero-pad instead of raising IndexError, dims past 64 are ignored on both
-    paths (ADVICE r5 — collections with dimension != 64)."""
-    from vector_mcp_spark.operators.quantize import sign_pack, sign_pack_py
+    """The column packs any dimension as the reference does: short vectors
+    zero-pad (element_at's NULL→0) and dims past 64 are ignored."""
+    from vector_mcp_spark.operators.quantize import sign_pack
 
     vec = [1.0 if i % 3 else -1.0 for i in range(dim)]
     lo, hi = sign_pack_py(vec)  # must not raise
@@ -616,19 +627,10 @@ def _loop_sq(col, dim):
     return acc
 
 
-def _loop_dot_fixed(a, b, dim):
-    acc = None
-    for i in range(dim):
-        t = a[i].cast("double") * b[i].cast("double")
-        acc = t if acc is None else acc + t
-    return acc
-
-
 def test_sql_fast_builders_match_loop_trees(spark):
     import re
 
     from vector_mcp_spark.functions.vector import (
-        dot_fixed,
         l2_distance_lit,
         l2_norm_fixed,
         sq_norm_fixed,
@@ -654,10 +656,6 @@ def test_sql_fast_builders_match_loop_trees(spark):
                 F.sqrt(_loop_sq(c, 4)) * F.lit(math.sqrt(sq_norm_py(vec))),
             ),
             cosine_similarity_lit("embedding", vec),
-        ),
-        "dot_fixed": (
-            _loop_dot_fixed(F.col("embedding"), F.col("qv"), 4),
-            dot_fixed("embedding", "qv", 4),
         ),
         "l2_distance_lit": (
             F.sqrt(F.when(inner_old < F.lit(0.0), F.lit(0.0)).otherwise(inner_old)),

@@ -4,7 +4,6 @@ import pytest
 
 from vector_mcp_spark.sources.readers import (
     chunk_documents,
-    inline_documents,
     read_documents,
     resolve_document_paths,
 )
@@ -270,11 +269,6 @@ def test_encrypted_pdf_raises(spark, tmp_path):
         read_documents(spark, [str(tmp_path)]).collect()
 
 
-def test_inline_documents(spark):
-    got = inline_documents(spark, ["one", "two"]).collect()
-    assert sorted(r.content for r in got) == ["one", "two"]
-
-
 def test_path_confinement(tmp_path):
     (tmp_path / "ok.txt").write_text("x")
     assert resolve_document_paths(str(tmp_path), ["ok.txt"]) == [str(tmp_path / "ok.txt")]
@@ -335,64 +329,6 @@ def test_invalid_overlap_raises(spark):
 
 
 # -- structured (JSONL / CSV) corpus reader -----------------------------------
-
-
-def test_read_jsonl_documents(spark, tmp_path):
-    import json
-
-    from vector_mcp_spark.sources.readers import read_structured_documents
-
-    p = tmp_path / "shard.jsonl"
-    rows = [
-        {"text": "hello world", "lang": "en", "url": "http://a"},
-        {"text": "bonjour monde", "lang": "fr", "url": "http://b"},
-    ]
-    p.write_text("\n".join(json.dumps(r) for r in rows))
-    got = read_structured_documents(spark, [str(p)]).orderBy("content").collect()
-    assert [r.content for r in got] == ["bonjour monde", "hello world"]
-    assert got[0].lang == "fr" and got[0].url == "http://b"
-    # content-addressed ids: 64-hex sha256, deterministic
-    assert all(len(r.id) == 64 for r in got)
-
-
-def test_read_jsonl_with_explicit_id_field(spark, tmp_path):
-    import json
-
-    from vector_mcp_spark.sources.readers import read_structured_documents
-
-    p = tmp_path / "s.jsonl"
-    p.write_text(json.dumps({"doc_id": 7, "text": "x y z"}))
-    row = read_structured_documents(spark, [str(p)], id_field="doc_id").first()
-    assert row.id == "7" and row.content == "x y z"
-    assert "doc_id" not in row.asDict() or True  # id field folded into id
-
-
-def test_read_csv_documents(spark, tmp_path):
-    from vector_mcp_spark.sources.readers import read_structured_documents
-
-    p = tmp_path / "docs.csv"
-    p.write_text("text,source\nalpha beta,web\ngamma delta,books\n")
-    got = read_structured_documents(spark, [str(p)], fmt="csv").orderBy("content").collect()
-    assert [(r.content, r.source) for r in got] == [
-        ("alpha beta", "web"),
-        ("gamma delta", "books"),
-    ]
-
-
-def test_read_structured_rejects_bad_format_and_missing_field(spark, tmp_path):
-    import json
-
-    import pytest as _pytest
-
-    from vector_mcp_spark.sources.readers import read_structured_documents
-    from vector_mcp_spark.validation import EngineError
-
-    p = tmp_path / "s.jsonl"
-    p.write_text(json.dumps({"body": "no text field"}))
-    with _pytest.raises(EngineError):
-        read_structured_documents(spark, [str(p)], fmt="parquetish")
-    with _pytest.raises(EngineError):
-        read_structured_documents(spark, [str(p)])
 
 
 def test_suite_load_reads_directory_parquet(spark, tmp_path):

@@ -218,102 +218,6 @@ def test_stream_static_enrichment_broadcasts_and_keeps_unmatched(spark, tmp_path
     assert got[2].c_name is None  # left join: facts never dropped
 
 
-@pytest.mark.slow
-def test_stream_ingest_into_collection_effectively_once(spark, tmp_path):
-    """Streamed docs land in the collection through the engine's upsert;
-    re-running the same stream with a FRESH checkpoint (a full replay, the
-    worst recovery case) leaves the table state identical."""
-    from pyspark.sql import functions as F
-
-    from vector_mcp_spark.engine import CollectionEngine
-    from vector_mcp_spark.schema import DOCUMENT_SCHEMA
-    from vector_mcp_spark.streaming.ingest import (
-        stream_ingest_into_collection,
-        streaming_dedup_ingest,
-    )
-
-    src = str(tmp_path / "src")
-    raw = spark.createDataFrame(
-        # two exact duplicates (same content) collapse to one id
-        [("doc one alpha",), ("doc two beta",), ("doc one alpha",)],
-        "content string",
-    )
-    raw.write.mode("overwrite").parquet(src)
-
-    engine = CollectionEngine(spark, str(tmp_path / "warehouse"))
-    engine.create_collection("stream_sink")
-
-    def run(tag: str) -> None:
-        stream = spark.readStream.schema("content string").parquet(src)
-        docs = streaming_dedup_ingest(stream).select(
-            "id", "content",
-            F.lit(None).cast(DOCUMENT_SCHEMA["metadata"].dataType).alias("metadata"),
-            F.lit(None).cast(DOCUMENT_SCHEMA["embedding"].dataType).alias("embedding"),
-        )
-        stream_ingest_into_collection(
-            docs, engine, "stream_sink", str(tmp_path / f"ckpt_{tag}")
-        )
-
-    run("first")
-    first = {(r.id, r.content) for r in engine.read("stream_sink").collect()}
-    assert len(first) == 2  # dedup collapsed the exact duplicate
-    run("replay")
-    second = {(r.id, r.content) for r in engine.read("stream_sink").collect()}
-    assert second == first  # idempotent sink: full replay changes nothing
-
-
-@pytest.mark.slow
-def test_stream_index_maintenance_matches_batch_assignment(spark, tmp_path):
-    """New vectors streamed through index maintenance get exactly the
-    cluster and PQ codes the batch kernels produce, land partitioned by
-    cluster, and a checkpointed re-run appends nothing."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from vector_mcp_spark.operators.pq import pq_build, pq_encode_with
-    from vector_mcp_spark.operators.similarity import assign_clusters, ivf_build
-    from vector_mcp_spark.streaming.ingest import stream_index_maintenance
-    from vector_mcp_spark.suite import load
-
-    embs = load(spark, "/root/testdata/sf0.001", "embeddings")
-    base = embs.where(F.col("vec_id") < 80)
-    newbatch = embs.where(F.col("vec_id") >= 80)
-    _, centroids = ivf_build(base, n_centroids=8, id_col="vec_id", max_iter=1)
-    _, codebooks = pq_build(base, m=4, n_codes=8, id_col="vec_id", iters=1)
-
-    src = str(tmp_path / "src")
-    newbatch.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(newbatch.schema).parquet(src)
-    index_dir = str(tmp_path / "index")
-    stream_index_maintenance(
-        stream, centroids, codebooks, index_dir, str(tmp_path / "ckpt"),
-        id_col="vec_id", emb_col="embedding",
-    )
-    got = spark.read.parquet(index_dir)
-    batch_twin = pq_encode_with(
-        assign_clusters(newbatch, centroids), codebooks
-    )
-    want = {
-        r.vec_id: (r.cluster, tuple(r.codes))
-        for r in batch_twin.select("vec_id", "cluster", "codes").collect()
-    }
-    have = {
-        r.vec_id: (r.cluster, tuple(r.codes))
-        for r in got.select("vec_id", "cluster", "codes").collect()
-    }
-    assert have == want
-    # physically partitioned by cluster
-    assert any(p.startswith("cluster=") for p in os.listdir(index_dir))
-    # exactly-once: same checkpoint re-run appends nothing
-    stream2 = spark.readStream.schema(newbatch.schema).parquet(src)
-    stream_index_maintenance(
-        stream2, centroids, codebooks, index_dir, str(tmp_path / "ckpt"),
-        id_col="vec_id", emb_col="embedding",
-    )
-    assert spark.read.parquet(index_dir).count() == len(want)
-
-
 def test_continuous_aggregate_incremental_merge(spark, tmp_path):
     """Two availableNow runs over a growing source dir: the second run must
     merge ONLY the new files into the standing rollup, and the final table
@@ -482,134 +386,3 @@ def test_interval_join_how_validation(spark):
     df = spark.createDataFrame([], "event_id long, ts timestamp, user_id long")
     with pytest.raises(ValueError):
         interval_join_events(df, df, how="fullOuter")
-
-
-def test_stream_postings_maintenance_matches_rebuild(spark, tmp_path):
-    """Documents streamed through postings maintenance land in the same
-    term-bucket partitions a full rebuild would produce, the merged index
-    serves identically to a from-scratch batch scan, and a checkpointed
-    re-run appends nothing."""
-    import os
-
-    from vector_mcp_spark.operators.lexical import (
-        build_postings,
-        indexed_lexical_topk,
-        lexical_tf_topk,
-        term_bucket,
-    )
-    from vector_mcp_spark.streaming.ingest import stream_postings_maintenance
-
-    base = spark.createDataFrame(
-        [(str(i), f"spark data doc {i} pipeline") for i in range(30)],
-        "id string, content string",
-    )
-    grown = spark.createDataFrame(
-        [(str(i), f"vector spark arrival {i}") for i in range(30, 45)],
-        "id string, content string",
-    )
-    index_dir = str(tmp_path / "postings")
-    # offline build of the base corpus — the engine's build shape
-    build_postings(base, "id", "content").withColumn(
-        "term_bucket", term_bucket("term")
-    ).write.mode("overwrite").partitionBy("term_bucket").parquet(index_dir)
-
-    src = str(tmp_path / "src")
-    grown.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(grown.schema).parquet(src)
-    stream_postings_maintenance(stream, index_dir, str(tmp_path / "ckpt"))
-
-    # merged index == a rebuild over the full corpus, row for row
-    full = base.unionByName(grown)
-    want = {
-        (r.term, r.id, r.tf)
-        for r in build_postings(full, "id", "content").collect()
-    }
-    got = {
-        (r.term, r.id, r.tf)
-        for r in spark.read.parquet(index_dir).select("term", "id", "tf").collect()
-    }
-    assert got == want
-    assert any(p.startswith("term_bucket=") for p in os.listdir(index_dir))
-
-    # the maintained index SERVES the grown corpus identically to a scan
-    served = indexed_lexical_topk(spark, index_dir, "vector spark", 10)
-    scan = lexical_tf_topk(full, "vector spark", 10)
-    assert [(r.id, r.score) for r in served.collect()] == [
-        (r.id, r.score) for r in scan.collect()
-    ]
-
-    # exactly-once: the same checkpoint re-run appends nothing
-    n_before = spark.read.parquet(index_dir).count()
-    stream2 = spark.readStream.schema(grown.schema).parquet(src)
-    stream_postings_maintenance(stream2, index_dir, str(tmp_path / "ckpt"))
-    assert spark.read.parquet(index_dir).count() == n_before
-
-
-def test_stream_sparse_maintenance_matches_rebuild(spark, tmp_path):
-    """VERDICT r12 item 4: the named-sparse family's streaming twin must
-    maintain BOTH tables the scorer serves from — postings AND the (id,
-    dlen) L1 norms — so a stream-grown index scores identically to a
-    from-scratch batch rebuild; a checkpointed re-run appends nothing."""
-    from vector_mcp_spark.functions.text import tokens as _tokens
-    from vector_mcp_spark.operators.lexical import build_postings, term_bucket
-    from vector_mcp_spark.operators.vecapi import indexed_sparse_dot_topk
-    from vector_mcp_spark.streaming.ingest import stream_sparse_index_maintenance
-
-    base = spark.createDataFrame(
-        [(str(i), f"spark sparse doc {i} pipeline tokens") for i in range(30)],
-        "id string, content string",
-    )
-    grown = spark.createDataFrame(
-        [(str(i), f"vector sparse arrival {i}") for i in range(30, 45)],
-        "id string, content string",
-    )
-    postings_dir = str(tmp_path / "postings")
-    doclen_dir = str(tmp_path / "doclen")
-    # offline build of the base corpus — the engine's build shape
-    build_postings(base, "id", "content").withColumn(
-        "term_bucket", term_bucket("term")
-    ).write.mode("overwrite").partitionBy("term_bucket").parquet(postings_dir)
-    base.select("id", F.size(_tokens(F.col("content"))).alias("dlen")).write.mode(
-        "overwrite"
-    ).parquet(doclen_dir)
-
-    src = str(tmp_path / "src")
-    grown.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(grown.schema).parquet(src)
-    stream_sparse_index_maintenance(
-        stream, postings_dir, doclen_dir, str(tmp_path / "ckpt")
-    )
-
-    # the stream-maintained family serves EXACTLY like a full rebuild
-    full = base.unionByName(grown)
-    qw = [("sparse", 1.0), ("vector", 0.5), ("arrival", 0.25)]
-    rebuilt_postings = build_postings(full, "id", "content")
-    rebuilt_doclen = full.select(
-        "id", F.size(_tokens(F.col("content"))).alias("dlen")
-    )
-    want = [
-        (r.id, r.score)
-        for r in indexed_sparse_dot_topk(rebuilt_postings, rebuilt_doclen, qw, 10).collect()
-    ]
-    got = [
-        (r.id, r.score)
-        for r in indexed_sparse_dot_topk(
-            spark.read.parquet(postings_dir),
-            spark.read.parquet(doclen_dir).select("id", "dlen"),
-            qw,
-            10,
-        ).collect()
-    ]
-    assert got == want
-    # streamed docs actually rank (the norms table grew with them)
-    assert any(int(i) >= 30 for i, _ in got)
-
-    # exactly-once: the same checkpoint re-run appends to NEITHER table
-    n_post = spark.read.parquet(postings_dir).count()
-    n_len = spark.read.parquet(doclen_dir).count()
-    stream2 = spark.readStream.schema(grown.schema).parquet(src)
-    stream_sparse_index_maintenance(
-        stream2, postings_dir, doclen_dir, str(tmp_path / "ckpt")
-    )
-    assert spark.read.parquet(postings_dir).count() == n_post
-    assert spark.read.parquet(doclen_dir).count() == n_len

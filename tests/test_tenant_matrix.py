@@ -25,11 +25,10 @@ NAME_GATED_SURFACES = [
     "index_status",
     "build_search_index",
     "repair_search_index",
-    "indexed_lexical_search",
-    "indexed_semantic_search",
     "indexed_graph_search",
-    "indexed_ivfpq_search",
     "indexed_filtered_search",
+    "indexed_sparse_search",
+    "named_vector_search",
     "count_documents",
     "get_documents_by_ids",
     "add_documents",
@@ -39,8 +38,6 @@ NAME_GATED_SURFACES = [
     "delete_payload",
     "compact_changelog",
     "create_snapshot",
-    "profile_collection",
-    "compact_collection",
     "needs_embed",
     "create_alias_target",
     "create_payload_index",
@@ -54,7 +51,7 @@ def two_tenants(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("tenant_matrix"))
     acme = CollectionEngine(spark, root, tenant="acme")
     bravo = CollectionEngine(spark, root, tenant="bravo")
-    acme.create_collection(NAME)
+    acme.create_collection(NAME, vectors_config={"v": {"dimension": 4}})
     acme.add_documents(NAME, [f"acme secret doc {i}" for i in range(5)])
     acme.build_search_index(NAME)
     acme.create_alias("mx_alias", NAME)
@@ -78,15 +75,12 @@ def test_cross_tenant_name_gated_surface_refuses(surface, two_tenants, spark):
         "index_status": lambda e: e.index_status(NAME),
         "build_search_index": lambda e: e.build_search_index(NAME),
         "repair_search_index": lambda e: e.repair_search_index(NAME),
-        "indexed_lexical_search": lambda e: e.indexed_lexical_search(NAME, "secret"),
-        "indexed_semantic_search": lambda e: e.indexed_semantic_search(
-            NAME, [0.1] * 64
-        ),
         "indexed_graph_search": lambda e: e.indexed_graph_search(NAME, [0.1] * 64),
-        "indexed_ivfpq_search": lambda e: e.indexed_ivfpq_search(NAME, [0.1] * 64),
         "indexed_filtered_search": lambda e: e.indexed_filtered_search(
             NAME, [0.1] * 64, {"k": "v"}
         ),
+        "indexed_sparse_search": lambda e: e.indexed_sparse_search(NAME, [("secret", 1.0)]),
+        "named_vector_search": lambda e: e.named_vector_search(NAME, "v", [0.1] * 4),
         "count_documents": lambda e: e.count_documents(NAME),
         "get_documents_by_ids": lambda e: e.get_documents_by_ids(NAME, ["x"]),
         "add_documents": lambda e: e.add_documents(NAME, ["intruder doc"]),
@@ -103,8 +97,6 @@ def test_cross_tenant_name_gated_surface_refuses(surface, two_tenants, spark):
         "delete_payload": lambda e: e.delete_payload(NAME, ["x"], ["k"]),
         "compact_changelog": lambda e: e.compact_changelog(NAME, now),
         "create_snapshot": lambda e: e.create_snapshot(NAME),
-        "profile_collection": lambda e: e.profile_collection(NAME),
-        "compact_collection": lambda e: e.compact_collection(NAME),
         "needs_embed": lambda e: e.needs_embed(NAME),
         "create_alias_target": lambda e: e.create_alias("steal_alias", NAME),
         "create_payload_index": lambda e: e.create_payload_index(NAME, "k"),

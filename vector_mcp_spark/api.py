@@ -101,7 +101,8 @@ class VectorSearchApi:
     def lexical_search(
         self, collection: str, questions: Sequence[str], number_results: int = 5
     ) -> DataFrame:
-        """Multi-query lexical (tf) search → (query_id, id, content, score).
+        """Multi-query lexical (tf) search → (query_id, id, content, score),
+        best-first per query: (query_id, score desc, id asc).
 
         One job for N queries (lexical_tf_topk_multi scores every query
         map-side in a single pass), not N unioned single-query legs."""
@@ -113,11 +114,15 @@ class VectorSearchApi:
         ranked = lexical_tf_topk_multi(
             docs, cleaned, number_results, id_col="id", content_col="content"
         )
-        # ranked is ≤ N*k rows — broadcast it against the (big) docs payload
+        # ranked is ≤ N*k rows — broadcast it against the (big) docs payload.
+        # The limit is exact (each query yields at most k rows) and makes the
+        # sort a TakeOrderedAndProject: no range-sampling job on the serve path
         return (
             docs.select("id", "content")
             .join(F.broadcast(ranked), "id")
             .select("query_id", "id", "content", "score")
+            .orderBy(F.col("query_id").asc(), F.col("score").desc(), F.col("id").asc())
+            .limit(len(cleaned) * number_results)
         )
 
     def search(

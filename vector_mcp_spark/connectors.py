@@ -1,17 +1,11 @@
-"""Connector surface: source presets + tool-schema compatibility fingerprints.
+"""Connector surface: tool-schema compatibility fingerprints.
 
-Mirrors the reference's ``vector_mcp/connectors/`` package:
-
-* ``mcp_source_presets.json`` — the engine is a vector backend, not a
-  primary data source, so the only preset exposes the collection inventory
-  (``list_collections``) as lightweight metadata documents a knowledge-graph
-  ingester can register; it deliberately does NOT pull document payloads.
-* ``tool_schema_fingerprints.json`` — a stable hash of each tool's calling
-  schema so downstream connectors can detect breaking drift without
-  importing the server. The reference pins these per release
-  (``algorithm: agent-utilities:mcp-tool-schema-compat:v1``); here the
-  fingerprint is recomputed from the live veneer signatures and pinned by a
-  regression test — same contract, no generated file to go stale.
+Mirrors the reference's ``vector_mcp/connectors/tool_schema_fingerprints.json``:
+a stable hash of each tool's calling schema so downstream connectors can
+detect breaking drift without importing the server. The reference pins
+these per release (``algorithm: agent-utilities:mcp-tool-schema-compat:v1``);
+here the fingerprint is recomputed from the live veneer signatures and
+pinned by a regression test — same contract, no generated file to go stale.
 """
 
 from __future__ import annotations
@@ -25,23 +19,6 @@ from vector_mcp_spark.mcp import COLLECTION_ACTIONS, SEARCH_ACTIONS, McpVeneer
 
 FINGERPRINT_ALGORITHM = "vector-mcp-spark:mcp-tool-schema-compat:v1"
 SCHEMA_VERSION = "1"
-
-# Tier-1 mcp_tool source preset (reference
-# connectors/mcp_source_presets.json): only the collection inventory is
-# exported; id/title/text all map to the collection name because a
-# collection's name IS its metadata at this layer.
-SOURCE_PRESETS: dict[str, dict[str, str]] = {
-    "vector-collections": {
-        "server": "vector-mcp-spark",
-        "tool": "vector_collection_management",
-        "action": "list_collections",
-        "records_path": "collections",
-        "id_field": "collection_name",
-        "title_field": "collection_name",
-        "text_field": "collection_name",
-        "doc_type": "vector_collection",
-    }
-}
 
 _TOOL_ACTIONS = {
     "vector_collection_management": COLLECTION_ACTIONS,
@@ -80,27 +57,3 @@ def tool_schema_fingerprints() -> dict[str, Any]:
         "schema_version": SCHEMA_VERSION,
         "tools": tools,
     }
-
-
-def collection_inventory(veneer: McpVeneer, preset: str = "vector-collections") -> list[dict]:
-    """Run a source preset against the veneer and shape each record as the
-    metadata document the preset declares (id/title/text/doc_type) — the
-    connector-side contract of ``mcp_source_presets.json``. Entitlement
-    scoping applies automatically because the records come through the
-    veneer's listing path."""
-    spec = SOURCE_PRESETS[preset]
-    out = getattr(veneer, spec["tool"])(action=spec["action"])
-    if "error" in out:
-        return []
-    docs = []
-    for name in out[spec["records_path"]]:
-        record = {spec["id_field"]: name}
-        docs.append(
-            {
-                "id": record[spec["id_field"]],
-                "title": record[spec["title_field"]],
-                "text": record[spec["text_field"]],
-                "doc_type": spec["doc_type"],
-            }
-        )
-    return docs

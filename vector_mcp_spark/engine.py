@@ -41,13 +41,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_mcp_spark.sanitize import sanitize_metadata_py, sanitize_text_py
-from vector_mcp_spark.schema import CATALOG_SCHEMA, DOCUMENT_SCHEMA
+from vector_mcp_spark.schema import DOCUMENT_SCHEMA
 from vector_mcp_spark.validation import (
     EngineError,
     validate_collection_name,
     validate_delete_confirm,
     validate_ingest_bounds,
     validate_metric,
+    validate_number_results,
     validate_query_vector,
     validate_sparse_weights,
     validate_stored_vector,
@@ -464,10 +465,6 @@ class CollectionEngine:
             return False  # vanished — the holder released it; retry normally
         return age > cls._LOCK_TTL_S
 
-    def _read_catalog(self) -> DataFrame:
-        """Catalog as a DataFrame (for callers that want to query it)."""
-        return self.spark.createDataFrame(self._catalog_rows(), CATALOG_SCHEMA)
-
     def _scoped(self, name: str) -> str:
         validate_collection_name(name)
         if self.tenant:
@@ -611,10 +608,9 @@ class CollectionEngine:
     def set_collection_distance(self, name: str, distance: str) -> None:
         """Switch the collection's distance config. The persisted index
         was built under the OLD metric, so :meth:`index_status` reports
-        ``stale`` until a rebuild — exactly the quantization-switch
-        contract: serving refuses rather than answering under the wrong
-        geometry, and the rebuild cleans any family the new config
-        obsoletes."""
+        ``stale`` until a rebuild: serving refuses rather than answering
+        under the wrong geometry, and the rebuild re-derives every family
+        under the new metric."""
         validate_metric(distance)
         scoped = self._require(name)
         with self._mutation_lock("__catalog__"):  # serialized RMW
@@ -879,18 +875,6 @@ class CollectionEngine:
         # concurrent stagers (threads or processes) collision-free.
         return Path(f"{table}_stage-{os.getpid()}-{uuid.uuid4().hex[:8]}")
 
-    def _overwrite_table(self, scoped: str, df: DataFrame) -> None:
-        # Parquet has no MERGE: stage to tmp dir then atomic-ish rename.
-        tmp = self._stage_dir(self._table_path(scoped))
-        try:
-            self._write_partitioned(str(tmp), df)
-            out = Path(self._table_path(scoped))
-            if out.exists():
-                shutil.rmtree(out)
-            tmp.rename(out)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-
     def _read_partitions(self, scoped: str, prefixes: Sequence[str]) -> DataFrame:
         """Read ONLY the partition directories the given id prefixes touch —
         the table's other bytes are never opened."""
@@ -1013,13 +997,15 @@ class CollectionEngine:
     # -- persistent search index (build offline / serve online) -------------
     #
     # The reference's engines keep server-side text/vector indexes (pg GIN,
-    # qdrant HNSW); the Spark analogue is a MATERIALIZED index the engine
+    # pgvector HNSW); the Spark analogue is a MATERIALIZED index the engine
     # builds offline and queries prune into: a postings table partitioned by
-    # term-hash bucket (lexical) and a sign-packed bits table (Hamming
-    # vector shortlist). Freshness is tracked against a table fingerprint so
-    # mutations flip the status to stale instead of silently serving old
-    # results — rebuild-offline / serve-online, the same contract as the
-    # streaming ANN index maintenance.
+    # term-hash bucket (sparse search) and a layered graph (dense search).
+    # Freshness is tracked against a table fingerprint so mutations flip the
+    # status to stale instead of silently serving old results.
+
+    #: families earlier builds wrote and nothing serves any more; a build
+    #: removes them so a rebuilt sidecar holds only what a request reads
+    _RETIRED_FAMILIES = ("vectors", "signs", "int8q", "ivfpq")
 
     def _index_root(self, scoped: str) -> Path:
         return Path(self._table_path(scoped) + "_index")
@@ -1027,45 +1013,22 @@ class CollectionEngine:
     def _table_fingerprint(self, scoped: str) -> str:
         return _files_fingerprint(Path(self._table_path(scoped)))
 
-    def build_search_index(self, name: str, quantization: str = "sign") -> dict:
-        """Materialize the search index families for a collection:
-        lexical postings, the quantized vector-shortlist table, the
-        HNSW-style graph, and IVF-PQ codes. Returns {"n_terms",
-        "n_vectors", "fingerprint"}.
-
-        ``quantization`` selects the vector-shortlist compression at build
-        (the per-collection ``quantization_config`` a qdrant user sets;
-        the reference's qdrant backend serves collections carrying it):
-        ``"sign"`` packs 64 dims into 16 bytes and shortlists by Hamming
-        (32×, two popcounts per candidate); ``"int8"`` stores per-vector
-        symmetric int8 codes + scale (4×, full-dimension approximate
-        cosine over dequantized codes — better shortlist fidelity and
-        exact dimension coverage at 8× the sign footprint). Exact re-rank
-        over the full vectors follows either way; the choice is recorded
-        in the manifest and honored by serve + repair."""
+    def build_search_index(self, name: str) -> dict:
+        """Materialize the search index families for a collection: the
+        term postings and per-document lengths that sparse search reads,
+        the HNSW-style graph that dense search descends, and the ``ids``
+        sidecar that repair proves append-only growth against. Returns
+        {"n_terms", "n_vectors", "fingerprint"}."""
         from vector_mcp_spark.operators.lexical import build_postings, term_bucket
-        from vector_mcp_spark.operators.quantize import quantize_int8, sign_pack
 
-        if quantization not in ("sign", "int8"):
-            raise EngineError(
-                "quantization_invalid",
-                detail=f"{quantization!r} not in ('sign', 'int8')",
-            )
         scoped = self._require(name)
         distance = self._locked_distance(scoped)
-        if distance != "cosine" and quantization == "sign":
-            # sign bits keep direction only; dot and l2 need magnitudes —
-            # non-cosine collections shortlist from int8 codes (and the
-            # quantization-switch cleanup below removes a stale sign family)
-            quantization = "int8"
-        # the coarse quantizer under the collection metric: l2 collections
-        # cluster by Euclidean distance; dot shares the cosine clustering
-        # (the standard MIPS compromise — the exact re-rank restores order)
-        coarse_metric = "l2" if distance == "l2" else "cosine"
         # every index family derives from one materialized corpus (the
         # eager checkpoint), never a rescan of the table per family
         df = self.read(name).localCheckpoint(eager=True)
         root = self._index_root(scoped)
+        for family in self._RETIRED_FAMILIES:
+            shutil.rmtree(root / family, ignore_errors=True)
         postings = build_postings(df.select("id", "content"), "id", "content").withColumn(
             "term_bucket", term_bucket("term")
         )
@@ -1073,8 +1036,7 @@ class CollectionEngine:
             str(root / "postings")
         )
         # named-sparse family: the (id, dlen) L1 norms that turn the tf
-        # postings into SPLADE-style sparse vectors (qdrant named sparse
-        # vectors served next to the dense families) — one tokenizer pass,
+        # postings into SPLADE-style sparse vectors — one tokenizer pass,
         # serve time never re-tokenizes
         from vector_mcp_spark.functions.text import tokens as _tokens
 
@@ -1082,24 +1044,6 @@ class CollectionEngine:
             "overwrite"
         ).parquet(str(root / "doclen"))
         vec_rows = df.where(F.col("embedding").isNotNull())
-        # indexes built before vectors were stored at insert kept a derived
-        # `vectors` family; nothing reads it any more
-        shutil.rmtree(root / "vectors", ignore_errors=True)
-        if quantization == "sign":
-            signs = sign_pack(vec_rows, "embedding", "id")
-            signs.select("id", "lo", "hi").write.mode("overwrite").parquet(
-                str(root / "signs")
-            )
-            shutil.rmtree(root / "int8q", ignore_errors=True)
-        else:
-            signs = quantize_int8(vec_rows, vec_col="embedding", id_col="id")
-            signs.select("id", "scale", "q").write.mode("overwrite").parquet(
-                str(root / "int8q")
-            )
-            shutil.rmtree(root / "signs", ignore_errors=True)
-        # a rebuild that switches quantization must not leave the previous
-        # family's table behind: it would never be read (the manifest pins
-        # the active family) but would silently bloat the sidecar
         # membership + per-row change sidecar: lets repair_search_index
         # prove the growth was append-only (old rows present AND unchanged
         # in their SERVED representation) without any full re-index
@@ -1110,17 +1054,15 @@ class CollectionEngine:
         # collection writes only _SUCCESS markers, which parquet cannot
         # re-read without a schema
         n_terms = postings.select("term").distinct().count()
-        n_vectors = signs.count()
-        # third index family: the HNSW-style layered graph (the engine-side
-        # analogue of pgvector `USING hnsw`, postgres.py:182-188) — built
-        # over the same ivf coarse quantizer the graph operator uses, and
-        # served by indexed_graph_search below
+        n_vectors = vec_rows.count()
+        # the dense family: the HNSW-style layered graph (the engine-side
+        # analogue of pgvector `USING hnsw`, postgres.py:182-188), built
+        # over an ivf coarse quantizer and served by indexed_graph_search
         graph_meta: dict = {"entry": None, "top_layer": 0}
-        ivfpq_meta: dict | None = None
         # the vector width this index serves — stamped into the manifest so
-        # NO serve path ever needs a per-query Spark job to learn it
-        # (VERDICT r12 item 2); the catalog lock is authoritative when set,
-        # measured from the data otherwise (content-only collections)
+        # NO serve path ever needs a per-query Spark job to learn it; the
+        # catalog lock is authoritative when set, measured from the data
+        # otherwise (content-only collections)
         dim_indexed: int | None = self._locked_dimension(scoped)
         if n_vectors:
             d = int(vec_rows.select(F.size("embedding").alias("d")).first().d)
@@ -1128,37 +1070,15 @@ class CollectionEngine:
                 dim_indexed = d
         if n_vectors >= 2:
             from vector_mcp_spark.operators.graph_ann import hnsw_build
-            from vector_mcp_spark.operators.pq import pq_build, pq_encode_with
             from vector_mcp_spark.operators.similarity import ivf_build
 
-            vecs = vec_rows.select("id", "embedding")
-            assigned, cents = ivf_build(
-                vecs, n_centroids=min(16, n_vectors), id_col="id", max_iter=2,
-                metric=coarse_metric,
+            # the coarse quantizer under the collection metric: l2
+            # collections cluster by Euclidean distance; dot shares the
+            # cosine clustering (the graph's exact scores restore order)
+            assigned, _ = ivf_build(
+                vec_rows.select("id", "embedding"), n_centroids=min(16, n_vectors),
+                id_col="id", max_iter=2, metric="l2" if distance == "l2" else "cosine",
             )
-            # fourth index family: IVF-PQ (FAISS IndexIVFPQ shape; the
-            # engine-side analogue of the reference engine's IVF-PQ index,
-            # epistemic_graph.py:5-9) — the SAME coarse quantizer as the
-            # graph family plus per-subspace codebooks; codes are persisted
-            # partitioned by cluster so a query's nprobe clusters prune
-            # partitions, and repair appends codes against the FROZEN
-            # centroids/codebooks (the streaming twin of this maintenance
-            # path lives at streaming/ingest.py ivfpq maintenance).
-            # Codes come from one projection over the assigned frame — the
-            # same frozen-codebook encoding repair appends with.
-            m = next(mm for mm in (4, 2, 1) if d % mm == 0)
-            n_codes = min(16, n_vectors)
-            _, codebooks = pq_build(vecs, m=m, n_codes=n_codes, id_col="id", iters=1)
-            codes = pq_encode_with(assigned, codebooks)
-            codes.select("id", "cluster", "codes").write.mode("overwrite").partitionBy(
-                "cluster"
-            ).parquet(str(root / "ivfpq"))
-            ivfpq_meta = {
-                "m": m,
-                "n_codes": n_codes,
-                "centroids": cents,
-                "codebooks": codebooks,
-            }
             # size the hash-bucket family to the collection: a tiny corpus
             # spread over 16 buckets yields singleton blocks → no candidate
             # pairs → a disconnected graph the beam can't traverse; ~128
@@ -1180,8 +1100,6 @@ class CollectionEngine:
                     "n_terms": n_terms,
                     "n_vectors": n_vectors,
                     "graph": graph_meta,
-                    "ivfpq": ivfpq_meta,
-                    "quantization": quantization,
                     "distance": distance,
                     # content-only collections never lock a dimension in the
                     # catalog; serve paths fall back to this for the
@@ -1196,8 +1114,8 @@ class CollectionEngine:
         """'absent' | 'fresh' | 'repaired' | 'stale' — stale when the table
         changed after the index was built (any mutation rewrites partition
         files); 'repaired' when the change was covered by an incremental
-        :meth:`repair_search_index` instead of a full rebuild (all three
-        families serve, but a rebuild restores the build-quality graph)."""
+        :meth:`repair_search_index` instead of a full rebuild (every family
+        serves, but a rebuild restores the build-quality graph)."""
         scoped = self._require(name)
         manifest = self._index_root(scoped) / "manifest.json"
         if not manifest.exists():
@@ -1205,11 +1123,11 @@ class CollectionEngine:
         import json
 
         meta = json.loads(manifest.read_text())
-        if "graph" not in meta or "ivfpq" not in meta:
-            # a pre-graph/pre-ivfpq-family index can't serve its whole
-            # search surface — report stale so status-polling automation
-            # rebuilds it (both families are written by every
-            # build_search_index since r9/r11)
+        if "graph" not in meta:
+            # a pre-graph index can't serve dense search — report stale so
+            # status-polling automation rebuilds it. Keys of families that
+            # are no longer built (``ivfpq``, ``quantization``) are ignored,
+            # so an index written before their removal stays servable.
             return "stale"
         if (meta.get("distance") or "cosine") != self._locked_distance(scoped):
             # set_collection_distance switched the geometry out from under
@@ -1225,9 +1143,9 @@ class CollectionEngine:
 
     @_serialized_mutation
     def repair_search_index(self, name: str) -> dict:
-        """Incrementally extend all three index families after APPEND-ONLY
-        growth — the alternative to a full :meth:`build_search_index` when a
-        batch landed on an indexed collection: new postings and sign rows
+        """Incrementally extend the index families after APPEND-ONLY growth
+        — the alternative to a full :meth:`build_search_index` when a batch
+        landed on an indexed collection: new postings and document lengths
         are appended, and the graph gets the batch HNSW-insert repair
         (:func:`~vector_mcp_spark.operators.graph_ann.hnsw_repair` — layer
         draws + beam-searched top-M links against the frozen graph).
@@ -1252,7 +1170,6 @@ class CollectionEngine:
 
         from vector_mcp_spark.operators.graph_ann import hnsw_repair
         from vector_mcp_spark.operators.lexical import build_postings, term_bucket
-        from vector_mcp_spark.operators.quantize import sign_pack
 
         scoped = self._require(name)
         root = self._index_root(scoped)
@@ -1266,7 +1183,7 @@ class CollectionEngine:
         if status in ("fresh", "repaired"):
             return {"repaired": 0, "n_vectors": manifest.get("n_vectors", 0)}
         graph_meta = manifest.get("graph") or {}
-        if "graph" not in manifest or "ivfpq" not in manifest or not (root / "ids").exists():
+        if "graph" not in manifest or not (root / "ids").exists():
             raise EngineError(
                 "index_repair_requires_rebuild",
                 detail="index predates incremental repair; rebuild",
@@ -1328,35 +1245,7 @@ class CollectionEngine:
                 "append"
             ).parquet(str(root / "doclen"))
         new_emb = new.where(F.col("embedding").isNotNull())
-        if manifest.get("quantization", "sign") == "sign":
-            sign_pack(new_emb, "embedding", "id").select("id", "lo", "hi").write.mode(
-                "append"
-            ).parquet(str(root / "signs"))
-        else:
-            from vector_mcp_spark.operators.quantize import quantize_int8
-
-            quantize_int8(new_emb, vec_col="embedding", id_col="id").select(
-                "id", "scale", "q"
-            ).write.mode("append").parquet(str(root / "int8q"))
         n_new_vecs = new_emb.count()
-        if n_new_vecs and manifest.get("ivfpq"):
-            # IVF-PQ family: encode the batch against the FROZEN coarse
-            # centroids + codebooks and append its (cluster-partitioned)
-            # codes — the batch-side twin of the streaming maintenance path
-            from vector_mcp_spark.operators.pq import pq_encode_with
-            from vector_mcp_spark.operators.similarity import assign_clusters
-
-            pq_meta = manifest["ivfpq"]
-            new_codes = pq_encode_with(
-                assign_clusters(
-                    new_emb.select("id", "embedding"), pq_meta["centroids"],
-                    metric="l2" if distance == "l2" else "cosine",
-                ),
-                pq_meta["codebooks"],
-            )
-            new_codes.select("id", "cluster", "codes").write.mode("append").partitionBy(
-                "cluster"
-            ).parquet(str(root / "ivfpq"))
         if n_new_vecs:
             old_vecs = (
                 df.join(indexed.select("id"), "id", "left_semi")
@@ -1412,21 +1301,6 @@ class CollectionEngine:
         if metric == "l2":
             return [score.asc_nulls_last(), tie.asc()]
         return [score.desc(), tie.asc()]
-
-    def indexed_lexical_search(self, name: str, query: str, k: int = 5) -> DataFrame:
-        """Serve a lexical query from the materialized index; refuses with
-        ``index_not_fresh`` when the index is absent or stale (never serve
-        silently wrong results — rebuild first); an incrementally
-        ``repaired`` index serves."""
-        from vector_mcp_spark.operators.lexical import indexed_lexical_topk
-
-        scoped = self._require(name)
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
-        return indexed_lexical_topk(
-            self.spark, str(self._index_root(scoped) / "postings"), query, k
-        )
-
 
     # -- named multi-vector collections (qdrant named-vectors parity) -------
     #
@@ -1629,6 +1503,7 @@ class CollectionEngine:
 
         scoped = self._require(name)
         cfg = self._named_cfg(scoped, vector_name)
+        k = validate_number_results(k)
         # NaN/Inf/empty refuse before routing: neither the scan nor the
         # graph route has a literal form for them
         question_vec = validate_query_vector(question_vec)
@@ -1720,6 +1595,7 @@ class CollectionEngine:
         search next to the dense index families. Same staleness contract
         as every indexed search. Returns (id, content, score) best-first."""
         scoped = self._require(name)
+        k = validate_number_results(k)
         if self.index_status(name) not in ("fresh", "repaired"):
             raise EngineError("index_not_fresh")
         hits = self._indexed_sparse_hits(scoped, query_weights, k)
@@ -1730,146 +1606,6 @@ class CollectionEngine:
             .orderBy(F.col("score").desc(), F.col("id").asc())
         )
 
-    def indexed_sparse_dense_search(
-        self,
-        name: str,
-        question_vec,
-        query_weights,
-        k: int = 10,
-        w_dense: float = 0.5,
-        w_sparse: float = 0.5,
-        rrf_k: int = 60,
-        ef: int = 48,
-        leg_k: int | None = None,
-    ) -> DataFrame:
-        """Sparse+dense hybrid served END TO END from the engine's
-        persisted index families: the dense leg beam-descends the graph
-        family under the collection's distance config, the sparse leg dots
-        the named-sparse postings, and weighted RRF fuses ≤ leg-k rows per
-        side (the qdrant named-vectors + ``Fusion.RRF`` composition the
-        suite's ``hybrid_sparse_dense`` entry oracles at corpus level)."""
-        from vector_mcp_spark.operators.hybrid import rrf_fuse
-
-        scoped = self._require(name)
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
-        leg = int(leg_k or k)
-        dense = self.indexed_graph_search(name, question_vec, k=leg, ef=ef).select(
-            "id", "score"
-        )
-        if self._locked_distance(scoped) == "l2":
-            # RRF is rank-based; rrf_fuse ranks legs score-DESC, so flip the
-            # ascending-better l2 distances into a descending-better key
-            dense = dense.withColumn("score", -F.col("score"))
-        sparse = self._indexed_sparse_hits(scoped, query_weights, leg)
-        fused = rrf_fuse(
-            [(dense, w_dense), (sparse, w_sparse)], k, rrf_k=rrf_k, id_col="id"
-        )
-        return (
-            self.read(name)
-            .join(F.broadcast(fused), "id")
-            .select("id", "content", "score")
-            .orderBy(F.col("score").desc(), F.col("id").asc())
-        )
-
-    def indexed_semantic_search(
-        self, name: str, question_vec, k: int = 5, shortlist: int = 100
-    ) -> DataFrame:
-        """Serve a vector query from the quantized-shortlist index, honoring
-        the collection's build-time ``quantization`` config: ``"sign"`` →
-        Hamming shortlist over the 16-byte-per-vector signs table; ``"int8"``
-        → approximate-cosine shortlist over dequantized int8 codes (the
-        full-precision vector column is read only for the shortlist re-rank
-        either way). Refuses when not fresh.
-
-        The sign packing covers the FIRST 64 dimensions on both the index
-        and the query path (shorter vectors zero-pad, extra dims don't
-        contribute to the shortlist); the int8 codes cover the full
-        dimension. The exact-cosine re-rank always uses the full vectors,
-        so recall degrades gracefully — it never errors — for dimensions
-        other than 64 under sign quantization."""
-        import json
-
-        from vector_mcp_spark.functions.vector import (
-            cosine_similarity,
-            dot,
-            l2_distance,
-            l2_norm,
-        )
-        from vector_mcp_spark.operators.quantize import dequantize_expr, sign_pack_py
-
-        scoped = self._require(name)
-        question_vec = validate_query_vector(question_vec)
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
-        manifest = json.loads((self._index_root(scoped) / "manifest.json").read_text())
-        metric = manifest.get("distance") or "cosine"
-        if metric != "cosine" and manifest.get("quantization", "sign") == "sign":
-            # unreachable through build_search_index (non-cosine builds
-            # force int8 — sign bits drop the magnitudes dot/l2 need), but
-            # a hand-edited manifest must refuse, not serve wrong geometry
-            raise EngineError(
-                "index_not_fresh",
-                detail="sign shortlist is cosine-only; rebuild under int8",
-            )
-        if manifest.get("quantization", "sign") == "sign":
-            qlo, qhi = sign_pack_py(question_vec)
-            signs = self.spark.read.parquet(str(self._index_root(scoped) / "signs"))
-            ham = F.bit_count(F.col("lo").bitwiseXOR(F.lit(qlo))) + F.bit_count(
-                F.col("hi").bitwiseXOR(F.lit(qhi))
-            )
-            short = (
-                signs.select("id", ham.alias("hamming"))
-                .orderBy(F.col("hamming").asc(), F.col("id").asc())
-                .limit(shortlist)
-            )
-        else:
-            codes = self.spark.read.parquet(str(self._index_root(scoped) / "int8q"))
-            # int8 covers the FULL dimension, so a mis-sized query makes
-            # every approximate cosine NULL and the isNotNull filter would
-            # silently answer empty (ADVICE r11) — refuse like the graph /
-            # IVF-PQ families instead. Content-only collections never lock
-            # a dimension, so fall back to the manifest's recorded width
-            # (stamped at build; VERDICT r12 item 2 — never a per-query
-            # Spark job just to learn the code width).
-            dim = self._locked_dimension(scoped)
-            if dim is None and manifest.get("dimension") is not None:
-                dim = int(manifest["dimension"])
-            if dim is not None and len(question_vec) != dim:
-                raise EngineError(
-                    "collection_vector_schema_mismatch",
-                    detail=f"query dimension {len(question_vec)} != indexed {dim}",
-                )
-            qarr = F.array(*[F.lit(x) for x in question_vec])
-            deq = dequantize_expr("q", "scale")
-            if metric == "cosine":
-                approx = cosine_similarity(deq, qarr)
-            elif metric == "dot":
-                approx = dot(deq, qarr)
-            else:
-                approx = l2_distance(deq, qarr)
-            short = (
-                codes.select("id", approx.alias("_approx"))
-                .where(F.col("_approx").isNotNull())
-                .orderBy(*self._metric_order(metric, F.col("_approx"), F.col("id")))
-                .limit(shortlist)
-                .drop("_approx")
-            )
-        df = self.read(name)
-        qv = F.array(*[F.lit(x) for x in question_vec])
-        if metric == "cosine":
-            sim = dot(F.col("embedding"), qv) / (l2_norm(F.col("embedding")) * l2_norm(qv))
-        elif metric == "dot":
-            sim = dot(F.col("embedding"), qv)
-        else:
-            sim = l2_distance(F.col("embedding"), qv)
-        return (
-            df.join(F.broadcast(short), "id")
-            .select("id", "content", F.round(sim, 6).alias("score"))
-            .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
-            .limit(k)
-        )
-
     def indexed_graph_search(
         self, name: str, question_vec, k: int = 5, ef: int = 48
     ) -> DataFrame:
@@ -1877,22 +1613,22 @@ class CollectionEngine:
         (operators/graph_ann.py): beam-descend the persisted edge table
         from the index's entry point, exact-cosine re-rank the final beam.
         Refuses when the index is absent or stale — same contract as the
-        postings and sign-bit families. Collections with < 2 vectors have
+        sparse search. Collections with < 2 vectors have
         no graph; the query answers empty (nothing to traverse). A warm
         serve set within the session broadcast bound answers in-process
         (no Spark job); a larger one runs the prepared SQL descent."""
         import json
 
         scoped = self._require(name)
+        k = validate_number_results(k)
         question_vec = validate_query_vector(question_vec)
         dim = self._locked_dimension(scoped)
         if dim is not None and len(question_vec) != dim:
             # zip_with against a shorter/longer query pads with NULL, making
             # every cosine NULL — the beam and top-k would return k arbitrary
-            # rows with NULL scores instead of an error (ADVICE r9). The
-            # sign-bit path degrades gracefully by construction; this one
-            # cannot, so refuse with the same stable code the ingest gate
-            # uses for width violations.
+            # rows with NULL scores instead of an error (ADVICE r9) — refuse
+            # with the same stable code the ingest gate uses for width
+            # violations.
             raise EngineError(
                 "collection_vector_schema_mismatch",
                 detail=f"query dimension {len(question_vec)} != locked {dim}",
@@ -2007,75 +1743,6 @@ class CollectionEngine:
             + ("" if rows else " WHERE false")
         )
 
-    def indexed_ivfpq_search(
-        self, name: str, question_vec, k: int = 5, nprobe: int = 4, shortlist: int = 50
-    ) -> DataFrame:
-        """Serve a vector query from the persisted IVF-PQ index (the FAISS
-        ``IndexIVFPQ`` serving path; engine-side analogue of the reference
-        engine's IVF-PQ index, ``epistemic_graph.py:5-9``): coarse probe
-        over the manifest's centroid table → ADC shortlist over the probed
-        clusters' code partitions (4 B/vector reads, partition-pruned) →
-        exact-cosine re-rank of ``shortlist`` rows. Refuses with
-        ``index_not_fresh`` when the index is absent, stale, or predates
-        the IVF-PQ family — same contract as the other three families.
-        Collections with < 2 vectors at build have no codes; the query
-        answers empty."""
-        import json
-
-        from vector_mcp_spark.operators.pq import ann_ivf_adc_rerank_topk
-
-        scoped = self._require(name)
-        question_vec = validate_query_vector(question_vec)
-        dim = self._locked_dimension(scoped)
-        if dim is not None and len(question_vec) != dim:
-            # same refusal as indexed_graph_search: a mis-sized query would
-            # silently mis-probe (short zip folds), not error
-            raise EngineError(
-                "collection_vector_schema_mismatch",
-                detail=f"query dimension {len(question_vec)} != locked {dim}",
-            )
-        if self.index_status(name) not in ("fresh", "repaired"):
-            raise EngineError("index_not_fresh")
-        manifest = json.loads((self._index_root(scoped) / "manifest.json").read_text())
-        if "ivfpq" not in manifest:
-            # guards the manifest-rewritten-between-reads race, like the
-            # graph-family re-check in indexed_graph_search
-            raise EngineError("index_not_fresh", detail="ivfpq family missing; rebuild")
-        pq_meta = manifest.get("ivfpq")
-        if pq_meta is None:
-            return self.spark.createDataFrame([], "id string, content string, score double")
-        # the index itself knows its dimension (m subspaces × sub-dim
-        # codebook centroids) — refuse mis-sized queries even when the
-        # collection never locked a dimension (_locked_dimension is None)
-        indexed_dim = pq_meta["m"] * len(pq_meta["codebooks"][0][0])
-        if len(question_vec) != indexed_dim:
-            raise EngineError(
-                "collection_vector_schema_mismatch",
-                detail=f"query dimension {len(question_vec)} != indexed {indexed_dim}",
-            )
-        codes = self.spark.read.parquet(str(self._index_root(scoped) / "ivfpq"))
-        df = self.read(name)
-        corpus = df.where(F.col("embedding").isNotNull()).select("id", "embedding")
-        metric = manifest.get("distance") or "cosine"
-        hits = ann_ivf_adc_rerank_topk(
-            codes.select("id", "cluster"),
-            codes.select("id", "codes"),
-            pq_meta["centroids"],
-            pq_meta["codebooks"],
-            corpus,
-            question_vec,
-            k,
-            shortlist=shortlist,
-            nprobe=nprobe,
-            id_col="id",
-            metric=metric,
-        ).select("id", "score")
-        return (
-            df.join(F.broadcast(hits), "id")
-            .select("id", "content", "score")
-            .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
-        )
-
     def indexed_filtered_search(
         self,
         name: str,
@@ -2151,6 +1818,7 @@ class CollectionEngine:
                         f"got {sorted(value)}",
                     )
         scoped = self._require(name)
+        k = validate_number_results(k)
         question_vec = validate_query_vector(question_vec)
         dim = self._locked_dimension(scoped)
         if dim is not None and len(question_vec) != dim:
@@ -2242,46 +1910,6 @@ class CollectionEngine:
             .select("id", "content", "score")
             .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
         )
-
-    def profile_collection(self, name: str) -> DataFrame:
-        """Data-quality profile of a collection: per-signal row/null counts,
-        range, and totals over derived numeric signals (content length,
-        embedding norm, metadata key count) — the pre-training dashboard a
-        corpus owner checks before feeding a 100 TB collection downstream.
-        One unpivoted pass over the table (operators/profile.py)."""
-        from vector_mcp_spark.functions.vector import l2_norm
-        from vector_mcp_spark.operators.profile import profile_columns
-
-        df = self.read(name).select(
-            F.length("content").cast("double").alias("content_len"),
-            l2_norm(F.col("embedding")).alias("embedding_norm"),
-            F.size(F.map_keys(F.coalesce(F.col("metadata"), F.expr("map()"))))
-            .cast("double")
-            .alias("n_metadata_keys"),
-        )
-        return profile_columns(df, ["content_len", "embedding_norm", "n_metadata_keys"])
-
-    @_serialized_mutation
-    def compact_collection(self, name: str, target_files: int | None = None) -> int:
-        """Pack each id-prefix partition bucket into a single parquet file.
-        Incremental upserts accrete one file per batch per touched bucket; at
-        scale the small-files problem dominates scan planning, so compaction
-        is a first-class maintenance op (the Parquet stand-in for Delta
-        OPTIMIZE). ``target_files`` is retained for API compatibility; the
-        unit of compaction is the partition bucket. Returns the total parquet
-        file count after the rewrite."""
-        scoped = self._require(name)
-        df = self.read(name)
-        # hash-repartition by bucket: each bucket lands wholly in one task,
-        # so the partitioned write emits exactly one file per bucket dir
-        packed = (
-            df.withColumn(_PART_COL, _prefix_of(F.col("id")))
-            .repartition(F.col(_PART_COL))
-            .drop(_PART_COL)
-        )
-        self._overwrite_table(scoped, packed)
-        out = Path(self._table_path(scoped))
-        return sum(1 for _ in out.rglob("*.parquet"))
 
     @_serialized_mutation
     def update_documents(self, name: str, df: DataFrame) -> None:
@@ -2685,29 +2313,6 @@ class CollectionEngine:
         cond = (F.col("band") >= lo_band) & (F.col("band") <= hi_band)
         cond = cond & self._range_scan_cond(F.col("value"), bounds)
         return idx.where(cond).select("id")
-
-    def count_by_payload_range(
-        self,
-        name: str,
-        key: str,
-        gte: float | None = None,
-        lte: float | None = None,
-        gt: float | None = None,
-        lt: float | None = None,
-    ) -> int:
-        """Range-filtered count under the full qdrant ``Range`` bound set
-        (gt/gte/lt/lte, at least one) served from the range index when
-        fresh, else from the table scan — never wrong, at worst
-        unaccelerated."""
-        scoped = self._require(name)
-        self._validate_payload_key(key)
-        bounds = self._validate_range_bounds(gte=gte, lte=lte, gt=gt, lt=lt)
-        allowed = self._range_allowed_ids(scoped, key, bounds)
-        if allowed is not None:
-            return allowed.count()
-        # try_cast: ANSI mode would otherwise throw on non-numeric values
-        val = F.col("metadata")[key].try_cast("double")
-        return self.count_documents(name, where=self._range_scan_cond(val, bounds))
 
     #: the full qdrant ``Range`` bound set (qdrant.py filter grammar)
     _RANGE_BOUND_KEYS = ("gt", "gte", "lt", "lte")

@@ -60,12 +60,6 @@ def _sq_norm_sql(ref: str, dim: int) -> str:
     )
 
 
-def _dot_fixed_sql(ra: str, rb: str, dim: int) -> str:
-    return " + ".join(
-        f"(CAST({ra}[{i}] AS DOUBLE) * CAST({rb}[{i}] AS DOUBLE))" for i in range(dim)
-    )
-
-
 def _as_double_array(col: Column | str) -> Column:
     col = F.col(col) if isinstance(col, str) else col
     return F.transform(col, lambda x: x.cast("double"))
@@ -221,19 +215,3 @@ def l2_distance_lit(col: Column | str, vec: Sequence[float]) -> Column:
     )
     # same NULL-propagating clamp as l2_distance (greatest swallows NULLs)
     return F.sqrt(F.when(inner < F.lit(0.0), F.lit(0.0)).otherwise(inner))
-
-
-def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Codegen'd column×column dot for a known dimension; same
-    left-associative summation order as ``dot`` — bit-equal results."""
-    ra, rb = _ref_sql(a), _ref_sql(b)
-    if ra is not None and rb is not None and dim > 0:
-        return F.expr(_dot_fixed_sql(ra, rb, dim))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    acc: Column | None = None
-    for i in range(dim):
-        term = a[i].cast("double") * b[i].cast("double")
-        acc = term if acc is None else acc + term
-    return acc if acc is not None else F.lit(0.0)
-

@@ -300,31 +300,6 @@ def parse_video_meta(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(media: DataFrame, width: int, height: int, deterministic_fake: bool = True) -> DataFrame:
-    """Image resize seam: returns (media_id, data binary, meta) with updated
-    dimensions. Fake mode passes bytes through and rewrites meta (the
-    plumbing — struct rebuild, schema — is what's under test)."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not deterministic_fake:
-                raise NotImplementedError("image resize requires PIL")
-            yield pdf
-
-    out = media.where(F.col("kind") == "image").mapInPandas(
-        _resize, schema=MEDIA_SCHEMA
-    )
-    return out.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.mime").alias("mime"),
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        ),
-    )
-
-
 def sample_frames(media: DataFrame, every_ms: int = 1000, deterministic_fake: bool = True) -> DataFrame:
     """Video frame sampling seam: one row per sampled frame
     (media_id, frame_idx, frame_ts_ms, frame binary). Fake mode emits

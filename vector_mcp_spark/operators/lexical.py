@@ -424,37 +424,6 @@ def term_bucket(term) -> "F.Column":
     return F.substring(F.sha2(t, 256), 1, 2)
 
 
-def indexed_lexical_topk(
-    spark,
-    postings_path: str,
-    query: str,
-    k: int,
-) -> DataFrame:
-    """Term-frequency search served FROM the materialized postings index:
-    (id, score). Query terms hash to their partition buckets driver-side,
-    so the scan opens only the handful of ``term_bucket=XX`` directories
-    the query touches — the corpus text is never read. Result-identical to
-    ``lexical_tf_topk`` over the source table (a test pins it)."""
-    import hashlib
-
-    terms = _distinct_terms(query)
-    if not terms:
-        empty = spark.createDataFrame([], "id string, score double")
-        return empty
-    buckets = sorted({hashlib.sha256(t.encode()).hexdigest()[:2] for t in terms})
-    # explicit schema: an empty index dir holds only a _SUCCESS marker,
-    # which schema inference cannot read
-    idx = spark.read.schema("term string, id string, tf bigint, term_bucket string").parquet(
-        postings_path
-    ).where(F.col("term_bucket").isin(buckets) & F.col("term").isin(list(terms)))
-    return (
-        idx.groupBy("id")
-        .agg(F.sum("tf").cast("double").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("id").asc())
-        .limit(k)
-    )
-
-
 def phrase_topk(
     docs: DataFrame,
     phrase: str,

@@ -65,18 +65,6 @@ def pack_sequences(
     )
 
 
-def packing_stats(assignments: DataFrame) -> DataFrame:
-    """Per writer: sequences started, documents packed, straddle count —
-    the shard-balance dashboard for a packing run. Pure partial-agg groupBy."""
-    return assignments.groupBy("writer").agg(
-        F.count("*").alias("n_docs"),
-        (F.max("seq_id") + 1).cast("long").alias("n_seqs"),
-        F.sum(F.when(F.col("seq_offset") > 0, 0).otherwise(1)).cast("long").alias(
-            "n_boundary_starts"
-        ),
-    )
-
-
 def _hash_u01(id_col: str, salt: str = "mix") -> F.Column:
     """Deterministic uniform [0, 1) draw per id (sha256-based, so the
     DuckDB oracle replays every sampling decision)."""

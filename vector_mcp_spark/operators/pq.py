@@ -32,9 +32,8 @@ def pq_encode_with(
     df: DataFrame, codebooks: list[list[list[float]]], emb_col: str = "embedding"
 ) -> DataFrame:
     """Encode against FROZEN codebooks (adds ``codes`` array<int>): the
-    serving-path half of PQ, shared by the offline build's Lloyd loop and
-    online streaming index maintenance. Ties go to the lowest code index
-    (np.argmin), keeping the SQL replay exact."""
+    encoding step of :func:`pq_build`'s Lloyd loop. Ties go to the lowest
+    code index (np.argmin), keeping the SQL replay exact."""
     from pyspark.sql.functions import pandas_udf
 
     m = len(codebooks)

@@ -185,16 +185,3 @@ def binary_hamming_topk(
         .where(F.col("rank") <= k)
         .select("query_id", F.col("rank").cast("int"), "neighbor_id", F.round("_s", 6).alias("score"))
     )
-
-
-def sign_pack_py(vec) -> tuple[int, int]:
-    """Driver-side twin of ``sign_pack`` for query vectors: (lo, hi).
-
-    Mirrors ``_half_bits``'s element_at semantics exactly: dimensions past
-    len(vec) read as 0 (element_at returns NULL → bit unset), and dimensions
-    beyond 64 are ignored on BOTH paths — the packed index covers the first
-    64 dims only (documented at engine.indexed_semantic_search)."""
-    n = len(vec)
-    lo = sum(1 << i for i in range(32) if i < n and vec[i] > 0)
-    hi = sum(1 << i for i in range(32) if 32 + i < n and vec[32 + i] > 0)
-    return lo, hi

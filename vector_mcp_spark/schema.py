@@ -38,20 +38,3 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), nullable=True),
     ]
 )
-
-CATALOG_SCHEMA = T.StructType(
-    [
-        T.StructField("collection_name", T.StringType(), nullable=False),
-        T.StructField("table_name", T.StringType(), nullable=False),
-        T.StructField("dimension", T.IntegerType(), nullable=True),
-        T.StructField("created_at", T.TimestampType(), nullable=True),
-        # Legacy marker: True only for a collection written by an older
-        # engine that stored rows without vectors (current engines embed at
-        # insert). CollectionEngine.read upgrades such a collection once and
-        # clears it; a catalog predating the column reads as True.
-        T.StructField("needs_embed", T.BooleanType(), nullable=False),
-        # Per-collection scoring convention ("cosine" | "dot" | "l2");
-        # NULL = created before the distance column existed → cosine.
-        T.StructField("distance", T.StringType(), nullable=True),
-    ]
-)

@@ -145,11 +145,6 @@ def read_documents(
     )
 
 
-def inline_documents(spark: SparkSession, contents: Sequence[str]) -> DataFrame:
-    """Inline document contents (the reference's ``document_contents`` input)."""
-    return spark.createDataFrame([(c,) for c in contents], "content string")
-
-
 def chunk_documents(
     docs: DataFrame,
     content_col: str = "content",
@@ -190,40 +185,4 @@ def chunk_documents(
         F.concat(F.col(id_col).cast("string"), F.lit("_"), F.col("_chunk.pos").cast("string")).alias("chunk_id"),
         F.col("_chunk.pos").alias("chunk_pos"),
         F.col("_chunk.chunk").alias("chunk_text"),
-    )
-
-
-def read_structured_documents(
-    spark: SparkSession,
-    paths: Sequence[str],
-    fmt: str = "jsonl",
-    text_field: str = "text",
-    id_field: str | None = None,
-):
-    """Line-structured corpus reader: JSONL (the training-data interchange
-    format) or headered CSV. Returns (id, content, …metadata columns).
-
-    Unlike the binaryFile whole-file path (`read_documents`), line-based
-    sources SPLIT — a 100 GB shard is scanned by many tasks in parallel,
-    which is the only viable read shape for a 100 TB corpus. Extra fields
-    ride along as metadata columns untouched. Without ``id_field`` the id
-    is the content hash (the reference's content-addressed id semantics,
-    vector_mcp/vector_api.py:303-317).
-    """
-    from vector_mcp_spark.functions.hashing import content_hash_id
-
-    if fmt == "jsonl":
-        df = spark.read.json(list(paths))
-    elif fmt == "csv":
-        df = spark.read.option("header", "true").csv(list(paths))
-    else:
-        raise EngineError("document_format_unsupported")
-    if text_field not in df.columns:
-        raise EngineError("document_text_field_missing")
-    id_expr = (
-        F.col(id_field).cast("string") if id_field else content_hash_id(F.col(text_field))
-    )
-    meta = [c for c in df.columns if c not in (text_field, id_field)]
-    return df.select(
-        id_expr.alias("id"), F.col(text_field).alias("content"), *meta
     )

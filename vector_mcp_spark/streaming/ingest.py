@@ -164,79 +164,6 @@ def streaming_dedup_ingest(docs: DataFrame, watermark_col: str | None = None, wa
     return out.dropDuplicates(["id"])
 
 
-def stream_ingest_into_collection(
-    stream_docs: DataFrame,
-    engine,
-    collection: str,
-    checkpoint_dir: str,
-):
-    """End-to-end streaming ingest INTO a collection: each micro-batch of a
-    (already sanitized/deduped — compose ``streaming_dedup_ingest``
-    upstream) Document-schema stream merges through the engine's
-    partition-pruned upsert inside ``foreachBatch``.
-
-    Effectively-once: the sink's write is an idempotent id-keyed upsert, so
-    a batch replayed after a checkpoint-recovery produces the identical
-    table state — the standard Structured Streaming exactly-once recipe of
-    checkpointed offsets + idempotent sink (reference ingest semantics
-    ``vector_mcp/vectordb/base.py:139-172``, continuous form). Runs
-    availableNow and blocks until the backlog is drained.
-    """
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        engine.update_documents(collection, batch_df)
-
-    q = (
-        stream_docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def stream_index_maintenance(
-    stream_vecs: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    index_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "id",
-    emb_col: str = "embedding",
-):
-    """ANN index maintenance as a stream: each micro-batch of new vectors
-    gets its IVF cluster assignment AND its PQ codes (against the FROZEN
-    codebooks — the standard serving pattern: rebuild offline, assign
-    online) and appends to the index table partitioned by cluster, so
-    queries keep pruning partitions as data arrives. The assignment kernels
-    are the same Arrow-batched ones the batch builders use; nothing here
-    shuffles — partitionBy on write routes rows to their cluster files.
-
-    Runs availableNow and blocks; re-running with the same checkpoint is a
-    no-op (exactly-once file-sink semantics).
-    """
-    from vector_mcp_spark.operators.pq import pq_encode_with
-    from vector_mcp_spark.operators.similarity import assign_clusters
-
-    def _prep(df: DataFrame) -> DataFrame:
-        assigned = assign_clusters(df, centroids, emb_col=emb_col)
-        return pq_encode_with(assigned, codebooks, emb_col=emb_col)
-
-    q = (
-        _prep(stream_vecs)
-        .writeStream.format("parquet")
-        .option("path", index_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("cluster")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
 
 def interval_join_events(
     left: DataFrame,
@@ -497,94 +424,3 @@ def streaming_distinct_sketch(
     return hashed.groupBy("g").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-
-
-def stream_postings_maintenance(
-    stream_docs: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "id",
-    content_col: str = "content",
-):
-    """Lexical postings-index maintenance as a stream — the text-side twin
-    of :func:`stream_index_maintenance`: each micro-batch of NEW documents
-    tokenizes to its (term, id, tf) postings and appends to the postings
-    table partitioned by ``term_bucket``. The bucket family is the sha-hash
-    the offline build uses (``operators/lexical.term_bucket``) — a frozen
-    dictionary by construction: ``bucket(term)`` never changes across
-    builds or batches, so query-term lookups keep pruning partitions as
-    documents arrive and the appended rows land in exactly the files a
-    rebuild would put them in.
-
-    Per-batch tf aggregation runs inside ``foreachBatch`` (the groupBy is
-    bounded by the batch — no streaming state), mirroring the engine's
-    append-only postings repair (``engine.repair_search_index``).
-    Runs availableNow and blocks; re-running with the same checkpoint
-    appends nothing (checkpointed batch offsets).
-    """
-    from vector_mcp_spark.operators.lexical import build_postings, term_bucket
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        postings = build_postings(
-            batch_df.select(id_col, content_col), id_col, content_col
-        ).withColumn("term_bucket", term_bucket("term"))
-        postings.write.mode("append").partitionBy("term_bucket").parquet(index_dir)
-
-    q = (
-        stream_docs.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def stream_sparse_index_maintenance(
-    stream_docs: DataFrame,
-    postings_dir: str,
-    doclen_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "id",
-    content_col: str = "content",
-):
-    """Named-sparse-family maintenance as a stream — the streaming twin of
-    the engine's sparse repair path (VERDICT r12 item 4): each micro-batch
-    of NEW documents appends BOTH tables the family serves from — the
-    (term, id, tf) postings partitioned by the frozen ``term_bucket``
-    dictionary AND the (id, dlen) L1 norms the SPLADE-style scorer divides
-    by (``operators/vecapi.indexed_sparse_dot_topk``). Maintaining only
-    the postings (``stream_postings_maintenance``) would make streamed
-    docs score differently from a batch rebuild: the serve-time join on
-    doclen is INNER, so a missing norm row drops the doc entirely.
-
-    Within a batch the doclen append lands FIRST: if the job dies between
-    the two writes, the half-indexed doc is merely ABSENT (postings row
-    missing → never scored) rather than wrongly scored — and the
-    checkpoint replays the batch on restart. One tokenizer pass feeds both
-    tables. Runs availableNow and blocks; re-running with the same
-    checkpoint appends nothing (checkpointed batch offsets)."""
-    from vector_mcp_spark.functions.text import tokens as _tokens
-    from vector_mcp_spark.operators.lexical import build_postings, term_bucket
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        docs = batch_df.select(id_col, content_col)
-        docs.select(
-            id_col, F.size(_tokens(F.col(content_col))).alias("dlen")
-        ).write.mode("append").parquet(doclen_dir)
-        build_postings(docs, id_col, content_col).withColumn(
-            "term_bucket", term_bucket("term")
-        ).write.mode("append").partitionBy("term_bucket").parquet(postings_dir)
-
-    q = (
-        stream_docs.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

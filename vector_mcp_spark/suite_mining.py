@@ -633,8 +633,8 @@ def q_events_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # The scan-based lexical_tf scores by filtering each row's token array;
 # this entry scores from the inverted (term, id, tf) representation — the
-# aggregation path `engine.indexed_lexical_search` serves from its
-# persisted index. Same semantics, different plan family; the oracle uses
+# shape of the engine's persisted postings family. Same semantics,
+# different plan family; the oracle uses
 # the unnested-token formulation, so the two must agree.
 
 _IDX_TF_ORACLE = f"""
