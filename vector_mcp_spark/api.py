@@ -115,14 +115,15 @@ class VectorSearchApi:
             docs, cleaned, number_results, id_col="id", content_col="content"
         )
         # ranked is ≤ N*k rows — broadcast it against the (big) docs payload.
-        # The limit is exact (each query yields at most k rows) and makes the
+        # Its rank already orders each query by (score desc, id asc). The
+        # limit is exact (each query yields at most k rows) and makes the
         # sort a TakeOrderedAndProject: no range-sampling job on the serve path
         return (
             docs.select("id", "content")
             .join(F.broadcast(ranked), "id")
-            .select("query_id", "id", "content", "score")
-            .orderBy(F.col("query_id").asc(), F.col("score").desc(), F.col("id").asc())
+            .orderBy("query_id", "rank")
             .limit(len(cleaned) * number_results)
+            .select("query_id", "id", "content", "score")
         )
 
     def search(
