@@ -80,16 +80,25 @@ def test_empty_questions_rejected(api):
 def test_plan_build_launches_no_jobs(api, spark):
     """Building the search DAG must not run any Spark job (the old
     ``WHERE embedding IS NULL LIMIT 1`` probe cost an extra table scan per
-    query before the search even started)."""
+    query before the search even started). The first scan of a table
+    version sizes (and here collects) its driver copy; after it neither
+    the driver route nor, with broadcasting off, the Spark plans' build
+    runs a job."""
+    prev = spark.conf.get(_BOUND)
     sc = spark.sparkContext
-    sc.setJobGroup("plan_only_probe", "api plan build")
-    try:
-        api.search("kb", "database search", number_results=3)
-        api.semantic_search("kb", ["data"], number_results=2)
-        api.lexical_search("kb", ["data"], number_results=2)
-    finally:
-        sc.setJobGroup("", "")
-    assert sc.statusTracker().getJobIdsForGroup("plan_only_probe") == []
+    for bound in (prev, "-1"):
+        spark.conf.set(_BOUND, bound)
+        try:
+            fresh = VectorSearchApi(CollectionEngine(spark, str(api.engine.root)))
+            fresh.lexical_search("kb", ["warm"], number_results=1)
+            sc.setJobGroup("plan_only_probe", "api plan build")
+            fresh.search("kb", "database search", number_results=3)
+            fresh.semantic_search("kb", ["data"], number_results=2)
+            fresh.lexical_search("kb", ["data"], number_results=2)
+        finally:
+            sc.setJobGroup("", "")
+            spark.conf.set(_BOUND, prev)
+        assert sc.statusTracker().getJobIdsForGroup("plan_only_probe") == []
 
 
 def test_legacy_collection_upgrades_once_on_first_read(spark, tmp_path_factory):
@@ -251,46 +260,228 @@ def test_semantic_search_defaults_to_collection_distance(spark, tmp_path):
 
 def test_lexical_search_answers_best_first_without_an_extra_job(spark, tmp_path_factory):
     """Lexical rows come back per query by (score desc, id asc): equal
-    scores break on id, not on the file listing. The bounded sort plans as
-    a TakeOrderedAndProject, so a warm MCP lexical_search still runs the
-    three Spark jobs it ran unordered — no range-sampling job."""
+    scores break on id, not on the file listing. On the Spark route (no
+    driver copy: broadcasting off) the bounded sort plans as a
+    TakeOrderedAndProject, so a warm MCP lexical_search still runs the
+    three Spark jobs it ran unordered — no range-sampling job; on the
+    driver copy it runs none. Both routes give the same rows."""
     from vector_mcp_spark.mcp import McpVeneer
 
+    next_job_id = _job_counter(spark)
+    root = str(tmp_path_factory.mktemp("lex_order"))
+    eng = CollectionEngine(spark, root)
+    eng.create_collection("lex")
+    eng.add_documents(
+        "lex",
+        [f"spark tie doc {i}" for i in range(12)] + ["spark spark best doc", "unrelated words"],
+    )
+    every_tie = sorted(r.id for r in eng.read("lex").collect() if "tie" in r.content)
+
+    def route(bound: str, warm_jobs: int) -> list:
+        prev = spark.conf.get(_BOUND)
+        spark.conf.set(_BOUND, bound)
+        try:
+            api = VectorSearchApi(CollectionEngine(spark, root))
+            ven = McpVeneer(api.engine, api)
+            ordered = api.lexical_search("lex", ["spark", "tie"], number_results=5)
+            plan = ordered._jdf.queryExecution().executedPlan().toString()
+            assert ("TakeOrderedAndProject" in plan) == (bound == "-1")
+            rows = ordered.collect()
+            assert [r.query_id for r in rows] == [0] * 5 + [1] * 5
+            assert rows[0].content == "spark spark best doc" and rows[0].score == 2.0
+            for q in (0, 1):
+                got = [(-r.score, r.id) for r in rows if r.query_id == q]
+                assert got == sorted(got)
+            assert [r.id for r in rows if r.query_id == 1] == every_tie[:5]
+
+            def call() -> list:
+                out = ven.vector_search(
+                    "lexical_search", collection_name="lex", question="spark", number_results=5
+                )
+                return [r["id"] for r in out["results"]]
+
+            call()  # warm: the listed frame and the plan caches
+            before = next_job_id()
+            assert call() == [r.id for r in rows if r.query_id == 0]
+            assert next_job_id() - before == warm_jobs
+            return rows
+        finally:
+            spark.conf.set(_BOUND, prev)
+
+    assert route("-1", 3) == route(spark.conf.get(_BOUND), 0)
+
+
+# -- the driver copy of a table version against the Spark plans -------------
+
+_BOUND = "spark.sql.autoBroadcastJoinThreshold"
+#: stored vectors the equality pins need by construction: equal-score ties,
+#: a rounding tie (cosine 1.0 and 0.999999995 both round to 1.0), a
+#: zero-norm row (cosine scores it NULL) and a query-equal row (l2 clamp)
+_PINNED_VECS = {
+    "tie alpha spark": [0.5, 0.5, 0.5, 0.5],
+    "tie beta spark": [0.5, 0.5, 0.5, 0.5],
+    "near exact": [1.0, 0.0, 0.0, 0.0],
+    "near rounded": [1.0, 1e-4, 0.0, 0.0],
+    "zero norm doc": [0.0, 0.0, 0.0, 0.0],
+}
+_SCAN_DOCS = [
+    *_PINNED_VECS,
+    "\ufb01le \ufb01nder for spark",  # the ﬁ ligature: lower keeps it, casefold does not
+    "\u212aelvin scale readings",  # the Kelvin sign lowers to ASCII k
+    "\u0130stanbul spark meetup",  # dotted İ lowers to i + U+0307
+    "spark spark spark heavy doc",
+    "data lake search engine",
+    "tie gamma words",
+    "vector search over data",
+]
+_SCAN_QUESTIONS = [
+    "spark", "near exact", "tie spark", "file finder", "\ufb01le", "kelvin", "stanbul",
+    "zzzz qqqq", "a ! ?", "data search spark",
+]
+
+
+def _scan_model(texts):
+    """Pinned vectors for the pinned texts; a signed hash vector otherwise."""
+    from vector_mcp_spark.functions.embedder import hash_embed
+
+    return [_PINNED_VECS.get(t) or [2 * x - 1 for x in hash_embed(t, 4)] for t in texts]
+
+
+def _job_counter(spark):
     sc = spark.sparkContext._jsc.sc()
 
     def next_job_id() -> int:
         sc.listenerBus().waitUntilEmpty()
         return int(sc.dagScheduler().nextJobId())
 
-    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("lex_order")))
-    eng.create_collection("lex")
-    eng.add_documents(
-        "lex",
-        [f"spark tie doc {i}" for i in range(12)] + ["spark spark best doc", "unrelated words"],
-    )
+    return next_job_id
+
+
+def _rows(df, sort=False) -> tuple:
+    rows = [tuple(r) for r in df.collect()]
+    return df.dtypes, sorted(rows, key=lambda r: r[:2]) if sort else rows
+
+
+def _spark_route(spark, root, calls) -> list:
+    """Each call answered by a fresh engine with broadcasting off, so no
+    table version fits the driver bound and the Spark plans serve."""
+    prev = spark.conf.get(_BOUND)
+    spark.conf.set(_BOUND, "-1")
+    try:
+        api = VectorSearchApi(CollectionEngine(spark, root, embed_model=_scan_model))
+        out = [_rows(call(api), sort) for call, sort in calls]
+        assert api.engine.describe_collection("scan")["scan_serve"] == "spark"
+        return out
+    finally:
+        spark.conf.set(_BOUND, prev)
+
+
+@pytest.mark.parametrize("distance", ["cosine", "dot", "l2"])
+def test_driver_scans_equal_the_spark_plans(spark, tmp_path_factory, distance):
+    """semantic_search, lexical_search and search answer a warm in-budget
+    version from its driver copy with 0 Spark jobs, and their frames equal
+    the Spark plans' (bound −1) in schema, ids, scores and order: every
+    metric as the collection's and as a per-query override, thresholds
+    (a negative dot bound applies), a 40-question batch (the broadcast-
+    join scorer) and small ones (the literal scorer), equal-score and
+    rounding ties, a zero-norm row, out-of-vocabulary and empty-token
+    questions, ligature, Kelvin-sign and dotted-I content, k past the corpus, and non-default
+    RRF weights and rrf_k."""
+    root = str(tmp_path_factory.mktemp(f"scan_{distance}"))
+    eng = CollectionEngine(spark, root, embed_model=_scan_model)
+    eng.create_collection("scan", distance=distance)
+    eng.add_documents("scan", _SCAN_DOCS)
     api = VectorSearchApi(eng)
-    ordered = api.lexical_search("lex", ["spark", "tie"], number_results=5)
-    plan = ordered._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    rows = ordered.collect()
-    assert [r.query_id for r in rows] == [0] * 5 + [1] * 5
-    assert rows[0].content == "spark spark best doc" and rows[0].score == 2.0
-    for q in (0, 1):
-        got = [(-r.score, r.id) for r in rows if r.query_id == q]
-        assert got == sorted(got)
-    tied = [r.id for r in rows if r.query_id == 1]
-    every_tie = sorted(r.id for r in eng.read("lex").collect() if "tie" in r.content)
-    assert tied == every_tie[:5]
-
-    ven = McpVeneer(eng, api)
-
-    def call() -> list:
-        out = ven.vector_search(
-            "lexical_search", collection_name="lex", question="spark", number_results=5
-        )
-        return [r["id"] for r in out["results"]]
-
-    call()  # warm: the listed frame and the plan caches
+    assert eng.describe_collection("scan")["scan_serve"] == "cold"
+    many = [f"question {i} spark data" for i in range(40)]
+    calls = [(lambda a: a.semantic_search("scan", _SCAN_QUESTIONS, number_results=50), True),
+             (lambda a: a.semantic_search("scan", many, number_results=3), True)]
+    for metric, bounds in (("cosine", (0.5, -1.0)), ("dot", (-0.25, 0.3)), ("l2", (1.2,))):
+        calls.append((lambda a, m=metric: a.semantic_search(
+            "scan", _SCAN_QUESTIONS[:3], number_results=4, metric=m), True))
+        calls += [(lambda a, m=metric, t=t: a.semantic_search(
+            "scan", _SCAN_QUESTIONS, number_results=50, metric=m, distance_threshold=t), True)
+            for t in bounds]
+    lexical_at = len(calls)
+    calls += [
+        (lambda a: a.lexical_search("scan", _SCAN_QUESTIONS, number_results=50), False),
+        (lambda a: a.lexical_search("scan", ["tie spark", "spark"], number_results=2), False),
+        (lambda a: a.lexical_search("scan", ["zzzz", "a ! ?"], number_results=5), False),
+    ]
+    calls += [(lambda a, q=q: a.search("scan", q, number_results=50), False)
+              for q in _SCAN_QUESTIONS]
+    calls += [
+        (lambda a: a.search("scan", "spark data", number_results=4, semantic_weight=0.8,
+                            lexical_weight=0.2, rrf_k=5), False),
+        (lambda a: a.search("scan", "tie spark", number_results=3, semantic_weight=0.0,
+                            lexical_weight=1.0, rrf_k=1), False),
+    ]
+    next_job_id = _job_counter(spark)
+    api.search("scan", "warm", number_results=1).collect()  # sizes and collects the copy
+    state = eng.describe_collection("scan")
+    assert state["scan_serve"] == "driver" and state["scan_serve_bytes"] > 0
     before = next_job_id()
-    assert call() == [r.id for r in rows if r.query_id == 0]
-    assert next_job_id() - before == 3
+    driver = [_rows(call(api), sort) for call, sort in calls]
+    assert next_job_id() == before
+    assert driver == _spark_route(spark, root, calls)
+    (dtypes, semantic), (_, batch) = driver[:2]
+    assert dtypes[:2] == [("query_id", "int"), ("rank", "int")] and len(batch) == 40 * 3
+    if distance == "cosine":
+        zero = [r for r in semantic if r[3] == "zero norm doc"]
+        assert zero and all(r[4] is None for r in zero)
+    lexical = driver[lexical_at][1]
+
+    def matched(qid) -> set:
+        return {r[2] for r in lexical if r[0] == qid}
+
+    assert matched(4) == {"\ufb01le \ufb01nder for spark"}
+    assert matched(5) == {"\u212aelvin scale readings"}
+    assert matched(6) == {"\u0130stanbul spark meetup"}
+    assert matched(3) == matched(7) == matched(8) == set()
+
+
+def test_driver_copy_follows_each_table_version(spark, tmp_path_factory):
+    """The copy lives and dies with its version: after add_documents or
+    delete_documents the next scan answers from the new rows (describe
+    says ``cold`` until then, ``driver`` after), delete_collection drops
+    it, and a version that fails a fail-closed check (a NULL vector)
+    serves through Spark with the Spark plans' answers."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path_factory.mktemp("scan_versions"))
+    eng = CollectionEngine(spark, root, embed_model=_scan_model)
+    eng.create_collection("scan")
+    eng.add_documents("scan", _SCAN_DOCS[:6])
+    api = VectorSearchApi(eng)
+    assert not api.lexical_search("scan", ["meetup"]).collect()
+    assert eng.describe_collection("scan")["scan_serve"] == "driver"
+    eng.add_documents("scan", ["a late meetup note"])
+    assert eng.describe_collection("scan")["scan_serve"] == "cold"
+    assert [r.content for r in api.lexical_search("scan", ["meetup"]).collect()] == [
+        "a late meetup note"
+    ]
+    assert eng.describe_collection("scan")["scan_serve"] == "driver"
+    late = api.semantic_search("scan", ["a late meetup note"], number_results=1).first()
+    eng.delete_documents("scan", [late.id])
+    assert late.id not in {r.id for r in api.search("scan", "meetup", number_results=50).collect()}
+    assert eng.describe_collection("scan")["scan_serve"] == "driver"
+    eng.delete_collection("scan", confirm=True)
+    assert not [k for k in eng._frames if k[0] == eng._scoped("scan")]
+
+    # a NULL vector: the version keeps the Spark plans, with their answers
+    eng.create_collection("scan")
+    eng.add_documents("scan", _SCAN_DOCS)
+    hole = eng.read("scan").limit(1).withColumn("embedding", F.lit(None).cast("array<float>"))
+    eng._rewrite_partitions(
+        eng._scoped("scan"), [hole.first().id[:2]],
+        eng._read_partitions(eng._scoped("scan"), [hole.first().id[:2]])
+        .join(hole.select("id"), "id", "left_anti").unionByName(hole),
+    )
+    calls = [
+        (lambda a: a.semantic_search("scan", _SCAN_QUESTIONS, number_results=50), True),
+        (lambda a: a.lexical_search("scan", _SCAN_QUESTIONS, number_results=50), False),
+        (lambda a: a.search("scan", "spark data", number_results=50), False),
+    ]
+    got = [_rows(call(api), sort) for call, sort in calls]
+    assert eng.describe_collection("scan")["scan_serve"] == "spark"
+    assert got == _spark_route(spark, root, calls)

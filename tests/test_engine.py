@@ -385,6 +385,42 @@ def test_search_index_on_empty_collection(spark, tmp_path_factory):
     ]
 
 
+def test_index_family_schemas_equal_the_inferred_ones(spark, tmp_path_factory):
+    """Every index-family read supplies the schema parquet inference gives
+    a non-empty index, so no read infers one; an indexed empty
+    collection's families hold only ``_SUCCESS`` markers, read empty, and
+    MCP ``sparse_search`` on it answers no results instead of a raw
+    ``UNABLE_TO_INFER_SCHEMA``."""
+    from vector_mcp_spark import engine as engine_mod
+    from vector_mcp_spark.mcp import McpVeneer
+
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("family_schemas")))
+    eng.create_collection("fam")
+    eng.add_documents("fam", [f"family doc {i} about topic {i % 5} word{i}" for i in range(40)])
+    eng.build_search_index("fam")
+    root = eng._index_root(eng._require("fam"))
+    families = {
+        "postings": engine_mod._POSTINGS_SCHEMA,
+        "doclen": engine_mod._DOCLEN_SCHEMA,
+        "ids": engine_mod._IDS_SCHEMA,
+        "graph": engine_mod._GRAPH_SCHEMA,
+    }
+    for family, ddl in families.items():
+        supplied = eng._read_family(root / family, ddl)
+        assert supplied.schema == spark.read.parquet(str(root / family)).schema, family
+        assert supplied.count() > 0, family
+
+    eng.create_collection("hollow")
+    eng.build_search_index("hollow")
+    hollow = eng._index_root(eng._require("hollow"))
+    for family in ("postings", "doclen", "ids"):
+        assert eng._read_family(hollow / family, families[family]).count() == 0
+    out = McpVeneer(eng).vector_search(
+        "sparse_search", collection_name="hollow", query_weights={"x": 1.0}
+    )
+    assert out == {"action": "sparse_search", "collection_name": "hollow", "results": []}
+
+
 def test_build_embeds_once_and_derives_families_from_one_corpus(spark, tmp_path_factory):
     """Each row is embedded once, at insert: the build calls no embedder,
     the ``ids`` sidecar fingerprints the stored vectors, the graph links
@@ -730,6 +766,11 @@ def test_driver_serve_set_lifecycle(spark, tmp_path_factory):
     state = eng._graph_serve_state(eng._require("drv"), "fresh")
     assert next_job_id() == before
     assert state["graph_serve"] == "driver" and state["graph_serve_bytes"] > 24 * 64 * 8
+    # the graph's driver set is the table's driver copy plus adjacency
+    table = eng.scan_table("drv")[1]
+    serve = eng._collection_graph_serve("drv", eng._require("drv"), "cosine")
+    assert serve.driver.vecs is table.vecs and serve.driver.payload is table.content
+    assert eng.describe_collection("drv")["scan_serve"] == "driver"
     assert eng.describe_collection("drv")["graph_serve"] == "driver"
     assert warm == cold and all(rows for rows in warm)
     assert warm == sql_answers()

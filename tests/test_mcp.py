@@ -2021,7 +2021,8 @@ def test_every_search_action_answers_adversarial_input_with_a_documented_code(ad
 
 
 _GRAPH_VEC = [0.5, 0.1, -0.2, 0.3] * 16  # the default 64-dim embedding width
-#: each engine search with its well-formed query vector
+_QUESTION = "spark topic 1"
+#: each engine and API search with its well-formed query (vector or text)
 ENGINE_SEARCHES = {
     "named_vector_search": (
         lambda e, name, k, vec: e.named_vector_search(name, "t", vec, k=k),
@@ -2039,36 +2040,67 @@ ENGINE_SEARCHES = {
         lambda e, name, k, vec: e.indexed_filtered_search(name, vec, {"k": "1"}, k=k),
         _GRAPH_VEC,
     ),
+    "VectorSearchApi.semantic_search": (
+        lambda e, name, k, q: VectorSearchApi(e).semantic_search(name, [q], number_results=k),
+        _QUESTION,
+    ),
+    "VectorSearchApi.lexical_search": (
+        lambda e, name, k, q: VectorSearchApi(e).lexical_search(name, [q], number_results=k),
+        _QUESTION,
+    ),
+    "VectorSearchApi.search": (
+        lambda e, name, k, q: VectorSearchApi(e).search(name, q, number_results=k),
+        _QUESTION,
+    ),
 }
 
 
 @pytest.mark.parametrize("method", sorted(ENGINE_SEARCHES))
 def test_engine_search_answers_adversarial_input_with_a_documented_code(adversarial, method):
-    """The engine's own searches validate what a Python caller passes,
-    without the veneer in front: a bad ``k`` (zero, negative, huge,
-    fractional, boolean, string, NaN), name or query vector raises an
-    ``EngineError`` with a documented code, never a raw Py4J error or a
-    silently truncated answer; well-formed calls answer at most ``k`` rows."""
+    """The engine's and the API's own searches validate what a Python
+    caller passes, without the veneer in front: a bad ``k`` (zero,
+    negative, huge, fractional, boolean, string, NaN), name, query vector
+    or question raises an ``EngineError`` with a documented code, never a
+    raw Py4J error or a silently truncated answer; well-formed calls
+    answer at most ``k`` rows. Every case runs on the driver-resident
+    route and on the Spark route (a fresh engine with broadcasting off,
+    so no table or serve set fits the driver bound)."""
     search, good = ENGINE_SEARCHES[method]
     documented = _documented_error_codes()
+    spark = adversarial.spark
+    bound = "spark.sql.autoBroadcastJoinThreshold"
 
-    def outcome(name, k, vec=good):
-        try:
-            return search(adversarial, name, k, vec).collect()
-        except EngineError as e:
-            assert e.code in documented, (method, name, k, vec, e.code)
-            return e.code
+    def cases(engine) -> None:
+        def outcome(name, k, query=good):
+            try:
+                return search(engine, name, k, query).collect()
+            except EngineError as e:
+                assert e.code in documented, (method, name, k, query, e.code)
+                return e.code
 
-    for k in (1, 3, 1000):
-        rows = outcome("adv", k)
-        assert isinstance(rows, list) and 0 < len(rows) <= k, (method, k, rows)
-    assert isinstance(outcome("adv_alias", 3), list)
-    for k in _ADVERSARIAL_KS:
-        if k != 1000:
-            assert outcome("adv", k) == "number_results_invalid", (method, k)
-    for name in _ADVERSARIAL_NAMES:
-        outcome(name, 3)
-    if good is not None:
-        for vec in ([_NAN] * len(good), [_INF] + good[1:], [], [1.0, 2.0], ["a"] * len(good),
-                    [None] * len(good)):
-            assert isinstance(outcome("adv", 3, vec), str), (method, vec)
+        for k in (1, 3, 1000):
+            rows = outcome("adv", k)
+            assert isinstance(rows, list) and 0 < len(rows) <= k, (method, k, rows)
+        assert isinstance(outcome("adv_alias", 3), list)
+        for k in _ADVERSARIAL_KS:
+            if k != 1000:
+                assert outcome("adv", k) == "number_results_invalid", (method, k)
+        for name in _ADVERSARIAL_NAMES:
+            outcome(name, 3)
+        if isinstance(good, str):
+            for question in ("", "   ", None, 7, "x" * (1024 * 1024 + 1)):
+                assert isinstance(outcome("adv", 3, question), str), (method, question)
+            for question in ("データ検索 🚀 naïve", "\x00\u202e spark", "a ! ?"):
+                assert isinstance(outcome("adv", 3, question), list), (method, question)
+        elif good is not None:
+            for vec in ([_NAN] * len(good), [_INF] + good[1:], [], [1.0, 2.0],
+                        ["a"] * len(good), [None] * len(good)):
+                assert isinstance(outcome("adv", 3, vec), str), (method, vec)
+
+    cases(adversarial)
+    prev = spark.conf.get(bound)
+    spark.conf.set(bound, "-1")
+    try:
+        cases(CollectionEngine(spark, str(adversarial.root)))
+    finally:
+        spark.conf.set(bound, prev)

@@ -492,19 +492,21 @@ def _descent_every_way(spark, rows, edges, entry, queries, k, ef, metric):
     applied to that ranked beam before the cut to k. Forms: one literal
     query, a literal batch with exclude_self, a query view, and a query
     view with an allowed view."""
+    from vector_mcp_spark.operators.driver_table import collect_driver_table
     from vector_mcp_spark.operators.graph_ann import (
         ann_hnsw_driver_topk,
         ann_hnsw_prepared_sql,
         ann_hnsw_topk,
-        collect_serve_set,
+        driver_serve_set,
         publish_serve_set,
     )
 
     corpus = spark.createDataFrame(rows, "id string, embedding array<float>")
     edge_df = spark.createDataFrame(edges, "layer int, src string, dst string")
     ss = publish_serve_set(corpus, edge_df, metric=metric)
-    driver = collect_serve_set(ss.nodes, ss.edges)
-    assert driver is not None
+    table = collect_driver_table(corpus, "embedding", None, 0)
+    driver = driver_serve_set(table, ss.edges, metric, 0)
+    assert driver.vecs is table.vecs and driver.rows is table.rows
     beams = {qid: ann_hnsw_driver_topk(driver, entry, qv, k=ef, ef=ef, metric=metric)
              for qid, qv in queries}
     allowed = {r[0] for r in rows[::2]}
@@ -583,6 +585,37 @@ def test_driver_descent_matches_sql_and_dataframe(spark, metric):
             assert got == want, (metric, k, ef)
             assert len(got) <= min(k, len(case_rows))
         assert all(got for got, _ in pairs[: 2 * len(queries)])
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+def test_driver_serve_set_norms_equal_the_spark_norms(spark, metric):
+    """The driver serve set derives its per-node norms in numpy from the
+    table copy's vectors; they equal the serve set's Spark ``n`` column
+    bit for bit — a zero-norm row (cosine's guard makes it 1.0) and
+    float32 values over a wide dynamic range included."""
+    import random
+
+    from vector_mcp_spark.operators.driver_table import collect_driver_table
+    from vector_mcp_spark.operators.graph_ann import driver_serve_set, publish_serve_set
+
+    rng = random.Random(11)
+    rows = [
+        (f"n{i:02d}", [rng.choice((-1, 1)) * rng.uniform(1, 10) * 10.0 ** rng.randint(-8, 8)
+                       for _ in range(16)])
+        for i in range(32)
+    ]
+    rows[5] = (rows[5][0], [0.0] * 16)
+    corpus = spark.createDataFrame(rows, "id string, embedding array<float>")
+    edges = spark.createDataFrame([(0, "n00", "n01")], "layer int, src string, dst string")
+    ss = publish_serve_set(corpus, edges, metric=metric)
+    try:
+        table = collect_driver_table(corpus, "embedding", None, 0)
+        driver = driver_serve_set(table, ss.edges, metric, 0)
+        want = {r.node: r.n for r in ss.nodes.select("node", "n").collect()}
+        assert driver.norms.tolist() == [want[i] for i in table.ids]
+        assert (driver.norms[table.rows["n05"]] == 1.0) == (metric == "cosine")
+    finally:
+        ss.drop()
 
 
 def test_spark_round_score_matches_spark_round(spark):

@@ -11,9 +11,12 @@ lexical) collapses into the same methods.
 
 Where the reference's steps 5-9 are Python loops + network hops, here the
 whole search is ONE lazy DataFrame DAG (two ranked subplans → union →
-groupBy-sum → TakeOrderedAndProject) executed by a single action. Every
-document carries the vector the engine embedded at insert, and queries embed
-through the same engine seam, so no search plan embeds anything.
+groupBy-sum → TakeOrderedAndProject) executed by a single action. A table
+version within the driver bound is answered instead from its driver copy
+(:meth:`CollectionEngine.scan_table`) by the operators' numpy twins, with
+the same rows and no Spark job. Every document carries the vector the
+engine embedded at insert, and queries embed through the same engine seam,
+so no search plan embeds anything.
 """
 
 from __future__ import annotations
@@ -24,9 +27,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vector_mcp_spark.engine import CollectionEngine
-from vector_mcp_spark.operators.hybrid import rrf_fuse
-from vector_mcp_spark.operators.lexical import lexical_tf_topk, lexical_tf_topk_multi
-from vector_mcp_spark.operators.semantic import semantic_topk, semantic_topk_multi
+from vector_mcp_spark.operators.hybrid import rrf_fuse, rrf_fuse_local
+from vector_mcp_spark.operators.lexical import (
+    lexical_tf_topk,
+    lexical_tf_topk_local,
+    lexical_tf_topk_multi,
+)
+from vector_mcp_spark.operators.semantic import (
+    semantic_topk,
+    semantic_topk_local,
+    semantic_topk_multi,
+)
 from vector_mcp_spark.sanitize import sanitize_text_py
 from vector_mcp_spark.validation import (
     EngineError,
@@ -36,6 +47,11 @@ from vector_mcp_spark.validation import (
     validate_rrf_k,
     validate_weights,
 )
+
+
+#: the result frames of the multi-question scans, as the Spark plans type them
+SEMANTIC_COLUMNS = "query_id INT, rank INT, id STRING, content STRING, score DOUBLE"
+LEXICAL_COLUMNS = "query_id INT, id STRING, content STRING, score DOUBLE"
 
 
 class VectorSearchApi:
@@ -85,8 +101,18 @@ class VectorSearchApi:
         if not questions:
             raise EngineError("question_invalid")  # vector_api.py:548 rejects empty
         cleaned = [sanitize_text_py(validate_question(q)) for q in questions]
-        docs = self.engine.read(collection)
+        docs, local = self.engine.scan_table(collection)
         queries = list(enumerate(self.engine.embed_texts(collection, cleaned)))
+        if local is not None:
+            hits = semantic_topk_local(
+                local, queries, number_results, distance_threshold=distance_threshold,
+                metric=metric,
+            )
+            if hits is not None:
+                return self.engine._local_hits(
+                    [(q, rank, local.ids[r], local.content[r], sc) for q, rank, r, sc in hits],
+                    SEMANTIC_COLUMNS,
+                )
         return semantic_topk_multi(
             docs,
             queries,
@@ -104,13 +130,22 @@ class VectorSearchApi:
         """Multi-query lexical (tf) search → (query_id, id, content, score),
         best-first per query: (query_id, score desc, id asc).
 
-        One job for N queries (lexical_tf_topk_multi scores every query
-        map-side in a single pass), not N unioned single-query legs."""
+        On the driver copy no job; otherwise one job for N queries
+        (lexical_tf_topk_multi scores every query map-side in a single
+        pass), not N unioned single-query legs."""
         number_results = validate_number_results(number_results)
         if not questions:
             raise EngineError("question_invalid")
         cleaned = [(i, sanitize_text_py(validate_question(q))) for i, q in enumerate(questions)]
-        docs = self.engine.read(collection)
+        docs, local = self.engine.scan_table(collection)
+        if local is not None:
+            return self.engine._local_hits(
+                [
+                    (q, local.ids[r], local.content[r], sc)
+                    for q, _, r, sc in lexical_tf_topk_local(local, cleaned, number_results)
+                ],
+                LEXICAL_COLUMNS,
+            )
         ranked = lexical_tf_topk_multi(
             docs, cleaned, number_results, id_col="id", content_col="content"
         )
@@ -140,15 +175,32 @@ class VectorSearchApi:
         rrf_k = validate_rrf_k(rrf_k)
         w_sem, w_lex = validate_weights([semantic_weight, lexical_weight])
         cleaned = sanitize_text_py(validate_question(question))
-        docs = self.engine.read(collection)
+        docs, local = self.engine.scan_table(collection)
         leg_k = max(number_results * 2, 20)
         # the semantic leg ranks under the collection's locked distance
         # (create_collection's contract); RRF is rank-based, so an
         # ascending-better l2 leg just flips its ranking key before fusing
         metric = self.engine.collection_distance(collection)
+        qvec = self.engine.embed_texts(collection, [cleaned])[0]
+        sem_local = None if local is None else semantic_topk_local(
+            local, [(0, qvec)], leg_k, metric=metric
+        )
+        if sem_local is not None:
+            sign = -1.0 if metric == "l2" else 1.0
+            legs = [
+                ([(local.ids[r], None if sc is None else sign * sc)
+                  for _, _, r, sc in sem_local], w_sem),
+                ([(local.ids[r], sc)
+                  for _, _, r, sc in lexical_tf_topk_local(local, [(0, cleaned)], leg_k)], w_lex),
+            ]
+            # every fused score is finite (the weights are), so the Spark
+            # plan's result hygiene below would keep every row
+            return self.engine._local_hits([
+                (node, local.content[local.rows[node]], sc)
+                for node, sc in rrf_fuse_local(legs, number_results, rrf_k=rrf_k)
+            ])
         sem = semantic_topk(
-            docs, self.engine.embed_texts(collection, [cleaned])[0], leg_k,
-            id_col="id", emb_col="embedding", metric=metric,
+            docs, qvec, leg_k, id_col="id", emb_col="embedding", metric=metric,
         )
         if metric == "l2":
             sem = sem.withColumn("score", -F.col("score"))

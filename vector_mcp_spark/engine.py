@@ -55,6 +55,7 @@ from vector_mcp_spark.validation import (
 )
 
 if TYPE_CHECKING:
+    from vector_mcp_spark.operators.driver_table import DriverTable
     from vector_mcp_spark.operators.graph_ann import DriverServeSet, ServeSet
 
 
@@ -65,6 +66,22 @@ class _GraphServe(NamedTuple):
     sql: ServeSet
     #: the driver-resident copy, or None when the set is over the bound
     driver: DriverServeSet | None
+
+
+#: a listed version whose driver copy has not been sized yet
+_COLD = object()
+
+
+class _Listed:
+    """One listed table version (see ``CollectionEngine._listing``): the
+    fingerprint it was listed under, the frame, and its driver copy —
+    ``_COLD`` until first asked for, then the :class:`DriverTable` or
+    ``None`` when the version is over the driver bound or refused."""
+
+    __slots__ = ("fingerprint", "frame", "driver")
+
+    def __init__(self, fingerprint: str, frame: DataFrame):
+        self.fingerprint, self.frame, self.driver = fingerprint, frame, _COLD
 
 
 def _embed_batch(model, dim: int | None, texts: Sequence[str]) -> list[list[float]]:
@@ -99,6 +116,10 @@ def _drop_serve_sets(sets: dict) -> None:
         serve.sql.drop()
 
 
+#: the (id, content, score) frame every single-question search returns
+HIT_COLUMNS = "id STRING, content STRING, score DOUBLE"
+
+
 def _physical_name(logical: str) -> str:
     # postgres.py:33-35 — "vm_" + sha256(name)[:24]
     return "vm_" + hashlib.sha256(logical.encode("utf-8")).hexdigest()[:24]
@@ -121,6 +142,14 @@ def _prefix_of(id_col) -> "F.Column":
 
 #: the (id, vector) rows of one named vector's sidecar, as the engine writes them
 _NAMED_SCHEMA = "id string, vector array<float>"
+#: the index families as the build writes them (the schemas parquet
+#: inference gives a non-empty index; supplying them skips the inference
+#: job, and an empty collection's family, only ``_SUCCESS`` markers, reads
+#: as empty)
+_POSTINGS_SCHEMA = "term string, id string, tf bigint, term_bucket string"
+_DOCLEN_SCHEMA = "id string, dlen int"
+_IDS_SCHEMA = "id string, rowhash bigint"
+_GRAPH_SCHEMA = "layer int, src string, dst string"
 
 
 def _files_fingerprint(root: Path) -> str:
@@ -243,24 +272,27 @@ class CollectionEngine:
         # engine is collected (not at interpreter exit, when the JVM may
         # already be gone)
         weakref.finalize(self, _drop_serve_sets, self._graph_serve_sets).atexit = False
-        # Listed frames: (scoped, vector name or None for the document
-        # table) → (fingerprint, frame), see _reused_frame
-        self._frames: dict[tuple[str, str | None], tuple[str, DataFrame]] = {}
+        # Listed versions: (scoped, vector name or None for the document
+        # table) → the version's frame and driver copy, see _listing
+        self._frames: dict[tuple[str, str | None], _Listed] = {}
         (self.root / "collections").mkdir(parents=True, exist_ok=True)
 
-    def _graph_serve_set(self, index_root: Path, metric: str, corpus) -> _GraphServe:
+    def _graph_serve_set(
+        self, index_root: Path, metric: str, corpus, table
+    ) -> _GraphServe:
         """The warm working set for one graph index build — what a vector
         DB keeps open next to its persisted graph: the published serve set
         the SQL descent reads (views, sizes and broadcast gate, from
         :func:`~vector_mcp_spark.operators.graph_ann.publish_serve_set`)
-        and, when it fits the same broadcast bound, a driver-resident copy
+        and, when it fits the same broadcast bound, a driver-resident set
         the descent runs on in-process with no Spark job. Built once per
         (build, metric) and per engine; evicts prior builds of the same
         root (and drops their views) so a rebuild does not pin dead
-        checkpoint blocks. ``corpus`` is called on a miss only: a
-        zero-argument callable returning the (id, embedding[, content])
-        frame the build serves."""
-        from vector_mcp_spark.operators.graph_ann import collect_serve_set, publish_serve_set
+        checkpoint blocks. ``corpus`` and ``table`` are called on a miss
+        only: zero-argument callables returning the (id, embedding[,
+        content]) frame the build serves and that version's
+        :class:`DriverTable` (or None)."""
+        from vector_mcp_spark.operators.graph_ann import driver_serve_set, publish_serve_set
         from vector_mcp_spark.operators.partition import fits_broadcast
 
         st = (index_root / "manifest.json").stat()
@@ -270,26 +302,21 @@ class CollectionEngine:
             return hit
         for old in [k for k in self._graph_serve_sets if k[0] == key[0]]:
             self._graph_serve_sets.pop(old).sql.drop()
-        frame = corpus()
         ss = publish_serve_set(
-            frame, self.spark.read.parquet(str(index_root / "graph")),
+            corpus(), self._read_family(index_root / "graph", _GRAPH_SCHEMA),
             id_col="id", emb_col="embedding", metric=metric,
         )
-        # the driver copy is collected only when its estimate — nodes ×
-        # (dim·8 + content bytes + 64) + edges × 64, from the counts the
-        # serve set already took — fits the broadcast bound (a broadcast
-        # is a driver-side collect of that size already). Over the bound,
-        # or with the bound at −1, the SQL descent serves.
-        nbytes = ss.n_values * 8 + (ss.n_nodes + ss.n_edges) * 64
-        payload = None
-        if "content" in frame.columns and fits_broadcast(self.spark, nbytes):
-            payload = frame.select("id", "content")
-            nbytes += payload.agg(F.sum(F.octet_length("content"))).first()[0] or 0
-        driver = (
-            collect_serve_set(ss.nodes, ss.edges, payload, nbytes)
-            if fits_broadcast(self.spark, nbytes)
-            else None
-        )
+        # the driver set is the table's driver copy — its rows, vectors
+        # and content, not a second collect — plus the adjacency, when the
+        # copy's estimate plus edges × 64 fits the broadcast bound (a
+        # broadcast is a driver-side collect of that size already). Over
+        # the bound, or with the bound at −1, the SQL descent serves.
+        local = table()
+        driver = None
+        if local is not None:
+            nbytes = local.nbytes + ss.n_edges * 64
+            if fits_broadcast(self.spark, nbytes):
+                driver = driver_serve_set(local, ss.edges, metric, nbytes)
         self._graph_serve_sets[key] = _GraphServe(ss, driver)
         return self._graph_serve_sets[key]
 
@@ -644,7 +671,7 @@ class CollectionEngine:
             if not any(r[0] == scoped and r[4] for r in self._catalog_rows()):
                 return  # another reader upgraded it first
             if Path(self._table_path(scoped)).exists():
-                legacy = self._read_table(scoped).where(F.col("embedding").isNull())
+                legacy = self._table_listing(scoped).frame.where(F.col("embedding").isNull())
                 self.update_documents(name, legacy)
             with self._mutation_lock("__catalog__"):  # serialized RMW
                 rows = self._catalog_rows()
@@ -824,32 +851,67 @@ class CollectionEngine:
     def read(self, name: str) -> DataFrame:
         """The collection's rows, every one with its stored vector (a
         legacy collection is upgraded first, see :meth:`needs_embed`)."""
+        return self._listed_table(name).frame
+
+    def scan_table(self, name: str) -> tuple[DataFrame, DriverTable | None]:
+        """:meth:`read`'s frame and the same version's driver copy (see
+        :meth:`_driver_table`): None when the version is over the driver
+        bound or refused, and the scans then run on the frame."""
+        listed = self._listed_table(name)
+        return listed.frame, self._driver_table(listed, "embedding", "content")
+
+    def _listed_table(self, name: str) -> _Listed:
         scoped = self._require(name)
         if self.needs_embed(name):
             self._upgrade_legacy(name, scoped)
-        return self._read_table(scoped)
+        return self._table_listing(scoped)
 
-    def _reused_frame(
+    def _listing(
         self, key: tuple[str, str | None], fingerprint: str, read: Callable[[], DataFrame]
-    ) -> DataFrame:
-        """The frame ``read()`` returned for ``key`` while its files had
-        ``fingerprint``, else a fresh ``read()`` that replaces it. A frame's
-        analyzed plan holds the file listing Spark made when it was built,
-        so a hit runs no listing job. The caller takes the fingerprint
-        BEFORE the read: a write racing the listing can then only cause a
-        later miss, never a stale hit. Every writer renames in new files
-        under new names, so any write — by any engine or process sharing
-        the root — changes the fingerprint. Threads racing on a miss each
-        store a frame that matches the fingerprint stored with it, so the
-        worst case is one extra listing."""
+    ) -> _Listed:
+        """The version listed for ``key`` while its files had
+        ``fingerprint``, else a fresh ``read()`` that replaces it (and with
+        it the old version's driver copy). A frame's analyzed plan holds
+        the file listing Spark made when it was built, so a hit runs no
+        listing job. The caller takes the fingerprint BEFORE the read: a
+        write racing the listing can then only cause a later miss, never a
+        stale hit. Every writer renames in new files under new names, so
+        any write — by any engine or process sharing the root — changes
+        the fingerprint. Threads racing on a miss each store a version
+        that matches the fingerprint stored with it, so the worst case is
+        one extra listing."""
         hit = self._frames.get(key)
-        if hit is not None and hit[0] == fingerprint:
-            return hit[1]
-        frame = read()
-        self._frames[key] = (fingerprint, frame)
-        return frame
+        if hit is not None and hit.fingerprint == fingerprint:
+            return hit
+        listed = self._frames[key] = _Listed(fingerprint, read())
+        return listed
 
-    def _read_table(self, scoped: str) -> DataFrame:
+    def _driver_table(
+        self, listed: _Listed, emb_col: str, content_col: str | None
+    ) -> DriverTable | None:
+        """The listed version's driver copy, sized on first use by one
+        aggregate job and collected only when the estimate fits the
+        broadcast bound. The verdict — copy, over the bound, or refused by
+        :func:`collect_driver_table` — is kept with the version, so a
+        large table pays the aggregate once, not per request. Threads
+        racing on a cold version each collect it; either copy is that
+        version's, so the worst case is one extra collect."""
+        from vector_mcp_spark.operators.driver_table import (
+            collect_driver_table,
+            driver_table_bytes,
+        )
+        from vector_mcp_spark.operators.partition import fits_broadcast
+
+        if listed.driver is _COLD:
+            nbytes = driver_table_bytes(listed.frame, emb_col, content_col)
+            listed.driver = (
+                collect_driver_table(listed.frame, emb_col, content_col, nbytes)
+                if fits_broadcast(self.spark, nbytes)
+                else None
+            )
+        return listed.driver
+
+    def _table_listing(self, scoped: str) -> _Listed:
         def read() -> DataFrame:
             if not Path(self._table_path(scoped)).exists():
                 # cataloged but never written to — empty collection
@@ -858,7 +920,11 @@ class CollectionEngine:
             # partition discovery appends _p; project back to the document shape
             return df.select(*DOCUMENT_SCHEMA.fieldNames())
 
-        return self._reused_frame((scoped, None), self._table_fingerprint(scoped), read)
+        return self._listing((scoped, None), self._table_fingerprint(scoped), read)
+
+    def _read_family(self, path: Path, schema: str) -> DataFrame:
+        """One index family, read with the schema the build writes."""
+        return self.spark.read.schema(schema).parquet(str(path))
 
     def _write_partitioned(self, path: str, df: DataFrame) -> None:
         (
@@ -1202,7 +1268,7 @@ class CollectionEngine:
                 detail="collection had <2 vectors at build; rebuild",
             )
         df = self.read(name).localCheckpoint(eager=True)  # membership + both phases
-        indexed = self.spark.read.parquet(str(root / "ids"))
+        indexed = self._read_family(root / "ids", _IDS_SCHEMA)
         removed = indexed.join(df.select("id"), "id", "left_anti").count()
         if removed:
             raise EngineError(
@@ -1255,7 +1321,7 @@ class CollectionEngine:
             new_edges, graph_meta = hnsw_repair(
                 new_emb.select("id", "embedding"),
                 old_vecs,
-                self.spark.read.parquet(str(root / "graph")),
+                self._read_family(root / "graph", _GRAPH_SCHEMA),
                 graph_meta["entry"],
                 int(graph_meta.get("top_layer", 0)),
                 id_col="id",
@@ -1267,17 +1333,13 @@ class CollectionEngine:
         ).parquet(str(root / "ids"))
         # n_terms is a distinct over the merged postings — a linear scan of
         # the postings index (its OUTPUT is vocabulary-bounded, the scan is
-        # not); repair only runs on collections that had a graph, so the
-        # postings directory is readable
-        try:
-            n_terms = (
-                self.spark.read.parquet(str(root / "postings"))
-                .select("term")
-                .distinct()
-                .count()
-            )
-        except Exception:
-            n_terms = manifest.get("n_terms", 0)
+        # not)
+        n_terms = (
+            self._read_family(root / "postings", _POSTINGS_SCHEMA)
+            .select("term")
+            .distinct()
+            .count()
+        )
         manifest.update(
             {
                 "n_terms": n_terms,
@@ -1523,11 +1585,12 @@ class CollectionEngine:
         use_index = status == "fresh" if indexed is None else indexed
         if indexed and status != "fresh":
             raise EngineError("index_not_fresh")
-        vecs = self._reused_frame(
+        listed = self._listing(
             (scoped, vector_name),
             self._named_fingerprint(scoped, vector_name),
             lambda: self._read_named(data),
         )
+        vecs = listed.frame
         if use_index and indexed is None:
             meta_peek = json.loads((root / "manifest.json").read_text())
             if (meta_peek.get("graph") or {}).get("entry") is None:
@@ -1551,7 +1614,8 @@ class CollectionEngine:
         # rows either way. The content join stays: this index's freshness
         # covers the named vectors, not the main table's content.
         serve = self._graph_serve_set(
-            root, metric, lambda: vecs.select("id", F.col("vector").alias("embedding"))
+            root, metric, lambda: vecs.select("id", F.col("vector").alias("embedding")),
+            lambda: self._driver_table(listed, "vector", None),
         )
         args = (serve, meta["graph"]["entry"], question_vec, k, ef, metric)
         rows = self._driver_graph_hits(*args)
@@ -1583,10 +1647,10 @@ class CollectionEngine:
                 for t, _ in query_weights
             }
         )
-        postings = self.spark.read.parquet(str(root / "postings")).where(
+        postings = self._read_family(root / "postings", _POSTINGS_SCHEMA).where(
             F.col("term_bucket").isin(buckets)
         )
-        doclens = self.spark.read.parquet(str(root / "doclen"))
+        doclens = self._read_family(root / "doclen", _DOCLEN_SCHEMA)
         return indexed_sparse_dot_topk(postings, doclens, query_weights, k, id_col="id")
 
     def indexed_sparse_search(self, name: str, query_weights, k: int = 5) -> DataFrame:
@@ -1679,7 +1743,9 @@ class CollectionEngine:
             df = self.read(name)
             return df.where(F.col("embedding").isNotNull()).select("id", "embedding", "content")
 
-        return self._graph_serve_set(self._index_root(scoped), metric, corpus)
+        return self._graph_serve_set(
+            self._index_root(scoped), metric, corpus, lambda: self.scan_table(name)[1]
+        )
 
     def _driver_graph_hits(
         self, serve: _GraphServe, entry, question_vec, k: int, ef: int, metric: str
@@ -1723,23 +1789,33 @@ class CollectionEngine:
             )
         ).select(F.col("neighbor_id").alias("id"), "score")
 
-    def _local_hits(self, rows: Sequence[tuple]) -> DataFrame:
-        """(id, content, score) rows, in order, as a local relation: an
+    def _local_hits(self, rows: Sequence[tuple], columns: str = HIT_COLUMNS) -> DataFrame:
+        """``rows``, in order, as a local relation with the schema
+        ``columns`` (``"name TYPE, ..."``; STRING, INT or DOUBLE): an
         inline VALUES of literals folds to a LocalRelation, which plans and
         collects with no Spark job (``createDataFrame`` of a list is a
         Python RDD — a job — and an ``orderBy`` on the result would add
-        three). Strings enter as UTF-8 hex literals: only hex digits reach
-        the SQL text, so no escaping rule or parser setting can alter them,
-        and unlike named parameters they cost no py4j call per value."""
+        three). None renders as NULL. Strings enter as UTF-8 hex literals:
+        only hex digits reach the SQL text, so no escaping rule or parser
+        setting can alter them, and unlike named parameters they cost no
+        py4j call per value. Doubles must be finite."""
+        cols = [c.split() for c in columns.split(",")]
 
-        def text(v) -> str:
-            return "NULL" if v is None else f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
+        def lit(v, kind: str) -> str:
+            if v is None:
+                return "NULL"
+            if kind == "STRING":
+                return f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
+            return str(int(v)) if kind == "INT" else f"{float(v)!r}D"
 
-        values = ", ".join(f"({text(i)}, {text(c)}, {float(s)!r}D)" for i, c, s in rows)
+        values = ", ".join(
+            "(" + ", ".join(lit(v, kind) for v, (_, kind) in zip(row, cols)) + ")"
+            for row in rows
+        )
+        nulls = "(" + ", ".join("NULL" for _ in cols) + ")"
         return self.spark.sql(
-            "SELECT CAST(id AS STRING) AS id, CAST(content AS STRING) AS content,"
-            " CAST(score AS DOUBLE) AS score"
-            f" FROM VALUES {values or '(NULL, NULL, NULL)'} AS t(id, content, score)"
+            "SELECT " + ", ".join(f"CAST({c} AS {kind}) AS {c}" for c, kind in cols)
+            + f" FROM VALUES {values or nulls} AS t({', '.join(c for c, _ in cols)})"
             + ("" if rows else " WHERE false")
         )
 
@@ -3205,7 +3281,12 @@ class CollectionEngine:
         next graph query would be served: ``"driver"`` (the warm serve set
         is collected in-process; ``graph_serve_bytes`` is its estimated
         size), ``"sql"`` (warm, over the driver bound) or ``"cold"`` (no
-        warm serve set for the current fresh build)."""
+        warm serve set for the current fresh build). ``scan_serve`` says
+        the same of the next semantic, lexical or hybrid scan:
+        ``"driver"`` (the current table version's driver copy is warm;
+        ``scan_serve_bytes`` is its estimated size), ``"spark"`` (the
+        version is over the driver bound or refused, so the Spark plans
+        serve) or ``"cold"`` (the version has no verdict yet)."""
         scoped = self._require(name)
         status = self.index_status(name)
         return {
@@ -3217,7 +3298,22 @@ class CollectionEngine:
             "aliases": [a for a, _ in self.list_aliases(name)],
             "index_status": status,
             **self._graph_serve_state(scoped, status),
+            **self._scan_serve_state(scoped),
         }
+
+    def _scan_serve_state(self, scoped: str) -> dict:
+        """The ``scan_serve`` fields of :meth:`describe_collection`, read
+        from the listed version of the current table files (no Spark job)."""
+        listed = self._frames.get((scoped, None))
+        if (
+            listed is None
+            or listed.driver is _COLD
+            or listed.fingerprint != self._table_fingerprint(scoped)
+        ):
+            return {"scan_serve": "cold"}
+        if listed.driver is None:
+            return {"scan_serve": "spark"}
+        return {"scan_serve": "driver", "scan_serve_bytes": listed.driver.nbytes}
 
     def _graph_serve_state(self, scoped: str, status: str) -> dict:
         """The ``graph_serve`` fields of :meth:`describe_collection`, read

@@ -25,6 +25,14 @@ def tokenize_py(text: str) -> list[str]:
     return [t.casefold() for t in _WORD.findall(text or "")]
 
 
+def content_tokens_py(text: str) -> list[str]:
+    """Driver twin of :func:`tokens`: lowercase the whole text, then
+    extract. Not :func:`tokenize_py`, which extracts first and casefolds
+    after — the two differ on non-ASCII input (``casefold`` maps the ``ﬁ``
+    ligature to ``fi``; ``lower`` keeps it, and the pattern skips it)."""
+    return _WORD.findall(text.lower())
+
+
 def tokens(col: Column | str) -> Column:
     """Array of casefolded tokens of a text column (JVM regexp, no UDF)."""
     col = F.col(col) if isinstance(col, str) else col

@@ -43,6 +43,7 @@ import itertools
 import math
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
@@ -53,6 +54,9 @@ from vector_mcp_spark.functions.vector import dot
 from vector_mcp_spark.operators.partition import fits_broadcast
 from vector_mcp_spark.operators.similarity import SCORE_DECIMALS
 from vector_mcp_spark.validation import EngineError, validate_query_vector
+
+if TYPE_CHECKING:
+    from vector_mcp_spark.operators.driver_table import DriverTable
 
 #: beam hops per layer, top layer first — FIXED so the SQL oracle can unroll
 HNSW_HOPS: tuple[tuple[int, int], ...] = ((2, 1), (1, 2), (0, 4))
@@ -586,8 +590,9 @@ def ann_hnsw_topk(
 #
 # Spark builds the graph; walking it per query does not need Spark. When a
 # serve set fits the session's broadcast bound (a broadcast is already a
-# driver-side collect of that size), the engine collects it once and answers
-# warm queries in-process with 0 Spark jobs. The descent replays the
+# driver-side collect of that size), the engine adds the collected adjacency
+# to the table's driver copy once and answers warm queries in-process with
+# 0 Spark jobs. The descent replays the
 # one-query SQL operation for operation — float32 query widened to double,
 # sequential left-fold dots from 0.0, the norm guard / l2 clamp, the
 # candidate sets, (score, node) ranking and Spark's ROUND — so its rows
@@ -599,8 +604,10 @@ def ann_hnsw_topk(
 @dataclass(frozen=True)
 class DriverServeSet:
     """A serve set in driver memory: node id → row, the vectors as the
-    doubles the SQL folds read, the Spark-computed norms (bit-exact),
-    per-layer adjacency, an optional per-node payload, estimated bytes."""
+    doubles the SQL folds read (both shared with the table's
+    :class:`~vector_mcp_spark.operators.driver_table.DriverTable`), the
+    per-node norms, per-layer adjacency, an optional per-node payload,
+    estimated bytes."""
 
     rows: dict
     vecs: np.ndarray
@@ -610,36 +617,21 @@ class DriverServeSet:
     nbytes: int
 
 
-def collect_serve_set(
-    nodes: DataFrame, edges: DataFrame, payload: DataFrame | None = None, nbytes: int = 0
-) -> DriverServeSet | None:
-    """Collect a :func:`hnsw_serve_set` working set (plus an optional
-    (id, value) ``payload`` frame) into a :class:`DriverServeSet`. ``None``
-    when a row would make the in-process descent diverge from the SQL —
-    a NULL id, vector, element or norm, ragged widths, non-finite values
-    or duplicate node ids — so such sets keep the SQL descent."""
-    got = nodes.select("node", "v", "n").collect()
-    ids = [r.node for r in got]
-    rows = {node: i for i, node in enumerate(ids)}
-    if len(rows) != len(ids) or None in rows:
-        return None
-    if any(r.v is None or r.n is None or None in r.v for r in got):
-        return None
-    widths = {len(r.v) for r in got}
-    if len(widths) > 1:
-        return None
-    vecs = np.array([r.v for r in got], dtype=np.float64).reshape(len(got), max(widths, default=0))
-    norms = np.array([r.n for r in got], dtype=np.float64)
-    if not (np.isfinite(vecs).all() and np.isfinite(norms).all()):
-        return None
+def driver_serve_set(
+    table: DriverTable, edges: DataFrame, metric: str, nbytes: int
+) -> DriverServeSet:
+    """A :class:`DriverServeSet` over ``table``'s rows, vectors and content
+    (the same arrays, not a copy) plus the collected ``edges`` adjacency.
+    The per-node norms are derived here exactly as :func:`_node_norm`
+    computes the serve set's ``n`` column: the sequential fold, a
+    correctly rounded sqrt, and cosine's zero-norm guard."""
+    norms = np.sqrt(_fold_rows(table.vecs * table.vecs))
+    if metric == "cosine":
+        norms[norms == 0.0] = 1.0
     adj: dict = {}
     for e in edges.select("layer", "src", "dst").collect():
         adj.setdefault(e.layer, {}).setdefault(e.src, []).append(e.dst)
-    values = None
-    if payload is not None:
-        by_id = {r[0]: r[1] for r in payload.collect()}
-        values = [by_id.get(node) for node in ids]
-    return DriverServeSet(rows, vecs, norms, adj, values, int(nbytes))
+    return DriverServeSet(table.rows, table.vecs, norms, adj, table.content, int(nbytes))
 
 
 def _fold_rows(prods: np.ndarray) -> np.ndarray:

@@ -74,6 +74,29 @@ def rrf_fuse(
     )
 
 
+def rrf_fuse_local(
+    legs: Sequence[tuple[Sequence[tuple[object, float | None]], float]],
+    n: int,
+    rrf_k: int = 60,
+) -> list[tuple[object, float]]:
+    """:func:`rrf_fuse` over driver-resident legs ``[([(id, score), ...],
+    weight), ...]``: each leg ranked by (score desc with NULLs last, id
+    asc) and cut to :data:`MAX_LEG_ROWS`, contributions ``weight / (rrf_k
+    + rank)`` summed per id from 0.0 as Spark's ``sum`` folds them, the sum
+    rounded as Spark's ``ROUND``; the top ``n`` (id, score) by (score desc,
+    id asc)."""
+    from vector_mcp_spark.operators.graph_ann import spark_round_score
+
+    fused: dict = {}
+    for rows, weight in legs:
+        ranked = sorted(rows, key=lambda r: (r[1] is None, -(r[1] or 0.0), r[0]))
+        for rank, (node, _) in enumerate(ranked[:MAX_LEG_ROWS], 1):
+            fused[node] = fused.get(node, 0.0) + float(weight) / float(int(rrf_k) + rank)
+    out = [(node, spark_round_score(total)) for node, total in fused.items()]
+    out.sort(key=lambda r: (-r[1], r[0]))
+    return out[:n]
+
+
 def dbsf_fuse(
     legs: Sequence[DataFrame],
     n: int,

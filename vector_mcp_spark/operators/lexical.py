@@ -26,16 +26,23 @@ shuffle volume is O(matching postings), not O(corpus tokens).
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
+from typing import TYPE_CHECKING
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vector_mcp_spark.functions.text import (
+    content_tokens_py,
     term_count,
     tokenize_py,
     tokens,
     with_bound_tokens,
 )
+
+if TYPE_CHECKING:
+    from vector_mcp_spark.operators.driver_table import DriverTable
 
 SCORE_DECIMALS = 6
 
@@ -293,6 +300,45 @@ def lexical_tf_topk_multi(
         .where(F.col("rank") <= k)
         .select("query_id", "rank", id_col, "score")
     )
+
+
+def local_postings(contents: Sequence[str]) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+    """term → (rows, counts) over ``contents``, tokenized as Spark's
+    :func:`~vector_mcp_spark.functions.text.tokens` column does — the
+    inverted lists :func:`lexical_tf_topk_local` scores from."""
+    acc: dict[str, dict[int, int]] = {}
+    for row, text in enumerate(contents):
+        for tok in content_tokens_py(text):
+            per_row = acc.setdefault(tok, {})
+            per_row[row] = per_row.get(row, 0) + 1
+    return {
+        t: (np.fromiter(c.keys(), dtype=np.intp), np.fromiter(c.values(), dtype=np.float64))
+        for t, c in acc.items()
+    }
+
+
+def lexical_tf_topk_local(
+    table: DriverTable, queries: Sequence[tuple[int, str]], k: int
+) -> list[tuple[int, int, int, float]]:
+    """:func:`lexical_tf_topk_multi` (and per query :func:`lexical_tf_topk`)
+    over a driver-resident table: ``(query_id, rank, row, score)`` in
+    (query_id, rank) order. A document scores the count of its tokens in
+    the query's distinct term set; only scores > 0 are kept, ranked by
+    (score desc, id asc). A query with no terms answers nothing."""
+    out = []
+    for qid, text in queries:
+        terms = _distinct_terms(text)
+        if not terms:
+            continue
+        scores = np.zeros(len(table.ids))
+        for term in terms:
+            hit = table.postings.get(term)
+            if hit is not None:
+                scores[hit[0]] += hit[1]
+        matched = np.flatnonzero(scores > 0)
+        ranked = matched[np.lexsort((table.id_order[matched], -scores[matched]))]
+        out += [(qid, rank, int(r), float(scores[r])) for rank, r in enumerate(ranked[:k], 1)]
+    return out
 
 
 def fuzzy_term_topk(

@@ -27,8 +27,11 @@ Scale design:
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
+from typing import TYPE_CHECKING
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,6 +41,9 @@ from vector_mcp_spark.functions.vector import (
     dot_lit,
     l2_distance_lit,
 )
+
+if TYPE_CHECKING:
+    from vector_mcp_spark.operators.driver_table import DriverTable
 
 SCORE_DECIMALS = 6
 
@@ -209,6 +215,72 @@ def semantic_topk_multi(
     return topk.select(
         "query_id", "rank", id_col, *payload_cols, F.round("score", SCORE_DECIMALS).alias("score")
     )
+
+
+def semantic_topk_local(
+    table: DriverTable,
+    queries: Sequence[tuple[int, Sequence[float]]],
+    k: int,
+    distance_threshold: float | None = None,
+    metric: str = "cosine",
+) -> list[tuple[int, int, int, float | None]] | None:
+    """:func:`semantic_topk_multi` over a driver-resident table, and per
+    query :func:`semantic_topk` (their thresholds keep the same rows):
+    ``(query_id, rank, row, score)`` in (query_id, rank) order, ``row``
+    indexing ``table``. The scores are the Spark expressions replayed —
+    left folds from the double-widened floats, cosine's ``try_divide``
+    (a zero denominator scores NULL, ranked after every scored row), l2's
+    ``< 0`` clamp — filtered by the threshold, ranked on the unrounded
+    score then id, and rounded as Spark's ``ROUND``. ``None`` when an
+    answer could differ from Spark's (a width other than the table's, a
+    non-finite query, score or threshold), so the caller runs the Spark
+    plan."""
+    from vector_mcp_spark.functions.vector import sq_norm_py
+    from vector_mcp_spark.operators.graph_ann import _fold_rows, spark_round_score
+
+    if metric not in _METRICS:
+        raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS)}")
+    if not table.ids:
+        return []
+    higher = _METRICS[metric]
+    bound = None
+    if distance_threshold is not None and (metric == "dot" or distance_threshold >= 0):
+        bound = float(distance_threshold)
+        if math.isnan(bound):
+            return None
+    out = []
+    for qid, vec in queries:
+        q = np.array([float(x) for x in vec], dtype=np.float64)
+        if not np.isfinite(q).all() or q.size != table.vecs.shape[1]:
+            return None
+        d = _fold_rows(table.vecs * q)
+        null = np.zeros(d.shape, dtype=bool)
+        if metric == "dot":
+            s = d
+        elif metric == "cosine":
+            den = np.sqrt(table.sqnorms) * math.sqrt(sq_norm_py(vec))
+            null = den == 0.0
+            s = d / np.where(null, 1.0, den)
+        else:
+            inner = (table.sqnorms + sq_norm_py(vec)) - 2.0 * d
+            s = np.sqrt(np.where(inner < 0.0, 0.0, inner))
+        if not np.isfinite(s[~null]).all():
+            return None
+        keep = ~null
+        if bound is not None:
+            keep &= (1.0 - s <= bound) if metric == "cosine" else (
+                (s <= bound) if metric == "l2" else (s >= bound)
+            )
+        scored = np.flatnonzero(keep)
+        ranked = scored[np.lexsort((table.id_order[scored], -s[scored] if higher else s[scored]))]
+        if bound is None:
+            nulls = np.flatnonzero(null)
+            ranked = np.concatenate([ranked, nulls[np.argsort(table.id_order[nulls])]])
+        out += [
+            (qid, rank, int(r), None if null[r] else spark_round_score(float(s[r])))
+            for rank, r in enumerate(ranked[:k], 1)
+        ]
+    return out
 
 
 def grouped_topk(

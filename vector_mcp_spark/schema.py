@@ -8,8 +8,6 @@ Mirrors the reference's fundamental abstractions
   schemaless (string map here; a JSON string column would preserve full
   nesting — the reference sanitizer only recurses over str/map/list anyway,
   ``vector_mcp/vector_api.py:287-298``).
-- QueryResults (``base.py:27-31``) flatten to one row per hit:
-  ``(query_id, rank, id, content, metadata, score)``.
 - Catalog: mirrors ``vector_mcp_collections(collection_name PK, table_name
   UNIQUE, dimension CHECK(dimension > 0))``
   (``vector_mcp/vectordb/postgres.py:30-35,106-115``).
@@ -25,16 +23,5 @@ DOCUMENT_SCHEMA = T.StructType(
         T.StructField("content", T.StringType(), nullable=False),
         T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), nullable=True),
         T.StructField("embedding", T.ArrayType(T.FloatType()), nullable=True),
-    ]
-)
-
-RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.IntegerType(), nullable=False),
-        T.StructField("rank", T.IntegerType(), nullable=False),
-        T.StructField("id", T.StringType(), nullable=False),
-        T.StructField("content", T.StringType(), nullable=True),
-        T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), nullable=True),
-        T.StructField("score", T.DoubleType(), nullable=True),
     ]
 )
