@@ -3,7 +3,7 @@ from __future__ import annotations
 import pytest
 
 from vector_mcp_spark.api import VectorSearchApi
-from vector_mcp_spark.engine import CollectionEngine
+from vector_mcp_spark.engine import CollectionEngine, hit_rows
 from vector_mcp_spark.validation import EngineError
 
 CORPUS = [
@@ -358,7 +358,11 @@ def _job_counter(spark):
 
 
 def _rows(df, sort=False) -> tuple:
-    rows = [tuple(r) for r in df.collect()]
+    collected = df.collect()
+    # what the MCP veneer reads (a driver answer's kept rows) is collect()'s
+    # rows: the same fields, values and value types
+    assert list(map(repr, hit_rows(df))) == list(map(repr, collected))
+    rows = [tuple(r) for r in collected]
     return df.dtypes, sorted(rows, key=lambda r: r[:2]) if sort else rows
 
 

@@ -2,7 +2,7 @@ from __future__ import annotations
 
 import pytest
 
-from vector_mcp_spark.engine import CollectionEngine
+from vector_mcp_spark.engine import CollectionEngine, hit_rows
 from vector_mcp_spark.validation import EngineError
 
 
@@ -727,8 +727,10 @@ def test_driver_serve_set_lifecycle(spark, tmp_path_factory):
     """A warm graph query whose serve set fits the session broadcast bound
     is answered in-process: no Spark job, and the same rows (ids, content,
     scores, order) as the SQL descent a fresh engine serves with the bound
-    at -1 — on the built index and again after a repair. A table change
-    still refuses first, and describe_collection reports the regime."""
+    at -1 — on the built index and again after a repair. The build hands
+    its serve set over, so describe reports it warm before any query. A
+    table change still refuses first, and describe_collection reports the
+    regime."""
     from vector_mcp_spark.functions.embedder import hash_embed
 
     bound = "spark.sql.autoBroadcastJoinThreshold"
@@ -743,11 +745,16 @@ def test_driver_serve_set_lifecycle(spark, tmp_path_factory):
     eng.create_collection("drv")
     eng.add_documents("drv", [f"driver serve doc {i} topic {i % 4}" for i in range(24)])
     eng.build_search_index("drv")
-    assert eng.describe_collection("drv")["graph_serve"] == "cold"
+    assert eng.describe_collection("drv")["graph_serve"] == "driver"
+    assert CollectionEngine(spark, root).describe_collection("drv")["graph_serve"] == "cold"
     qs = [hash_embed(f"topic {i} doc", 64) for i in range(3)]
 
     def answers(engine) -> list:
-        return [engine.indexed_graph_search("drv", q, k=30, ef=48).collect() for q in qs]
+        frames = [engine.indexed_graph_search("drv", q, k=30, ef=48) for q in qs]
+        got = [df.collect() for df in frames]
+        # the rows the MCP veneer reads (hit_rows) are collect()'s
+        assert [list(map(repr, hit_rows(df))) for df in frames] == [list(map(repr, r)) for r in got]
+        return got
 
     def sql_answers() -> list:
         prev = spark.conf.get(bound)
@@ -760,7 +767,7 @@ def test_driver_serve_set_lifecycle(spark, tmp_path_factory):
             spark.conf.set(bound, prev)
         return got
 
-    cold = answers(eng)  # the miss builds and collects the serve set
+    cold = answers(eng)
     before = next_job_id()
     warm = answers(eng)
     state = eng._graph_serve_state(eng._require("drv"), "fresh")
@@ -786,12 +793,16 @@ def test_driver_serve_set_lifecycle(spark, tmp_path_factory):
 
 
 def test_serve_sets_are_dropped_with_their_engine(spark, tmp_path_factory):
-    """A graph serve set's global views live as long as the engine that
-    published them: engines that served and were collected leave no
-    ``_hnsw_*`` view behind."""
+    """A graph serve set's global views are published only when the SQL
+    descent reads them, and live as long as the engine that published
+    them: a query answered in-process publishes none, and engines that
+    served through SQL and were collected leave no ``_hnsw_*`` view
+    behind."""
     import gc
 
     from vector_mcp_spark.functions.embedder import hash_embed
+
+    bound = "spark.sql.autoBroadcastJoinThreshold"
 
     def global_views() -> set:
         return {t.name for t in spark.catalog.listTables("global_temp") if t.isTemporary}
@@ -804,13 +815,181 @@ def test_serve_sets_are_dropped_with_their_engine(spark, tmp_path_factory):
     del eng
     gc.collect()
     baseline = global_views()
-    for _ in range(3):
-        eng = CollectionEngine(spark, root)
-        assert eng.indexed_graph_search("gc", hash_embed("topic 1", 64), k=3).collect()
-        assert len(global_views() - baseline) == 2
-        del eng
-        gc.collect()
-        assert global_views() == baseline
+    eng = CollectionEngine(spark, root)
+    assert eng.indexed_graph_search("gc", hash_embed("topic 1", 64), k=3).collect()
+    assert eng.describe_collection("gc")["graph_serve"] == "driver"
+    assert global_views() == baseline
+    del eng
+    gc.collect()
+    prev = spark.conf.get(bound)
+    spark.conf.set(bound, "-1")
+    try:
+        for _ in range(3):
+            eng = CollectionEngine(spark, root)
+            assert eng.indexed_graph_search("gc", hash_embed("topic 1", 64), k=3).collect()
+            assert len(global_views() - baseline) == 2
+            del eng
+            gc.collect()
+            assert global_views() == baseline
+    finally:
+        spark.conf.set(bound, prev)
+
+
+_BOUND = "spark.sql.autoBroadcastJoinThreshold"
+#: vectors the build-equality pins need by construction: a zero-norm row,
+#: two equal vectors (equal pair scores, so (score, dst) ties) and their
+#: mirror image
+_BUILD_VECS = {
+    "zero norm": [0.0] * 8,
+    "twin a": [0.5, -0.5, 0.25, 0.0, 1.0, -1.0, 0.5, 0.5],
+    "twin b": [0.5, -0.5, 0.25, 0.0, 1.0, -1.0, 0.5, 0.5],
+    "twin mirror": [-0.5, 0.5, -0.25, 0.0, -1.0, 1.0, -0.5, -0.5],
+}
+_BUILD_DOCS = [*_BUILD_VECS] + [f"build doc {i} topic {i % 7} word{i % 5}" for i in range(44)]
+
+
+def _build_model(texts):
+    """Pinned vectors for the pinned texts; a signed hash vector otherwise."""
+    from vector_mcp_spark.functions.embedder import hash_embed
+
+    return [_BUILD_VECS.get(t) or [2 * x - 1 for x in hash_embed(t, 8)] for t in texts]
+
+
+def _families(spark, eng, name: str) -> tuple:
+    """Each index family of ``name`` as a sorted row list, its manifest
+    without the fingerprint, and each named index's graph and manifest."""
+    import json
+
+    root = eng._index_root(eng._require(name))
+    rows = {
+        family: sorted(tuple(r) for r in spark.read.parquet(str(root / family)).collect())
+        for family in ("postings", "doclen", "ids", "graph")
+    }
+    manifest = json.loads((root / "manifest.json").read_text())
+    manifest.pop("fingerprint")
+    named = {}
+    for vector_name in eng.named_vectors_config(name):
+        nroot = eng._named_root(eng._require(name)) / vector_name
+        meta = json.loads((nroot / "manifest.json").read_text())
+        graph = sorted(tuple(r) for r in spark.read.parquet(str(nroot / "graph")).collect())
+        named[vector_name] = (graph, meta)
+    return rows, manifest, named
+
+
+@pytest.mark.parametrize("distance", ["cosine", "dot", "l2"])
+def test_driver_build_equals_the_spark_build(spark, tmp_path_factory, distance):
+    """A version with a driver copy builds its graph in numpy, and every
+    family reads back as the same rows as Spark's build of the same
+    version (a fresh engine with broadcasting off): postings, doclen, ids
+    and graph, and the manifests are equal but for the build route — for
+    a content-only collection (vectors from the model), a stored-vector
+    one and a named vector, each with a zero-norm row and equal-score
+    ties."""
+    from vector_mcp_spark.functions.embedder import hash_embed
+
+    root = str(tmp_path_factory.mktemp(f"build_{distance}"))
+    setup = CollectionEngine(spark, root, embed_model=_build_model)
+    setup.create_collection("model", distance=distance)
+    setup.add_documents("model", _BUILD_DOCS)
+    setup.create_collection(
+        "stored", distance=distance, vectors_config={"t": {"dimension": 4, "distance": distance}}
+    )
+    stored = [[2 * x - 1 for x in hash_embed(t, 6)] for t in _BUILD_DOCS]
+    stored[0], stored[2] = [0.0] * 6, list(stored[1])
+    setup.add_documents("stored", _BUILD_DOCS, embeddings=stored)
+    ids = sorted(r.id for r in setup.read("stored").select("id").collect())
+    named = {i: [2 * x - 1 for x in hash_embed(i, 4)] for i in ids}
+    named[ids[0]], named[ids[1]] = [0.0] * 4, list(named[ids[2]])
+    setup.put_named_vectors("stored", "t", named)
+
+    def build(eng) -> dict:
+        out = {}
+        for name in ("model", "stored"):
+            eng.build_search_index(name)
+            if name == "stored":
+                eng.build_named_vector_index(name, "t")
+            out[name] = _families(spark, eng, name)
+        return out
+
+    prev = spark.conf.get(_BOUND)
+    spark.conf.set(_BOUND, "-1")
+    try:
+        on_spark = build(CollectionEngine(spark, root, embed_model=_build_model))
+    finally:
+        spark.conf.set(_BOUND, prev)
+    eng = CollectionEngine(spark, root, embed_model=_build_model)
+    on_driver = build(eng)
+    for name in ("model", "stored"):
+        (s_rows, s_meta, s_named), (d_rows, d_meta, d_named) = on_spark[name], on_driver[name]
+        assert s_meta.pop("build") == "spark" and d_meta.pop("build") == "driver"
+        assert d_rows == s_rows and d_meta == s_meta, name
+        assert {0, 1} <= {layer for layer, _, _ in d_rows["graph"]}
+        for vector_name, (graph, meta) in s_named.items():
+            d_graph, d_named_meta = d_named[vector_name]
+            assert meta.pop("build") == "spark" and d_named_meta.pop("build") == "driver"
+            assert d_graph == graph and graph and d_named_meta == meta
+        assert eng.describe_collection(name)["index_build"] == "driver"
+
+
+def test_driver_build_runs_few_jobs_and_hands_its_serve_set_over(spark, tmp_path_factory):
+    """A collection within the driver bound builds in at most 12 Spark jobs
+    (the graph runs none), and the first graph query after the build runs
+    none either: the build hands its driver copy and edges to the serve-set
+    cache, and nothing is published for the SQL descent until one reads
+    it."""
+    from vector_mcp_spark.mcp import McpVeneer
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def next_job_id() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        return int(sc.dagScheduler().nextJobId())
+
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("driver_build_jobs")))
+    ven = McpVeneer(eng)
+    ven.vector_collection_management("create_collection", collection_name="jobs")
+    ven.vector_collection_management(
+        "add_documents", collection_name="jobs",
+        document_contents=[f"job count doc {i} topic {i % 6}" for i in range(64)],
+    )
+    before = next_job_id()
+    ven.vector_collection_management("build_search_index", collection_name="jobs")
+    build_jobs = next_job_id() - before
+    assert build_jobs <= 12, build_jobs
+    state = eng.describe_collection("jobs")
+    assert state["index_build"] == "driver" and state["graph_serve"] == "driver"
+    serve = next(iter(eng._graph_serve_sets.values()))
+    assert serve._sql is None
+    before = next_job_id()
+    out = ven.vector_search("indexed_search", collection_name="jobs", question="topic 3", number_results=5)
+    assert next_job_id() == before
+    assert len(out["results"]) == 5 and serve._sql is None
+
+
+def test_null_content_version_builds_through_spark(spark, tmp_path_factory):
+    """A version the driver copy refuses (here a NULL content) builds its
+    graph with Spark's operators, records the route, and serves."""
+    from pyspark.sql import functions as F
+
+    from vector_mcp_spark.functions.embedder import hash_embed
+
+    eng = CollectionEngine(spark, str(tmp_path_factory.mktemp("null_content_build")))
+    eng.create_collection("nc")
+    eng.add_documents("nc", [f"null content doc {i} topic {i % 3}" for i in range(12)])
+    hole = eng.read("nc").limit(1).withColumn("content", F.lit(None).cast("string"))
+    prefix = hole.first().id[:2]
+    eng._rewrite_partitions(
+        eng._scoped("nc"), [prefix],
+        eng._read_partitions(eng._scoped("nc"), [prefix])
+        .join(hole.select("id"), "id", "left_anti").unionByName(hole),
+    )
+    assert eng.scan_table("nc")[1] is None
+    info = eng.build_search_index("nc")
+    assert info["n_vectors"] == 12
+    state = eng.describe_collection("nc")
+    assert state["index_build"] == "spark" and state["graph_serve"] == "cold"
+    got = eng.indexed_graph_search("nc", hash_embed("null content doc 4 topic 1", 64), k=3)
+    assert len(got.collect()) == 3
 
 
 def test_catalog_dataframe_contract(spark, tmp_path_factory):

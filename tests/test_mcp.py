@@ -2018,6 +2018,15 @@ def test_every_search_action_answers_adversarial_input_with_a_documented_code(ad
                     answered[action] = answered.get(action, 0) + 1
     # the alias and the unicode question are answered, not refused
     assert all(answered.get(a) for a in SEARCH_ACTIONS if a != "federated_search"), answered
+    # the engine and the API own the k check: every action answers a bad
+    # number_results with its documented code
+    for action in SEARCH_ACTIONS:
+        for k in ks:
+            if k != 1000:
+                out = ven.vector_search(
+                    action, **{"collection_name": "adv", **valid[action], "number_results": k}
+                )
+                assert out == {"error": "number_results_invalid"}, (action, k, out)
 
 
 _GRAPH_VEC = [0.5, 0.1, -0.2, 0.3] * 16  # the default 64-dim embedding width

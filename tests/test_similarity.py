@@ -505,7 +505,7 @@ def _descent_every_way(spark, rows, edges, entry, queries, k, ef, metric):
     edge_df = spark.createDataFrame(edges, "layer int, src string, dst string")
     ss = publish_serve_set(corpus, edge_df, metric=metric)
     table = collect_driver_table(corpus, "embedding", None, 0)
-    driver = driver_serve_set(table, ss.edges, metric, 0)
+    driver = driver_serve_set(table, ss.edges.collect(), metric, 0)
     assert driver.vecs is table.vecs and driver.rows is table.rows
     beams = {qid: ann_hnsw_driver_topk(driver, entry, qv, k=ef, ef=ef, metric=metric)
              for qid, qv in queries}
@@ -610,7 +610,7 @@ def test_driver_serve_set_norms_equal_the_spark_norms(spark, metric):
     ss = publish_serve_set(corpus, edges, metric=metric)
     try:
         table = collect_driver_table(corpus, "embedding", None, 0)
-        driver = driver_serve_set(table, ss.edges, metric, 0)
+        driver = driver_serve_set(table, ss.edges.collect(), metric, 0)
         want = {r.node: r.n for r in ss.nodes.select("node", "n").collect()}
         assert driver.norms.tolist() == [want[i] for i in table.ids]
         assert (driver.norms[table.rows["n05"]] == 1.0) == (metric == "cosine")

@@ -35,7 +35,7 @@ import weakref
 from collections.abc import Callable, Mapping, Sequence
 from datetime import datetime, timezone
 from pathlib import Path
-from typing import TYPE_CHECKING, NamedTuple
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +44,7 @@ from vector_mcp_spark.sanitize import sanitize_metadata_py, sanitize_text_py
 from vector_mcp_spark.schema import DOCUMENT_SCHEMA
 from vector_mcp_spark.validation import (
     EngineError,
+    default_beam_width,
     validate_collection_name,
     validate_delete_confirm,
     validate_ingest_bounds,
@@ -59,13 +60,29 @@ if TYPE_CHECKING:
     from vector_mcp_spark.operators.graph_ann import DriverServeSet, ServeSet
 
 
-class _GraphServe(NamedTuple):
-    """One cached graph serve set (see ``CollectionEngine._graph_serve_set``)."""
+class _GraphServe:
+    """One cached graph serve set (see ``CollectionEngine._graph_serve_set``):
+    the driver-resident copy, or None when the set is over the bound, and
+    the published set the SQL descent reads, published on first use."""
 
-    #: the published set the SQL descent reads
-    sql: ServeSet
-    #: the driver-resident copy, or None when the set is over the bound
-    driver: DriverServeSet | None
+    __slots__ = ("driver", "_publish", "_sql", "_lock")
+
+    def __init__(self, driver: DriverServeSet | None, publish: Callable[[], ServeSet]):
+        self.driver, self._publish, self._sql = driver, publish, None
+        self._lock = threading.Lock()
+
+    @property
+    def sql(self) -> ServeSet:
+        with self._lock:
+            if self._sql is None:
+                self._sql = self._publish()
+            return self._sql
+
+    def drop(self) -> None:
+        """Unregister the published set's views, if it was published."""
+        with self._lock:
+            if self._sql is not None:
+                self._sql.drop()
 
 
 #: a listed version whose driver copy has not been sized yet
@@ -109,15 +126,25 @@ def _embed_batch(model, dim: int | None, texts: Sequence[str]) -> list[list[floa
 
 
 def _drop_serve_sets(sets: dict) -> None:
-    """Drop the global views of every cached serve set (an engine's
+    """Drop the global views of every published serve set (an engine's
     finalizer: the views would otherwise outlive it for the life of the
     Spark application)."""
     for serve in sets.values():
-        serve.sql.drop()
+        serve.drop()
 
 
 #: the (id, content, score) frame every single-question search returns
 HIT_COLUMNS = "id STRING, content STRING, score DOUBLE"
+
+
+def hit_rows(df: DataFrame) -> list:
+    """``df.collect()`` of a search's answer frame; for a frame
+    :meth:`CollectionEngine._local_hits` rendered, the rows it kept, with
+    no JVM round trip (planning and collecting a local relation costs a
+    few milliseconds per request). ``vars`` because a DataFrame resolves
+    a missing attribute as a column, through the JVM."""
+    rows = vars(df).get("_hit_rows")
+    return df.collect() if rows is None else rows
 
 
 def _physical_name(logical: str) -> str:
@@ -278,20 +305,26 @@ class CollectionEngine:
         (self.root / "collections").mkdir(parents=True, exist_ok=True)
 
     def _graph_serve_set(
-        self, index_root: Path, metric: str, corpus, table
+        self,
+        index_root: Path,
+        metric: str,
+        source: Callable[[], tuple[DataFrame, DriverTable | None]],
+        edges: Sequence[tuple] | None = None,
     ) -> _GraphServe:
         """The warm working set for one graph index build — what a vector
-        DB keeps open next to its persisted graph: the published serve set
-        the SQL descent reads (views, sizes and broadcast gate, from
-        :func:`~vector_mcp_spark.operators.graph_ann.publish_serve_set`)
-        and, when it fits the same broadcast bound, a driver-resident set
-        the descent runs on in-process with no Spark job. Built once per
-        (build, metric) and per engine; evicts prior builds of the same
-        root (and drops their views) so a rebuild does not pin dead
-        checkpoint blocks. ``corpus`` and ``table`` are called on a miss
-        only: zero-argument callables returning the (id, embedding[,
-        content]) frame the build serves and that version's
-        :class:`DriverTable` (or None)."""
+        DB keeps open next to its persisted graph: when it fits the
+        broadcast bound, a driver-resident set the descent runs on
+        in-process with no Spark job, and the published set the SQL
+        descent reads (views, sizes and broadcast gate, from
+        :func:`~vector_mcp_spark.operators.graph_ann.publish_serve_set`),
+        published only when a descent reads it. Built once per (build,
+        metric) and per engine; evicts prior builds of the same root (and
+        drops their views) so a rebuild does not pin dead checkpoint
+        blocks. On a miss ``source()`` gives the (id, embedding[, content])
+        frame the build serves and that version's :class:`DriverTable` (or
+        None); ``edges`` are the build's (layer, src, dst) rows when the
+        caller has them, else the graph family is collected for the
+        driver set."""
         from vector_mcp_spark.operators.graph_ann import driver_serve_set, publish_serve_set
         from vector_mcp_spark.operators.partition import fits_broadcast
 
@@ -301,24 +334,32 @@ class CollectionEngine:
         if hit is not None:
             return hit
         for old in [k for k in self._graph_serve_sets if k[0] == key[0]]:
-            self._graph_serve_sets.pop(old).sql.drop()
-        ss = publish_serve_set(
-            corpus(), self._read_family(index_root / "graph", _GRAPH_SCHEMA),
-            id_col="id", emb_col="embedding", metric=metric,
-        )
+            self._graph_serve_sets.pop(old).drop()
+        corpus, local = source()
+        spark, graph = self.spark, str(index_root / "graph")
+
+        def publish() -> ServeSet:
+            # no reference to the engine: its finalizer holds this cache,
+            # so a closure over the engine would keep the engine alive
+            return publish_serve_set(
+                corpus, spark.read.schema(_GRAPH_SCHEMA).parquet(graph),
+                id_col="id", emb_col="embedding", metric=metric,
+            )
+
         # the driver set is the table's driver copy — its rows, vectors
         # and content, not a second collect — plus the adjacency, when the
         # copy's estimate plus edges × 64 fits the broadcast bound (a
         # broadcast is a driver-side collect of that size already). Over
         # the bound, or with the bound at −1, the SQL descent serves.
-        local = table()
         driver = None
         if local is not None:
-            nbytes = local.nbytes + ss.n_edges * 64
+            if edges is None:
+                edges = self._read_family(index_root / "graph", _GRAPH_SCHEMA).collect()
+            nbytes = local.nbytes + len(edges) * 64
             if fits_broadcast(self.spark, nbytes):
-                driver = driver_serve_set(local, ss.edges, metric, nbytes)
-        self._graph_serve_sets[key] = _GraphServe(ss, driver)
-        return self._graph_serve_sets[key]
+                driver = driver_serve_set(local, edges, metric, nbytes)
+        serve = self._graph_serve_sets[key] = _GraphServe(driver, publish)
+        return serve
 
     # -- catalog ------------------------------------------------------------
     #
@@ -1085,13 +1126,17 @@ class CollectionEngine:
         the HNSW-style graph that dense search descends, and the ``ids``
         sidecar that repair proves append-only growth against. Returns
         {"n_terms", "n_vectors", "fingerprint"}."""
+        import json
+
         from vector_mcp_spark.operators.lexical import build_postings, term_bucket
 
         scoped = self._require(name)
         distance = self._locked_distance(scoped)
         # every index family derives from one materialized corpus (the
-        # eager checkpoint), never a rescan of the table per family
-        df = self.read(name).localCheckpoint(eager=True)
+        # eager checkpoint), never a rescan of the table per family; the
+        # version's driver copy, when it has one, builds the graph
+        frame, table = self.scan_table(name)
+        df = frame.localCheckpoint(eager=True)
         root = self._index_root(scoped)
         for family in self._RETIRED_FAMILIES:
             shutil.rmtree(root / family, ignore_errors=True)
@@ -1116,51 +1161,37 @@ class CollectionEngine:
         df.select("id", self._row_fingerprint(df).alias("rowhash")).write.mode(
             "overwrite"
         ).parquet(str(root / "ids"))
-        # counts come from the source plans, not a read-back: an EMPTY
+        # counts come from the driver copy (every row has a vector and
+        # content there) or the source plans, not a read-back: an EMPTY
         # collection writes only _SUCCESS markers, which parquet cannot
         # re-read without a schema
-        n_terms = postings.select("term").distinct().count()
-        n_vectors = vec_rows.count()
-        # the dense family: the HNSW-style layered graph (the engine-side
-        # analogue of pgvector `USING hnsw`, postgres.py:182-188), built
-        # over an ivf coarse quantizer and served by indexed_graph_search
-        graph_meta: dict = {"entry": None, "top_layer": 0}
+        if table is not None:
+            n_terms, n_vectors = len(table.postings), len(table.ids)
+            width = table.vecs.shape[1] if n_vectors else None
+        else:
+            n_terms = postings.select("term").distinct().count()
+            n_vectors = vec_rows.count()
+            width = (
+                int(vec_rows.select(F.size("embedding").alias("d")).first().d)
+                if n_vectors else None
+            )
         # the vector width this index serves — stamped into the manifest so
         # NO serve path ever needs a per-query Spark job to learn it; the
         # catalog lock is authoritative when set, measured from the data
         # otherwise (content-only collections)
         dim_indexed: int | None = self._locked_dimension(scoped)
-        if n_vectors:
-            d = int(vec_rows.select(F.size("embedding").alias("d")).first().d)
-            if dim_indexed is None or n_vectors >= 2:
-                dim_indexed = d
-        if n_vectors >= 2:
-            from vector_mcp_spark.operators.graph_ann import hnsw_build
-            from vector_mcp_spark.operators.similarity import ivf_build
-
-            # the coarse quantizer under the collection metric: l2
-            # collections cluster by Euclidean distance; dot shares the
-            # cosine clustering (the graph's exact scores restore order)
-            assigned, _ = ivf_build(
-                vec_rows.select("id", "embedding"), n_centroids=min(16, n_vectors),
-                id_col="id", max_iter=2, metric="l2" if distance == "l2" else "cosine",
-            )
-            # size the hash-bucket family to the collection: a tiny corpus
-            # spread over 16 buckets yields singleton blocks → no candidate
-            # pairs → a disconnected graph the beam can't traverse; ~128
-            # rows per bucket keeps small collections fully connected and
-            # large ones capped (the sliver inside hnsw_build takes over
-            # past 2048 vectors)
-            edges, graph_meta = hnsw_build(
-                assigned,
-                id_col="id",
-                n_hash_buckets=min(16, max(1, n_vectors // 128)),
-                metric=distance,
-            )
-            edges.write.mode("overwrite").parquet(str(root / "graph"))
+        if n_vectors and (dim_indexed is None or n_vectors >= 2):
+            dim_indexed = width
+        # the dense family: the HNSW-style layered graph (the engine-side
+        # analogue of pgvector `USING hnsw`, postgres.py:182-188), served
+        # by indexed_graph_search
+        graph_meta, edges = self._build_graph(
+            root, vec_rows.select("id", "embedding"), table, n_vectors,
+            n_centroids=min(16, n_vectors), metric=distance,
+        )
         fp = self._table_fingerprint(scoped)
         (root / "manifest.json").write_text(
-            __import__("json").dumps(
+            json.dumps(
                 {
                     "fingerprint": fp,
                     "n_terms": n_terms,
@@ -1171,10 +1202,77 @@ class CollectionEngine:
                     # catalog; serve paths fall back to this for the
                     # mis-sized-query refusal
                     "dimension": dim_indexed,
+                    "build": "spark" if table is None else "driver",
                 }
             )
         )
+        if edges is not None:
+            # the first graph query finds its serve set warm
+            self._collection_graph_serve(name, scoped, distance, edges)
         return {"n_terms": n_terms, "n_vectors": n_vectors, "fingerprint": fp}
+
+    def _build_graph(
+        self,
+        root: Path,
+        vectors: DataFrame,
+        table: DriverTable | None,
+        n: int,
+        n_centroids: int,
+        metric: str,
+    ) -> tuple[dict, list[tuple] | None]:
+        """Write the graph family of an index over ``n`` vectors: an ivf
+        coarse quantizer under ``metric`` (dot shares the cosine clustering;
+        the graph's exact scores restore order), then the layered graph
+        over it. With ``table``, the version's driver copy, both run in
+        numpy (:func:`~vector_mcp_spark.operators.similarity.ivf_build_local`,
+        :func:`~vector_mcp_spark.operators.graph_ann.hnsw_build_local`) and
+        the family is written from the driver with no Spark job; without
+        it Spark's ``ivf_build`` and ``hnsw_build`` run over the (id,
+        embedding) frame ``vectors``. Both give the same edges. Returns the
+        graph meta and the driver build's (layer, src, dst) rows (None for
+        a Spark build). Under 2 vectors there is no graph to build."""
+        if n < 2:
+            return {"entry": None, "top_layer": 0}, None
+        from vector_mcp_spark.operators.graph_ann import hnsw_build, hnsw_build_local
+        from vector_mcp_spark.operators.similarity import ivf_build, ivf_build_local
+
+        ivf_metric = "l2" if metric == "l2" else "cosine"
+        # size the hash-bucket family to the collection: a tiny corpus
+        # spread over 16 buckets yields singleton blocks → no candidate
+        # pairs → a disconnected graph the beam can't traverse; ~128 rows
+        # per bucket keeps small collections fully connected and large
+        # ones capped (the sliver inside the build takes over past 2048
+        # vectors)
+        n_hash_buckets = min(16, max(1, n // 128))
+        if table is None:
+            assigned, _ = ivf_build(
+                vectors, n_centroids=n_centroids, id_col="id", max_iter=2, metric=ivf_metric
+            )
+            edges, meta = hnsw_build(
+                assigned, id_col="id", n_hash_buckets=n_hash_buckets, metric=metric
+            )
+            edges.write.mode("overwrite").parquet(str(root / "graph"))
+            return meta, None
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        cluster, _ = ivf_build_local(table, n_centroids=n_centroids, max_iter=2, metric=ivf_metric)
+        at, meta = hnsw_build_local(table, cluster, n_hash_buckets=n_hash_buckets, metric=metric)
+        layer = at[:, 0].tolist()
+        src, dst = ([table.ids[i] for i in at[:, c].tolist()] for c in (1, 2))
+        graph = root / "graph"
+        shutil.rmtree(graph, ignore_errors=True)
+        graph.mkdir(parents=True)
+        pq.write_table(
+            pa.table({
+                "layer": pa.array(layer, pa.int32()),
+                "src": pa.array(src, pa.string()),
+                "dst": pa.array(dst, pa.string()),
+            }),
+            str(graph / "part-00000.parquet"),
+        )
+        (graph / "_SUCCESS").touch()
+        return meta, list(zip(layer, src, dst))
 
     def index_status(self, name: str) -> str:
         """'absent' | 'fresh' | 'repaired' | 'stale' — stale when the table
@@ -1486,37 +1584,31 @@ class CollectionEngine:
     def build_named_vector_index(self, name: str, vector_name: str) -> dict:
         """Materialize the name's graph index family under ITS distance
         (the per-name analogue of the default embedding's graph family):
-        IVF coarse quantizer + layered graph over the sidecar vectors, a
-        per-name manifest stamped with the sidecar fingerprint. Collections
-        with < 2 vectors under the name record an entry-less graph (served
-        queries answer empty, same as the default family)."""
+        IVF coarse quantizer + layered graph over the sidecar vectors
+        (:meth:`_build_graph`), a per-name manifest stamped with the
+        sidecar fingerprint. Collections with < 2 vectors under the name
+        record an entry-less graph (served queries answer empty, same as
+        the default family)."""
         import json
-
-        from vector_mcp_spark.operators.graph_ann import hnsw_build
-        from vector_mcp_spark.operators.similarity import ivf_build
 
         scoped = self._require(name)
         cfg = self._named_cfg(scoped, vector_name)
         root = self._named_root(scoped) / vector_name
         data = root / "data"
-        n = self._read_named(data).count() if (data / "_SUCCESS").exists() else 0
-        graph_meta: dict = {"entry": None, "top_layer": 0}
-        if n >= 2:
-            vecs = self._read_named(data).select("id", F.col("vector").alias("embedding"))
-            assigned, _cents = ivf_build(
-                vecs,
-                n_centroids=min(16, max(1, n // 4)),
-                id_col="id",
-                max_iter=2,
-                metric="l2" if cfg["distance"] == "l2" else "cosine",
+        listed, table, n = None, None, 0
+        if (data / "_SUCCESS").exists():
+            listed = self._listing(
+                (scoped, vector_name),
+                self._named_fingerprint(scoped, vector_name),
+                lambda: self._read_named(data),
             )
-            edges, graph_meta = hnsw_build(
-                assigned,
-                id_col="id",
-                n_hash_buckets=min(16, max(1, n // 128)),
-                metric=cfg["distance"],
-            )
-            edges.write.mode("overwrite").parquet(str(root / "graph"))
+            table = self._driver_table(listed, "vector", None)
+            n = len(table.ids) if table is not None else listed.frame.count()
+        graph_meta, edges = self._build_graph(
+            root,
+            None if listed is None else listed.frame.select("id", F.col("vector").alias("embedding")),
+            table, n, n_centroids=min(16, max(1, n // 4)), metric=cfg["distance"],
+        )
         (root / "manifest.json").write_text(
             json.dumps(
                 {
@@ -1524,9 +1616,12 @@ class CollectionEngine:
                     "n_vectors": n,
                     "graph": graph_meta,
                     "distance": cfg["distance"],
+                    "build": "spark" if table is None else "driver",
                 }
             )
         )
+        if edges is not None:
+            self._named_graph_serve(root, listed, cfg["distance"], edges)
         return {"n_vectors": n}
 
     def named_vector_index_status(self, name: str, vector_name: str) -> str:
@@ -1613,10 +1708,7 @@ class CollectionEngine:
         # bound, else the one-query SQL descent over its views — the same
         # rows either way. The content join stays: this index's freshness
         # covers the named vectors, not the main table's content.
-        serve = self._graph_serve_set(
-            root, metric, lambda: vecs.select("id", F.col("vector").alias("embedding")),
-            lambda: self._driver_table(listed, "vector", None),
-        )
+        serve = self._named_graph_serve(root, listed, metric)
         args = (serve, meta["graph"]["entry"], question_vec, k, ef, metric)
         rows = self._driver_graph_hits(*args)
         hits = self._sql_graph_hits(*args) if rows is None else self._local_hits(rows)
@@ -1671,7 +1763,7 @@ class CollectionEngine:
         )
 
     def indexed_graph_search(
-        self, name: str, question_vec, k: int = 5, ef: int = 48
+        self, name: str, question_vec, k: int = 5, ef: int | None = 48
     ) -> DataFrame:
         """Serve a vector query from the layered HNSW-style graph index
         (operators/graph_ann.py): beam-descend the persisted edge table
@@ -1680,11 +1772,13 @@ class CollectionEngine:
         sparse search. Collections with < 2 vectors have
         no graph; the query answers empty (nothing to traverse). A warm
         serve set within the session broadcast bound answers in-process
-        (no Spark job); a larger one runs the prepared SQL descent."""
+        (no Spark job); a larger one runs the prepared SQL descent.
+        ``ef=None`` is :func:`default_beam_width` of the validated ``k``."""
         import json
 
         scoped = self._require(name)
         k = validate_number_results(k)
+        ef = default_beam_width(k) if ef is None else ef
         question_vec = validate_query_vector(question_vec)
         dim = self._locked_dimension(scoped)
         if dim is not None and len(question_vec) != dim:
@@ -1735,17 +1829,29 @@ class CollectionEngine:
             .orderBy(*self._metric_order(metric, F.col("score"), F.col("id")))
         )
 
-    def _collection_graph_serve(self, name: str, scoped: str, metric: str) -> _GraphServe:
+    def _collection_graph_serve(
+        self, name: str, scoped: str, metric: str, edges: Sequence[tuple] | None = None
+    ) -> _GraphServe:
         """The collection's cached serve set: its graph over the served
         (id, embedding, content) rows that have a vector."""
 
-        def corpus() -> DataFrame:
-            df = self.read(name)
-            return df.where(F.col("embedding").isNotNull()).select("id", "embedding", "content")
+        def source() -> tuple[DataFrame, DriverTable | None]:
+            frame, table = self.scan_table(name)
+            corpus = frame.where(F.col("embedding").isNotNull())
+            return corpus.select("id", "embedding", "content"), table
 
-        return self._graph_serve_set(
-            self._index_root(scoped), metric, corpus, lambda: self.scan_table(name)[1]
-        )
+        return self._graph_serve_set(self._index_root(scoped), metric, source, edges)
+
+    def _named_graph_serve(
+        self, root: Path, listed: _Listed, metric: str, edges: Sequence[tuple] | None = None
+    ) -> _GraphServe:
+        """A named vector's cached serve set, over its listed sidecar."""
+
+        def source() -> tuple[DataFrame, DriverTable | None]:
+            corpus = listed.frame.select("id", F.col("vector").alias("embedding"))
+            return corpus, self._driver_table(listed, "vector", None)
+
+        return self._graph_serve_set(root, metric, source, edges)
 
     def _driver_graph_hits(
         self, serve: _GraphServe, entry, question_vec, k: int, ef: int, metric: str
@@ -1798,26 +1904,37 @@ class CollectionEngine:
         three). None renders as NULL. Strings enter as UTF-8 hex literals:
         only hex digits reach the SQL text, so no escaping rule or parser
         setting can alter them, and unlike named parameters they cost no
-        py4j call per value. Doubles must be finite."""
+        py4j call per value. Doubles must be finite. The frame keeps the
+        rows as ``collect()`` gives them, for :func:`hit_rows`."""
+        from pyspark.sql import Row
+
         cols = [c.split() for c in columns.split(",")]
+        cast = {"STRING": str, "INT": int, "DOUBLE": float}
+        typed = [
+            [None if v is None else cast[kind](v) for v, (_, kind) in zip(row, cols)]
+            for row in rows
+        ]
 
         def lit(v, kind: str) -> str:
             if v is None:
                 return "NULL"
             if kind == "STRING":
-                return f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
-            return str(int(v)) if kind == "INT" else f"{float(v)!r}D"
+                return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+            return str(v) if kind == "INT" else f"{v!r}D"
 
         values = ", ".join(
             "(" + ", ".join(lit(v, kind) for v, (_, kind) in zip(row, cols)) + ")"
-            for row in rows
+            for row in typed
         )
         nulls = "(" + ", ".join("NULL" for _ in cols) + ")"
-        return self.spark.sql(
+        df = self.spark.sql(
             "SELECT " + ", ".join(f"CAST({c} AS {kind}) AS {c}" for c, kind in cols)
             + f" FROM VALUES {values or nulls} AS t({', '.join(c for c, _ in cols)})"
             + ("" if rows else " WHERE false")
         )
+        make = Row(*(c for c, _ in cols))
+        df._hit_rows = [make(*row) for row in typed]
+        return df
 
     def indexed_filtered_search(
         self,
@@ -1825,7 +1942,7 @@ class CollectionEngine:
         question_vec,
         payload_filter: dict,
         k: int = 5,
-        ef: int = 48,
+        ef: int | None = 48,
         selectivity_threshold: float = 0.25,
     ) -> DataFrame:
         """Filtered vector search over the persisted graph index — the
@@ -1857,7 +1974,8 @@ class CollectionEngine:
         ``collection_vector_schema_mismatch``, and absent/stale vector
         indexes with ``index_not_fresh`` — the same staleness contract as
         every indexed search. Returns (id, content, score) best-first;
-        < 2 indexed vectors answers empty."""
+        < 2 indexed vectors answers empty. ``ef=None`` is
+        :func:`default_beam_width` of the validated ``k``."""
         import json
 
         from vector_mcp_spark.operators.graph_ann import ann_filtered_topk_routed
@@ -1895,6 +2013,7 @@ class CollectionEngine:
                     )
         scoped = self._require(name)
         k = validate_number_results(k)
+        ef = default_beam_width(k) if ef is None else ef
         question_vec = validate_query_vector(question_vec)
         dim = self._locked_dimension(scoped)
         if dim is not None and len(question_vec) != dim:
@@ -3286,7 +3405,11 @@ class CollectionEngine:
         ``"driver"`` (the current table version's driver copy is warm;
         ``scan_serve_bytes`` is its estimated size), ``"spark"`` (the
         version is over the driver bound or refused, so the Spark plans
-        serve) or ``"cold"`` (the version has no verdict yet)."""
+        serve) or ``"cold"`` (the version has no verdict yet).
+        ``index_build`` says where the index's graph was built:
+        ``"driver"`` (from the table version's driver copy), ``"spark"``
+        (the version was over the driver bound or refused), or None (no
+        index, or one built before builds were recorded)."""
         scoped = self._require(name)
         status = self.index_status(name)
         return {
@@ -3316,19 +3439,26 @@ class CollectionEngine:
         return {"scan_serve": "driver", "scan_serve_bytes": listed.driver.nbytes}
 
     def _graph_serve_state(self, scoped: str, status: str) -> dict:
-        """The ``graph_serve`` fields of :meth:`describe_collection`, read
-        from the serve-set cache entry of the current build (no Spark job)."""
+        """The ``graph_serve`` and ``index_build`` fields of
+        :meth:`describe_collection`, read from the manifest and the
+        serve-set cache entry of the current build (no Spark job)."""
+        import json
+
+        root = self._index_root(scoped)
+        manifest = root / "manifest.json"
+        built = {
+            "index_build": json.loads(manifest.read_text()).get("build")
+            if manifest.exists() else None
+        }
         serve = None
         if status in ("fresh", "repaired"):
             # a fresh index was built under the locked distance, the
             # metric its serve set is keyed by
-            root = self._index_root(scoped)
-            mtime = (root / "manifest.json").stat().st_mtime_ns
             serve = self._graph_serve_sets.get(
-                (str(root), mtime, self._locked_distance(scoped))
+                (str(root), manifest.stat().st_mtime_ns, self._locked_distance(scoped))
             )
         if serve is None:
-            return {"graph_serve": "cold"}
+            return {"graph_serve": "cold", **built}
         if serve.driver is None:
-            return {"graph_serve": "sql"}
-        return {"graph_serve": "driver", "graph_serve_bytes": serve.driver.nbytes}
+            return {"graph_serve": "sql", **built}
+        return {"graph_serve": "driver", "graph_serve_bytes": serve.driver.nbytes, **built}

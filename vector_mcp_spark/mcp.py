@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 
 from vector_mcp_spark.api import VectorSearchApi
 from vector_mcp_spark.backend_policy import ensure_backend_available
-from vector_mcp_spark.engine import CollectionEngine
-from vector_mcp_spark.validation import EngineError, validate_number_results
+from vector_mcp_spark.engine import CollectionEngine, hit_rows
+from vector_mcp_spark.validation import EngineError
 
 # An entitlement resolver maps (namespace, candidate names) -> the subset the
 # calling identity may reach, e.g. ("collection", ["a","b"]) -> ["a"].
@@ -402,14 +402,12 @@ class McpVeneer:
         resolved = resolve_action(action, SEARCH_ACTIONS)
         if isinstance(resolved, dict):
             return resolved
-        # mcp_server.py:248-257 bounds (engine validation re-checks; the
-        # veneer's job is the stable error dict, not a traceback)
+        # the engine and the API validate every argument (mcp_server.py:248-257
+        # bounds); the veneer's job is the stable error dict, not a traceback
         try:
             if db_type is not None:
                 ensure_backend_available(db_type)
-            # every action gets the [1, MAX_RESULTS] int bound, also those
-            # that go to the engine directly
-            k = validate_number_results(number_results if number_results is not None else 5)
+            k = number_results if number_results is not None else 5
             if resolved == "semantic_search":
                 kwargs: dict[str, Any] = {"number_results": k}
                 if metric is not None:  # pgvector <=>/<#>/<-> selection
@@ -417,27 +415,23 @@ class McpVeneer:
                 df = self.api.semantic_search(collection_name, [question], **kwargs)
                 rows = [
                     {"rank": r.rank, "id": r.id, "content": r.content, "score": r.score}
-                    for r in df.collect()
+                    for r in hit_rows(df)
                 ]
+                return {"action": resolved, "collection_name": collection_name, "results": rows}
             elif resolved == "lexical_search":
                 df = self.api.lexical_search(collection_name, [question], number_results=k)
-                rows = [
-                    {"id": r.id, "content": r.content, "score": r.score} for r in df.collect()
-                ]
             elif resolved == "federated_search":
                 names = collection_names or ([collection_name] if collection_name else [])
                 df = self.api.federated_search(names, question, number_results=k)
                 rows = [
                     {"rank": r.rank, "collection": r.collection,
                      "collection_rank": r.collection_rank, "id": r.id,
-                     "content": r.content, "score": r.score} for r in df.collect()
+                     "content": r.content, "score": r.score} for r in hit_rows(df)
                 ]
                 return {"action": resolved, "collection_names": names, "results": rows}
             elif resolved == "indexed_search":
-                # the persisted-graph serving route with the beam width as
-                # a first-class tunable — mongodb's $vectorSearch exposes
-                # the same knob and defaults numCandidates = max(k*10, 100)
-                # (reference vector_mcp/vectordb/mongodb.py:277)
+                # the persisted-graph serving route with the beam width as a
+                # first-class tunable, like mongodb's $vectorSearch numCandidates
                 from vector_mcp_spark.sanitize import sanitize_text_py
                 from vector_mcp_spark.validation import validate_question
 
@@ -452,43 +446,30 @@ class McpVeneer:
                     raise EngineError("num_candidates_invalid")
                 cleaned = sanitize_text_py(validate_question(question))
                 qv = self.api.embed_query(collection_name, cleaned)
-                ef = num_candidates if num_candidates else max(k * 10, 100)
                 if payload_filter is not None:
                     # the qdrant filter+vector composition: equality /
                     # MatchAny / Range conditions, each served from its
                     # fresh payload index (engine routes + validates;
                     # malformed filters come back as stable error dicts)
                     df = self.engine.indexed_filtered_search(
-                        collection_name, qv, payload_filter, k=k, ef=ef
+                        collection_name, qv, payload_filter, k=k, ef=num_candidates
                     )
                 else:
-                    df = self.engine.indexed_graph_search(collection_name, qv, k=k, ef=ef)
-                rows = [
-                    {"id": r.id, "content": r.content, "score": r.score} for r in df.collect()
-                ]
+                    df = self.engine.indexed_graph_search(collection_name, qv, k=k, ef=num_candidates)
             elif resolved == "named_search":
                 if not vector_name or not query_vector:
                     return {"error": "named_search_input_required"}
                 df = self.engine.named_vector_search(
                     collection_name, vector_name, query_vector, k=k
                 )
-                rows = [
-                    {"id": r.id, "content": r.content, "score": r.score} for r in df.collect()
-                ]
             elif resolved == "sparse_search":
                 if not isinstance(query_weights, dict) or not query_weights:
                     return {"error": "sparse_search_input_required"}
                 df = self.engine.indexed_sparse_search(
                     collection_name, list(query_weights.items()), k=k
                 )
-                rows = [
-                    {"id": r.id, "content": r.content, "score": r.score} for r in df.collect()
-                ]
             elif resolved == "rerank_search":
                 df = self.api.rerank_search(collection_name, question, number_results=k)
-                rows = [
-                    {"id": r.id, "content": r.content, "score": r.score} for r in df.collect()
-                ]
             else:
                 kwargs: dict[str, Any] = {}
                 if semantic_weight is not None:
@@ -498,9 +479,7 @@ class McpVeneer:
                 if rrf_k is not None:
                     kwargs["rrf_k"] = rrf_k
                 df = self.api.search(collection_name, question, number_results=k, **kwargs)
-                rows = [
-                    {"id": r.id, "content": r.content, "score": r.score} for r in df.collect()
-                ]
+            rows = [{"id": r.id, "content": r.content, "score": r.score} for r in hit_rows(df)]
             return {"action": resolved, "collection_name": collection_name, "results": rows}
         except EngineError as e:
             return {"error": e.code}

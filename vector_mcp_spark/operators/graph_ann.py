@@ -39,9 +39,10 @@ controlled by the blocking keys exactly like dedup.py's banded LSH join.
 
 from __future__ import annotations
 
+import hashlib
 import itertools
 import math
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 from dataclasses import dataclass
 from typing import TYPE_CHECKING
 from decimal import ROUND_HALF_UP, Context, Decimal
@@ -263,6 +264,164 @@ def hnsw_build(
     return edges, {"entry": entry, "top_layer": int(top)}
 
 
+#: candidate pairs scored per step of the driver build: its peak memory is
+#: a few arrays of this length, whatever the corpus size
+_PAIR_CHUNK = 1 << 16
+
+
+def hnsw_build_local(
+    table: DriverTable,
+    cluster: np.ndarray,
+    m: int = 12,
+    n_hash_buckets: int = HNSW_N_HASH_BUCKETS,
+    nn_descent_rounds: int = 2,
+    metric: str = "cosine",
+) -> tuple[np.ndarray, dict]:
+    """:func:`hnsw_build` over a driver copy of the corpus, given each
+    row's coarse ``cluster`` (:func:`~vector_mcp_spark.operators.similarity.ivf_build_local`).
+    Returns the same edge set as an (E, 3) array of (layer, src row, dst
+    row) — rows index ``table.ids`` — and the same meta. Every step
+    replays the Spark build's: the sha-drawn ``hx`` and levels, both
+    layer-0 blocking families with their slivers, :func:`_top_m` (the
+    :func:`_pair_score` folds and the (score, dst id) order), the
+    NN-descent rounds, :func:`_symmetrize`, the upper layers and the
+    min-id entry point. Candidates are scored a block, or a run of
+    sources, at a time, so memory follows the block cap, not n²."""
+    if metric not in GRAPH_METRICS:
+        raise ValueError(f"unknown metric {metric!r}; one of {sorted(GRAPH_METRICS)}")
+    n = len(table.ids)
+    hx = np.array(
+        [int(hashlib.sha256(str(i).encode("utf-8")).hexdigest()[60:], 16) for i in table.ids],
+        dtype=np.int64,
+    )
+    level = np.where(hx % HNSW_LEVEL_FANOUT**2 == 0, 2, np.where(hx % HNSW_LEVEL_FANOUT == 0, 1, 0))
+    cluster = np.asarray(cluster, dtype=np.int64)
+    vt = np.ascontiguousarray(table.vecs.T)
+    norms = _node_norms(table, metric)
+    rank = table.id_order
+    higher = GRAPH_METRICS[metric]
+
+    def top_m(chunks) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """Each source's top-``m`` (src, dst, score) over candidate chunks
+        that each hold every candidate of their sources."""
+        parts = []
+        for src, dst in chunks:
+            keep = np.unique(src * n + dst, return_index=True)[1]
+            src, dst = src[keep], dst[keep]
+            parts.append(select_top_m(src, dst, _pair_scores(vt, norms, src, dst, metric)))
+        return _concat(parts)
+
+    def select_top_m(src, dst, score):
+        order = np.lexsort((rank[dst], -score if higher else score, src))
+        src = src[order]
+        start = np.flatnonzero(np.r_[True, src[1:] != src[:-1]])
+        pos = np.arange(len(src)) - np.repeat(start, np.diff(np.r_[start, len(src)]))
+        keep = order[pos < m]
+        return src[pos < m], dst[keep], score[keep]
+
+    # layer 0: the two blocking families' top-m, merged to each source's
+    # top-m of the union (top-m of a union = top-m of the parts' top-m)
+    s = max(1, -(-n // (HNSW_N_HASH_BUCKETS * HNSW_BLOCK_CAP)))
+    every = np.arange(n)
+    seeds = _concat([
+        top_m(_block_pairs(every, cluster * s + hx % s)),
+        top_m(_block_pairs(every, (hx % n_hash_buckets) * s + (hx // n_hash_buckets) % s)),
+    ])
+    keep = np.unique(seeds[0] * n + seeds[1], return_index=True)[1]
+    e0 = select_top_m(*(a[keep] for a in seeds))[:2]
+    for _ in range(nn_descent_rounds):
+        e0 = top_m(_descent_pairs(*e0, n, m))[:2]
+    layers = [(0, e0)]
+
+    s1 = max(1, -(-n // (HNSW_LEVEL_FANOUT * HNSW_UPPER_COARSEN * HNSW_BLOCK_CAP)))
+    up1 = np.flatnonzero(level >= 1)
+    layers.append((1, top_m(_block_pairs(
+        up1, (cluster[up1] % HNSW_UPPER_COARSEN) * s1 + hx[up1] % s1
+    ))[:2]))
+    s2 = max(1, -(-n // (HNSW_LEVEL_FANOUT**2 * HNSW_BLOCK_CAP)))
+    up2 = np.flatnonzero(level >= 2)
+    layers.append((2, top_m(_block_pairs(up2, hx[up2] % s2))[:2]))
+
+    edges = []
+    for layer, (src, dst) in layers:
+        sym = np.unique(np.r_[src * n + dst, dst * n + src])
+        edges.append(np.stack([np.full(len(sym), layer), sym // n, sym % n], axis=1))
+    top = int(level.max())
+    entry = table.ids[min(np.flatnonzero(level == top), key=rank.__getitem__)]
+    return np.concatenate(edges), {"entry": entry, "top_layer": top}
+
+
+def _concat(parts: list[tuple]) -> tuple:
+    """Column-wise concatenation of tuples of equal-length arrays."""
+    if not parts:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64), np.empty(0)
+    return tuple(np.concatenate(cols) for cols in zip(*parts))
+
+
+def _pair_scores(
+    vt: np.ndarray, norms: np.ndarray, a: np.ndarray, b: np.ndarray, metric: str
+) -> np.ndarray:
+    """:func:`_pair_score` of rows ``a`` against rows ``b`` of the d×n
+    vectors ``vt``: the dot as the sequential fold (:func:`_fold_rows`'s
+    order), one dimension at a time."""
+    d = np.zeros(len(a))
+    for col in vt:
+        d += col[a] * col[b]
+    if metric == "cosine":
+        return d / (norms[a] * norms[b])
+    if metric == "dot":
+        return d
+    inner = norms[a] * norms[a] + norms[b] * norms[b] - 2.0 * d
+    return np.sqrt(np.where(inner < 0.0, 0.0, inner))
+
+
+def _block_pairs(nodes: np.ndarray, key: np.ndarray):
+    """Chunks of (src, dst): every ordered pair of distinct ``nodes`` that
+    share a ``key`` — :func:`hnsw_build`'s ``pairs_on`` — a run of whole
+    blocks per chunk."""
+    order = np.argsort(key, kind="stable")
+    nodes, key = nodes[order], key[order]
+    bounds = np.flatnonzero(np.r_[True, key[1:] != key[:-1], True])
+    src, dst, pending = [], [], 0
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        block = nodes[lo:hi]
+        src.append(np.repeat(block, len(block)))
+        dst.append(np.tile(block, len(block)))
+        pending += len(block) ** 2
+        if pending >= _PAIR_CHUNK or hi == len(nodes):
+            a, b = np.concatenate(src), np.concatenate(dst)
+            yield a[a != b], b[a != b]
+            src, dst, pending = [], [], 0
+
+
+def _descent_pairs(src: np.ndarray, dst: np.ndarray, n: int, m: int):
+    """Chunks of one NN-descent round's candidates — each source's edges,
+    reversed edges and two-hop neighbors other than itself — a run of
+    sources per chunk."""
+
+    def lists(keys, values):
+        order = np.argsort(keys, kind="stable")
+        return np.r_[0, np.cumsum(np.bincount(keys, minlength=n))], values[order]
+
+    def expand(ptr, values, rows):
+        """(index into ``rows``, value) for every value listed under each row."""
+        counts = ptr[rows + 1] - ptr[rows]
+        at = np.repeat(np.arange(len(rows)), counts)
+        offset = np.arange(len(at)) - np.repeat(np.cumsum(counts) - counts, counts)
+        return at, values[ptr[rows][at] + offset]
+
+    out, inn = lists(src, dst), lists(dst, src)
+    step = max(1, _PAIR_CHUNK // (m * (m + 2)))
+    for lo in range(0, n, step):
+        rows = np.arange(lo, min(n, lo + step))
+        at, fwd = expand(*out, rows)
+        rev_at, rev = expand(*inn, rows)
+        hop_at, hop = expand(*out, fwd)
+        a = np.r_[rows[at], rows[rev_at], rows[at][hop_at]]
+        b = np.r_[fwd, rev, hop]
+        yield a[a != b], b[a != b]
+
+
 def hnsw_serve_set(
     corpus: DataFrame,
     edges: DataFrame,
@@ -304,7 +463,7 @@ def _drop_view(spark, qualified: str) -> None:
 @dataclass(frozen=True)
 class ServeSet:
     """A :func:`hnsw_serve_set` working set published for the SQL descent:
-    its frames, their global temp views, the sizes counted once, and the
+    its frames, their global temp views, the node count, and the
     edge-broadcast gate :func:`ann_hnsw_prepared_sql` takes."""
 
     nodes: DataFrame
@@ -312,9 +471,6 @@ class ServeSet:
     nodes_view: str
     edges_view: str
     n_nodes: int
-    n_edges: int
-    #: total vector elements — sizes a driver-resident copy
-    n_values: int
     bcast_edges: bool
 
     def drop(self) -> None:
@@ -330,19 +486,17 @@ def publish_serve_set(
     metric: str = "cosine",
 ) -> ServeSet:
     """:func:`hnsw_serve_set`, registered as global temp views and
-    measured once over the cached partitions: node, edge and vector-value
-    counts, and the broadcast gate for the descent's per-hop edge-union
+    measured once over the cached partitions: the node and edge counts
+    and the broadcast gate for the descent's per-hop edge-union
     side (two id columns, ~64 B a row) against the session's broadcast
     threshold. Scale-adaptive: once the union outgrows the threshold the
     gate never fires and the ef-bounded beam stays the join's build side.
     The caller owns the lifetime; :meth:`ServeSet.drop` unregisters."""
     nodes, edges = hnsw_serve_set(corpus, edges, id_col=id_col, emb_col=emb_col, metric=metric)
-    n_nodes, n_values = nodes.agg(F.count(F.lit(1)), F.sum(F.size("v"))).first()
-    n_edges = edges.count()
+    n_nodes, n_edges = nodes.count(), edges.count()
     return ServeSet(
         nodes, edges, _global_view(nodes, "nodes"), _global_view(edges, "edges"),
-        n_nodes, n_edges, n_values or 0,
-        fits_broadcast(nodes.sparkSession, (n_nodes + n_edges) * 64),
+        n_nodes, fits_broadcast(nodes.sparkSession, (n_nodes + n_edges) * 64),
     )
 
 
@@ -618,20 +772,28 @@ class DriverServeSet:
 
 
 def driver_serve_set(
-    table: DriverTable, edges: DataFrame, metric: str, nbytes: int
+    table: DriverTable, edges: Iterable[tuple], metric: str, nbytes: int
 ) -> DriverServeSet:
     """A :class:`DriverServeSet` over ``table``'s rows, vectors and content
-    (the same arrays, not a copy) plus the collected ``edges`` adjacency.
-    The per-node norms are derived here exactly as :func:`_node_norm`
-    computes the serve set's ``n`` column: the sequential fold, a
-    correctly rounded sqrt, and cosine's zero-norm guard."""
-    norms = np.sqrt(_fold_rows(table.vecs * table.vecs))
+    (the same arrays, not a copy), the per-node norms
+    (:func:`_node_norms`) and the adjacency of ``edges``, ``(layer, src,
+    dst)`` rows — collected from a graph family, or a driver build's."""
+    adj: dict = {}
+    for layer, src, dst in edges:
+        adj.setdefault(layer, {}).setdefault(src, []).append(dst)
+    return DriverServeSet(
+        table.rows, table.vecs, _node_norms(table, metric), adj, table.content, int(nbytes)
+    )
+
+
+def _node_norms(table: DriverTable, metric: str) -> np.ndarray:
+    """:func:`_node_norm` over a driver copy, equal to the Spark column: the
+    sequential fold, a correctly rounded sqrt, and cosine's zero-norm
+    guard."""
+    norms = np.sqrt(table.sqnorms)
     if metric == "cosine":
         norms[norms == 0.0] = 1.0
-    adj: dict = {}
-    for e in edges.select("layer", "src", "dst").collect():
-        adj.setdefault(e.layer, {}).setdefault(e.src, []).append(e.dst)
-    return DriverServeSet(table.rows, table.vecs, norms, adj, table.content, int(nbytes))
+    return norms
 
 
 def _fold_rows(prods: np.ndarray) -> np.ndarray:
@@ -643,16 +805,17 @@ def _fold_rows(prods: np.ndarray) -> np.ndarray:
     return acc
 
 
-_ROUND_CONTEXT = Context(prec=400)  # any double's digits + SCORE_DECIMALS
-_SCORE_QUANTUM = Decimal(1).scaleb(-SCORE_DECIMALS)
+_ROUND_CONTEXT = Context(prec=400)  # any double's digits + the decimals
 
 
-def spark_round_score(x: float) -> float:
-    """Spark's ``ROUND(x, SCORE_DECIMALS)`` on a double: HALF_UP on the
-    JVM's decimal rendering of ``x`` (``BigDecimal.valueOf``), not Python's
+def spark_round_score(x: float, decimals: int = SCORE_DECIMALS) -> float:
+    """Spark's ``ROUND(x, decimals)`` on a double: HALF_UP on the JVM's
+    decimal rendering of ``x`` (``BigDecimal.valueOf``), not Python's
     ``round()`` (half-even on the binary value). ``+ 0.0`` because a
     BigDecimal has no negative zero."""
-    d = Decimal(repr(x)).quantize(_SCORE_QUANTUM, rounding=ROUND_HALF_UP, context=_ROUND_CONTEXT)
+    d = Decimal(repr(x)).quantize(
+        Decimal(1).scaleb(-decimals), rounding=ROUND_HALF_UP, context=_ROUND_CONTEXT
+    )
     return float(d) + 0.0
 
 

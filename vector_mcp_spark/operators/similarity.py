@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Sequence
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
@@ -30,6 +31,9 @@ from pyspark.sql import functions as F
 
 from vector_mcp_spark.functions.vector import cosine_similarity, dot, l2_distance, l2_norm
 from vector_mcp_spark.operators.partition import spread
+
+if TYPE_CHECKING:
+    from vector_mcp_spark.operators.driver_table import DriverTable
 
 # Pairwise scoring below precomputes each vector's norm ONCE before the
 # join (norms ride along as a narrow double column) and divides the per-pair
@@ -391,48 +395,51 @@ def embedding_near_dup_blocked(
 # ---------------------------------------------------------------------------
 
 
+def _nearest_centroid(mat: np.ndarray, cmat: np.ndarray, metric: str) -> np.ndarray:
+    """Each row of ``mat`` (B×d) → the index of its nearest column of
+    ``cmat`` (d×K) as ONE matmul; ties go to the first best index
+    (np.argmax/argmin), matching array_position semantics. "cosine" is the
+    argmax similarity with zero norms guarded to 1; "l2" the argmin
+    Euclidean distance via the ||v||²−2·v·c+||c||² expansion."""
+    cnorm = np.linalg.norm(cmat, axis=0)
+    if metric == "cosine":
+        cnorm[cnorm == 0] = 1.0
+        vnorm = np.linalg.norm(mat, axis=1)
+        vnorm[vnorm == 0] = 1.0
+        sims = (mat @ cmat) / (vnorm[:, None] * cnorm[None, :])
+        return np.argmax(sims, axis=1)
+    vsq = np.einsum("ij,ij->i", mat, mat)
+    d2 = vsq[:, None] - 2.0 * (mat @ cmat) + (cnorm * cnorm)[None, :]
+    return np.argmin(d2, axis=1)
+
+
 def assign_clusters(
     df: DataFrame, centroids: list[list[float]], emb_col: str = "embedding",
     metric: str = "cosine",
 ) -> DataFrame:
     """Nearest-centroid assignment as ONE Arrow-batched matmul per batch
-    (B×d @ d×K) — the 16-way interpreted HOF fold was the build's
-    bottleneck; ties go to the first best index (np.argmax/argmin),
-    matching array_position semantics. Shared by the offline IVF build and
-    online streaming index maintenance (assignment against frozen
-    centroids is the serving-path operation).
+    (:func:`_nearest_centroid`) — the 16-way interpreted HOF fold was the
+    build's bottleneck. Shared by the offline IVF build and online
+    streaming index maintenance (assignment against frozen centroids is
+    the serving-path operation).
 
-    ``metric``: "cosine" (argmax similarity) or "l2" (argmin Euclidean —
-    via the ||v||²−2·v·c+||c||² expansion, still one matmul)."""
+    ``metric``: "cosine" (argmax similarity) or "l2" (argmin Euclidean)."""
     from pyspark.sql.functions import pandas_udf
 
     if metric not in ("cosine", "l2"):
         raise ValueError(f"unknown metric {metric!r}")
     cmat = np.asarray(centroids, dtype=np.float64).T  # d × K
-    cnorm = np.linalg.norm(cmat, axis=0)
-    csq = cnorm * cnorm
 
-    if metric == "cosine":
-        cn = cnorm.copy()
-        cn[cn == 0] = 1.0
-
-        @pandas_udf("int")
-        def nearest(col: pd.Series) -> pd.Series:
-            mat = np.asarray(col.tolist(), dtype=np.float64)  # B × d
-            vnorm = np.linalg.norm(mat, axis=1)
-            vnorm[vnorm == 0] = 1.0
-            sims = (mat @ cmat) / (vnorm[:, None] * cn[None, :])
-            return pd.Series(np.argmax(sims, axis=1).astype("int32"))
-    else:
-
-        @pandas_udf("int")
-        def nearest(col: pd.Series) -> pd.Series:
-            mat = np.asarray(col.tolist(), dtype=np.float64)  # B × d
-            vsq = np.einsum("ij,ij->i", mat, mat)
-            d2 = vsq[:, None] - 2.0 * (mat @ cmat) + csq[None, :]
-            return pd.Series(np.argmin(d2, axis=1).astype("int32"))
+    @pandas_udf("int")
+    def nearest(col: pd.Series) -> pd.Series:
+        mat = np.asarray(col.tolist(), dtype=np.float64)  # B × d
+        return pd.Series(_nearest_centroid(mat, cmat, metric).astype("int32"))
 
     return df.withColumn("cluster", nearest(F.col(emb_col)))
+
+
+#: the decimals each k-means centroid coordinate is ROUNDed to
+_CENTROID_DECIMALS = 8
 
 
 def ivf_build(
@@ -454,6 +461,7 @@ def ivf_build(
     persist the assigned corpus partitioned by ``cluster`` so a query's
     nprobe clusters prune partitions — the DataFrame analogue of the
     reference engine's IVF-PQ index (``epistemic_graph.py:5-9``).
+    :func:`ivf_build_local` is the same k-means over a driver copy.
     """
     dim_row = corpus.select(F.size(F.col(emb_col)).alias("d")).first()
     if dim_row is None:
@@ -475,13 +483,43 @@ def ivf_build(
             assigned.select("cluster", F.col(emb_col).alias("v"))
             .groupBy("cluster")
             .agg(
-                F.array(*[F.round(F.avg(F.col("v")[i]), 8) for i in range(len(centroids[0]))]).alias("c")
+                F.array(*[F.round(F.avg(F.col("v")[i]), _CENTROID_DECIMALS)
+                          for i in range(len(centroids[0]))]).alias("c")
             )
             .collect()
         )
         new = {r.cluster: [float(x) for x in r.c] for r in agg}
         centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
     return assign(corpus, centroids), centroids
+
+
+def ivf_build_local(
+    table: DriverTable, n_centroids: int = 16, max_iter: int = 3, metric: str = "cosine"
+) -> tuple[np.ndarray, list[list[float]]]:
+    """:func:`ivf_build` over a driver copy of the corpus: each row's
+    cluster index and the centroid list, equal to the Spark build's. The
+    same sha256(id) seed rows, the same :func:`_nearest_centroid` step the
+    assignment UDF runs, and each cluster's mean as Spark's ``avg`` gives
+    it (the sum folded in order, divided by the count), ``ROUND``ed
+    half-up on its decimal rendering as Spark rounds."""
+    from vector_mcp_spark.operators.graph_ann import _fold_rows, spark_round_score
+
+    if metric not in ("cosine", "l2"):
+        raise ValueError(f"unknown metric {metric!r}")
+    if not table.ids:
+        raise ValueError("empty corpus")
+    seeds = sorted(
+        range(len(table.ids)),
+        key=lambda i: hashlib.sha256(str(table.ids[i]).encode("utf-8")).hexdigest(),
+    )[:n_centroids]
+    cents = table.vecs[seeds]
+    for _ in range(max_iter):
+        cluster = _nearest_centroid(table.vecs, cents.T, metric)
+        for c in np.unique(cluster):
+            members = table.vecs[cluster == c]
+            mean = _fold_rows(members.T) / len(members)
+            cents[c] = [spark_round_score(float(x), _CENTROID_DECIMALS) for x in mean]
+    return _nearest_centroid(table.vecs, cents.T, metric), cents.tolist()
 
 
 def ann_ivf_topk(

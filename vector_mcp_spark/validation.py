@@ -68,6 +68,13 @@ def validate_number_results(n: object) -> int:
     return n
 
 
+def default_beam_width(k: int) -> int:
+    """The graph beam width a search gets when it names none: mongodb's
+    ``numCandidates = max(k*10, 100)`` (``vectordb/mongodb.py:277``), of a
+    ``k`` already through :func:`validate_number_results`."""
+    return max(k * 10, 100)
+
+
 def validate_rrf_k(rrf_k: object) -> int:
     if not _is_strict_int(rrf_k) or not (1 <= rrf_k <= MAX_RRF_K):
         raise EngineError("rrf_k_invalid")
